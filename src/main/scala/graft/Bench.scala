@@ -3,41 +3,58 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract): runs every declared
-  * query at SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query
-  * seconds. Queries are fully materialized through the `noop` sink
-  * (count() would let Catalyst prune the projections being measured).
+  * query at SPARK_GRAFT_SF_DIR on SPARK_GRAFT_CPUS cores and prints
+  * ONE JSON record with per-query seconds. Queries are fully
+  * materialized through the `noop` sink (count() would let Catalyst
+  * prune the projections being measured).
   *
-  * Canonical-capture pinning (VERDICT r16 "what's wrong" #3): the
-  * end-of-round driver run can land on a loadavg-17 box, making the
-  * committed BENCH_r*.json headline noise while the honest quiet
-  * capture lives in /tmp. So Bench pins: a quiet, failure-free,
-  * unfiltered run writes BENCH_PINNED.json (the full capture plus a
-  * fingerprint of every .scala under src/main, and build.sbt). A
-  * later run over
-  * the SAME source tree and sf reports the pinned capture as the
-  * headline (`value`, `contended`, source = "pinned_quiet_capture")
-  * and demotes its own live numbers to live_* fields — so the
-  * committed artifact IS the capture ORACLE_BENCH sha-pins. Any
-  * source change invalidates the fingerprint and the live run speaks
-  * for itself again; a pin can never mask a code regression, only
-  * external box load. Since round 18 the acceptance also requires an
-  * identical [[envFingerprint]] (cpus/confs/Spark/JVM + dataset file
-  * sizes — ADVICE r17), the top-level `contended` flag is always the
-  * LIVE run's own, and every quiet capture appends its headline to
-  * the pin's quiet_values_sec so records carry `value_mom_sec`
-  * (median of quiet captures — the selection-neutral statistic)
-  * beside the pinned min. Refresh policy: quiet failure-free
-  * unfiltered runs replace the pinned capture only when they BEAT it
-  * (min-of-quiet-captures), so repeated runs monotonically improve
-  * the pin; non-beating quiet runs only extend the mom basis.
-  * Since round 19 every record also carries `cpu_calib_mops` (a
-  * deterministic single-thread burn — [[cpuCalibration]]) and
-  * pin-bearing records add `pin_calib_comparable`: the r18 box shift
-  * slowed the whole host 20-25% while the env fingerprint held, so
-  * cross-shift comparisons now SELF-FLAG (comparability, never
-  * acceptance — a slow box must not un-pin a valid capture).
+  * The session is [[session]] — `Engine.session` plus [[confs]] — the
+  * same one `Verify` dumps the oracle results from, so the oracle
+  * gate checks the plans this main times. The repository's benchmark
+  * for performance claims is `hwbench/` (see README); this record is
+  * the per-query view.
   */
 object Bench {
+
+  /** Client threads of the pooled (multi-tenant) pass. */
+  private val Par = 8
+
+  /** Sequential reps per query in the isolated pass. */
+  private val IsoReps = 3
+
+  /** The overrides Bench and Verify set on top of `Engine.session`. */
+  def confs(cpus: Int): Map[String, String] = Map(
+    // AQE's runtime SMJ→BHJ conversion off: measured at sf1 (q47), its
+    // serial materialize→fetch→build→rebroadcast chain costs MORE than
+    // the shuffle it saves at this scale
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+    // WindowExec switches to a spill-capable external buffer after
+    // 4096 rows/partition by default — pure overhead while window
+    // partitions fit executor memory; on a cluster set per executor
+    // memory budget
+    "spark.sql.windowExec.buffer.in.memory.threshold" -> "1048576",
+    "spark.sql.windowExec.buffer.spill.threshold" -> "4194304",
+    // the pooled pass submits independent queries from a small client
+    // pool; tiny jobs must not convoy behind a large one's stage queue
+    "spark.scheduler.mode" -> "FAIR",
+    // single-file/single-row-group test parquet otherwise pins every
+    // cached large-table partition — and each narrow pipeline over it
+    // — to ONE task (see Catalog.table; a cluster gets this from file
+    // count)
+    "spark.graft.local.scanParallelism" -> cpus.toString,
+    // Spark's split size is max(openCostInBytes, totalBytes /
+    // defaultParallelism): with the 4 MB default a compressed but
+    // CPU-heavy table (sf3 documents: 17 MB parquet) planned ~4 tasks
+    // and the dedup tiers serialized; 128 KB lets bytes-per-core drive
+    // the count to ~core parallelism
+    "spark.sql.files.openCostInBytes" -> "131072")
+
+  /** The session Bench times and Verify checks: local[cpus], shuffle
+    * partitions = cpus, in-memory catalog, plus [[confs]].
+    */
+  def session(cpus: Int): SparkSession =
+    Engine.session(s"local[$cpus]", Some(cpus), hiveMetastore = false,
+      confs = confs(cpus))
 
   private def runOne(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
@@ -61,178 +78,69 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // Sampled before ANY bench work: the only loadavg reading that is
     // purely EXTERNAL load. loadavg_before (pre-isolated-pass) is
-    // self-inflated by the pooled phase's own residue (ADVICE r8: 7.62
-    // before vs 2.76 after on an idle box) — attribution of a
-    // contended capture should start here.
+    // self-inflated by the pooled phase's own residue.
     val loadStart = readLoadAvg()
-    // Host-speed calibration (VERDICT r18 next #7): the env
-    // fingerprint holds constant across a host-wide 20-25% slowdown
-    // (same cpus/confs/data), so cross-shift pin comparisons need an
-    // IN-BAND speed number. Measured before any Spark work.
-    val cpuCalib = cpuCalibration()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // A/B knob for AQE's runtime SMJ→BHJ conversion (-1 = static
-      // threshold). Measured at sf1 (q47): the conversion's serial
-      // materialize→fetch→build→rebroadcast chain costs MORE than the
-      // shuffle it saves at this scale, so it stays at the default.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_BC", "-1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // WindowExec switches to a spill-capable external buffer after
-      // 4096 rows/partition by default — pure overhead while window
-      // partitions fit executor memory. Local[32]/128 GiB sizing; on a
-      // cluster set per executor memory budget.
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.windowExec.buffer.spill.threshold", "4194304")
-      // FAIR scheduling: the suite submits independent queries from a
-      // small client pool (below); tiny jobs must not convoy behind a
-      // large one's stage queue
-      .config("spark.scheduler.mode", "FAIR")
-      // single-file/single-row-group test parquet otherwise pins every
-      // cached large-table partition — and each narrow pipeline over
-      // it — to ONE task (see Catalog.table; DuckDB parallelizes
-      // inside a row group on the same file, a cluster gets this from
-      // file count)
-      .config("spark.graft.local.scanParallelism", cpus)
-      // Round 15: multi-row-group single files now split in the SCAN
-      // (Catalog skips the repartition crutch). Spark's split size is
-      // max(openCostInBytes, totalBytes/defaultParallelism) — with
-      // the 4 MB default openCost a compressed-but-CPU-heavy table
-      // (sf3 documents: 17 MB parquet, MD5-per-shingle work) planned
-      // only ~4 tasks and the dedup tiers serialized. 128 KB lets
-      // bytesPerCore drive the count to ~core parallelism; on a real
-      // cluster file count provides this and the default stands.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .getOrCreate()
-    // dev knob: arbitrary conf overrides for plan A/B runs, e.g.
-    // SPARK_GRAFT_CONFS="spark.sql.join.preferSortMergeJoin=false"
-    // tolerate blank segments (trailing ';') and report — not crash
-    // on — entries with no '=' (ADVICE r13: the bare Array extractor
-    // threw MatchError and killed the bench at startup)
-    sys.env.get("SPARK_GRAFT_CONFS").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v)
-        case _ if kv.trim.isEmpty           => ()
-        case _ => System.err.println(
-          s"SPARK_GRAFT_CONFS: skipping malformed entry '$kv' (want k=v)")
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = session(cpus)
+    try run(spark, sfDir, args.toSet, loadStart)
+    finally spark.stop()
+  }
 
-    // JIT/codegen warmup first (one throwaway job), THEN the cold-scan
-    // probe: one representative aggregate timed against raw parquet
-    // BEFORE the columnar-cache warmup, so scan-path regressions stay
-    // visible (VERDICT r1 perf note) without JVM-warmup noise.
-    // warm JIT on a DIFFERENT table than the probe's (q26 reads
-    // events; q45 reads lineitem) so the probe still pays lineitem's
-    // file listing + footer decode
-    SparkEntry.queries.get("q26_hourly_window")
-      .foreach(q => q(spark, sfDir).write.format("noop").mode("overwrite").save())
-    val coldT0 = System.nanoTime()
-    val coldSec =
-      try {
-        SparkEntry.queries("q45_tpch_pricing")(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - coldT0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-
-    // Warm path outside the timed region: JVM/codegen warmup plus the
-    // in-memory columnar cache for the catalog tables (every query
-    // builds on Catalog's memoized DataFrames, so marking those cached
-    // makes all 50 timed queries read the columnar cache — measuring
-    // engine compute, not repeated cold parquet scans; the DuckDB
-    // baseline likewise re-reads from the OS page cache).
-    Catalog.tableNames.foreach { t =>
-      try Catalog.table(spark, sfDir, t).cache().count()
-      catch { case _: Throwable => () }
-    }
-    // shared dedup/ANN-tier artifacts: the shingle-signature table,
-    // the component labels (verified pairs + 3 CC rounds), the
-    // df-capped inverted shingle index, the tf-idf weight postings,
-    // the winnowing-fingerprint postings, the standing incremental-
-    // dedup index, and the trained IVF k-means assignments are built
-    // once here — timed runs measure cache reads plus their own
-    // stages, not the shared index builds (disclosed in README incl.
-    // which queries' ratios this flatters; at 100 TB each is a
-    // write-once signature/label/index parquet job)
-    try graft.queries.PipelineQueries.warmShared(spark, sfDir)
-    catch { case _: Throwable => () }
+  private def run(spark: SparkSession, sfDir: String, only: Set[String],
+      loadStart: String): Unit = {
+    // Warm path outside the timed region: the in-memory columnar cache
+    // for the catalog tables (every query builds on Catalog's memoized
+    // DataFrames, so all timed queries read the columnar cache —
+    // measuring engine compute, not repeated cold parquet scans; the
+    // DuckDB baseline likewise re-reads from the OS page cache) and the
+    // shared dedup/ANN-tier artifacts (PipelineQueries.warmShared). A
+    // failure here fails the run: timing the cold path instead would
+    // report a different benchmark under the same name.
+    Catalog.tableNames.foreach(t => Catalog.table(spark, sfDir, t).cache().count())
+    graft.queries.PipelineQueries.warmShared(spark, sfDir)
 
     // optional args = dev-loop query filter (driver passes none)
-    val only = args.toSet
     val work = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
-    // The suite is 100+ independent queries, most of which can't fill 32
-    // cores on their own at this sf — a sequential run measures mostly
-    // per-job scheduling floor. Submit from a small client pool (the
-    // multi-tenant shape a real engine serves) so tiny jobs overlap;
-    // per-query latencies are still reported individually and their
-    // SUM exceeds the wall-clock `value`, making the overlap explicit.
-    val par = sys.env.getOrElse("SPARK_GRAFT_PAR", "8").toInt
-    // Alphabetical submission clusters the CPU-heavy families
-    // (ns_text_*, ns_dedup_*) into the same pool slots and convoys the
-    // wall; interleave deterministically by name hash instead.
+    // Pooled pass: most queries cannot fill the cores on their own at
+    // this sf, so submit from a small client pool (the multi-tenant
+    // shape a real engine serves) so tiny jobs overlap. Alphabetical
+    // submission clusters the CPU-heavy families (ns_text_*,
+    // ns_dedup_*) into the same pool slots; interleave
+    // deterministically by name hash instead.
     val spread = work.sortBy { case (n, _) =>
       java.util.UUID.nameUUIDFromBytes(n.getBytes).toString
     }
     val wall0 = System.nanoTime()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Par)
     val results: Seq[(String, Double)] =
-      if (par <= 1) work.map { case (name, fn) => runOne(spark, sfDir, name, fn) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+      try {
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val futs = spread.map { case (name, fn) =>
+        spread.map { case (name, fn) =>
           scala.concurrent.Future(runOne(spark, sfDir, name, fn))
-        }
-        val out = futs.map(f =>
+        }.map(f =>
           scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        pool.shutdown()
-        out
-      }
+      } finally pool.shutdown()
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // -1.0 failure sentinels must not deflate the disclosed sum
-    val latencySum = results.map(_._2).filter(_ >= 0).sum
     val nFailed = results.count(_._2 < 0)
 
-    // Isolation pass (VERDICT r3 item 1): the pooled numbers above
-    // measure the multi-tenant wall but make per-query latency
-    // un-diagnosable (a 0.4 s aggregate can read as 6 s from pool
-    // contention alone). Re-run every query ALONE — sequential, all
-    // cores to itself, `reps` runs, report the median — so each
-    // query also carries a contention-free number the 2×-per-query
-    // gate can actually falsify.
-    val isoReps = sys.env.getOrElse("SPARK_GRAFT_ISO_REPS", "3").toInt
+    // Isolated pass: every query ALONE — sequential, all cores to
+    // itself, IsoReps runs — keeping [min, median, max] per query. The
+    // rep spread is the in-band contention signal the pooled numbers
+    // cannot give.
     val loadBefore = readLoadAvg()
-    val isoWall0 = System.nanoTime()
-    // Per query keep EVERY rep (min/median/max), not just the median:
-    // the r7 snapshot's isolated numbers were captured on a contended
-    // machine and overstated cost ~3× with no way to tell from the
-    // committed JSON (VERDICT r7 item 1). Rep spread (max/min) is the
-    // in-band contention signal — a compute-bound query re-run 3×
-    // back-to-back on a quiet 32-core box repeats within ~1.2×.
     val isolated: Seq[(String, Double, Double, Double)] =
-      if (isoReps <= 0) Seq.empty
-      else work.map { case (name, fn) =>
-        val times = (1 to isoReps)
-          .map(_ => runOne(spark, sfDir, name, fn)._2)
-        val ok = times.filter(_ >= 0).sorted
+      work.map { case (name, fn) =>
+        val ok = (1 to IsoReps).map(_ => runOne(spark, sfDir, name, fn)._2)
+          .filter(_ >= 0).sorted
         // median of the successful reps; all-failed keeps the sentinel
         if (ok.isEmpty) (name, -1.0, -1.0, -1.0)
         else (name, ok(ok.length / 2), ok.head, ok.last)
       }
-    val isoWallSec = (System.nanoTime() - isoWall0) / 1e9
     val loadAfter = readLoadAvg()
     val isoQs = isolated.map { case (k, med, _, _) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
@@ -243,328 +151,38 @@ object Bench {
     val isoSum = isoOk.map(_._2).sum
     val isoMinSum = isoOk.map(_._3).sum
     val isoNFailed = isolated.count(_._2 < 0)
-    // Contention detector. Per-query max/min rep spread >1.5× fires
-    // even on an IDLE box for sub-second queries (JIT/GC/OS jitter:
-    // measured 59/102 with no external load) — disclosed as
-    // n_subsec_jitter_gt_1_5 (named for what it measures on sub-second
-    // queries, per VERDICT r8 #4 — NOT a contention flag) but not
-    // trusted as the flag. The robust in-band
-    // signal is aggregate drift of the HEADLINE (median sum) off the
-    // best-case floor (min sum): 1.075× on a quiet capture, and it
-    // scales with exactly the inflation a contended capture reports.
-    // Sustained load that poisons all 3 reps equally is invisible to
-    // any in-band spread — that's what the loadavg fields are for.
-    val spready = isoOk.count { case (_, _, mn, mx) => mn > 0 && mx / mn > 1.5 }
+    // Contended = the median sum drifts more than 1.25× off the
+    // best-case (min-rep) sum: ~1.075× on a quiet capture, and it
+    // scales with the inflation a contended capture reports. Load that
+    // poisons all reps equally is what the loadavg fields are for.
     val contended = isoMinSum > 0 && isoSum / isoMinSum > 1.25
-    // Headline `value` = the ISOLATED latency sum (median of `reps`
-    // sequential runs per query, summed): per-query attributable,
-    // run-to-run stable, and apples-to-apples with the DuckDB
-    // baseline's sequential total. The pooled multi-tenant wall moved
-    // 16.5→26.6→19 s across rounds with no engine change (VERDICT r4
-    // item 5) — it stays disclosed as `pooled_wall_sec`, demoted from
-    // the headline. If ANY isolated query failed, the isoSum is a
-    // partial sum that would make a breakage look like a speedup
-    // (ADVICE r7) — fall back to the pooled wall and disclose
-    // iso_n_failed.
-    val headline =
-      if (isolated.nonEmpty && isoNFailed == 0) isoSum else wallSec
-    // Disclosed machinery-proof queries (VERDICT r8 #1): q69 FORCES
-    // the skew probe onto the bucketed as-of plan (target=16 rows) to
-    // prove the salted-window machinery against DuckDB ASOF, paying
-    // probe+carry+stitch on a table where the plain plan is cheap —
-    // its committed time is that proof's budget, not a data-path
-    // latency (q70 runs the same semantics at the production default
-    // and routes plain; q59 is the plain plan itself). Exclude these
-    // from per-query 2×-vs-oracle gating; they stay in the sums.
-    val machineryProof = """["q69_asof_auto"]"""
-
-    // Canonical-capture pinning (see object scaladoc). A pin applies
-    // only to unfiltered full-suite runs over an identical source
-    // tree, IDENTICAL effective runtime (cpus/confs/Spark/JVM) and
-    // dataset (ADVICE r17: a pin captured under different parallelism
-    // or regenerated data must not be reported), at the same sf.
-    val fingerprint = if (only.isEmpty) treeFingerprint() else ""
-    val envFp = envFingerprint(spark, sfDir, cpus)
-    val pin =
-      if (fingerprint.isEmpty) None else readPinned(sfDir, fingerprint, envFp)
-    val quietRun = fingerprint.nonEmpty && !contended && isoNFailed == 0 &&
-      nFailed == 0 && isolated.nonEmpty
-    // median-of-quiet-captures beside the pinned min (VERDICT r17
-    // what's-wrong #4: min-of-captures is the luckiest-run estimator;
-    // the mom is the selection-neutral one and rides in every record)
-    val quietValues = pin.map(_.quietValues).getOrElse(Nil) ++
-      (if (quietRun) Seq(headline) else Nil)
-    val momOpt = if (quietValues.isEmpty) None else {
-      val s = quietValues.sorted
-      Some(if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2)
-    }
-    // a quiet run that BEATS the pin becomes the pin below — report
-    // its own (better) number rather than the superseded capture's
-    val (valueOut, source) = pin match {
-      case Some(p) if !quietRun || p.value <= headline =>
-        (p.value, "pinned_quiet_capture")
-      case _ => (headline, "live")
-    }
-    // `contended` at top level is ALWAYS the live run's own flag
-    // (ADVICE r17) — the pin's quietness is implied by acceptance and
-    // disclosed as pinned_contended
-    val momField = momOpt.map(m => s""","value_mom_sec":$m""").getOrElse("")
-    val pinFields = pin match {
-      case Some(p) =>
-        val pc = if (p.cpuCalib.isNaN) "null" else p.cpuCalib.toString
-        s""","pinned_sha256":"${p.sha256}","pinned_loadavg_start":"${p.loadavgStart}","pinned_contended":false,"pinned_cpu_calib_mops":$pc,"pin_calib_comparable":${calibComparable(cpuCalib, p.cpuCalib)},"tree_fingerprint":"$fingerprint","env_fingerprint":"$envFp""""
-      case None => ""
-    }
-    val liveFields =
-      s""","headline_source":"$source"$momField,"n_quiet_captures":${quietValues.size},"live_value_sec":$headline,"live_contended":$contended,"live_loadavg_start":"$loadStart","cpu_calib_mops":$cpuCalib$pinFields"""
-
+    // Headline `value` = the isolated median sum. If ANY isolated
+    // query failed, that is a partial sum that would make a breakage
+    // look like a speedup — fall back to the pooled wall.
+    val value = if (isolated.nonEmpty && isoNFailed == 0) isoSum else wallSec
+    val summary =
+      s""""metric":"total","value":$value,"unit":"sec","n_failed":$nFailed,"iso_n_failed":$isoNFailed,"contended":$contended,"loadavg_start":"$loadStart","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir""""
     val detail =
-      s"""{"metric":"total","value":$valueOut,"unit":"sec","queries_isolated":$isoQs,"isolated_reps_detail":$isoReps3,"isolated_reps":$isoReps,"isolated_latency_sum_sec":$isoSum,"isolated_latency_min_sum_sec":$isoMinSum,"iso_n_failed":$isoNFailed,"machinery_proof_queries":$machineryProof,"contended":$contended,"n_subsec_jitter_gt_1_5":$spready,"loadavg_start":"$loadStart","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","isolated_wall_sec":$isoWallSec,"pooled_wall_sec":$wallSec,"parallelism":$par,"queries":$qs,"latency_sum_sec":$latencySum,"n_failed":$nFailed,"cold_q45_sec":$coldSec$liveFields,"sf":"$sfDir"}"""
-    // Full per-query detail: one (long) line + a file copy. The
-    // driver's tail capture truncated this line in round 1
-    // ("parsed": null), so the LAST line printed is a short summary
-    // that always fits (VERDICT r1 item 3).
+      s"""{$summary,"queries":$qs,"queries_isolated":$isoQs,"isolated_reps_detail":$isoReps3}"""
+    // Full per-query detail: one (long) line + a file copy. The LAST
+    // line printed is a short summary that always fits a tail capture.
     println(detail)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_full.json"), detail + "\n")
-    catch { case _: Throwable => () }
-    // Pin maintenance from a quiet, failure-free, unfiltered live run:
-    // every such run APPENDS its headline to quiet_values_sec (the mom
-    // basis); the pinned capture itself (per-query maps, value) is
-    // replaced only when this run BEATS the standing min, so a later
-    // noisier-but-unflagged run can never degrade the pin.
-    if (quietRun) {
-      val quietJson = quietValues.mkString("[", ",", "]")
-      // The WRITE path must honor the same env/sf guard the read
-      // enforces (VERDICT r20 what's-wrong #4): `pin` is None both
-      // when no valid pin exists AND when the on-disk pin belongs to a
-      // different environment (the driver's SPARK_GRAFT_CPUS=8 scaling
-      // pass) or sf (trend runs) — in the latter cases this run must
-      // not clobber the other environment's basis. Replacement is
-      // allowed only when the on-disk file is absent/unreadable or was
-      // captured under THIS env+sf (tree may differ: a source change
-      // makes the old pin stale and the first quiet capture on the new
-      // tree replaces it).
-      val writable = pinWritable(
-        java.nio.file.Paths.get("BENCH_PINNED.json"), sfDir, envFp,
-        fingerprint)
-      if (writable && pin.forall(p => headline < p.value)) {
-        val pinDetail =
-          s"""{"metric":"total","value":$headline,"unit":"sec","quiet_values_sec":$quietJson,"cpu_calib_mops":$cpuCalib,"queries_isolated":$isoQs,"isolated_reps_detail":$isoReps3,"isolated_reps":$isoReps,"isolated_latency_sum_sec":$isoSum,"isolated_latency_min_sum_sec":$isoMinSum,"iso_n_failed":$isoNFailed,"machinery_proof_queries":$machineryProof,"contended":$contended,"n_subsec_jitter_gt_1_5":$spready,"loadavg_start":"$loadStart","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","isolated_wall_sec":$isoWallSec,"pooled_wall_sec":$wallSec,"parallelism":$par,"queries":$qs,"latency_sum_sec":$latencySum,"n_failed":$nFailed,"cold_q45_sec":$coldSec,"tree_fingerprint":"$fingerprint","env_fingerprint":"$envFp","sf":"$sfDir"}"""
-        try java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("BENCH_PINNED.json"), pinDetail + "\n")
-        catch { case _: Throwable => () }
-      } else {
-        // capture stands; only the quiet-capture list grows
-        try {
-          val p = java.nio.file.Paths.get("BENCH_PINNED.json")
-          val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          val updated = raw.replaceFirst(
-            "\"quiet_values_sec\":\\[[^\\]]*\\]",
-            java.util.regex.Matcher.quoteReplacement(
-              s""""quiet_values_sec":$quietJson"""))
-          java.nio.file.Files.writeString(p, updated)
-        } catch { case _: Throwable => () }
-      }
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] bench_full.json not written: $e")
     }
-    println(s"""{"metric":"total","value":$valueOut,"unit":"sec","n_queries":${results.size},"isolated_reps":$isoReps,"isolated_latency_sum_sec":$isoSum,"isolated_latency_min_sum_sec":$isoMinSum,"iso_n_failed":$isoNFailed,"machinery_proof_queries":$machineryProof,"contended":$contended,"n_subsec_jitter_gt_1_5":$spready,"loadavg_start":"$loadStart","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","isolated_wall_sec":$isoWallSec,"pooled_wall_sec":$wallSec,"parallelism":$par,"latency_sum_sec":$latencySum,"n_failed":$nFailed,"cold_q45_sec":$coldSec$liveFields,"sf":"$sfDir"}""")
-    spark.stop()
+    println(s"""{$summary,"n_queries":${results.size}}""")
   }
-
-  /** Deterministic single-thread CPU burn → mega-ops/sec (fmix64
-    * mixes). min of 3 short runs = the least-interrupted estimate;
-    * ~60 ms total. Pure ALU — tracks exactly the class of host-wide
-    * slowdown (shared-box contention, frequency shift) the env
-    * fingerprint cannot see.
-    */
-  private[graft] def cpuCalibration(): Double = {
-    def mix(z0: Long): Long = {
-      var z = z0
-      z ^= z >>> 33; z *= 0xff51afd7ed558ccdL
-      z ^= z >>> 33; z *= 0xc4ceb9fe1a85ec53L
-      z ^= z >>> 33; z
-    }
-    var best = Double.MaxValue
-    var sink = 0L
-    for (_ <- 1 to 3) {
-      val n = 20000000
-      val t0 = System.nanoTime()
-      var i = 0
-      var acc = 0L
-      while (i < n) { acc = mix(acc + i); i += 1 }
-      sink ^= acc
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (sec < best) best = sec
-    }
-    if (sink == 42L) System.err.print("") // keep the loop live
-    math.round(20000000 / best / 1e6 * 10.0) / 10.0 // Mops, 1 dp
-  }
-
-  /** Comparable = within 10% host speed of the pinned capture; a
-    * missing pinned calibration (legacy pin) counts as comparable —
-    * the field self-flags cross-shift comparisons, it never rejects
-    * a pin (VERDICT r18 next #7: COMPARABILITY, not acceptance).
-    */
-  private[graft] def calibComparable(live: Double, pinned: Double): Boolean =
-    pinned.isNaN || live.isNaN ||
-      (pinned > 0 && math.abs(live / pinned - 1.0) <= 0.10)
-
-  private[graft] final case class Pinned(value: Double, contended: Boolean,
-      sha256: String, loadavgStart: String,
-      quietValues: Seq[Double] = Nil, cpuCalib: Double = Double.NaN)
-
-  /** May this run replace/extend BENCH_PINNED.json? True when the file
-    * is absent or unparseable (nothing to protect), when its recorded
-    * tree_fingerprint no longer matches the current source tree (a
-    * stale pin protects nothing — the first quiet capture on the new
-    * tree supersedes it, whatever env it ran under), or when both its
-    * env_fingerprint AND sf match this run's. What it forbids is
-    * exactly the r20 failure: a SAME-tree pin from a different
-    * environment (the driver's SPARK_GRAFT_CPUS=8 scaling pass) or a
-    * different sf (trend runs) clobbering the 32-core basis (VERDICT
-    * r20 what's-wrong #4).
-    */
-  private[graft] def pinWritable(p: java.nio.file.Path, sfDir: String,
-      envFp: String, treeFp: String): Boolean =
-    try {
-      if (!java.nio.file.Files.exists(p)) return true
-      val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(raw)
-      def str(f: String) = j \ f match { case JString(s) => s; case _ => "" }
-      str("tree_fingerprint") != treeFp ||
-        (str("env_fingerprint") == envFp && str("sf") == sfDir)
-    } catch { case _: Throwable => true }
-
-  private def readPinned(sfDir: String, fingerprint: String,
-      envFp: String): Option[Pinned] =
-    readPinned(java.nio.file.Paths.get("BENCH_PINNED.json"), sfDir,
-      fingerprint, envFp)
-
-  private[graft] def readPinned(p: java.nio.file.Path, sfDir: String,
-      fingerprint: String): Option[Pinned] =
-    readPinned(p, sfDir, fingerprint, "")
-
-  /** Read a pinned capture and accept it only for the same sf, an
-    * identical source tree (fingerprint match), and — when `envFp` is
-    * non-empty — an identical effective runtime + dataset
-    * ([[envFingerprint]]; ADVICE r17: cpus, confs, Spark/JVM version
-    * and the parquet bytes at sfDir all affect timings and were
-    * excluded from "same engine"). Any parse problem or mismatch
-    * means "no pin" — the live run speaks for itself.
-    */
-  private[graft] def readPinned(p: java.nio.file.Path, sfDir: String,
-      fingerprint: String, envFp: String): Option[Pinned] =
-    try {
-      if (!java.nio.file.Files.exists(p)) return None
-      val raw = java.nio.file.Files.readAllBytes(p)
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(new String(raw, "UTF-8"))
-      def str(f: String) = j \ f match { case JString(s) => s; case _ => "" }
-      def dbl(v: JValue): Double = v match {
-        case JDouble(d) => d; case JInt(i) => i.toDouble
-        case JDecimal(d) => d.toDouble; case _ => Double.NaN
-      }
-      val okTree = str("tree_fingerprint") == fingerprint
-      val okEnv = envFp.isEmpty || str("env_fingerprint") == envFp
-      val okSf = str("sf") == sfDir
-      val quiet = (j \ "contended") == JBool(false)
-      val v = dbl(j \ "value")
-      val quietVals = j \ "quiet_values_sec" match {
-        case JArray(xs) => xs.map(dbl).filter(!_.isNaN)
-        case _          => if (v.isNaN) Nil else Seq(v)
-      }
-      if (okTree && okEnv && okSf && quiet && !v.isNaN) {
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        val sha = md.digest(raw).map("%02x".format(_)).mkString
-        Some(Pinned(v, contended = false, sha, str("loadavg_start"),
-          quietVals, dbl(j \ "cpu_calib_mops")))
-      } else None
-    } catch { case _: Throwable => None }
-
-  /** Fingerprint of everything OUTSIDE the source tree that moves
-    * timings (ADVICE r17): effective parallelism and key confs,
-    * Spark/JVM version, and the dataset itself (every parquet file's
-    * relative path + length under sfDir — regenerated data changes
-    * lengths in practice; content hashing 100 TB is not a bench-time
-    * operation).
-    */
-  private[graft] def envFingerprint(spark: SparkSession, sfDir: String,
-      cpus: String): String =
-    try {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      def conf(k: String) =
-        try spark.conf.get(k) catch { case _: Throwable => "" }
-      val lines = Seq(
-        s"cpus $cpus",
-        s"shuffle ${conf("spark.sql.shuffle.partitions")}",
-        s"aqe ${conf("spark.sql.adaptive.enabled")}",
-        s"aqe_bc ${conf("spark.sql.adaptive.autoBroadcastJoinThreshold")}",
-        s"open_cost ${conf("spark.sql.files.openCostInBytes")}",
-        s"window_buf ${conf("spark.sql.windowExec.buffer.in.memory.threshold")}",
-        s"spark ${org.apache.spark.SPARK_VERSION}",
-        s"java ${System.getProperty("java.version")}")
-      val data = {
-        val dir = java.nio.file.Paths.get(sfDir)
-        if (!java.nio.file.Files.isDirectory(dir)) Seq.empty[String]
-        else {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).iterator().asScala
-            .filter(p => p.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(p))
-            .map(p => s"${dir.relativize(p)} ${java.nio.file.Files.size(p)}")
-            .toSeq.sorted
-        }
-      }
-      (lines ++ data).foreach(l => md.update((l + "\n").getBytes("UTF-8")))
-      md.digest().map("%02x".format(_)).mkString
-    } catch { case _: Throwable => "" }
-
-  private def treeFingerprint(): String =
-    treeFingerprint(java.nio.file.Paths.get("src/main"),
-      java.nio.file.Paths.get("build.sbt"))
-
-  /** SHA-256 over the sorted (relative path, content hash) list of
-    * every .scala file under src/main plus build.sbt — the definition
-    * of "same engine" for capture pinning. Empty string when the
-    * source tree is not visible from the cwd (pinning disabled).
-    */
-  private[graft] def treeFingerprint(root: java.nio.file.Path,
-      buildSbt: java.nio.file.Path): String =
-    try {
-      import scala.jdk.CollectionConverters._
-      if (!java.nio.file.Files.isDirectory(root)) return ""
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      def fileSha(p: java.nio.file.Path): String = {
-        val d = java.security.MessageDigest.getInstance("SHA-256")
-        d.digest(java.nio.file.Files.readAllBytes(p)).map("%02x".format(_)).mkString
-      }
-      val scalaFiles = java.nio.file.Files.walk(root).iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          java.nio.file.Files.isRegularFile(p))
-        .toSeq
-      val build = Seq(buildSbt).filter(java.nio.file.Files.isRegularFile(_))
-      // hash ROOT-RELATIVE names so the fingerprint is cwd-stable
-      (scalaFiles.map(p => root.relativize(p).toString -> p) ++
-        build.map(p => p.getFileName.toString -> p))
-        .map { case (rel, p) => rel + " " + fileSha(p) }
-        .sorted
-        .foreach(line => md.update(line.getBytes("UTF-8")))
-      md.digest().map("%02x".format(_)).mkString
-    } catch { case _: Throwable => "" }
 
   /** First three fields of /proc/loadavg ("1m 5m 15m"), or "" off-Linux.
-    * Captured at process start (loadavg_start: pure external load),
-    * before the isolated pass (loadavg_before: includes the pooled
-    * phase's own residue — see main), and after it. External load is
-    * the usual cause of >1.5× rep spread, and having it in-band lets a
-    * flagged capture be attributed without re-running.
+    * External load is the usual cause of rep spread; having it in-band
+    * lets a flagged capture be attributed without re-running.
     */
   private def readLoadAvg(): String =
     try {
       val s = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).trim
       s.split("\\s+").take(3).mkString(" ")
-    } catch { case _: Throwable => "" }
+    } catch { case _: java.io.IOException => "" }
 }

@@ -10,7 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale defaults baked in: AQE (runtime coalesce + skew-join
   * splitting), partition coalescing, UTC session time, shuffle
   * partitions sized to cores locally (set explicitly per-cluster in
-  * production).
+  * production). This is the only SparkSession builder in the engine:
+  * callers such as `Bench.session` pass their overrides as `confs`,
+  * applied after the defaults at build time (confs such as
+  * `spark.scheduler.mode` only take effect when the SparkContext is
+  * created).
   */
 object Engine {
 
@@ -18,7 +22,8 @@ object Engine {
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Option[Int] = None,
       warehouseDir: Option[String] = None,
-      hiveMetastore: Boolean = true): SparkSession = {
+      hiveMetastore: Boolean = true,
+      confs: Map[String, String] = Map.empty): SparkSession = {
     val cores = Runtime.getRuntime.availableProcessors()
     val b = SparkSession.builder()
       .master(master)
@@ -35,6 +40,7 @@ object Engine {
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.ui.enabled", "false")
     warehouseDir.foreach(w => b.config("spark.sql.warehouse.dir", w))
+    confs.foreach { case (k, v) => b.config(k, v) }
     // Persistent catalog (north-star spark_approach: "Spark SQL + Hive
     // metastore"): table definitions land in the metastore and survive
     // restarts — CREATE TABLE / SHOW TABLES work across sessions. Falls
@@ -62,6 +68,18 @@ object Engine {
   }
 
   def sql(spark: SparkSession, query: String): DataFrame = spark.sql(query)
+
+  /** A `spark.graft.*` byte budget: `default` when unset, and an
+    * IllegalArgumentException naming the conf and its value when it
+    * is not a positive long — a typo must not silently fall back.
+    */
+  private[graft] def positiveLongConf(spark: SparkSession, key: String,
+      default: Long): Long = {
+    val raw = spark.conf.get(key, default.toString)
+    raw.trim.toLongOption.filter(_ > 0).getOrElse(throw
+      new IllegalArgumentException(
+        s"$key must be a positive number of bytes, got '$raw'"))
+  }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(spark, dir, name)

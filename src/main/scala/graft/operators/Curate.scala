@@ -206,41 +206,31 @@ object Curate {
     * removes no shuffle bytes (it adds 16/row plus the md5 CPU), and
     * Spark's sort already resolves most string comparisons from the
     * 8-byte UnsafeRow sort prefix — high-entropy paragraph heads make
-    * the full-string compare rare. `SPARK_GRAFT_PARDEDUP_SHAPE=hash`
-    * reproduces the rejected variant (its collision semantics are NOT
-    * mirrored by the shipped oracle; dev-only).
+    * the full-string compare rare.
     *
     * Kernel-shape decision (same protocol, same round): the shipped
-    * [[dedupParagraphsKernel]] vs the pre-round-17 compositional
-    * chain, ACCEPTED at every scale:
+    * [[graft.plans.TokenBlocks]] kernel vs the pre-round-17
+    * compositional chain (tokens + slice + concat_ws + keep-first
+    * window + re-attach join), ACCEPTED at every scale:
     * {{{
     *   shape                 sf0.1   sf1    sf3
     *   TokenBlocks kernel    0.476   0.742  0.925   ← shipped
     *   tokens+slice+rejoin   0.659   0.850  1.340
     * }}}
+    * The kernel emits every k-token block in ONE byte walk (the
+    * compositional chain materializes the full token array, then
+    * re-slices and re-concats it — three allocation passes over every
+    * byte), and zero-token docs ride the SAME scan as an explode_outer
+    * NULL block instead of being re-attached by a trailing join — one
+    * pass over `docs` total and two fewer sequential stages in the
+    * tail. Each empty doc gets a PER-ID unique window key (the isNull
+    * marker makes collision with real text impossible), so empties
+    * never form a shared — skewed at crawl scale — null-text window
+    * group.
     */
   def dedupParagraphs(docs: DataFrame, idCol: String, textCol: String,
       parTokens: Int = 20): DataFrame = {
     require(parTokens > 0, s"parTokens must be positive, got $parTokens")
-    if (sys.env.getOrElse("SPARK_GRAFT_PARDEDUP_SHAPE", "kernel") == "kernel")
-      dedupParagraphsKernel(docs, idCol, textCol, parTokens)
-    else
-      dedupParagraphsCompose(docs, idCol, textCol, parTokens)
-  }
-
-  /** The shipped (round-17) shape: [[graft.plans.TokenBlocks]] emits
-    * every k-token block in ONE byte walk (the compositional chain
-    * materializes the full token array, then re-slices and re-concats
-    * it — three allocation passes over every byte), and zero-token
-    * docs ride the SAME scan as an explode_outer NULL block instead
-    * of being re-attached by a trailing join — one pass over `docs`
-    * total and two fewer sequential stages in the tail. Each empty
-    * doc gets a PER-ID unique window key (the isNull marker makes
-    * collision with real text impossible), so empties never form a
-    * shared — skewed at crawl scale — null-text window group.
-    */
-  private def dedupParagraphsKernel(docs: DataFrame, idCol: String,
-      textCol: String, parTokens: Int): DataFrame = {
     val blocks = docs
       .select(col(idCol).as("id"),
         explode_outer(graft.plans.TokenBlocks(col(textCol), parTokens))
@@ -258,42 +248,6 @@ object Curate {
         when(col("pid").isNotNull && col("__graft_rn") === 1,
           struct(col("pid"), col("ptext"))))),
         x => x.getField("ptext"))).as("text_kept"))
-  }
-
-  /** The pre-round-17 compositional shape (tokens + slice + concat_ws
-    * + keep-first window + re-attach join), kept for the A/B knob;
-    * `SPARK_GRAFT_PARDEDUP_SHAPE=hash` additionally reproduces the
-    * rejected md5-keyed window (collision semantics NOT mirrored by
-    * the shipped oracle; dev-only).
-    */
-  private def dedupParagraphsCompose(docs: DataFrame, idCol: String,
-      textCol: String, parTokens: Int): DataFrame = {
-    val blocks = docs
-      .select(col(idCol).as("id"), TF.tokens(col(textCol)).as("__graft_tk"))
-      .withColumn("__graft_n", size(col("__graft_tk")))
-      .filter(col("__graft_n") > 0)
-      .withColumn("pid", explode(sequence(lit(0),
-        floor((col("__graft_n") - 1) / parTokens).cast("int"))))
-      .select(col("id"), col("pid"),
-        concat_ws(" ", slice(col("__graft_tk"),
-          col("pid") * parTokens + 1, lit(parTokens))).as("ptext"))
-    val pkey =
-      if (sys.env.getOrElse("SPARK_GRAFT_PARDEDUP_SHAPE", "") == "hash")
-        unhex(md5(col("ptext").cast("binary")))
-      else col("ptext")
-    val marked = blocks.withColumn("__graft_rn", row_number().over(
-      Window.partitionBy(pkey).orderBy("id", "pid")))
-    val perDoc = marked.groupBy("id").agg(
-      count(lit(1)).as("n_par"),
-      sum(when(col("__graft_rn") === 1, 1L).otherwise(0L)).as("n_kept"),
-      concat_ws(" ", transform(array_sort(collect_list(
-        when(col("__graft_rn") === 1, struct(col("pid"), col("ptext"))))),
-        x => x.getField("ptext"))).as("text_kept"))
-    docs.select(col(idCol).as("id")).join(perDoc, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n_par"), lit(0L)).as("n_par"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_kept"), lit("")).as("text_kept"))
   }
 
   /** Train/eval contamination check — the benchmark-decontamination
@@ -862,7 +816,7 @@ object Curate {
     *
     * Round-17 addendum (VERDICT r16 next #2): the ReuseExchange
     * single-pass was re-tried with the pruning blocker the r16
-    * attempt lacked ([[graft.plans.PruningAnchor]] keeps `id` in the
+    * attempt lacked (an optimizer-opaque zero term kept `id` in the
     * count branch's exchange input, making the two consumers'
     * subtrees canonically identical — verified: ONE scan+kernel
     * stage writes the pairs exchange, both consumers read it).
@@ -879,8 +833,6 @@ object Curate {
     * REPARTITION_BY_COL origin is ineligible for AQE skew-splitting,
     * the property that rejected the window shape. Residual gate gap
     * is formally adjudicated in docs/adjudications.json.
-    * `SPARK_GRAFT_SCORELM_SHAPE=reuse` reproduces the rejected
-    * variant (dev-only).
     *
     * Round-18 addendum (VERDICT r17 next #2, the last untried
     * fusion): ONE kernel pass materialized as (id, g, c) rows via
@@ -894,7 +846,6 @@ object Curate {
     * checkpoint barrier serializes the DAG. Every fusion of the two
     * kernel passes is now measured and worse; the adjudication
     * stands on a closed alternative set.
-    * `SPARK_GRAFT_SCORELM_SHAPE=ckpt` reproduces it (dev-only).
     *
     * Round-19 addendum (VERDICT r18 next #3 — the plan-shape set
     * being closed, attack the per-byte kernel cost itself): the
@@ -918,39 +869,7 @@ object Curate {
     val pairs = docs.select(col(idCol).as("id"),
       explode(graft.plans.NgramHashCounts(col(textCol), n)).as("gc"))
       .select(col("id"), col("gc.g").as("g"), col("gc.c").as("c"))
-    val shape = sys.env.getOrElse("SPARK_GRAFT_SCORELM_SHAPE", "twopass")
-    if (shape == "ckpt") {
-      // EXPERIMENT (round-18 A/B, VERDICT r17 next #2): ONE kernel
-      // pass materialized as (id, g, c) ROWS via localCheckpoint;
-      // both consumers read the stored blocks. Unlike the rejected
-      // ReuseExchange shape, the downstream exchanges stay
-      // ENSURE_REQUIREMENTS — the count side keeps map-side combine
-      // and the join-back side keeps AQE skew-splitting. Trade:
-      // checkpoint write+read of every pair row vs the saved
-      // scan+tokenize+hash pass.
-      scoreFromNgramPairs(pairs.localCheckpoint())
-    } else if (shape == "reuse") {
-      // EXPERIMENT (round-17 A/B, VERDICT r16 next #2): ONE kernel
-      // pass feeding an explicit exchange on g that BOTH consumers
-      // read (ReuseExchange) — the corpus count derives from the
-      // reused exchange instead of a second scan+kernel pass. The
-      // count branch references id inside its aggregate through a
-      // provably-zero term so column pruning cannot differentiate
-      // the two exchange subtrees (the r16 attempt died exactly
-      // there). Trade-offs vs the shipped two-pass: saves a full
-      // scan+tokenize+hash pass; costs shuffling (id,g,c) for ALL
-      // pair rows, and the REPARTITION_BY_COL origin forfeits AQE
-      // skew-splitting in the SMJ regime (irrelevant while the
-      // count side broadcasts, fatal at crawl scale if it doesn't).
-      val rep = pairs.repartition(col("g"))
-      val counts = rep.groupBy("g")
-        .agg(sum(col("c") + graft.plans.PruningAnchor(col("id")))
-          .as("__graft_cnt"))
-      rep.join(counts, Seq("g"))
-        .groupBy("id")
-        .agg(sum("c").as("n_ngrams"),
-          expr("sum(c * __graft_cnt) * 1000000L div sum(c)").as("score"))
-    } else scoreFromNgramPairs(pairs)
+    scoreFromNgramPairs(pairs)
   }
 
   /** Temperature-based mixture resampling (the multilingual-corpus
@@ -1043,7 +962,7 @@ object Curate {
     * in the oracle's inner aggregation.
     *
     * Tier routing (round-17 paired same-JVM interleaved A/B,
-    * tools/AbTokenizeVocab, medians in seconds, V=16):
+    * paired same-JVM A/B interleaved rep by rep, medians in seconds, V=16):
     * {{{
     *   tier                 sf0.1   sf1    sf3
     *   in-row HOF literal   0.782   1.194  —      (rejected: interpreted

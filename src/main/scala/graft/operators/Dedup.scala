@@ -84,8 +84,8 @@ object Dedup {
     * cluster minima already witness. `rankCap = Int.MaxValue`
     * restores the exhaustive enumeration.
     *
-    * MEASURED recall at the capped default (docs/RECALL_AB.json,
-    * `graft.tools.RecallAB`, near-dup cliques + isolated filler):
+    * MEASURED recall at the capped default (docs/RECALL_AB.json, which
+    * records the corpus recipe: near-dup cliques + isolated filler):
     * cluster size 10 → pair recall 45/45 = 1.00; 100 → 926/4950 =
     * 0.19; 1000 → 9777/499500 = 0.02 — while DUPLICATE-DETECTION
     * recall (docs the exhaustive run marks removable that the capped
@@ -132,8 +132,8 @@ object Dedup {
     * banded-bucket index the incremental tier already materializes
     * (mhidx_buckets), and recomputing it per consumer re-runs the
     * 32-permutation MinHash signature per subtree (measured 2× the
-    * whole candidates+verify latency with the chain on,
-    * tools/AbMinhashChain).
+    * whole candidates+verify latency with the chain on, paired
+    * same-JVM A/B, round 17).
     */
   def bandedWithArray(sh: DataFrame, nHashes: Int = 32, bands: Int = 8,
       rowsPerBand: Int = 4): DataFrame = {
@@ -710,7 +710,7 @@ object Dedup {
     * times, and Spark's AQE cannot de-duplicate identical subtrees
     * whose leaves are cached relations — TableCacheQueryStage
     * canonicalization keeps the per-reference stage id (measured on
-    * Spark 4.1.2, graft.tools.ReuseProbe), so exchange/stage reuse
+    * Spark 4.1.2; see PipelineQueries.memoArtifactCk), so exchange/stage reuse
     * never fires and each reference re-executes the whole shard
     * explode + count shuffle (r20 profile: the 4 duplicated subtrees
     * were ~60% of the probe's executor time). localCheckpoint bounds:

@@ -63,20 +63,19 @@ object Joins {
 
   /** The routing PREDICATE behind [[broadcastIfSmall]], exposed so a
     * caller can shape the REST of its plan around the same decision
-    * (e.g. q47 pre-aggregates the fact side by its join key only on
-    * the shuffle route, where the exchange it feeds exists). The
-    * budget may be overridden per session via
-    * `spark.graft.broadcast.maxBytes` — the production-tuning knob,
-    * and the test seam that exercises the shuffle route at toy scale.
+    * (e.g. q47 hints a shuffled-hash join only on the shuffle route,
+    * where the build side is no longer broadcast). The budget may be
+    * overridden per session via `spark.graft.broadcast.maxBytes` —
+    * the production-tuning knob, and the test seam that exercises the
+    * shuffle route at toy scale. A value that is not a positive long
+    * fails the query rather than silently falling back.
     */
   def fitsBroadcast(sizeHint: DataFrame, maxBytes: Long = 256L << 20,
       inflation: Long = 8L, statsKey: String = null): Boolean = {
     require(maxBytes > 0, "maxBytes must be positive")
     require(inflation > 0, "inflation must be positive")
-    val budget =
-      try sizeHint.sparkSession.conf
-        .get("spark.graft.broadcast.maxBytes", maxBytes.toString).toLong
-      catch { case _: Throwable => maxBytes }
+    val budget = graft.Engine.positiveLongConf(sizeHint.sparkSession,
+      "spark.graft.broadcast.maxBytes", maxBytes)
     // reading the hint's plan statistics runs an extra analyze +
     // optimize pass over the hint subtree at query-CONSTRUCTION time
     // — serial driver latency on the query's critical path. For

@@ -66,30 +66,6 @@ object MoneySum {
     Bridge.column(SumDec128(
       UnscaledDouble(Bridge.expression(c.cast("double")), scale),
       rawScale = Some(scale)).toAggregateExpression())
-
-  /** Projection form of [[sumMoneyDouble]]'s input step: double →
-    * unscaled LONG at `scale` ([[UnscaledDouble]] — codegen, zero
-    * allocation). For two-level money sums that pre-aggregate partial
-    * unscaled sums with the builtin long `sum` (codegen) and finish
-    * with [[sumUnscaledLong]]; the composition is bit-identical to a
-    * single [[sumMoneyDouble]] because every step is exact integer
-    * addition. The LONG partial bounds the pre-aggregation GROUP's
-    * total at |sum| < 2^63/10^scale (9.2e12 money units at scale 6) —
-    * safe for domain-bounded groups (an order's lines), NOT for
-    * corpus-sized groups (use [[sumMoneyDouble]]'s 128-bit
-    * accumulator directly there).
-    */
-  def unscaledMoney(c: Column, scale: Int = 6): Column =
-    Bridge.column(UnscaledDouble(Bridge.expression(c.cast("double")), scale))
-
-  /** SUM over LONGs that already carry unscaled decimal values at
-    * `scale` (e.g. partial sums of [[unscaledMoney]]): the same
-    * 128-bit accumulator as [[sumMoneyDouble]], returning
-    * DECIMAL(38, scale); null-on-empty/all-null like SQL SUM.
-    */
-  def sumUnscaledLong(c: Column, scale: Int = 6): Column =
-    Bridge.column(SumDec128(Bridge.expression(c),
-      rawScale = Some(scale)).toAggregateExpression())
 }
 
 object MoneySumSupport {

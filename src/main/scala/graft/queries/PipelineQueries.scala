@@ -75,7 +75,9 @@ object PipelineQueries {
     * scans as InMemoryTableScan, which AQE wraps in a per-reference
     * `TableCacheQueryStage <id>` whose canonicalized form keeps the id
     * — identical exchanges above it never canonicalize equal and
-    * stage/exchange reuse NEVER fires (tools/ReuseProbe), so each
+    * stage/exchange reuse NEVER fires (measured on Spark 4.1.2 with a
+    * triple self-join over an aggregate: cached base, no reuse;
+    * eagerly checkpointed base, reuse as uncached), so each
     * reference re-executes the exchange. An eager `localCheckpoint`
     * materializes to RDD blocks instead: the scan is a plain
     * `Scan ExistingRDD` (same RDD instance on every reference, no AQE
@@ -149,19 +151,19 @@ object PipelineQueries {
     * Target bytes per partition via `spark.graft.artifact.targetBytes`
     * (default 256 KB of source parquet — the derived shingle/posting
     * artifacts expand ~5-10× from the compressed source, putting
-    * actual partition payloads in the low MB at the default).
+    * actual partition payloads in the low MB at the default; a value
+    * that is not a positive long fails loudly).
     * sf0.1 documents (0.6 MB) → 8; sf1 replica (6 MB) → 23; sf3
     * (18 MB) → 32 (cap) — matching the empirically best counts at
     * each measured scale.
     */
-  private[queries] def artifactPartitions(s: SparkSession, dir: String,
+  private[graft] def artifactPartitions(s: SparkSession, dir: String,
       table: String = "documents"): Int = {
-    val target =
-      try s.conf.get("spark.graft.artifact.targetBytes", "262144").toLong
-      catch { case _: Throwable => 262144L }
+    val target = graft.Engine.positiveLongConf(s,
+      "spark.graft.artifact.targetBytes", 262144L)
     val bytes = sourceBytes(dir, table)
     val cap = s.sessionState.conf.numShufflePartitions
-    val byVolume = math.ceil(bytes.toDouble / math.max(1L, target)).toLong
+    val byVolume = math.ceil(bytes.toDouble / target).toLong
     math.max(math.min(8, cap), math.min(cap.toLong, byVolume)).toInt
   }
 
@@ -417,7 +419,7 @@ object PipelineQueries {
       // this artifact on both sides, and Spark 4.1's AQE cannot reuse
       // identical exchanges above cached relations
       // (TableCacheQueryStage canonicalization keeps per-reference
-      // stage ids — graft.tools.ReuseProbe), so an unpartitioned cache
+      // stage ids — see memoArtifactCk), so an unpartitioned cache
       // was re-shuffled once PER SIDE per run. Partitioned, both sides
       // read co-located and the join plans with no exchange — the
       // in-memory twin of writeIndexBucketed's bucket layout (the
@@ -617,13 +619,6 @@ object PipelineQueries {
     * API (graft.operators.Dedup) — the query contract is a thin demo
     * over library functions a user can call on any (id, text) frame.
     */
-  /** Dev-tool accessor (tools/AbMinhashChain): the exact signature
-    * frame the minhash queries probe, for paired A/B outside the
-    * query layer.
-    */
-  def shinglesForAb(s: SparkSession, dir: String): DataFrame =
-    shForApi(s, dir)
-
   private def shForApi(s: SparkSession, dir: String): DataFrame =
     hashedShingled(s, dir).withColumnRenamed("doc_id", "id")
 
@@ -632,7 +627,8 @@ object PipelineQueries {
     * chainLink backstop both read (three consumers in one plan;
     * without the memo each recomputes the 32-permutation MinHash
     * signature in its own subtree — measured 2× the whole
-    * candidates+verify latency, tools/AbMinhashChain). At corpus
+    * candidates+verify latency in a paired same-JVM A/B, round 17;
+    * see Dedup.bandedWithArray). At corpus
     * scale this is the same artifact class as mhidx_buckets.
     */
   private[queries] def minhashBanded(s: SparkSession, dir: String): DataFrame =

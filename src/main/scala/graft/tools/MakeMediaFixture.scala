@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.functions.Multimodal
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** One-shot generator for the checked-in media fixture table
   * (`fixtures/media/`), the input of the `ns_multimodal_decode`
@@ -477,10 +477,7 @@ object MakeMediaFixture {
     val mp4Dir = s"$base/video_mp4"
     val audioMp4Dir = s"$base/audio_mp4"
     val resizeDir = s"$base/media_resize"
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("local[2]", hiveMetastore = false)
     import spark.implicits._
     rows.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(mediaDir)
     audioRows.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(audioDir)

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, SparkEntry}
 
 /** Dev tool, two modes:
   *
@@ -53,12 +52,8 @@ object PlanDump {
       s"not a known query and not an existing directory: ${
         unknownQ.mkString(",")} (known queries: see SparkEntry.queries; " +
         "an sf-dir argument must exist on disk)")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session Bench times, at 4 cores
+    val spark = Bench.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     if (flags.contains("--fingerprint")) {
       val qs = if (names.nonEmpty) names.toSeq else PlanGolden.picks

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Pca, Pq}
-import graft.tools.PqWhitenAB
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PCA→PQ preprocessing composition (VERDICT r18 missing #3): the
@@ -14,9 +14,9 @@ class PqWhitenSpec extends SparkSpec {
 
   private val d = 16
   private val subDim = 4
-  private lazy val u = PqWhitenAB.basis(d, seed = 19L)
+  private lazy val u = PqWhitenSpec.basis(d, seed = 19L)
   private lazy val corpus = (0L until 400L)
-    .map(i => (i, PqWhitenAB.vector(i, u))).toDF("vec_id", "v")
+    .map(i => (i, PqWhitenSpec.vector(i, u))).toDF("vec_id", "v")
 
   test("fitProjection is orthonormal and interleave is a bijection") {
     val m = Pq.fitProjection(corpus, "v", d, subDim, whiten = false)
@@ -137,7 +137,7 @@ class PqWhitenSpec extends SparkSpec {
     // composition (wrong permutation, broken projection, codebook in
     // the wrong space) fails the build, not just the doc
     val probes = (0L until 15L)
-      .map(i => (1000000L + i, PqWhitenAB.vector(1000000L + i, u)))
+      .map(i => (1000000L + i, PqWhitenSpec.vector(1000000L + i, u)))
       .toDF("pid", "v")
     val exact = probes.withColumnRenamed("v", "pv").crossJoin(corpus)
       .select(col("pid"), col("vec_id"),
@@ -149,10 +149,10 @@ class PqWhitenSpec extends SparkSpec {
       .filter(col("rn") <= 10)
       .select("pid", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).toSet }
-    val (rRaw, mRaw) = PqWhitenAB.measure(spark, corpus, probes, exact,
+    val (rRaw, mRaw) = PqWhitenSpec.measure(spark, corpus, probes, exact,
       subDim, None)
     val model = Pq.fitProjection(corpus, "v", d, subDim, whiten = false)
-    val (rRot, mRot) = PqWhitenAB.measure(spark, corpus, probes, exact,
+    val (rRot, mRot) = PqWhitenSpec.measure(spark, corpus, probes, exact,
       subDim, Some(model))
     info(f"recall@10 raw=$rRaw%.3f rotated=$rRot%.3f; " +
       f"distortion raw=$mRaw%.3f rotated=$mRot%.3f")
@@ -161,5 +161,98 @@ class PqWhitenSpec extends SparkSpec {
         "anisotropic corpus")
     assert(mRot < mRaw * 0.8,
       f"rotated distortion $mRot%.3f must be well under raw $mRaw%.3f")
+  }
+}
+
+/** The A/B's corpus and measurement: x(id) = Σ_c λ_c·a_c(id)·u_c with
+  * a fixed decaying spectrum λ, a deterministic orthonormal basis U
+  * (Gram-Schmidt over hash-noise), and per-(id, c) coefficients from a
+  * splitmix64-style hash mapped to [-1, 1] — ANISOTROPIC, CORRELATED
+  * embeddings, the shape [[Pq.fitProjection]] exists for. The
+  * full-size record (1200 corpus vectors + 40 probes) is
+  * docs/PQ_WHITEN_AB.json.
+  */
+object PqWhitenSpec {
+
+  /** splitmix64 finalizer — deterministic per-(id, dim) noise. */
+  private def mix(z0: Long): Long = {
+    var z = z0 + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
+  /** Uniform in [-1, 1] from a hash. */
+  private def u11(seed: Long): Double =
+    (mix(seed) >>> 11).toDouble / (1L << 52).toDouble * 2.0 - 1.0
+
+  /** Deterministic orthonormal basis: Gram-Schmidt over hash-noise. */
+  def basis(d: Int, seed: Long): Array[Array[Double]] = {
+    val u = Array.tabulate(d, d)((i, j) => u11(seed + i * 1009L + j))
+    for (i <- 0 until d) {
+      for (p <- 0 until i) {
+        val dot = (0 until d).map(j => u(i)(j) * u(p)(j)).sum
+        for (j <- 0 until d) u(i)(j) -= dot * u(p)(j)
+      }
+      val n = math.sqrt((0 until d).map(j => u(i)(j) * u(i)(j)).sum)
+      for (j <- 0 until d) u(i)(j) /= n
+    }
+    u
+  }
+
+  val Spectrum: Array[Double] = Array(
+    6.0, 5.0, 4.2, 3.5, 2.9, 2.4, 2.0, 1.6,
+    1.3, 1.05, 0.85, 0.7, 0.55, 0.45, 0.35, 0.25)
+
+  def vector(id: Long, u: Array[Array[Double]]): Seq[Double] = {
+    val d = u.length
+    val a = Array.tabulate(d)(c => u11(id * 7919L + c) * Spectrum(c))
+    Seq.tabulate(d)(j => (0 until d).map(c => a(c) * u(c)(j)).sum)
+  }
+
+  /** ADC top-10 per probe from a (projected-space) codebook + codes. */
+  def adcTop10(probesLf: DataFrame, codes: DataFrame,
+      codebook: DataFrame): DataFrame = {
+    val pt = Pq.distances(probesLf, codebook, "pid")
+    pt.join(codes, Seq("s", "cid"))
+      .groupBy(col("pid"), col("vec_id"))
+      .agg(sum(col("dist")).as("adist"))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("pid")
+          .orderBy(col("adist"), col("vec_id"))))
+      .filter(col("rn") <= 10)
+      .select("pid", "vec_id")
+  }
+
+  /** One full variant measurement → (recall@10, distortion MSE). */
+  def measure(spark: SparkSession, corpus: DataFrame, probes: DataFrame,
+      exact: Map[Long, Set[Long]], subDim: Int,
+      model: Option[Pca.PcaModel]): (Double, Double) = {
+    import spark.implicits._
+    def proj(df: DataFrame) = model match {
+      case Some(m) => Pca.project(df, "v", m, "__w")
+        .select(col(df.columns.head), col("__w").as("v"))
+      case None => df
+    }
+    val c = proj(corpus)
+    val p = proj(probes)
+    val cb = Pq.trainCodebook(c, "vec_id", "v", subDim, k = 8)
+    val codes = Pq.encode(c, "vec_id", "v", cb, subDim)
+    val approx = adcTop10(Pq.longForm(p, "pid", "v", subDim), codes, cb)
+      .as[(Long, Long)].collect().groupBy(_._1)
+      .map { case (k2, xs) => k2 -> xs.map(_._2).toSet }
+    val recalls = exact.map { case (pid, truth) =>
+      approx.getOrElse(pid, Set.empty).intersect(truth).size.toDouble /
+        truth.size
+    }
+    val recall = recalls.sum / recalls.size
+    // distortion: mean ‖x − centroid(code(x))‖² in the encode space
+    val mse = Pq.longForm(c, "vec_id", "v", subDim)
+      .join(codes, Seq("vec_id", "s"))
+      .join(cb, Seq("s", "cid", "d"))
+      .agg(avg((col("x") - col("cx")) * (col("x") - col("cx"))
+        * lit(Spectrum.length)))
+      .as[Double].head()
+    (recall, mse)
   }
 }

@@ -1,41 +1,20 @@
 package graft
 
-import graft.plans.MoneySum
-import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
 
 /** q47's size-routed plans must be RESULT-identical: the broadcast
-  * ladder (small qualifying-orders side) and the shuffle fallback
-  * (pre-aggregate the fact side by its join key before the exchange —
-  * round 21) compute the same revenue rows. Also pins the two-level
-  * money-sum composition the fallback relies on: per-group builtin
-  * long SUM over [[MoneySum.unscaledMoney]] partials, finished by
-  * [[MoneySum.sumUnscaledLong]], equals a single
-  * [[MoneySum.sumMoneyDouble]].
+  * ladder (small qualifying-orders side) and the shuffle fallback (a
+  * shuffled-hash join of the qualifying orders against lineitem, once
+  * that side outgrows the broadcast budget) compute the same revenue
+  * rows.
   */
-class Q47RouteSpec extends SparkSpec {
-  import org.scalacheck.rng.Seed
-  import spark.implicits._
+class Q47RouteSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private def samples[A](gen: Gen[A], n: Int): Seq[A] =
-    (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
-
-  test("two-level unscaled composition equals single sumMoneyDouble") {
-    val gen = Gen.listOfN(300, Gen.zip(Gen.choose(0, 5), Gen.choose(0, 40),
-      Gen.choose(-99999.999999, 99999.999999)))
-    samples(gen, 4).foreach { rows =>
-      val df = rows.toDF("g", "k", "v")
-      val want = df.groupBy("g")
-        .agg(MoneySum.sumMoneyDouble(col("v")).cast("string"))
-        .as[(Int, String)].collect().toMap
-      val got = df
-        .select(col("g"), col("k"), MoneySum.unscaledMoney(col("v")).as("um"))
-        .groupBy("g", "k").agg(sum(col("um")).as("pm"))
-        .groupBy("g").agg(MoneySum.sumUnscaledLong(col("pm")).cast("string"))
-        .as[(Int, String)].collect().toMap
-      assert(got == want)
-    }
-  }
+  private def scansLineitem(p: SparkPlan): Boolean =
+    collect(p) { case s: FileSourceScanExec => s }
+      .exists(_.relation.location.rootPaths.exists(_.getName.startsWith("lineitem")))
 
   test("q47 shuffle fallback (forced) equals the broadcast-ladder result") {
     val fn = SparkEntry.queries("q47_tpch_local_volume")
@@ -43,13 +22,17 @@ class Q47RouteSpec extends SparkSpec {
     assert(ladder.nonEmpty)
     spark.conf.set("spark.graft.broadcast.maxBytes", "1")
     try {
-      val fallback = fn(spark, sfDir).collect().toSeq
-      assert(fallback == ladder)
-      // and the forced plan really took the shuffle route: no broadcast
-      // of the qualifying-orders side above lineitem
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-      assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
-        s"expected a shuffle join in the forced fallback plan:\n$plan")
+      val df = fn(spark, sfDir)
+      assert(df.collect().toSeq == ladder)
+      // and the forced plan really took the shuffle route: the join
+      // that reads lineitem is a shuffled-hash join
+      val plan = df.queryExecution.executedPlan
+      val lineitemJoins = collect(plan) {
+        case j: BaseJoinExec if scansLineitem(j) => j
+      }
+      assert(lineitemJoins.nonEmpty &&
+        lineitemJoins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
+        s"expected a ShuffledHashJoin over lineitem in the forced plan:\n$plan")
     } finally spark.conf.unset("spark.graft.broadcast.maxBytes")
   }
 }

@@ -37,4 +37,28 @@ class RegistrySpec extends SparkSpec {
       assert(bad.isEmpty, s"${q.name}: engine-native hash in oracle: $bad")
     }
   }
+
+  test("one session definition: only Engine builds a SparkSession; " +
+      "no SPARK_GRAFT_* knobs beyond SF_DIR and CPUS") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p) &&
+        p.toString.endsWith(".scala"))
+      .map(p => p -> java.nio.file.Files.readString(p)).toSeq
+    assert(sources.nonEmpty)
+    val builders = sources.collect {
+      case (p, src) if src.contains("SparkSession.builder") &&
+          p.getFileName.toString != "Engine.scala" => p
+    }
+    assert(builders.isEmpty,
+      s"build through Engine.session instead: ${builders.mkString(", ")}")
+    val allowed = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS")
+    val knobs = sources.flatMap { case (p, src) =>
+      "SPARK_GRAFT_[A-Z0-9_]*".r.findAllIn(src).filterNot(allowed)
+        .map(k => s"$p: $k")
+    }
+    assert(knobs.isEmpty, s"unexpected env knobs: ${knobs.mkString(", ")}")
+  }
 }

@@ -620,4 +620,25 @@ class ScaleOpsSpec extends SparkSpec {
     assert(out.toSeq == Seq(Some("/data/"), Some("/setup-notification/"),
       Some("/error-report/"), None))
   }
+
+  test("malformed graft byte confs fail loudly, naming the conf and value") {
+    val hint = spark.range(10).toDF()
+    val reads: Seq[(String, () => Any)] = Seq(
+      "spark.graft.broadcast.maxBytes" ->
+        (() => graft.operators.Joins.fitsBroadcast(hint)),
+      "spark.graft.artifact.targetBytes" ->
+        (() => graft.queries.PipelineQueries.artifactPartitions(spark, sfDir)))
+    for ((key, read) <- reads) {
+      for (bad <- Seq("12MB", "-1", "0")) {
+        spark.conf.set(key, bad)
+        try {
+          val e = intercept[IllegalArgumentException](read())
+          assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"),
+            e.getMessage)
+        } finally spark.conf.unset(key)
+      }
+      spark.conf.set(key, "4096")
+      try read() finally spark.conf.unset(key)
+    }
+  }
 }
