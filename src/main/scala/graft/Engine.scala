@@ -83,4 +83,17 @@ object Engine {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(spark, dir, name)
+
+  /** Unpersist the RDDs under `df`'s checkpoint scans. `df.unpersist()`
+    * only drops CacheManager entries, so an eager localCheckpoint's
+    * blocks would otherwise wait for GC. Only for checkpoints nothing
+    * reads any more: their blocks have no lineage to recompute from.
+    * Spark logs one WARN per released checkpoint RDD ("... cannot be
+    * recomputed after unpersisting"); that line is expected.
+    */
+  private[graft] def releaseCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(); ()
+      case _ =>
+    }
 }

@@ -710,7 +710,7 @@ object Dedup {
     * times, and Spark's AQE cannot de-duplicate identical subtrees
     * whose leaves are cached relations — TableCacheQueryStage
     * canonicalization keeps the per-reference stage id (measured on
-    * Spark 4.1.2; see PipelineQueries.memoArtifactCk), so exchange/stage reuse
+    * Spark 4.1.2; see PipelineQueries.tfidfSig), so exchange/stage reuse
     * never fires and each reference re-executes the whole shard
     * explode + count shuffle (r20 profile: the 4 duplicated subtrees
     * were ~60% of the probe's executor time). localCheckpoint bounds:
@@ -1142,7 +1142,10 @@ object Dedup {
     * frame itself is persisted and materialized (loop intermediates
     * are released before returning) — callers own releasing it via
     * `.unpersist()` when done, which works because the returned plan
-    * IS the cached plan, not a derived select over it.
+    * IS the cached plan, not a derived select over it. Expected log
+    * output: Spark logs one WARN per superseded round ("RDD n was
+    * locally checkpointed, its lineage has been truncated and cannot
+    * be recomputed after unpersisting") as its checkpoint is released.
     */
   def componentLabels(ids: DataFrame, pairs: DataFrame,
       iterations: Option[Int] = None, maxIterations: Int = 50): DataFrame = {
@@ -1156,8 +1159,8 @@ object Dedup {
     // — a long chain would OOM the DRIVER on plan bookkeeping before
     // any executor works. localCheckpoint(eager) truncates lineage to
     // the round's materialized blocks (the iterative-graph pattern
-    // shared with componentLabelsStar); superseded rounds' blocks are
-    // released by the ContextCleaner once dereferenced.
+    // shared with componentLabelsStar); a superseded round's blocks
+    // are released as soon as the next round is materialized.
     var labels = ids.select(col("id"), col("id").as("lbl"))
       .localCheckpoint(true)
     var round = 0
@@ -1172,6 +1175,7 @@ object Dedup {
           least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
         .localCheckpoint(true)
       val changed = next.filter(col("lbl") < col("prev")).count()
+      graft.Engine.releaseCheckpoints(labels)
       labels = next.select("id", "lbl")
       round += 1
       // fixpoint only ends the loop in the default mode; an explicit
@@ -1179,8 +1183,8 @@ object Dedup {
       converged = iterations.isEmpty && changed == 0
     }
     // persist + materialize the returned plan ITSELF (the cache
-    // contract callers release via `.unpersist()`); loop-round
-    // checkpoint blocks are dereferenced on return
+    // contract callers release via `.unpersist()`); the last round's
+    // checkpoint blocks stay, as the cache's lineage
     val out = labels.select(col("id"), col("lbl").as("component")).persist(lvl)
     out.count()
     edges.unpersist()
@@ -1206,9 +1210,10 @@ object Dedup {
     * exceeds the input pair count plus one parent pointer per node,
     * and the set SHRINKS as stars contract — so shuffle volume decays
     * across rounds instead of staying O(pairs) for O(diameter)
-    * rounds. EAGER with the same cache contract as
-    * [[componentLabels]]: the returned frame is persisted and
-    * materialized; callers release it with `.unpersist()`.
+    * rounds. EAGER with the same cache contract and the same
+    * one-WARN-per-released-round log output as [[componentLabels]]:
+    * the returned frame is persisted and materialized; callers
+    * release it with `.unpersist()`.
     */
   def componentLabelsStar(ids: DataFrame, pairs: DataFrame,
       maxIterations: Int = 40): DataFrame =
@@ -1228,8 +1233,8 @@ object Dedup {
     // the LOGICAL plan across rounds grows it geometrically (the
     // propagation loop only grows linearly). localCheckpoint(eager)
     // truncates lineage to the materialized blocks each round — the
-    // standard Spark iterative-graph pattern; superseded rounds'
-    // blocks are released by the ContextCleaner once dereferenced.
+    // standard Spark iterative-graph pattern; a superseded round's
+    // blocks are released once the next round is materialized.
     var edges = pairs
       .select(greatest(col("ida"), col("idb")).as("u"),
         least(col("ida"), col("idb")).as("v"))
@@ -1265,6 +1270,7 @@ object Dedup {
       converged = small.count() == edges.count() &&
         small.except(edges).count() == 0
       large.unpersist()
+      graft.Engine.releaseCheckpoints(edges)
       edges = small
       round += 1
     }
@@ -1291,7 +1297,7 @@ object Dedup {
       .select(col("id"), coalesce(col("p"), col("id")).as("component"))
       .persist(lvl)
     out.count()
-    edges.unpersist()
+    // the last round's checkpoint blocks stay, as the cache's lineage
     (out, round)
   }
 

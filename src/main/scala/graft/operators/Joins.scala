@@ -84,10 +84,16 @@ object Joins {
     // (convention: "<dir>#<site>") to memoize it for the JVM
     // lifetime, the dimFoldCached discipline. Snapshot-versioned
     // inputs move under commits — such callers must keep the
-    // per-call probe (statsKey = null).
+    // per-call probe (statsKey = null). An InMemoryRelation that is
+    // not materialized yet reports its source plan's (parquet) bytes,
+    // so a statistic over one is provisional and is not memoized.
     val (bytes, cachedStat) =
-      if (statsKey == null) statsOf(sizeHint)
-      else statsCache.computeIfAbsent(statsKey, _ => statsOf(sizeHint))
+      if (statsKey == null) statsOf(sizeHint)._1
+      else Option(statsCache.get(statsKey)).getOrElse {
+        val (stat, settled) = statsOf(sizeHint)
+        if (settled) statsCache.putIfAbsent(statsKey, stat)
+        stat
+      }
     // `inflation` converts COMPRESSED parquet file bytes to an
     // in-memory hash-relation estimate (see broadcastIfSmall). When
     // every leaf of the hint plan is an InMemoryRelation the statistic
@@ -101,12 +107,17 @@ object Joins {
     bytes * eff <= budget
   }
 
-  private def statsOf(sizeHint: DataFrame): (BigInt, Boolean) = {
+  /** ((bytes, every leaf cached), every cached leaf materialized). */
+  private def statsOf(sizeHint: DataFrame): ((BigInt, Boolean), Boolean) = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val plan = sizeHint.queryExecution.optimizedPlan
     val leaves = plan.collectLeaves()
-    val cached = leaves.nonEmpty && leaves.forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
-    (plan.stats.sizeInBytes, cached)
+    val inMemory = leaves.collect { case r: InMemoryRelation => r }
+    // read before the statistic, so a cache that finishes loading in
+    // between is not memoized with its pre-load size
+    val settled = inMemory.forall(_.cacheBuilder.isCachedColumnBuffersLoaded)
+    val cached = leaves.nonEmpty && inMemory.size == leaves.size
+    ((plan.stats.sizeInBytes, cached), settled)
   }
 
   private val statsCache = new java.util.concurrent.ConcurrentHashMap[

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Catalog
 import graft.functions.{SimilarityFunctions => SF, TextFunctions => TF}
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,120 +24,95 @@ object PipelineQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  /** Session-memoized write-once artifacts (signatures, labels,
-    * inverted index, IVF lists): built, persisted, and materialized
-    * once per (session, sf dir), then reused by every query in the
+  /** The session artifact store: every write-once artifact (signature
+    * tables, labels, inverted indexes, IVF lists, PQ models, the
+    * contamination bloom, bucketed index tables) is built at most once
+    * per (session, sf dir, kind), then reused by every query in the
     * session — the local stand-in for "write the artifact to parquet
-    * once" at 100 TB. One helper so the synchronization, persist, and
-    * materialize logic exists in exactly one place.
-    *
-    * Lifecycle note: the DataFrame values reference their
-    * SparkSession, so the weak keying alone cannot reclaim entries
-    * while frames are cached — the library's sessions are long-lived
-    * singletons, and `clearArtifacts` releases a session's artifacts
-    * explicitly when needed.
+    * once" at 100 TB. Each key builds under its own cell's lock, never
+    * under a map lock (builders recurse: labels -> mhbk -> shingles);
+    * a racing caller waits instead of building a duplicate. Frames
+    * reference their session, so weak keys cannot reclaim a cached
+    * entry: [[clearArtifacts]] releases a session's artifacts. No byte
+    * budget: Spark's block manager already evicts LRU blocks.
     */
-  private val artifactCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
+  private val artifacts = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Artifact]]())
 
-  private[queries] def memoArtifact(s: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val m = artifactCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    val key = s"$kind:$dir"
-    val existing = m.get(key)
-    if (existing != null) existing
-    else {
-      // Build OUTSIDE any CHM bin lock: a builder may itself memoize a
-      // dependency artifact in this same map (inv/labels -> shingles),
-      // and ConcurrentHashMap.computeIfAbsent forbids the mapping
-      // function touching other keys (recursive-update
-      // IllegalStateException when the keys share a bin).
+  private final class Artifact {
+    private var value: Any = _
+    private var built = false
+    private var closed = false
+
+    /** None once released: the caller looked this cell up before
+      * clearArtifacts removed it and must look up a fresh one. */
+    def get(build: => Any): Option[Any] = synchronized {
+      if (closed) None
+      else { if (!built) { value = build; built = true }; Some(value) }
+    }
+
+    // synchronized: waits for an in-flight build, not to leak its blocks
+    def release(): Unit = synchronized {
+      value match {
+        case df: org.apache.spark.sql.Dataset[_] =>
+          df.unpersist()
+          // tfidfSig and the labels' last propagation round
+          graft.Engine.releaseCheckpoints(df.toDF())
+        case _ => // driver values and table names: forgetting is enough
+      }
+      value = null
+      closed = true
+    }
+  }
+
+  /** Build-once memo: `build` runs at most once per (session, dir,
+    * kind), and a hit returns the stored value untouched. The cell is
+    * looked up under the store's lock, the build runs outside it.
+    */
+  private[queries] def memo[T](s: SparkSession, dir: String, kind: String)(
+      build: => T): T = {
+    val cell = artifacts.synchronized {
+      artifacts.computeIfAbsent(s, _ => new ConcurrentHashMap[String, Artifact]())
+        .computeIfAbsent(s"$kind:$dir", _ => new Artifact)
+    }
+    cell.get(build) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None => memo(s, dir, kind)(build)
+    }
+  }
+
+  /** Cached-frame artifact: persisted MEMORY_AND_DISK (unless the
+    * builder hands back an already-persisted plan, e.g.
+    * componentLabels) and materialized before it is stored.
+    */
+  private[graft] def memoArtifact(s: SparkSession, dir: String, kind: String)(
+      build: => DataFrame): DataFrame =
+    memo(s, dir, kind) {
       val df = build
-      // some builders (componentLabels) hand back an
-      // already-persisted plan — don't double-persist
       val cached =
         if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
           df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else df
       cached.count()
-      val prior = m.putIfAbsent(key, cached)
-      // On a lost race keep the winner; our copy shares the winner's
-      // CacheManager entry (same logical plan), so unpersisting it here
-      // would evict the winner's cache too.
-      if (prior == null) cached else prior
+      cached
     }
-  }
 
-  /** Checkpoint-backed twin of [[memoArtifact]] for artifacts whose
-    * consumers reference them through IDENTICAL exchange subtrees
-    * (e.g. one broadcast build per join side): a `.persist()` artifact
-    * scans as InMemoryTableScan, which AQE wraps in a per-reference
-    * `TableCacheQueryStage <id>` whose canonicalized form keeps the id
-    * — identical exchanges above it never canonicalize equal and
-    * stage/exchange reuse NEVER fires (measured on Spark 4.1.2 with a
-    * triple self-join over an aggregate: cached base, no reuse;
-    * eagerly checkpointed base, reuse as uncached), so each
-    * reference re-executes the exchange. An eager `localCheckpoint`
-    * materializes to RDD blocks instead: the scan is a plain
-    * `Scan ExistingRDD` (same RDD instance on every reference, no AQE
-    * wrap), identical exchanges above it canonicalize equal, and the
-    * second reference plans as ReusedExchange. Same session lifecycle
-    * as the cached artifacts (built once per (session, dir) at warm
-    * time, no cross-run reuse); trade-off: blocks are lineage-free,
-    * so executor loss fails the job instead of recomputing — same
-    * disclosed trade as probeFromPostings' materialize.
+  /** Release every artifact stored for `s`: unpersist cached frames and
+    * checkpoint blocks, forget driver values and table names (bucketed
+    * tables live in the session catalog + warehouse, not the block
+    * cache; a rebuild overwrites them in place). A memo call racing the
+    * clear builds into a fresh cell, which the next clear releases; a
+    * frame it was already handed may be released under it.
     */
-  private[queries] def memoArtifactCk(s: SparkSession, dir: String,
-      kind: String)(build: => DataFrame): DataFrame = {
-    val m = artifactCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    val key = s"$kind:$dir"
-    val existing = m.get(key)
-    if (existing != null) existing
-    else {
-      val df = build.localCheckpoint(true)
-      val prior = m.putIfAbsent(key, df)
-      if (prior == null) df else prior
-    }
-  }
+  def clearArtifacts(s: SparkSession): Unit =
+    Option(artifacts.remove(s)).foreach(_.values.forEach(_.release()))
 
-  /** Release every artifact memoized for `s` (unpersist + forget). */
-  def clearArtifacts(s: SparkSession): Unit = {
-    Option(artifactCache.remove(s)).foreach { m =>
-      m.values.forEach(df => { df.unpersist(); () })
-    }
-    // bucketed-table artifacts live in the session catalog + warehouse,
-    // not the block cache — forgetting the memo is enough (a rebuild
-    // overwrites in place)
-    tableArtifacts.remove(s)
-    ()
-  }
-
-  /** Session-memoized BUCKETED-TABLE artifacts — the on-disk twin of
-    * [[memoArtifact]] for standing indexes. `build` receives a
-    * dir-unique table-name prefix and writes catalog tables under it
-    * (bucketBy layouts via Dedup.writeIndexBucketed et al.); later
-    * calls skip straight to `spark.table` reads. Unlike the cached-
-    * frame artifacts this is the literal production shape: the index
-    * IS the bucketed warehouse table, probes read it co-located, and
-    * nothing re-signs the corpus — loading severs all lineage.
+  /** Dir-unique table-name prefix of a BUCKETED-TABLE artifact (the
+    * literal production shape: the index IS the bucketed warehouse
+    * table, written once, read co-located, lineage-free).
     */
-  private val tableArtifacts = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]())
-
-  private[queries] def memoTables(s: SparkSession, dir: String,
-      kind: String)(build: String => Unit): String = {
-    val name = s"graft_${kind}_" + f"${dir.hashCode & 0x7fffffff}%08x"
-    tableArtifacts
-      .computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-      .computeIfAbsent(s"$kind:$dir",
-        { _ => build(name); java.lang.Boolean.TRUE })
-    name
-  }
+  private def indexTable(kind: String, dir: String): String =
+    s"graft_${kind}_" + f"${dir.hashCode & 0x7fffffff}%08x"
 
   /** Scale-adaptive partition count for a derived artifact's key
     * layout (VERDICT r20 next #7): the r20 artifacts inherited the
@@ -189,18 +165,16 @@ object PipelineQueries {
 
   private def sourceBytes(dir: String, table: String): Long =
     srcBytesCache.computeIfAbsent(s"$dir/$table", { _ =>
-      try {
-        val root = java.nio.file.Paths.get(dir, s"$table.parquet")
-        if (java.nio.file.Files.isRegularFile(root))
-          java.lang.Long.valueOf(java.nio.file.Files.size(root))
-        else if (java.nio.file.Files.isDirectory(root)) {
-          import scala.jdk.CollectionConverters._
-          java.lang.Long.valueOf(
-            java.nio.file.Files.walk(root).iterator().asScala
-              .filter(java.nio.file.Files.isRegularFile(_))
-              .map(java.nio.file.Files.size(_)).sum)
-        } else java.lang.Long.valueOf(0L)
-      } catch { case _: Throwable => java.lang.Long.valueOf(0L) }
+      val root = java.nio.file.Paths.get(dir, s"$table.parquet")
+      if (java.nio.file.Files.isRegularFile(root))
+        java.lang.Long.valueOf(java.nio.file.Files.size(root))
+      else if (java.nio.file.Files.isDirectory(root)) {
+        import scala.jdk.CollectionConverters._
+        java.lang.Long.valueOf(
+          java.nio.file.Files.walk(root).iterator().asScala
+            .filter(java.nio.file.Files.isRegularFile(_))
+            .map(java.nio.file.Files.size(_)).sum)
+      } else java.lang.Long.valueOf(0L)
     }).longValue()
 
   /** Warm the shared artifacts outside a timed region (bench warm
@@ -210,6 +184,7 @@ object PipelineQueries {
     hashedShingled(s, dir)
     minhashBanded(s, dir)
     componentLabels(s, dir)
+    componentLabelsStarFix(s, dir)
     normEmbeddings(s, dir)
     embBandBuckets(s, dir)
     annBandBuckets(s, dir)
@@ -226,7 +201,8 @@ object PipelineQueries {
     Round12Queries.pqCodesWide(s, dir)
     Round12Queries.pqCodebookEven(s, dir)
     Round12Queries.pqModelEven(s, dir)
-    Round11Queries.warmContam(s, dir)
+    Round11Queries.contamBloom(s, dir)
+    Round11Queries.contamEvalSet(s, dir)
     ()
   }
 
@@ -242,7 +218,8 @@ object PipelineQueries {
     */
   private[queries] def incrementalIndex(s: SparkSession,
       dir: String): graft.operators.Dedup.ShingleIndex = {
-    val name = memoTables(s, dir, "incidx") { nm =>
+    val name = memo(s, dir, "incidx") {
+      val nm = indexTable("incidx", dir)
       def standing =
         t(s, dir, "documents").filter(col("doc_id") % 2 === 0)
       // ONE shared shingle explode feeds both index frames; persisted
@@ -257,6 +234,7 @@ object PipelineQueries {
         graft.operators.Dedup.buildIndexFromPostings(raw), nm,
         artifactPartitions(s, dir))
       finally { raw.unpersist(); () }
+      nm
     }
     // Serve from the BUCKETED tables (VERDICT r12 what's-wrong #2):
     // the probe's corpus-side joins on `s` now read in place —
@@ -286,12 +264,14 @@ object PipelineQueries {
     */
   private[queries] def winnowIncIndex(s: SparkSession,
       dir: String): graft.operators.Dedup.ShingleIndex = {
-    val name = memoTables(s, dir, "winidx") { nm =>
+    val name = memo(s, dir, "winidx") {
+      val nm = indexTable("winidx", dir)
       graft.operators.Dedup.writeIndexBucketed(
         graft.operators.Dedup.buildWinnowIndex(
           t(s, dir, "documents").filter(col("doc_id") % 2 === 0),
           "doc_id", "text", dfCap = 16),
         nm, artifactPartitions(s, dir))
+      nm
     }
     // memo-cached like incrementalIndex: bucketed partitioning rides
     // into the columnar cache, probes stop re-reading warehouse parquet
@@ -311,7 +291,8 @@ object PipelineQueries {
     */
   private[queries] def minhashIncIndex(s: SparkSession,
       dir: String): graft.operators.Dedup.MinHashIndex = {
-    val name = memoTables(s, dir, "mhidx") { nm =>
+    val name = memo(s, dir, "mhidx") {
+      val nm = indexTable("mhidx", dir)
       val standing = hashedShingled(s, dir)
         .withColumnRenamed("doc_id", "id")
         .filter(col("id") % 2 === 0)
@@ -319,6 +300,7 @@ object PipelineQueries {
         graft.operators.Dedup.MinHashIndex(
           graft.operators.Dedup.bandedBuckets(standing), standing),
         nm, artifactPartitions(s, dir))
+      nm
     }
     // memo-cached like incrementalIndex: bucketed partitioning rides
     // into the columnar cache, probes stop re-reading warehouse parquet
@@ -337,19 +319,22 @@ object PipelineQueries {
     * released winnowPairs' persisted return — memoizing the postings
     * artifact gives the release a single owner, clearArtifacts).
     */
-  private[queries] def winnowPostings(s: SparkSession, dir: String): DataFrame = {
-    // persist the raw winnow explode for the duration of the warm
-    // materialization — the df-cap branch and the postings join each
-    // reference it (ADVICE r10: unpersisted, the corpus-wide winnow
-    // pass ran twice at warm time). No-op on a warm memo hit.
-    val raw = graft.operators.Dedup.rawWinnowPostings(
-        t(s, dir, "documents"), "doc_id", "text")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try memoArtifact(s, dir, "winnow") {
-      graft.operators.Dedup.capWinnowPostings(
-        raw, t(s, dir, "documents"))
-    } finally { raw.unpersist(); () }
-  }
+  private[queries] def winnowPostings(s: SparkSession, dir: String): DataFrame =
+    memo(s, dir, "winnow") {
+      // the df-cap branch and the postings join each reference the raw
+      // winnow explode (ADVICE r10: unpersisted, the corpus-wide pass
+      // ran twice), so `out` is materialized while `raw` is cached
+      val raw = graft.operators.Dedup.rawWinnowPostings(
+          t(s, dir, "documents"), "doc_id", "text")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val out = graft.operators.Dedup.capWinnowPostings(
+            raw, t(s, dir, "documents"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        out.count()
+        out
+      } finally { raw.unpersist(); () }
+    }
 
   /** TF-IDF weight postings (doc_id, s, wq): the df-capped inverted
     * index joined to its document frequencies with the fixed-point
@@ -392,14 +377,18 @@ object PipelineQueries {
   /** The tf-idf tier's verify half: per-doc sorted signature arrays
     * (term hashes + weights) + the exact norm — the in-row-verify
     * twin of the prefix index above, same write-once contract.
+    * Stored as an eager `localCheckpoint`, not a cached frame: both
+    * verify sides broadcast it through identical exchanges, and AQE
+    * wraps a cached scan in a per-reference `TableCacheQueryStage`
+    * whose canonical form keeps the id, so exchange reuse never fires
+    * (measured on Spark 4.1.2). A checkpoint scans as one plain
+    * `Scan ExistingRDD`: the second side plans as ReusedExchange.
+    * Trade-off: lineage-free blocks, so executor loss fails the job.
     */
   private[queries] def tfidfSig(s: SparkSession, dir: String): DataFrame =
-    // checkpoint-backed: BOTH verify sides broadcast this table (one
-    // BroadcastExchange per side, identical mod attribute renames) —
-    // over a cache each side built its own broadcast; over the
-    // checkpoint RDD the second side plans as ReusedExchange
-    memoArtifactCk(s, dir, "tfidfsig") {
+    memo(s, dir, "tfidfsig") {
       graft.operators.TextSim.signatures(tfidfWeights(s, dir))
+        .localCheckpoint(true)
     }
 
   /** Document-frequency-capped inverted shingle index (doc_id, s):
@@ -419,7 +408,7 @@ object PipelineQueries {
       // this artifact on both sides, and Spark 4.1's AQE cannot reuse
       // identical exchanges above cached relations
       // (TableCacheQueryStage canonicalization keeps per-reference
-      // stage ids — see memoArtifactCk), so an unpartitioned cache
+      // stage ids — see tfidfSig), so an unpartitioned cache
       // was re-shuffled once PER SIDE per run. Partitioned, both sides
       // read co-located and the join plans with no exchange — the
       // in-memory twin of writeIndexBucketed's bucket layout (the

@@ -95,17 +95,11 @@ object Round12Queries {
     * O(model) = k·dims, the same budget as the serving ADC table
     * (production ships it with the codebook parquet).
     */
-  private val pqModelCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, graft.plans.PqModel]]())
-
   private[queries] def pqModelEven(s: SparkSession,
       dir: String): graft.plans.PqModel =
-    pqModelCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[
-        String, graft.plans.PqModel]())
-      .computeIfAbsent(dir,
-        _ => graft.operators.Pq.collectModel(pqCodebookEven(s, dir)))
+    PipelineQueries.memo(s, dir, "pqmodele") {
+      graft.operators.Pq.collectModel(pqCodebookEven(s, dir))
+    }
 
   /** Shared oracle CTE chain for the PQ tier (embeddings → long form →
     * seed codebook → one Lloyd step → codes) — mirrors the Spark

@@ -163,13 +163,14 @@ class QueryPlanSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     // Fingerprints must capture the RAW operator shape, independent of
     // which specs (or none — a `-z golden` run) executed earlier in
-    // this JVM: memoArtifact persists + materializes shared artifacts
-    // at query-CONSTRUCTION time, so a pick that is the first-ever
-    // reference to an artifact would register a cache entry mid-loop
-    // and every later pick would fingerprint an InMemoryRelation
-    // substitution instead of its own operator tree (the r15 poisoned
-    // regen). Construct every pick once to force all artifact
-    // creation, THEN clear the cache — the memo map survives, so the
+    // this JVM: the artifact store (PipelineQueries.memo) persists +
+    // materializes shared artifacts at query-CONSTRUCTION time, so a
+    // pick that is the first-ever reference to an artifact would
+    // register a cache entry mid-loop and every later pick would
+    // fingerprint an InMemoryRelation substitution instead of its own
+    // operator tree (the r15 poisoned regen). Construct every pick
+    // once to force all artifact creation, THEN clear the cache — the
+    // store survives and a hit returns its frame untouched, so the
     // fingerprint pass below rebuilds no artifact and substitutes no
     // cache, whatever ran before.
     graft.tools.PlanGolden.picks.foreach { name =>

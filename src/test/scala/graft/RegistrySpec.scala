@@ -61,4 +61,16 @@ class RegistrySpec extends SparkSpec {
     }
     assert(knobs.isEmpty, s"unexpected env knobs: ${knobs.mkString(", ")}")
   }
+
+  test("one artifact store: session-keyed maps only in the store and Catalog") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    val maps = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("WeakHashMap[SparkSession"))
+      .map(_.getFileName.toString).toSet
+    assert(maps.nonEmpty, s"run from the repo root: $root")
+    assert(maps.subsetOf(Set("PipelineQueries.scala", "Catalog.scala")),
+      s"memoize through PipelineQueries.memo instead: ${maps.mkString(", ")}")
+  }
 }

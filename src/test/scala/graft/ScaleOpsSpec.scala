@@ -621,6 +621,36 @@ class ScaleOpsSpec extends SparkSpec {
       Some("/error-report/"), None))
   }
 
+  test("fitsBroadcast memoizes a cached leaf's stats only once materialized") {
+    import org.apache.spark.sql.functions.col
+    val base = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select("l_orderkey", "l_returnflag").filter(col("l_orderkey") > -7)
+      .persist()
+    def hint = base.select("l_orderkey", "l_returnflag")
+    def bytes = hint.queryExecution.optimizedPlan.stats.sizeInBytes
+    val key = "stats-before-materialization#test"
+    val maxBytes = "spark.graft.broadcast.maxBytes"
+    try {
+      val planned = bytes // the unmaterialized cache reports parquet bytes
+      base.count()
+      val loaded = bytes
+      assert(planned != loaded)
+      // cached leaves route at inflation 2: put the budget between the
+      // two estimates, so each answer shows which one it used
+      spark.conf.set(maxBytes, (2 * planned.min(loaded)).toString)
+      base.unpersist(blocking = true)
+      base.persist()
+      assert(graft.operators.Joins.fitsBroadcast(hint, statsKey = key) ==
+        (planned <= loaded))
+      base.count()
+      assert(graft.operators.Joins.fitsBroadcast(hint, statsKey = key) ==
+        (loaded <= planned))
+    } finally {
+      spark.conf.unset(maxBytes)
+      base.unpersist()
+    }
+  }
+
   test("malformed graft byte confs fail loudly, naming the conf and value") {
     val hint = spark.range(10).toDF()
     val reads: Seq[(String, () => Any)] = Seq(
