@@ -66,6 +66,8 @@ object Bench {
     val t0 = System.nanoTime()
     val ok =
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      // one failing query must not end the run: it is logged and
+      // counted in n_failed / iso_n_failed below
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         false

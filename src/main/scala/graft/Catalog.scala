@@ -10,6 +10,8 @@ import org.apache.spark.sql.types.LongType
   * schema inference surprises, temp views for the SQL surface.
   */
 object Catalog {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Catalog")
+
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
@@ -146,27 +148,33 @@ object Catalog {
         val f = new java.io.File(s"$dir/$name.parquet")
         // directory-style parquet: File.length() on a directory is
         // the inode size (~4 KiB), which silently disabled the split
-        // for multi-file layouts — sum the contained part files
+        // for multi-file layouts — sum the contained part files.
+        // Sizing only, so I/O failures here WARN and fall back (the
+        // read above already proved the table is parquet).
         val bytes =
-          try {
-            if (f.isDirectory)
-              f.listFiles().iterator
-                .filter(x => x.isFile && !x.getName.startsWith("_")
-                  && !x.getName.startsWith("."))
-                .map(_.length()).sum
-            else f.length()
-          } catch { case _: Throwable => 0L }
-        val rowGroups =
-          try {
-            if (f.isDirectory) Int.MaxValue // multi-file: splittable
-            else {
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(new org.apache.hadoop.fs.Path(f.toURI),
-                  spark.sessionState.newHadoopConf())
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              try r.getRowGroups.size finally r.close()
-            }
-          } catch { case _: Throwable => 1 }
+          if (!f.isDirectory) f.length()
+          else Option(f.listFiles()) match {
+            case Some(parts) => parts.iterator
+              .filter(x => x.isFile && !x.getName.startsWith("_")
+                && !x.getName.startsWith("."))
+              .map(_.length()).sum
+            case None =>
+              log.warn(s"cannot list $f; scan not split")
+              0L
+          }
+        lazy val rowGroups =
+          if (f.isDirectory) Int.MaxValue // multi-file: splittable
+          else try {
+            val in = org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(new org.apache.hadoop.fs.Path(f.toURI),
+                spark.sessionState.newHadoopConf())
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            try r.getRowGroups.size finally r.close()
+          } catch { case e: java.io.IOException =>
+            log.warn(s"cannot read the parquet footer of $f; " +
+              "assuming one row group", e)
+            1
+          }
         val n = math.min(par.toLong, math.max(1L, bytes >> 19)).toInt
         if (n > 1 && rowGroups <= 1) df.repartition(n) else df
       } else df

@@ -10,15 +10,20 @@ object Verify {
     // Bench's session, so the oracle checks the plans Bench times
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
+    var failed = 0
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
+      // one failing query must not hide the others' results: it is
+      // logged, counted, and shows as a missing output in the compare
       catch { case e: Throwable =>
+        failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    System.err.println(s"[verify] $failed queries failed")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -20,33 +20,49 @@ import org.apache.spark.sql.functions.udaf
   */
 object RobustCalibAgg {
 
-  case class Buf(sum: Double, min: Double, max: Double, count: Long)
+  /** Sum, min and max as DECIMAL(18,6) unscaled longs (micro-units),
+    * plus the sample count: long addition is exact, so the result
+    * cannot depend on partition-merge order, as a double sum does.
+    */
+  case class Buf(sum: Long, min: Long, max: Long, count: Long)
 
-  // Output is plain Double: groupBy groups always hold ≥1 row, so the
-  // empty case can't reach finish().
-  //
-  // Known bounded risk: `sum` accumulates Double in partition-merge
-  // order, so the last ~ulp (≈1e-13 for these magnitudes) is
-  // order-dependent vs the oracle's sequential SUM. The oracle rounds
-  // to 4 dp, so a mismatch needs a group mean within ~1e-13 of a
-  // 0.00005 boundary (~1e-9 per group). A DECIMAL buffer would remove
-  // it but introduces per-value cast-rounding divergence instead.
-  val aggregator: Aggregator[Double, Buf, Double] =
-    new Aggregator[Double, Buf, Double] {
-      def zero: Buf = Buf(0.0, Double.PositiveInfinity,
-        Double.NegativeInfinity, 0L)
-      def reduce(b: Buf, x: Double): Buf =
-        Buf(b.sum + x, math.min(b.min, x), math.max(b.max, x), b.count + 1)
+  // NULL samples are skipped, like SQL aggregates; an all-NULL group
+  // yields NULL. The output is the exact quotient rounded HALF_UP at
+  // 18 dp: the quotient's denominator is count·10⁶, so no exact value
+  // lies within 10⁻¹⁸ of a coarser rounding boundary without being on
+  // it, and rounding it again (e.g. to 4 dp) equals rounding the
+  // exact quotient once.
+  val aggregator: Aggregator[java.math.BigDecimal, Buf, java.math.BigDecimal] =
+    new Aggregator[java.math.BigDecimal, Buf, java.math.BigDecimal] {
+      def zero: Buf = Buf(0L, Long.MaxValue, Long.MinValue, 0L)
+      def reduce(b: Buf, x: java.math.BigDecimal): Buf =
+        if (x == null) b
+        else {
+          val u = x.movePointRight(6).longValueExact()
+          Buf(Math.addExact(b.sum, u), math.min(b.min, u),
+            math.max(b.max, u), b.count + 1)
+        }
       def merge(a: Buf, b: Buf): Buf =
-        Buf(a.sum + b.sum, math.min(a.min, b.min),
+        Buf(Math.addExact(a.sum, b.sum), math.min(a.min, b.min),
           math.max(a.max, b.max), a.count + b.count)
-      def finish(b: Buf): Double =
-        if (b.count < 3) b.sum / b.count
-        else (b.sum - b.min - b.max) / (b.count - 2)
+      def finish(b: Buf): java.math.BigDecimal =
+        if (b.count == 0) null
+        else {
+          val (num, den) =
+            if (b.count < 3) (b.sum, b.count)
+            else (b.sum - b.min - b.max, b.count - 2)
+          java.math.BigDecimal.valueOf(num, 6).divide(
+            java.math.BigDecimal.valueOf(den), 18,
+            java.math.RoundingMode.HALF_UP)
+        }
       def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-      def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+      def outputEncoder: Encoder[java.math.BigDecimal] = Encoders.DECIMAL
     }
 
-  /** Column form for DataFrame groupBy().agg(...). */
-  def robustMean(c: Column): Column = udaf(aggregator).apply(c)
+  /** Column form for DataFrame groupBy().agg(...): samples are taken
+    * as DECIMAL(18,6) (QueryDef's money convention), the result is a
+    * DECIMAL(38,18).
+    */
+  def robustMean(c: Column): Column =
+    udaf(aggregator, Encoders.DECIMAL).apply(c.cast("decimal(18,6)"))
 }

@@ -20,16 +20,9 @@ object SimilarityFunctions {
   /** Sequential float64 dot product over two array<double> columns,
     * via the codegen'd native expression (graft.plans.DotProduct).
     * Bit-identical to the higher-order `aggregate(zip_with(...))` form
-    * (kept below for reference/fallback) and to DuckDB
-    * `list_dot_product`.
+    * and to DuckDB `list_dot_product`.
     */
   def dot(a: Column, b: Column): Column = graft.plans.DotProduct(a, b)
-
-  /** The pure-built-in fallback form of `dot` (interpreted lambdas —
-    * correct everywhere, ~10× slower in tight loops).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, z) => acc + z)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -54,17 +47,8 @@ object SimilarityFunctions {
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
-  /** `nPlanes` hyperplanes of dimension `dim`, as literal nested
-    * arrays (constant-folded by Catalyst — zero per-row hash cost, the
-    * scale-correct form vs. re-deriving md5 per row).
-    */
-  def planesLiteral(nPlanes: Int, dim: Int): Column =
-    array((0 until nPlanes).map { p =>
-      array((0 until dim).map(d => lit(planeComponent(p, d))): _*)
-    }: _*)
-
-  /** One hyperplane as a flat literal array (avoids building the full
-    * nPlanes×dim nested literal per term — O(n²·dim) tree blowup).
+  /** One hyperplane as a flat literal array (constant-folded by
+    * Catalyst — zero per-row hash cost vs. re-deriving md5 per row).
     */
   private def planeLiteral(p: Int, dim: Int): Column =
     array((0 until dim).map(d => lit(planeComponent(p, d))): _*)

@@ -45,9 +45,6 @@ object TextFunctions {
   def hashedShingles31(shingleArr: Column): Column =
     graft.plans.Hex60Array(shingleArr, graft.plans.MinHashSig.P)
 
-  /** Array-level hex60 (codegen; one native md5 loop per row). */
-  def hex60Array(arr: Column): Column = graft.plans.Hex60Array(arr)
-
   /** MinHash signature: slot i = min((a_i·h + b_i) mod p) over shingle
     * hashes h — the standard affine family, evaluated by the native
     * codegen expression (graft.plans.MinHashSig; one md5 per shingle +
@@ -134,13 +131,6 @@ object TextFunctions {
     when(length(text) > 0,
       length(regexp_replace(text, "[^a-zA-Z]", "")).cast("double") /
         length(text))
-      .otherwise(0.0)
-
-  /** Mean token length. */
-  def meanTokenLen(toks: Column): Column =
-    when(size(toks) > 0,
-      aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double") /
-        size(toks))
       .otherwise(0.0)
 
   /** Composite quality score in [0,1]: favors mid-length docs with

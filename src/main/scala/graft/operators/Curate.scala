@@ -275,163 +275,9 @@ object Curate {
       .agg(count(lit(1)).as("n_shared"))
   }
 
-  /** Decontamination index — the build-once artifact the bloom-
-    * prefiltered contamination check probes: the distinct eval-side
-    * n-gram set plus a Bloom filter over it. At 100 TB the eval
-    * benchmark suite's n-gram set can run to tens of millions of
-    * entries — too big to ship as a broadcast hash relation (GBs of
-    * strings) but a few hundred MB as bloom BITS, so the filter rides
-    * to every executor and prunes the corpus-side shingle stream
-    * before the exact join sees it.
-    */
-  final case class ContamIndex(evalShingles: DataFrame,
-      bloom: org.apache.spark.util.sketch.BloomFilter)
-
-  /** Build the [[ContamIndex]] for `docs` rows where `isEval` holds
-    * (NULL counts as train, as in [[decontaminate]]). The distinct
-    * eval shingle frame is persisted for the index's lifetime — three
-    * consumers read it (the sizing count, the bloom populate, the
-    * verify join), and the single-pay rule says the eval-side explode
-    * is paid once. Callers own the release ([[releaseContamIndex]]).
-    */
-  def buildContamIndex(docs: DataFrame, textCol: String,
-      isEval: org.apache.spark.sql.Column, n: Int = 4,
-      fpp: Double = 0.01): ContamIndex = {
-    val evalSh = docs
-      .filter(coalesce(isEval, lit(false)))
-      .select(explode(TF.shingles(TF.tokens(col(textCol)), n)).as("s"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ContamIndex(evalSh, bloomOver(evalSh, fpp))
-  }
-
-  /** Release the index's cached eval shingle frame (safe after every
-    * probe result has been materialized). */
-  def releaseContamIndex(index: ContamIndex): Unit =
-    index.evalShingles.unpersist()
-
-  /** Persist the [[ContamIndex]]: the eval shingle set as parquet, the
-    * bloom as its own portable binary format — the standing-artifact
-    * contract every index tier here follows (minhash, winnow): build
-    * once per eval suite, probe every corpus shard against the LOADED
-    * index without touching eval docs again.
-    */
-  def writeContamIndex(index: ContamIndex, dir: String): Unit = {
-    index.evalShingles.write.mode("overwrite")
-      .parquet(s"$dir/eval_shingles")
-    val os = new java.io.FileOutputStream(s"$dir/bloom.bin")
-    try index.bloom.writeTo(os) finally os.close()
-  }
-
-  def loadContamIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): ContamIndex = {
-    val is = new java.io.FileInputStream(s"$dir/bloom.bin")
-    val bloom =
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(is)
-      finally is.close()
-    ContamIndex(spark.read.parquet(s"$dir/eval_shingles"), bloom)
-  }
-
-  /** Bucketed-table variant of [[writeContamIndex]]: the eval shingle
-    * set lands as a catalog table `bucketBy(nBuckets, "s")` (the bloom
-    * binary goes beside it in `bloomDir`). At 100 TB the eval n-gram
-    * set is tens of millions of rows — too big to broadcast — so the
-    * exact verify join shuffles BOTH sides on `s` when the index is
-    * plain parquet; bucketed, the standing side reads in place and
-    * only the (bloom-pruned, already-small) candidate stream
-    * exchanges. Same layout rationale as Dedup.writeIndexBucketed.
-    */
-  def writeContamIndexBucketed(index: ContamIndex, name: String,
-      bloomDir: String, nBuckets: Int = 32): Unit = {
-    Layout.replaceTable(index.evalShingles.sparkSession,
-      s"${name}_eval_shingles")
-    index.evalShingles.repartition(nBuckets, col("s"))
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "s").sortBy("s")
-      .saveAsTable(s"${name}_eval_shingles")
-    new java.io.File(bloomDir).mkdirs()
-    val os = new java.io.FileOutputStream(s"$bloomDir/bloom.bin")
-    try index.bloom.writeTo(os) finally os.close()
-  }
-
-  def loadContamIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      name: String, bloomDir: String): ContamIndex = {
-    val is = new java.io.FileInputStream(s"$bloomDir/bloom.bin")
-    val bloom =
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(is)
-      finally is.close()
-    ContamIndex(spark.table(s"${name}_eval_shingles"), bloom)
-  }
-
-  /** Bloom filter over the `s` column of a (typically cached) distinct
-    * shingle frame. Exposed so a memoized artifact can be indexed
-    * without rebuilding the frame.
-    *
-    * KEYING CONTRACT: bits are set on `xxhash64(s)` longs, matching
-    * the probe side's native `BloomFilterMightContain(_, xxhash64(s))`
-    * expression — the same (hash → putLong / mightContainLong) pairing
-    * Spark's own injected runtime filters use. Blooms persisted by
-    * string-keyed builds (pre-r13) must be rebuilt: a key-scheme
-    * mismatch silently filters everything out before the verify join.
-    */
-  def bloomOver(evalShingles: DataFrame,
-      fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter =
-    evalShingles.select(xxhash64(col("s")).as("h"))
-      .stat.bloomFilter("h", math.max(evalShingles.count(), 1L), fpp)
-
-  /** Bloom-prefiltered contamination check — same contract as
-    * [[decontaminate]] (returns (id, n_shared) for contaminated
-    * non-eval docs; the exact verify join removes every bloom false
-    * positive, so the RESULT is identical to the exact formulation).
-    * The difference is the scale path: the bloom probe discards the
-    * overwhelmingly-clean corpus shingle stream map-side, so the
-    * shuffle join only ever sees candidate hits. The probe is Spark's
-    * NATIVE `BloomFilterMightContain` over the serialized bloom bits
-    * (the expression Spark's injected runtime filters plan), keyed by
-    * `xxhash64(s)` to match [[bloomOver]] — it codegens with the
-    * surrounding stage and deserializes the bits once per task,
-    * instead of riding the ScalaUDF serialization path (ADVICE r12 /
-    * VERDICT what's-wrong #4). The bits reach executors inside the
-    * stage-broadcast task binary, exactly like Spark's own runtime
-    * filter literals.
-    */
-  def decontaminateWithIndex(docs: DataFrame, idCol: String,
-      textCol: String, isEval: org.apache.spark.sql.Column,
-      index: ContamIndex, n: Int = 4): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      BloomFilterMightContain, Literal, XxHash64}
-    import org.apache.spark.sql.graft.Bridge
-    val bos = new java.io.ByteArrayOutputStream()
-    index.bloom.writeTo(bos)
-    val probe = Bridge.column(BloomFilterMightContain(
-      Literal(bos.toByteArray, org.apache.spark.sql.types.BinaryType),
-      new XxHash64(Seq(Bridge.expression(col("s"))))))
-    docs
-      .filter(!coalesce(isEval, lit(false)))
-      .select(col(idCol).as("id"),
-        explode(TF.shingles(TF.tokens(col(textCol)), n)).as("s"))
-      .filter(probe)
-      .join(index.evalShingles, Seq("s"))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_shared"))
-  }
-
-  /** Convenience build-and-probe form of the bloom-prefiltered
-    * contamination check. Production pipelines build the index once
-    * ([[buildContamIndex]]) and probe every corpus shard against it;
-    * the index's cached eval frame stays alive behind the returned
-    * plan — release it with [[releaseContamIndex]] via the index form
-    * when lifecycle control matters.
-    */
-  def decontaminateBloom(docs: DataFrame, idCol: String, textCol: String,
-      isEval: org.apache.spark.sql.Column, n: Int = 4,
-      fpp: Double = 0.01): DataFrame =
-    decontaminateWithIndex(docs, idCol, textCol, isEval,
-      buildContamIndex(docs, textCol, isEval, n, fpp), n)
-
   // ──── Hashed-signature decontamination — the scale formulation ────
   //
-  // The string tier above joins on the n-gram STRINGS (~40 B each,
+  // `decontaminate` joins on the n-gram STRINGS (~40 B each,
   // materialized by an explode over the whole corpus on every probe).
   // This tier is the signature-table formulation every dedup tier
   // already uses: each doc carries its DISTINCT hex60-hashed n-gram
@@ -459,8 +305,7 @@ object Curate {
 
   /** Bloom over a long-hash column `h` — bits set with `putLong` on
     * the raw hex60 values, the keying [[graft.plans.BloomFilterArrayLong]]
-    * probes with `mightContainLong`. NOT interchangeable with
-    * [[bloomOver]]'s string-keyed xxhash64 scheme.
+    * probes with `mightContainLong`.
     */
   def bloomOverHashes(evalHashes: DataFrame,
       fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter =
@@ -469,46 +314,13 @@ object Curate {
 
   /** Standing index of the hashed tier: the distinct eval hash set
     * (verify side) plus a long-keyed bloom over it (in-row prefilter
-    * side). Same artifact contract as [[ContamIndex]].
+    * side) — `ContamIndexHashed(evalH, bloomOverHashes(evalH, fpp))`.
+    * Build once per eval suite (persist `evalH`: the bloom's sizing
+    * count, its populate and the verify join all read it) and probe
+    * every corpus shard against it.
     */
   final case class ContamIndexHashed(evalHashes: DataFrame,
       bloom: org.apache.spark.util.sketch.BloomFilter)
-
-  /** Build the hashed index from a [[contamSignatures]] table. The
-    * eval hash frame is persisted for the index's lifetime (sizing
-    * count, bloom populate, verify join — single-pay); callers own
-    * the release via [[releaseContamIndexHashed]].
-    */
-  def buildContamIndexHashed(sig: DataFrame,
-      fpp: Double = 0.01): ContamIndexHashed = {
-    val evalH = sig.filter(col("is_eval"))
-      .select(explode(col("hh")).as("h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ContamIndexHashed(evalH, bloomOverHashes(evalH, fpp))
-  }
-
-  def releaseContamIndexHashed(index: ContamIndexHashed): Unit =
-    index.evalHashes.unpersist()
-
-  /** Persist/load the hashed index — parquet hash set + portable
-    * bloom binary, the same standing-artifact layout as
-    * [[writeContamIndex]].
-    */
-  def writeContamIndexHashed(index: ContamIndexHashed, dir: String): Unit = {
-    index.evalHashes.write.mode("overwrite").parquet(s"$dir/eval_hashes")
-    new java.io.File(dir).mkdirs()
-    val os = new java.io.FileOutputStream(s"$dir/bloom.bin")
-    try index.bloom.writeTo(os) finally os.close()
-  }
-
-  def loadContamIndexHashed(spark: org.apache.spark.sql.SparkSession,
-      dir: String): ContamIndexHashed = {
-    val is = new java.io.FileInputStream(s"$dir/bloom.bin")
-    val bloom =
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(is)
-      finally is.close()
-    ContamIndexHashed(spark.read.parquet(s"$dir/eval_hashes"), bloom)
-  }
 
   /** Exact hashed contamination check: train-side signatures
     * `(id, hh)` against a standing eval hash set `(h)`. Returns
@@ -550,23 +362,6 @@ object Curate {
         graft.plans.LongArraySetCount(col("hh"), evalSet).as("n_shared"))
       .filter(col("n_shared") > 0)
 
-  /** Size-gated routing across the decontamination ladder: the
-    * in-row exact-set tier while the distinct eval hash set fits
-    * comfortably in a task (default 16 MB ≈ 2M hashes at 8 B — the
-    * same order as the bloom BITS the next tier ships), the bloom +
-    * candidate-verify tier beyond. The count comes from the index's
-    * persisted eval-hash artifact (production reads it off the
-    * artifact's parquet metadata).
-    */
-  def decontaminateHashedAuto(trainSig: DataFrame,
-      index: ContamIndexHashed,
-      maxInRowSetBytes: Long = 16L << 20): DataFrame = {
-    val n = index.evalHashes.count()
-    if (n * 8 <= maxInRowSetBytes)
-      decontaminateHashedInRow(trainSig, evalHashSet(index.evalHashes))
-    else probeContamHashed(trainSig, index)
-  }
-
   /** Bloom-prefiltered probe of train-side signatures against the
     * hashed index — same result as [[decontaminateHashedExact]] (the
     * verify join removes every bloom false positive). The scale path:
@@ -587,20 +382,6 @@ object Curate {
       .join(index.evalHashes, Seq("h"))
       .groupBy("id")
       .agg(count(lit(1)).as("n_shared"))
-
-  /** Self-contained hashed contamination check over a raw frame —
-    * API parity with [[decontaminate]]; production builds the
-    * signature artifact once and uses the signature forms above.
-    */
-  def decontaminateHashed(docs: DataFrame, idCol: String,
-      textCol: String, isEval: org.apache.spark.sql.Column,
-      n: Int = 4): DataFrame = {
-    val sig = contamSignatures(docs, idCol, textCol, isEval, n)
-    decontaminateHashedExact(
-      sig.filter(!col("is_eval")).select("id", "hh"),
-      sig.filter(col("is_eval")).select(explode(col("hh")).as("h"))
-        .distinct())
-  }
 
   /** Token-budget WATERFILLING across strata — the mixture solver
     * behind "hit these domain proportions within a B-token budget":
@@ -740,23 +521,6 @@ object Curate {
     globalOrderIndex(keyed, Seq(col("h").asc, col(idCol).asc))
       .withColumn("shard", ((col("pos") - 1) % nShards).cast("long"))
   }
-
-  /** Per-(id, n-gram) occurrence counts — the shared intermediate both
-    * halves of the corpus-LM scorer derive from. NARROW: within-doc
-    * multiplicity is counted per ROW by the native single-pass
-    * [[graft.plans.ValueCounts]] expression and only then exploded —
-    * the explode + groupBy(id, gram) formulation shuffles every
-    * n-gram OCCURRENCE across the cluster to count what never needed
-    * to leave the row (measured 2× the whole query's latency at
-    * sf0.1). Callers referencing the result twice persist it for the
-    * build, per the single-pay rule.
-    */
-  def ngramPairCounts(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 2): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        explode(graft.plans.NgramCounts(col(textCol), n)).as("gc"))
-      .select(col("id"), col("gc.g").as("g"), col("gc.c").as("c"))
 
   /** Corpus-LM document scoring from precomputed (id, g, c) pair
     * counts: a document's score is the average corpus frequency of
@@ -941,7 +705,7 @@ object Curate {
     // within-doc multiplicity counted IN-ROW by the single-pass
     // NgramCounts kernel (n=1 ⇒ grams are the tokens, same tokens()
     // contract) — the shuffle then carries one row per (doc, distinct
-    // token), not per occurrence (the ngramPairCounts discipline)
+    // token), not per occurrence
     val cnt = docs
       .select(explode(graft.plans.NgramCounts(col(textCol), 1)).as("gc"))
       .groupBy(col("gc.g").as("tok")).agg(sum("gc.c").as("c"))

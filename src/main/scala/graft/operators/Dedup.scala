@@ -483,9 +483,9 @@ object Dedup {
   final case class ShingleIndex(postings: DataFrame, df: DataFrame)
 
   /** Build a standing index from a corpus (the once-per-corpus batch
-    * job; increments then use [[probeIncremental]] +
-    * [[extendIndex]]). LAZY — production writes it straight to
-    * parquet via [[writeIndex]].
+    * job; increments then use [[probeIncremental]]). LAZY —
+    * production writes it straight to catalog tables via
+    * [[writeIndexBucketed]].
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3, dfCap: Int = 256): ShingleIndex =
@@ -512,26 +512,15 @@ object Dedup {
       dfTab)
   }
 
-  /** Write/load the standing index as parquet — loading severs all
-    * lineage to the original corpus text, which is the point: a probe
-    * against a loaded index cannot re-sign the corpus.
-    */
-  def writeIndex(index: ShingleIndex, dir: String): Unit = {
-    index.postings.write.mode("overwrite").parquet(s"$dir/postings")
-    index.df.write.mode("overwrite").parquet(s"$dir/df")
-  }
-
-  def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): ShingleIndex =
-    ShingleIndex(spark.read.parquet(s"$dir/postings"),
-      spark.read.parquet(s"$dir/df"))
-
   /** Write the standing index as BUCKETED, sorted catalog tables
-    * (`<name>_postings`, `<name>_df`, both `bucketBy(nBuckets, "s")`).
+    * (`<name>_postings`, `<name>_df`, both `bucketBy(nBuckets, "s")`)
+    * — the index's one persisted form. Loading severs all lineage to
+    * the original corpus text, which is the point: a probe against a
+    * loaded index cannot re-sign the corpus.
     *
     * This layout is the 100 TB fix for the probe's shuffle profile:
-    * plain-parquet postings arrive with file-based partitioning, so
-    * EVERY daily probe re-shuffles the O(corpus) postings and df
+    * plain-parquet postings would arrive with file-based partitioning,
+    * so EVERY daily probe would re-shuffle the O(corpus) postings and df
     * frames on `s` before joining the O(shard) side. Bucketed on `s`,
     * the scans report HashPartitioning(s, nBuckets) and the probe
     * plans co-located — only the shard side exchanges (the plan
@@ -584,7 +573,8 @@ object Dedup {
     * multiply-referenced intermediate is the NEW shard's postings
     * (O(shard), recomputed within one action's plan tree), not an
     * O(corpus) build — the corpus side arrives as the standing index,
-    * referenced once per branch and typically loaded from parquet.
+    * referenced once per branch and typically loaded from its
+    * bucketed tables ([[loadIndexBucketed]]).
     * Shuffles on the shingle key only; never broadcasts the index.
     */
   def probeIncremental(newDocs: DataFrame, idCol: String, textCol: String,
@@ -807,45 +797,6 @@ object Dedup {
         explode(TF.charGramWinnow(col(textCol), k, w)).as("s")),
       index, dfCap, minShared)
 
-  /** The updated standing index after absorbing a new shard:
-    * provably equal to `buildIndex(corpus ∪ shard)` (the spec asserts
-    * frame equality differentially) while signing only the shard.
-    * New df = full-outer sum; new postings = (old ∪ shard's) postings
-    * whose combined df stays within the cap — postings the old index
-    * already capped out stay out (their combined df can only have
-    * grown). LAZY like [[buildIndex]]; production writes the result
-    * with [[writeIndex]] and serves the next day's probe from it.
-    */
-  def extendIndex(index: ShingleIndex, newDocs: DataFrame, idCol: String,
-      textCol: String, k: Int = 3, dfCap: Int = 256): ShingleIndex =
-    extendPostings(index,
-      shingleSignatures(newDocs, idCol, textCol, k)
-        .select(col("id"), explode(col("hh")).as("s")), dfCap)
-
-  /** Winnow-tier twin of [[extendIndex]] — same fixed-cap contract as
-    * [[buildWinnowIndex]].
-    */
-  def extendWinnowIndex(index: ShingleIndex, newDocs: DataFrame,
-      idCol: String, textCol: String, k: Int = 5, w: Int = 16,
-      dfCap: Int = 256): ShingleIndex =
-    extendPostings(index,
-      newDocs.select(col(idCol).as("id"),
-        explode(TF.charGramWinnow(col(textCol), k, w)).as("s")), dfCap)
-
-  private def extendPostings(index: ShingleIndex, newPost: DataFrame,
-      dfCap: Int): ShingleIndex = {
-    val dfAll = index.df.withColumnRenamed("df", "__graft_dfa")
-      .join(newPost.groupBy("s").agg(count(lit(1)).as("__graft_dfb")),
-        Seq("s"), "full_outer")
-      .select(col("s"),
-        (coalesce(col("__graft_dfa"), lit(0L)) +
-          coalesce(col("__graft_dfb"), lit(0L))).as("df"))
-    val keep = dfAll.filter(col("df") <= dfCap).select("s")
-    ShingleIndex(
-      index.postings.unionByName(newPost).join(keep, Seq("s")),
-      dfAll)
-  }
-
   /** Standing index for the MINHASH (sketch) tier:
     *
     *  - `buckets` — banded LSH buckets (id, band, bucket), the
@@ -871,8 +822,8 @@ object Dedup {
 
   /** Build the sketch-tier standing index (the once-per-corpus batch
     * job; increments then use [[probeIncrementalMinhash]] +
-    * [[extendMinHashIndex]]). LAZY — production writes it straight to
-    * parquet via [[writeMinHashIndex]].
+    * [[appendMinHashIndexBucketed]]). LAZY — production writes it
+    * straight to catalog tables via [[writeMinHashIndexBucketed]].
     */
   def buildMinHashIndex(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3, nHashes: Int = 32, bands: Int = 8,
@@ -881,47 +832,20 @@ object Dedup {
     MinHashIndex(bandedBuckets(sh, nHashes, bands, rowsPerBand), sh)
   }
 
-  /** Write/load the sketch-tier index as parquet — loading severs all
-    * lineage to the corpus text (a probe cannot re-sign the corpus).
+  /** Table property recording that an index's `hh` arrays were
+    * persisted ASC-sorted ([[shingleSignatures]] contract, round 20).
+    * The loader sorts defensively when it is absent — a legacy index
+    * stays correct at the cost of one sort_array per row.
     */
-  def writeMinHashIndex(index: MinHashIndex, dir: String): Unit = {
-    index.buckets.write.mode("overwrite").parquet(s"$dir/buckets")
-    index.signatures.write.mode("overwrite").parquet(s"$dir/signatures")
-    // format marker (ADVICE r20): signatures are ASC-sorted per the
-    // shingleSignatures contract; loads of indexes persisted by a
-    // pre-contract binary (no marker) must not feed unsorted arrays
-    // into the sorted-merge verify kernel.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, SortedMarkerFile), "2\n")
-    catch { case _: Throwable => () }
-  }
-
-  /** Marker filename/table-property recording that an index's `hh`
-    * arrays were persisted ASC-sorted ([[shingleSignatures]] contract,
-    * round 20). Loaders sort defensively when it is absent — a legacy
-    * index stays correct at the cost of one sort_array per row.
-    */
-  private[graft] val SortedMarkerFile = "_graft_sorted_hh_v2"
   private[graft] val SortedMarkerProp = "graft.sorted.hh"
 
-  private def sortHhIfLegacy(df: DataFrame, sorted: Boolean): DataFrame =
-    if (sorted) df else df.withColumn("hh", sort_array(col("hh")))
-
-  def loadMinHashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): MinHashIndex = {
-    val sorted =
-      try java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, SortedMarkerFile))
-      catch { case _: Throwable => false }
-    MinHashIndex(spark.read.parquet(s"$dir/buckets"),
-      sortHhIfLegacy(spark.read.parquet(s"$dir/signatures"), sorted))
-  }
-
-  /** Bucketed-table twin of [[writeMinHashIndex]] (same rationale as
-    * [[writeIndexBucketed]]): `<name>_buckets` bucketed on the
-    * (band, bucket) join key so candidate discovery co-locates on the
-    * index side, `<name>_signatures` bucketed on `id` so the verify
-    * rerank's ida join reads the O(corpus) signature table in place.
+  /** Write the sketch-tier index as bucketed catalog tables (same
+    * rationale as [[writeIndexBucketed]]): `<name>_buckets` bucketed
+    * on the (band, bucket) join key so candidate discovery co-locates
+    * on the index side, `<name>_signatures` bucketed on `id` so the
+    * verify rerank's ida join reads the O(corpus) signature table in
+    * place. Loading severs all lineage to the corpus text (a probe
+    * cannot re-sign the corpus).
     */
   def writeMinHashIndexBucketed(index: MinHashIndex, name: String,
       nBuckets: Int = 32): Unit = {
@@ -935,22 +859,19 @@ object Dedup {
       .write.mode("overwrite")
       .bucketBy(nBuckets, "id").sortBy("id")
       .saveAsTable(s"${name}_signatures")
-    // sorted-hh format marker — see SortedMarkerProp/loadMinHashIndexBucketed
-    try index.signatures.sparkSession.sql(
+    index.signatures.sparkSession.sql(
       s"ALTER TABLE ${name}_signatures SET TBLPROPERTIES" +
         s" ('$SortedMarkerProp' = 'true')")
-    catch { case _: Throwable => () }
   }
 
   def loadMinHashIndexBucketed(spark: org.apache.spark.sql.SparkSession,
       name: String): MinHashIndex = {
-    val sorted =
-      try spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_signatures"))
-        .properties.get(SortedMarkerProp).contains("true")
-      catch { case _: Throwable => false }
+    val sigs = spark.table(s"${name}_signatures")
+    val sorted = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_signatures"))
+      .properties.get(SortedMarkerProp).contains("true")
     MinHashIndex(spark.table(s"${name}_buckets"),
-      sortHhIfLegacy(spark.table(s"${name}_signatures"), sorted))
+      if (sorted) sigs else sigs.withColumn("hh", sort_array(col("hh"))))
   }
 
   /** Append a delta (a new shard's buckets + signatures) to a
@@ -1055,20 +976,6 @@ object Dedup {
         (size(col("ssa")) + size(col("ssb")) - col("__graft_ic")))
       .filter(col("jaccard") >= minJaccard)
       .select("ida", "idb", "jaccard")
-  }
-
-  /** Fold a probed shard into the sketch-tier index — plain unions
-    * (per-doc sketches never interact), written back out with
-    * [[writeMinHashIndex]] for the next day's probe.
-    */
-  def extendMinHashIndex(index: MinHashIndex, newDocs: DataFrame,
-      idCol: String, textCol: String, k: Int = 3, nHashes: Int = 32,
-      bands: Int = 8, rowsPerBand: Int = 4): MinHashIndex = {
-    val sh = shingleSignatures(newDocs, idCol, textCol, k)
-    MinHashIndex(
-      index.buckets.unionByName(
-        bandedBuckets(sh, nHashes, bands, rowsPerBand)),
-      index.signatures.unionByName(sh))
   }
 
   /** Shared verify scaffolding: probe the candidate-pair set against

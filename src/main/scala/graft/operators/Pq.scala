@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Product-quantization over arbitrary vector frames — the
   * memory-bound ANN index family: [[trainCodebook]] and [[encode]] are
-  * the write-once index jobs, [[encodeWide]] the serving layout (the
+  * the write-once index jobs, [[codesToWide]] the serving layout (the
   * codes stored beside the corpus), and the ADC distance table is
   * O(model) state a serving node computes in RAM (see
   * queries/Round12Queries.scala for the full serving plan).
@@ -241,44 +241,12 @@ object Pq {
     Pca.interleaved(if (whiten) Pca.whitened(m0) else m0, d / subDim)
   }
 
-  /** Train per-subspace codebooks in the projected space — the same
-    * [[trainCodebook]] seeds/Lloyd contract over the projected
-    * coordinates.
-    */
-  def trainCodebookProjected(vecs: DataFrame, idCol: String,
-      vecCol: String, model: Pca.PcaModel, subDim: Int = 16,
-      k: Int = 8): DataFrame =
-    trainCodebook(
-      Pca.project(vecs, vecCol, model, "__pq_w")
-        .select(col(idCol), col("__pq_w")),
-      idCol, "__pq_w", subDim, k)
-
-  /** Encode against a projected-space codebook: project (codegen
-    * map-only) then the standard corpus-independent encode — the
-    * incremental contract is untouched, a new shard projects and
-    * encodes against the standing (model, codebook) pair alone.
-    */
-  def encodeProjected(vecs: DataFrame, idCol: String, vecCol: String,
-      model: Pca.PcaModel, codebook: DataFrame,
-      subDim: Int = 16): DataFrame =
-    encode(
-      Pca.project(vecs, vecCol, model, "__pq_w")
-        .select(col(idCol), col("__pq_w")),
-      idCol, "__pq_w", codebook, subDim)
-
-  /** Codes in serving layout — one row per vector, `cw[s]` = the
-    * subspace-s codeword id (array_sort over (s, cid) structs, so
-    * collect_list order can't matter).
-    */
-  def encodeWide(vecs: DataFrame, idCol: String, vecCol: String,
-      codebook: DataFrame, subDim: Int = 16): DataFrame =
-    codesToWide(encode(vecs, idCol, vecCol, codebook, subDim), idCol)
-
-  /** Long-form codes (id, s, cid) → the wide serving layout — the
-    * step [[encodeWide]] and a caller holding already-materialized
-    * codes (e.g. a memoized or loaded code index) share, so the
-    * layout logic exists once (ADVICE r12: the query layer previously
-    * duplicated this groupBy inline).
+  /** Long-form codes (id, s, cid) → the wide serving layout — one
+    * row per vector, `cw[s]` = the subspace-s codeword id (array_sort
+    * over (s, cid) structs, so collect_list order can't matter). Takes
+    * already-materialized codes (e.g. a memoized or loaded code index)
+    * so the layout logic exists once (ADVICE r12: the query layer
+    * previously duplicated this groupBy inline).
     */
   def codesToWide(codes: DataFrame, idCol: String): DataFrame =
     codes.groupBy(col(idCol))

@@ -39,9 +39,9 @@ object BloomSupport {
   * KEYING CONTRACT: the bloom's bits must have been set with `putLong`
   * on the SAME hash values this array carries (Curate.bloomOverHashes
   * does `stat.bloomFilter` over the raw hex60 longs) — the probe here
-  * is `mightContainLong` on the raw element, no re-hash. Mixing with a
-  * string-keyed bloom (Curate.bloomOver's xxhash64 scheme) silently
-  * filters everything out.
+  * is `mightContainLong` on the raw element, no re-hash. A bloom
+  * keyed any other way (e.g. on xxhash64 of the n-gram string)
+  * silently filters everything out.
   *
   * The bits deserialize once per task via an `addReferenceObj`-bound
   * filter (codegen) / a transient lazy (interpreted) — the same
@@ -111,7 +111,8 @@ object SortedSetSupport {
   * broadcast exchange, and no explode — n_shared is computed inside
   * the row and the plan is scan→project→filter. Beyond that size the
   * bloom tier ([[BloomFilterArrayLong]] + candidate verify join)
-  * takes over; `Curate.decontaminateHashedAuto` picks.
+  * takes over (ns_decontaminate runs this tier,
+  * ns_decontaminate_bloom the bloom tier).
   *
   * The set rides to executors once per task via `addReferenceObj`
   * (codegen) — the same lifecycle as the bloom bits above — not as a

@@ -209,7 +209,8 @@ object PipelineQueries {
   /** The standing incremental-dedup index (Dedup.ShingleIndex over
     * the even-doc_id half): THE definitional write-once artifact of
     * the incremental shape — production builds it once, writes it
-    * with Dedup.writeIndex, and every daily probe loads it. The sf1
+    * with Dedup.writeIndexBucketed, and every daily probe loads it
+    * (Dedup.loadIndexBucketed). The sf1
     * trend capture measured the in-plan alternative re-paying the
     * corpus explode ~4× per action (Spark re-executes identical
     * subtrees where DuckDB materializes CTEs); the timed query is the
@@ -1433,19 +1434,29 @@ object PipelineQueries {
           .orderBy("doc_id")),
 
     // ── X5: the custom Aggregator (udaf) — outlier-trimmed calibration
-    // mean per device/user, checked against the closed-form SQL.
+    // mean per device/user, checked against the closed-form SQL. Both
+    // engines accumulate in DECIMAL(18,6) and round the exact quotient
+    // HALF_UP at 4 dp (the oracle in integer micro-units: DuckDB
+    // divides decimals in DOUBLE), then cast to DOUBLE.
     QueryDef(
       "ns_robust_calib",
-      Some("""SELECT user_id,
-              ROUND(CASE WHEN COUNT(*) < 3 THEN SUM(value) / COUNT(*)
-                    ELSE (SUM(value) - MIN(value) - MAX(value))
-                         / (COUNT(*) - 2) END, 4) AS robust_mean
-              FROM events GROUP BY user_id ORDER BY user_id"""),
+      Some("""WITH g AS (SELECT user_id, COUNT(value) n,
+                SUM(CAST(value AS DECIMAL(18,6))) s,
+                MIN(CAST(value AS DECIMAL(18,6))) lo,
+                MAX(CAST(value AS DECIMAL(18,6))) hi
+              FROM events GROUP BY user_id),
+       r AS (SELECT user_id, CASE WHEN n < 3 THEN n ELSE n - 2 END den,
+                CAST((CASE WHEN n < 3 THEN s ELSE s - lo - hi END)
+                  * 1000000 AS BIGINT) num
+              FROM g)
+       SELECT user_id, CAST(SIGN(num) * ((ABS(num) + den * 50)
+                // (den * 100)) AS DOUBLE) / 10000 AS robust_mean
+       FROM r ORDER BY user_id"""),
       (s, dir) =>
         t(s, dir, "events")
           .groupBy("user_id")
           .agg(round(graft.functions.RobustCalibAgg.robustMean(col("value")), 4)
-            .as("robust_mean"))
+            .cast("double").as("robust_mean"))
           .orderBy("user_id")),
 
     // ── Curation, applied: the ship-ready corpus after the quality +

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *  - INCREMENTAL dedup against a standing index
   *    (ns_dedup_incremental): a new shard probed against the
   *    signed-once corpus index without re-signing the corpus
-  *    (operators/Dedup.{buildIndex,probeIncremental,extendIndex});
+  *    (operators/Dedup.{buildIndex,probeIncremental});
   *  - PARAGRAPH-tier exact dedup (ns_dedup_paragraph): the CCNet-
   *    style middle tier between whole-document hashes (q32) and
   *    substring winnowing (ns_dedup_substring) — keep-first exact
@@ -29,8 +29,9 @@ object Round10Queries {
     // ── Incremental dedup: split the corpus 50/50 by doc_id parity,
     // probe the odd half against the STANDING index over the even
     // half — the memoized write-once artifact (PipelineQueries
-    // .incrementalIndex; production writes it with Dedup.writeIndex
-    // and loads it per probe — the no-re-signing property is pinned
+    // .incrementalIndex; production writes it with
+    // Dedup.writeIndexBucketed and loads it per probe — the
+    // no-re-signing property is pinned
     // structurally in DedupApiSpec). The timed work is the probe:
     // sign the shard, join the index — the operator's daily cost.
     // The ORACLE is deliberately the BATCH-GLOBAL formulation

@@ -59,8 +59,8 @@ object Round11Queries {
     * dir) like the hash half above: `bloomOverHashes` runs two driver
     * jobs (sizing count + the bloom aggregate), which the query was
     * re-paying on EVERY action — but the bloom is the definitional
-    * write-once artifact of this tier (production ships `bloom.bin`
-    * via writeContamIndexHashed; no probe rebuilds it).
+    * write-once artifact of this tier (built once per eval suite; no
+    * probe rebuilds it).
     */
   private[queries] def contamBloom(s: SparkSession,
       dir: String): org.apache.spark.util.sketch.BloomFilter =
@@ -109,7 +109,7 @@ object Round11Queries {
     // per-doc signature table by id parity IS the standing table —
     // sketches never depend on other docs), so neither side is
     // re-tokenized; production loads the same two frames via
-    // Dedup.loadMinHashIndex. The ORACLE is deliberately the
+    // Dedup.loadMinHashIndexBucketed. The ORACLE is deliberately the
     // BATCH-GLOBAL banding restricted to cross-half pairs, with the
     // STANDING (even) half rank-capped at 8 per band bucket — the
     // same formulation the probe's standingRankCap computes (r14:

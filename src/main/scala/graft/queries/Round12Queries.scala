@@ -35,7 +35,7 @@ object Round12Queries {
     Catalog.table(s, dir, name)
 
   // ── PQ machinery: the generic operator lives in operators/Pq.scala
-  // (train/encode/encodeWide over arbitrary frames); these memoize the
+  // (train/encode/codesToWide over arbitrary frames); these memoize the
   // test corpus's write-once artifacts at the serving parameters
   // (4×16-dim subspaces, k=8).
 

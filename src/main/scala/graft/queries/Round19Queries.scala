@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * oracle), so the cross-engine row pins the composition with a
   * DIAGONAL whitening model — per-dim (μ, σ) from fixed-point
   * aggregates, projection = (x−μ)·(1/σ) per axis — driven through
-  * the SAME Pq.trainCodebookProjected/encodeProjected code path the
-  * rotated form uses (a diagonal model IS a PcaModel whose
+  * the SAME Pca.project + Pq.trainCodebookInRow/encodeInRow code path
+  * the rotated form uses (a diagonal model IS a PcaModel whose
   * components are scaled unit vectors, round-robin interleaved:
   * projected subspace of original dim d = d mod nSub, which the SQL
   * mirrors as `d % 4`). The rotation-specific algebra (orthonormal

@@ -313,10 +313,10 @@ object Round9Queries {
     // standing contamSignatures artifact, eval side the sorted hash
     // SET held in a codegen expression: n_shared is computed inside
     // the signature row, so the plan is scan→project→filter with no
-    // join/broadcast/explode at all. The bloom row below exercises
-    // the big-eval tier of the same ladder
-    // (Curate.decontaminateHashedAuto routes between them by set
-    // size); both match this one oracle SQL.
+    // join/broadcast/explode at all. ns_decontaminate_bloom
+    // (Round11Queries) exercises the big-eval tier of the same
+    // ladder (Curate.probeContamHashed); both match this one oracle
+    // SQL.
     QueryDef(
       "ns_decontaminate",
       Some(Round11Queries.contamOracleSql),

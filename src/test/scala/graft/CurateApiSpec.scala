@@ -218,27 +218,6 @@ class CurateApiSpec extends SparkSpec {
       .count() == 0)
   }
 
-  test("decontaminateBloom equals the exact formulation, false " +
-      "positives removed, even at an absurd fpp") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog", true), // eval
-      (2L, "intro text then the quick brown fox appears here", false),
-      (3L, "entirely unrelated training document body text", false),
-      (4L, "another clean doc with nothing shared at all here", false))
-      .toDF("id0", "body", "ev")
-    val exact = Curate.decontaminate(corpus, "id0", "body", col("ev"))
-      .as[(Long, Long)].collect().toMap
-    // fpp 0.5: the bloom passes plenty of clean shingles — the verify
-    // join must still reduce the result to exactly the exact answer
-    val idx = Curate.buildContamIndex(corpus, "body", col("ev"), fpp = 0.5)
-    val bloomed = Curate.decontaminateWithIndex(
-        corpus, "id0", "body", col("ev"), idx)
-      .as[(Long, Long)].collect().toMap
-    Curate.releaseContamIndex(idx)
-    assert(bloomed == exact, s"$bloomed vs $exact")
-    assert(bloomed.contains(2L) && !bloomed.contains(3L))
-  }
-
   test("hashed decontamination tier: equals the string formulation, " +
       "bloom probe exact at absurd fpp, in-row prune in the plan") {
     val corpus = Seq(
@@ -250,14 +229,17 @@ class CurateApiSpec extends SparkSpec {
     val strings = Curate.decontaminate(corpus, "id0", "body", col("ev"))
       .as[(Long, Long)].collect().toMap
     // the 60-bit hash is collision-free at this size: identical result
-    val hashed = Curate.decontaminateHashed(corpus, "id0", "body",
-        col("ev")).as[(Long, Long)].collect().toMap
+    val sig = Curate.contamSignatures(corpus, "id0", "body", col("ev"))
+    val train = sig.filter(!col("is_eval")).select("id", "hh")
+    val evalH = sig.filter(col("is_eval"))
+      .select(explode(col("hh")).as("h")).distinct()
+    val hashed = Curate.decontaminateHashedExact(train, evalH)
+      .as[(Long, Long)].collect().toMap
     assert(hashed == strings, s"$hashed vs $strings")
     // bloom-prefiltered probe: fpp 0.5 passes plenty of clean hashes —
     // the verify join must still reduce to exactly the exact answer
-    val sig = Curate.contamSignatures(corpus, "id0", "body", col("ev"))
-    val idx = Curate.buildContamIndexHashed(sig, fpp = 0.5)
-    val train = sig.filter(!col("ev")).select("id", "hh")
+    val idx = Curate.ContamIndexHashed(evalH,
+      Curate.bloomOverHashes(evalH, fpp = 0.5))
     val probed = Curate.probeContamHashed(train, idx)
       .as[(Long, Long)].collect().toMap
     assert(probed == strings, s"$probed vs $strings")
@@ -275,7 +257,6 @@ class CurateApiSpec extends SparkSpec {
     val bloomIdx = plan.indexOf("graft_bloom_filter_array")
     assert(genIdx >= 0 && bloomIdx > genIdx,
       s"bloom prune must sit below the explode:\n$plan")
-    Curate.releaseContamIndexHashed(idx)
   }
 
   test("in-row exact-set decontamination tier: equals the exact join, " +
@@ -310,64 +291,12 @@ class CurateApiSpec extends SparkSpec {
     assert(plan.contains("graft_set_intersect_count"), plan)
     assert(!plan.contains("Join") && !plan.contains("Exchange"),
       s"in-row tier must not join or shuffle:\n$plan")
-    // auto: a 4-hash set routes in-row; a zero-byte ceiling forces
-    // the bloom + verify-join tier — both produce the exact answer
-    val idx = Curate.buildContamIndexHashed(sig)
-    val small = Curate.decontaminateHashedAuto(train, idx)
+    // the big-eval tier over the same hashes (bloom + verify join,
+    // ns_decontaminate_bloom's route) gives the same exact answer
+    val large = Curate.probeContamHashed(train,
+        Curate.ContamIndexHashed(evalH, Curate.bloomOverHashes(evalH)))
       .as[(Long, Long)].collect().toMap
-    val large = Curate.decontaminateHashedAuto(train, idx,
-        maxInRowSetBytes = 0L)
-      .as[(Long, Long)].collect().toMap
-    Curate.releaseContamIndexHashed(idx)
-    assert(small == exact && large == exact, s"$small / $large vs $exact")
-  }
-
-  test("hashed contam index round-trips through disk: probing the " +
-      "LOADED index equals the direct probe") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog", true),
-      (2L, "intro text then the quick brown fox appears here", false),
-      (3L, "entirely unrelated training document body text", false))
-      .toDF("id0", "body", "ev")
-    val sig = Curate.contamSignatures(corpus, "id0", "body", col("ev"))
-    val train = sig.filter(!col("ev")).select("id", "hh")
-    val built = Curate.buildContamIndexHashed(sig)
-    val direct = Curate.probeContamHashed(train, built)
-      .as[(Long, Long)].collect().toMap
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-contamh-").toString
-    Curate.writeContamIndexHashed(built, dir)
-    Curate.releaseContamIndexHashed(built)
-    val loaded = Curate.loadContamIndexHashed(spark, dir)
-    assert(loaded.evalHashes.inputFiles.exists(_.contains("eval_hashes")))
-    val viaDisk = Curate.probeContamHashed(train, loaded)
-      .as[(Long, Long)].collect().toMap
-    assert(viaDisk == direct && viaDisk.contains(2L), s"$viaDisk")
-  }
-
-  test("contam index round-trips through disk: probing the LOADED " +
-      "index equals the direct probe, eval docs never re-read") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog", true),
-      (2L, "intro text then the quick brown fox appears here", false),
-      (3L, "entirely unrelated training document body text", false))
-      .toDF("id0", "body", "ev")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-contam-").toString
-    val built = Curate.buildContamIndex(corpus, "body", col("ev"))
-    val direct = Curate.decontaminateWithIndex(
-        corpus, "id0", "body", col("ev"), built)
-      .as[(Long, Long)].collect().toMap
-    Curate.writeContamIndex(built, dir)
-    Curate.releaseContamIndex(built)
-    val loaded = Curate.loadContamIndex(spark, dir)
-    // lineage proof: the loaded eval side is a file scan of the index,
-    // not a re-derivation from the documents
-    assert(loaded.evalShingles.inputFiles.exists(_.contains("eval_shingles")))
-    val viaDisk = Curate.decontaminateWithIndex(
-        corpus, "id0", "body", col("ev"), loaded)
-      .as[(Long, Long)].collect().toMap
-    assert(viaDisk == direct && viaDisk.contains(2L), s"$viaDisk")
+    assert(large == exact, s"$large vs $exact")
   }
 
   test("globalOrderIndex equals the single-window ROW_NUMBER spec; " +

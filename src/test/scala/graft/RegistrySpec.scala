@@ -73,4 +73,17 @@ class RegistrySpec extends SparkSpec {
     assert(maps.subsetOf(Set("PipelineQueries.scala", "Catalog.scala")),
       s"memoize through PipelineQueries.memo instead: ${maps.mkString(", ")}")
   }
+
+  test("failures are loud: no catch-all Throwable swallow in src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, s"run from the repo root: $root")
+    val swallows = files.filter(p =>
+      "case\\s+_\\s*:\\s*Throwable".r
+        .findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+    assert(swallows.isEmpty,
+      s"catch the exceptions you expect instead: ${swallows.mkString(", ")}")
+  }
 }
