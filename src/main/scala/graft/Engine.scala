@@ -10,13 +10,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale defaults baked in: AQE (runtime coalesce + skew-join
   * splitting), partition coalescing, UTC session time, shuffle
   * partitions sized to cores locally (set explicitly per-cluster in
-  * production). This is the only SparkSession builder in the engine:
-  * callers such as `Bench.session` pass their overrides as `confs`,
+  * production), and `file:` bound to the fork-free local filesystem
+  * ([[fileSystemConfs]]). This is the only SparkSession builder in the
+  * engine: callers such as `Bench.session` pass their overrides as `confs`,
   * applied after the defaults at build time (confs such as
   * `spark.scheduler.mode` only take effect when the SparkContext is
   * created).
   */
 object Engine {
+
+  /** Binds `file:` to [[NioLocalFileSystem]] (the `FileSystem` API) and
+    * [[NioLocalFs]] (the `FileContext` API): Hadoop's local filesystem
+    * without its per-file `chmod`/`readlink` forks (see LocalFs.scala).
+    * The test session applies the same map.
+    */
+  val fileSystemConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[NioLocalFs].getName)
 
   def session(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
@@ -39,6 +50,7 @@ object Engine {
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(fileSystemConfs)
     warehouseDir.foreach(w => b.config("spark.sql.warehouse.dir", w))
     confs.foreach { case (k, v) => b.config(k, v) }
     // Persistent catalog (north-star spark_approach: "Spark SQL + Hive

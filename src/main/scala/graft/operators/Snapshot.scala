@@ -168,24 +168,31 @@ object Snapshot {
       .parquet(stage.toString)
     val f = fs(spark, root)
     val stagePrefix = stage.toUri.getPath
-    val it = f.listFiles(stage, true)
-    val rels = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(stagePrefix)
-          .stripPrefix("/")
+    val rels = filesUnder(f, stage).flatMap { p =>
+      val n = p.getName
+      if (n.startsWith("_") || n.startsWith(".")) None
+      else {
+        val rel = p.toUri.getPath.stripPrefix(stagePrefix).stripPrefix("/")
         val dest = new Path(s"$root/$DataDir/$rel")
         f.mkdirs(dest.getParent)
-        if (!f.rename(st.getPath, dest))
-          sys.error(s"snapshot write: failed to move ${st.getPath} to $dest")
-        rels += rel
+        if (!f.rename(p, dest))
+          sys.error(s"snapshot write: failed to move $p to $dest")
+        Some(rel)
       }
     }
     f.delete(stage, true)
-    rels.result()
+    rels
   }
+
+  /** Every file under `dir`, depth first in listing order (the order
+    * `listFiles(dir, true)` yields). A `listStatus` walk, because
+    * `listFiles` builds a `LocatedFileStatus`, which on a local
+    * filesystem without libhadoop forks an `ls` per file to load
+    * permissions nothing here reads.
+    */
+  private def filesUnder(f: FileSystem, dir: Path): Seq[Path] =
+    f.listStatus(dir).toSeq.flatMap(st =>
+      if (st.isDirectory) filesUnder(f, st.getPath) else Seq(st.getPath))
 
   /** Thrown by a commit's `recompute` when the racer's change cannot
     * be merged file-set-wise (it REMOVED files this commit's own
@@ -516,19 +523,13 @@ object Snapshot {
     val dataRoot = new Path(s"$root/$DataDir")
     var removed = 0
     if (f.exists(dataRoot)) {
-      val it = f.listFiles(dataRoot, true)
       val prefix = dataRoot.toUri.getPath
-      val doomed = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val rel = st.getPath.toUri.getPath.stripPrefix(prefix)
-          .stripPrefix("/")
-        val n = st.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".") &&
-            !referenced.contains(rel))
-          doomed += st.getPath
+      val doomed = filesUnder(f, dataRoot).filter { p =>
+        val rel = p.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
+        val n = p.getName
+        !n.startsWith("_") && !n.startsWith(".") && !referenced.contains(rel)
       }
-      doomed.result().foreach { p =>
+      doomed.foreach { p =>
         if (!f.delete(p, false)) sys.error(s"gc: delete failed for $p")
         removed += 1
       }

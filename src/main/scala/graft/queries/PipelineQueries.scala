@@ -640,6 +640,16 @@ object PipelineQueries {
     minhashVerified(s, dir)
       .select(col("ida").as("da"), col("idb").as("db"))
 
+  /** DuckDB form of Spark's `round(x, 4)` on a DOUBLE: HALF_UP on the
+    * shortest decimal that reads back as x (Spark rounds
+    * `BigDecimal(x.toString)`). DuckDB's ROUND scales in binary floating
+    * point first: 0.43724999999999997, the double both engines compute
+    * for 0.32 * 0.3 + 0.80625 * 0.4 + 0.0625 * 0.3, becomes 4372.5 and
+    * rounds up there, while Spark rounds it down.
+    */
+  private[queries] def round4(e: String): String =
+    s"ROUND(CAST(CAST(($e) AS VARCHAR) AS DECIMAL(38, 20)), 4)::DOUBLE"
+
   /** Shared DuckDB CTE suffix: verified pairs → symmetric edges →
     * 3 rounds of min-label propagation (l3 = doc_id → component
     * label). Appended after `minhashCandCte`.
@@ -676,18 +686,14 @@ object PipelineQueries {
       // exactly 3 rounds — the oracle SQL unrolls 3 label CTEs, and
       // the differential gate needs identical (possibly unconverged)
       // labels; the public API defaults to fixpoint instead
-      val labels = graft.operators.Dedup.componentLabels(
+      // The operator returns its frame persisted. Spark matches a
+      // renaming projection to that cache entry, so the memo stores
+      // the rename as it is (no second persist), and its release
+      // drops the operator's entry.
+      graft.operators.Dedup.componentLabels(
         t(s, dir, "documents").select(col("doc_id").as("id")),
         minhashVerified(s, dir), iterations = Some(3))
-      // re-home the cache onto the renamed projection we actually
-      // memoize, then release the operator's own persisted handle —
-      // otherwise it would linger uncollectable behind the memo entry
-      val out = labels
         .select(col("id").as("doc_id"), col("component").as("lbl"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      labels.unpersist()
-      out
     }
 
   /** Fixpoint star-contraction labels, memoized like the 3-round
@@ -698,15 +704,11 @@ object PipelineQueries {
   private[queries] def componentLabelsStarFix(s: SparkSession,
       dir: String): DataFrame =
     memoArtifact(s, dir, "labels_star") {
-      val labels = graft.operators.Dedup.componentLabelsStar(
+      // persisted by the operator; a rename, as in componentLabels
+      graft.operators.Dedup.componentLabelsStar(
         t(s, dir, "documents").select(col("doc_id").as("id")),
         minhashVerified(s, dir))
-      val out = labels
         .select(col("id").as("doc_id"), col("component"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      labels.unpersist()
-      out
     }
 
   /** DuckDB CTE for the trained IVF k-means lists (`e` … `a2`) —
@@ -1327,7 +1329,7 @@ object PipelineQueries {
     // (length/alpha/stopword components, SURVEY.md NS).
     QueryDef(
       "ns_text_quality",
-      Some("""WITH q AS (SELECT doc_id,
+      Some(s"""WITH q AS (SELECT doc_id,
                 list_filter(string_split(lower(text), ' '), x -> x <> '') tk,
                 CASE WHEN length(text) = 0 THEN 0.0 ELSE
                   length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))::DOUBLE /
@@ -1343,9 +1345,10 @@ object PipelineQueries {
                     len(tk) END mean_len,
                 least(len(tk) / 100.0, 1.0) len_score
                 FROM q)
-              SELECT doc_id, ROUND(alpha_r, 4) AS alpha_r,
-                ROUND(stop_r, 4) AS stop_r, ROUND(mean_len, 4) AS mean_len,
-                ROUND(len_score * 0.3 + alpha_r * 0.4 + stop_r * 0.3, 4)
+              SELECT doc_id, ${round4("alpha_r")} AS alpha_r,
+                ${round4("stop_r")} AS stop_r,
+                ${round4("mean_len")} AS mean_len,
+                ${round4("len_score * 0.3 + alpha_r * 0.4 + stop_r * 0.3")}
                   AS score
               FROM c ORDER BY doc_id"""),
       (s, dir) => {

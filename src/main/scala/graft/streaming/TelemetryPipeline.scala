@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.Telemetry
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -93,6 +94,13 @@ object TelemetryPipeline {
     * (master/master.ino:137-145,552-599). `expectedDevices` plays the
     * registry role (master/master.ino:23-26). One-shot setup
     * notification on batchId == 0 (master/master.ino:84-93, T8).
+    *
+    * Each row is flagged complete by a window aggregate over its
+    * `window` (`collect_set` skips null devices, as a distinct count
+    * does; a row without a window goes to the DLQ), and
+    * the flagged batch is persisted so both sinks read it once: the
+    * batch's upstream stateful aggregate runs one time, not once per
+    * sink. The cache entry is released even when a sink throws.
     */
   def routedSink(
       rounds: DataFrame,
@@ -102,17 +110,18 @@ object TelemetryPipeline {
       writeSetup: () => Unit): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       if (batchId == 0L) writeSetup()
-      val perWindow = batch
-        .groupBy(col("window"))
-        .agg(countDistinct(col("device_code")).as("n_dev"))
-      val complete = batch.join(
-        perWindow.filter(col("n_dev") >= expectedDevices).select("window"),
-        Seq("window"), "left_semi")
-      val partial = batch.join(
-        perWindow.filter(col("n_dev") >= expectedDevices).select("window"),
-        Seq("window"), "left_anti")
-      writeData(complete)
-      writeDlq(partial)
+      require(!batch.columns.exists(_.startsWith("__graft_")),
+        "column names with the __graft_ prefix are reserved")
+      val nDev = size(collect_set(col("device_code"))
+        .over(Window.partitionBy(col("window"))))
+      val flag = "__graft_complete"
+      val flagged = batch
+        .withColumn(flag, col("window").isNotNull && nDev >= expectedDevices)
+        .persist()
+      try {
+        writeData(flagged.filter(col(flag)).drop(flag))
+        writeDlq(flagged.filter(!col(flag)).drop(flag))
+      } finally { flagged.unpersist(blocking = false); () }
   }
 
   /** The two sides of a [[lateSplitFrames]] plus the shared persisted

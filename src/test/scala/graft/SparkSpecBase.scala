@@ -12,7 +12,8 @@ object SparkSpecBase {
   // derby metastore + warehouse live under target/ (wiped by clean).
   // Both are build output: an earlier run's leftovers are deleted
   // first, or its managed-table directories would fail this run's
-  // saveAsTable with LOCATION_ALREADY_EXISTS.
+  // saveAsTable with LOCATION_ALREADY_EXISTS. `file:` is bound as in
+  // Engine.session, so the specs write through the engine's filesystem.
   lazy val spark: SparkSession = {
     Seq("target/test-warehouse", "target/test-metastore_db").foreach(d =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
@@ -26,6 +27,7 @@ object SparkSpecBase {
       .config("spark.sql.warehouse.dir", "target/test-warehouse")
       .config("javax.jdo.option.ConnectionURL",
         "jdbc:derby:;databaseName=target/test-metastore_db;create=true")
+      .config(Engine.fileSystemConfs)
       .enableHiveSupport()
       .getOrCreate()
   }

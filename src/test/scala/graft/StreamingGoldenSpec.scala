@@ -94,6 +94,43 @@ class StreamingGoldenSpec extends SparkSpec {
     assert(dlqRows.head._1.startsWith("2024-01-01 01:00:00"))
   }
 
+  test("T2/T8: routedSink evaluates the batch once for both sinks") {
+    // Count row-level passes over the input with an accumulator-bumping
+    // map, as the lateSplit test below does: the complete-window flag
+    // and both sides come from one persisted pass, so n rows are read
+    // once; evaluating the batch once per sink and per join side would
+    // read them 4 times.
+    val passes = spark.sparkContext.longAccumulator("routedSink_passes")
+    val n = 64L
+    val batch = spark.range(n).map { i =>
+      passes.add(1L)
+      // hours 0-2 see all 3 devices; hour 3 sees only H0000
+      val hour = i % 4
+      ("H%04d".format(if (hour == 3) 0 else i % 3), hour)
+    }.toDF("device_code", "hour")
+      .select(struct(
+        timestamp_seconds($"hour" * 3600).as("start"),
+        timestamp_seconds($"hour" * 3600 + 3600).as("end")).as("window"),
+        $"device_code")
+    var dataRows = 0L
+    var dlqRows = 0L
+    var dataSide: DataFrame = null
+    val sink = TelemetryPipeline.routedSink(
+      rounds = null, expectedDevices = 3,
+      writeData = b => { dataSide = b; dataRows += b.count() },
+      writeDlq = b => dlqRows += b.count(),
+      writeSetup = () => ())
+    sink(batch, 1L)
+    assert(dataRows == 48 && dlqRows == 16)
+    // slack below one full pass: accumulator updates in transformations
+    // are not exactly-once under task retries
+    assert(passes.value >= n && passes.value < 2 * n,
+      s"expected 1 pass over $n rows, got ${passes.value / n.toDouble}")
+    // and the flagged batch is no longer cached
+    assert(!dataSide.filter(lit(true)).queryExecution.withCachedData.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]))
+  }
+
   test("J3: two-phase confirm pairing accepts only confirmed values") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[TelemetryPipeline.ProtoEvent]

@@ -50,7 +50,10 @@ def main():
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+            # a table is one file (driver testdata) or a directory of
+            # part files (hwbench/gen.py's large tables)
+            src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     n_pass = n_fail = 0
     for name in sorted(oracles):
         if only and name not in only:
