@@ -347,7 +347,7 @@ object AsOf {
     // DISTINCT (key, bucket) pairs — not by aggregating `u` — because
     // Spark 4.1's AQE cannot reuse identical exchanges above cached
     // relations (TableCacheQueryStage canonicalization keeps
-    // per-reference stage ids; see PipelineQueries.tfidfSig), so a closing
+    // per-reference stage ids; see TextQueries.tfidfSig), so a closing
     // aggregate over `u` re-computed AND re-shuffled the full-width
     // union a second time. The probe keys contribute only group
     // EXISTENCE (a probe-only bucket needs a carry row), so the

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Public corpus-curation operator API over arbitrary DataFrames —
   * the library surface behind the `ns_text_*` / `ns_pack_*` /
@@ -463,13 +464,19 @@ object Curate {
     * Scale shape: the textbook ROW_NUMBER() over a global ORDER BY is
     * the single-task WindowExec trap; zipWithIndex is RDD-land and
     * order-fragile. This is the distributed formulation of the same
-    * thing, sharing [[selectByBudget]]'s skeleton with COUNTS instead
-    * of weight sums: one range exchange on the order (the exchange a
-    * global sort pays anyway), per-partition row_number under a
-    * partitioned window, then a broadcast numPartitions-row offset
-    * table. Linear everywhere; no data-sized single task at any
-    * corpus size. AQE-safe: coalesced shuffle partitions merge
-    * ADJACENT ranges, keeping partition ids aligned with the order.
+    * thing, with COUNTS where [[selectByBudget]] sums weights: every
+    * row gets a range id under the order ([[rangeIndex]]), a range
+    * exchange on that id, per-range row_number under a partitioned
+    * window, then a broadcast offset table with one row per range.
+    * Linear everywhere; no data-sized single task at any corpus size.
+    *
+    * The range id is a function of the row, not `spark_partition_id()`
+    * after a range exchange on the order: both the numbering and the
+    * offsets read the ranges, and over a cached input AQE does not
+    * reuse the exchange, so each read samples its own bounds
+    * (RangePartitioner seeds its sample by RDD id). Two reads cut at
+    * different bounds gave duplicate and missing positions, depending
+    * on core count and run.
     */
   def globalOrderIndex(docs: DataFrame,
       ord: Seq[org.apache.spark.sql.Column], posCol: String = "pos",
@@ -477,8 +484,8 @@ object Curate {
     val parts =
       if (numPartitions > 0) numPartitions
       else docs.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = docs.repartitionByRange(parts, ord: _*)
-      .withColumn("__graft_pid", spark_partition_id())
+    val ranged = docs.withColumn("__graft_pid", rangeIndex(docs, ord, parts))
+      .repartitionByRange(parts, col("__graft_pid"))
     val within = Window.partitionBy("__graft_pid").orderBy(ord: _*)
     val numbered = ranged
       .withColumn("__graft_rn", row_number().over(within).cast("long"))
@@ -493,6 +500,49 @@ object Curate {
     numbered.join(broadcast(offs), "__graft_pid")
       .withColumn(posCol, col("__graft_off") + col("__graft_rn"))
       .drop("__graft_pid", "__graft_rn", "__graft_off")
+  }
+
+  /** The 0-based range of each row under `ord` among `parts` ranges,
+    * as an expression of the row alone: the number of range bounds
+    * that sort strictly before it. The bounds are cut once, on the
+    * driver, from a bounded sample that depends only on the data: the
+    * 20·parts rows whose sort keys have the smallest xxhash64 (under a
+    * total order, a uniform sample; one TakeOrdered job). A nested
+    * CASE binary-searches the bounds: log2(parts) comparisons per row.
+    * Sort keys must be atomic-typed.
+    */
+  private def rangeIndex(docs: DataFrame, ord: Seq[Column],
+      parts: Int): Column = {
+    val (keys, ascending, nullsFirst) = ord.map(Bridge.sortKey).unzip3
+    val sample = docs.orderBy(xxhash64(keys: _*) +: ord: _*)
+      .limit(20 * parts).orderBy(ord: _*).select(keys: _*)
+    val types = sample.schema.fields.map(_.dataType)
+    val rows = sample.collect()
+    val bounds = (1 until parts).map(i => i * rows.length / parts - 1)
+      .filter(_ >= 0).distinct.map(rows(_))
+    // the row sorts strictly after bound b, comparing keys i onwards
+    def after(b: Row, i: Int): Column =
+      if (i == keys.length) lit(false)
+      else {
+        val k = keys(i)
+        if (b.isNullAt(i))
+          (if (nullsFirst(i)) k.isNotNull else lit(false)) ||
+            (k.isNull && after(b, i + 1))
+        else {
+          val v = lit(b.get(i)).cast(types(i))
+          val beyond = if (ascending(i)) k > v else k < v
+          coalesce(beyond, lit(!nullsFirst(i))) ||
+            (k <=> v && after(b, i + 1))
+        }
+      }
+    def search(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi) / 2
+        when(after(bounds(mid), 0), search(mid + 1, hi))
+          .otherwise(search(lo, mid))
+      }
+    search(0, bounds.length)
   }
 
   /** Reproducible global corpus shuffle + shard assignment — the

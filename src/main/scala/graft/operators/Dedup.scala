@@ -700,7 +700,7 @@ object Dedup {
     * times, and Spark's AQE cannot de-duplicate identical subtrees
     * whose leaves are cached relations — TableCacheQueryStage
     * canonicalization keeps the per-reference stage id (measured on
-    * Spark 4.1.2; see PipelineQueries.tfidfSig), so exchange/stage reuse
+    * Spark 4.1.2; see TextQueries.tfidfSig), so exchange/stage reuse
     * never fires and each reference re-executes the whole shard
     * explode + count shuffle (r20 profile: the 4 duplicated subtrees
     * were ~60% of the probe's executor time). localCheckpoint bounds:

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * the write-once index jobs, [[codesToWide]] the serving layout (the
   * codes stored beside the corpus), and the ADC distance table is
   * O(model) state a serving node computes in RAM (see
-  * queries/Round12Queries.scala for the full serving plan).
+  * queries/AnnQueries.scala for the full serving plan).
   *
   * Cross-engine determinism discipline (identical to the IVF k-means
   * tier): every float SUM quantizes each term to fixed-point BIGINT

@@ -5,11 +5,9 @@ package graft.queries
   */
 object Registry {
   def all: Seq[QueryDef] =
-    CoreQueries.defs ++ ScalarQueries.defs ++ AdvancedQueries.defs ++
-      PipelineQueries.defs ++ ExtendedQueries.defs ++ Round3Queries.defs ++
-      Round8Queries.defs ++ Round9Queries.defs ++ Round10Queries.defs ++
-      Round11Queries.defs ++ Round12Queries.defs ++ Round14Queries.defs ++
-      Round17Queries.defs ++ Round18Queries.defs ++ Round19Queries.defs
+    CoreQueries.defs ++ TelemetryQueries.defs ++ TpchQueries.defs ++
+      DedupQueries.defs ++ AnnQueries.defs ++ TextQueries.defs ++
+      CurationQueries.defs ++ MultimodalQueries.defs
 
   /** Collapse SQL whitespace so oracle_sql.json stays one-line-friendly. */
   private def squash(sql: String): String =

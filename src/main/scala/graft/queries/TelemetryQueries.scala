@@ -1,0 +1,450 @@
+package graft.queries
+
+import graft.Catalog.{table => t}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
+
+/** Telemetry and as-of: the reference's time semantics (epoch
+  * assembly, boundary-aligned alarm, hourly tumbling and hopping
+  * windows, gap-fill with forward-fill), the batch analogs of the
+  * streaming session/dedup operators (SURVEY.md §2.8–§2.9),
+  * per-sensor calibration, and the as-of join in all of its routes:
+  * the linear same-table form (q29), the compact tier (q59), and the
+  * skew router forced to its bucketed plan (q69) and left at its
+  * production default (q70).
+  */
+object TelemetryQueries {
+
+  /** Latest prior event of a DIFFERENT type per row: (event_id,
+    * prior_b) over an (event_id, event_type, user_id, ts) frame.
+    *
+    * Two regimes, picked by a BOUNDED cardinality probe (VERDICT r3
+    * item 7 — the probe collects at most maxTypes+1 rows, never the
+    * full distinct set):
+    *
+    *  - |types| <= maxTypes (the enum case): linear per-type window
+    *    decomposition — ONE shuffle+sort on (user_id, ts), a running
+    *    max of event_id per type over the strictly-prior RANGE frame,
+    *    prior_b = greatest over the other types' running maxes. The
+    *    naive inequality self-join is O(rows²) within each user key —
+    *    one hot user kills it at 100×.
+    *
+    *  - beyond maxTypes: fall back to the range-join form (the
+    *    oracle's own shape). A decomposition over thousands of types
+    *    would emit one window column per type and the PLAN becomes
+    *    the bottleneck; the join regime shuffles on user_id only.
+    */
+  private[graft] def priorOtherTypeMax(ev: DataFrame,
+      maxTypes: Int = 32): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // NULL types can't seed a per-type column (and the reference
+    // semantics b.event_type <> a.event_type drop NULL b-rows anyway)
+    val types = ev.select("event_type")
+      .filter(col("event_type").isNotNull).distinct()
+      .limit(maxTypes + 1)
+      .collect().map(_.getString(0)).sorted.toSeq
+    if (types.length > maxTypes) {
+      val b = ev.select(col("user_id").as("b_uid"), col("ts").as("b_ts"),
+        col("event_type").as("b_type"), col("event_id").as("b_id"))
+      ev.join(b,
+          col("user_id") === col("b_uid") && col("b_ts") < col("ts") &&
+            col("b_type") =!= col("event_type"), "left")
+        .groupBy(col("event_id"))
+        .agg(max(col("b_id")).as("prior_b"))
+    } else {
+      val w = Window.partitionBy("user_id")
+        .orderBy(unix_micros(col("ts")))
+        .rangeBetween(Window.unboundedPreceding, -1)
+      val withMaxes = ev.select(
+        col("event_id") +: col("event_type") +: col("user_id") +:
+          types.zipWithIndex.map { case (tp, i) =>
+            max(when(col("event_type") === tp, col("event_id")))
+              .over(w).as(s"m_$i")
+          }: _*)
+      // greatest() requires ≥2 args — a 0/1-type dataset must yield
+      // NULL / the single other-type max, not a plan-build error
+      val priorExprs = types.zipWithIndex.map { case (tp, i) =>
+        when(col("event_type") =!= tp, col(s"m_$i"))
+      }
+      val priorB = priorExprs match {
+        case Seq() => lit(null).cast(ev.schema("event_id").dataType)
+        case Seq(one) => one
+        case many => greatest(many: _*)
+      }
+      withMaxes
+        // the window groups NULL user_ids into one partition; the
+        // equi-join semantics never match NULLs → NULL out
+        .select(col("event_id"),
+          when(col("user_id").isNotNull, priorB).as("prior_b"))
+    }
+  }
+
+  /** The as-of rows' DuckDB oracle: native ASOF JOIN, each event's
+    * user's latest order as of the event time, the build side
+    * pre-aggregated to unique (key, time) so tie-breaks are
+    * deterministic on both engines.
+    */
+  private val asofOracle =
+    """WITH b AS (SELECT o_custkey k, o_orderdate tt,
+                MAX(o_orderkey) AS last_order
+                FROM orders GROUP BY 1, 2)
+              SELECT e.event_id, b.last_order
+              FROM events e ASOF LEFT JOIN b
+                ON e.user_id = b.k AND b.tt <= e.ts::TIMESTAMP
+              ORDER BY e.event_id"""
+
+  /** The as-of rows' Spark inputs: the events probe (µs time) and the
+    * RAW orders build, whose tieBreak on last_order stands in for the
+    * oracle's pre-aggregate (see q59).
+    */
+  private def asofSides(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) =
+    (t(s, dir, "events")
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("t_us")),
+      t(s, dir, "orders")
+        .select(col("o_custkey").as("k"),
+          unix_micros(col("o_orderdate").cast("timestamp")).as("bt"),
+          col("o_orderkey").as("last_order")))
+
+  val defs: Seq[QueryDef] = Seq(
+
+    // F9/F11/P8 — epoch assembly + timestamp threshold
+    // (master/master.ino:700-712,122-124).
+    QueryDef(
+      "q21_epoch_extract",
+      Some("""SELECT event_id,
+              CAST(EXTRACT(HOUR FROM ts) AS INT) AS h,
+              epoch_us(ts::TIMESTAMP) // 1000000 AS epoch
+              FROM events WHERE ts > TIMESTAMP '2020-01-01 00:00:00'
+              ORDER BY event_id LIMIT 500"""),
+      (s, dir) =>
+        t(s, dir, "events")
+          .filter(col("ts") > lit("2020-01-01 00:00:00").cast("timestamp"))
+          .select(col("event_id"),
+            hour(col("ts")).cast("int").as("h"),
+            unix_timestamp(col("ts")).as("epoch"))
+          .orderBy("event_id")
+          .limit(500)),
+
+    // F8/F10 — boundary-aligned next alarm: (ts/i + 1) * i, the exact
+    // firmware formula incl. skip-on-exact-boundary
+    // (master/master.ino:673-679).
+    QueryDef(
+      "q22_next_alarm",
+      Some("""SELECT event_id,
+              (epoch_us(ts::TIMESTAMP) // 1000000 // 3600 + 1) * 3600
+                AS next_alarm
+              FROM events ORDER BY event_id LIMIT 500"""),
+      (s, dir) =>
+        t(s, dir, "events")
+          .select(col("event_id"),
+            ((unix_timestamp(col("ts")).divide(lit(3600)))
+              .cast("long") + 1).multiply(3600).as("next_alarm"))
+          .orderBy("event_id")
+          .limit(500)),
+
+    // T1-batch/F10/A8 — tumbling 1 h bucket aggregate, the batch analog
+    // of the hourly alarm round (master/master.ino:27,670-698).
+    QueryDef(
+      "q26_hourly_window",
+      Some("""SELECT epoch_us(date_trunc('hour', ts::TIMESTAMP)) // 1000000
+                AS wstart,
+              event_type, COUNT(*) AS cnt,
+              CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))), 3) AS DOUBLE)
+                AS sv
+              FROM events GROUP BY 1, 2 ORDER BY wstart, event_type"""),
+      (s, dir) =>
+        t(s, dir, "events")
+          .groupBy(
+            unix_timestamp(date_trunc("HOUR", col("ts"))).as("wstart"),
+            col("event_type"))
+          .agg(count(lit(1)).as("cnt"),
+            round(graft.plans.MoneySum.sumDec128(
+                col("value").cast(DecimalType(18, 6))), 3)
+              .cast("double").as("sv"))
+          .orderBy("wstart", "event_type")),
+
+    // T6-batch — session windows with 60 s gap, the slave awake-session
+    // timeout (slave/slave.ino:121-124): count sessions per user.
+    QueryDef(
+      "q27_sessionize",
+      Some("""WITH g AS (SELECT user_id,
+                CASE WHEN epoch_us(ts::TIMESTAMP) // 1000000
+                     - epoch_us(LAG(ts) OVER (PARTITION BY user_id
+                         ORDER BY ts, event_id)::TIMESTAMP) // 1000000 > 60
+                     OR LAG(ts) OVER (PARTITION BY user_id
+                         ORDER BY ts, event_id) IS NULL
+                THEN 1 ELSE 0 END AS brk
+                FROM events)
+              SELECT user_id, CAST(SUM(brk) AS BIGINT) AS sessions
+              FROM g GROUP BY user_id ORDER BY user_id"""),
+      (s, dir) => {
+        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        t(s, dir, "events")
+          .select(col("user_id"),
+            when(
+              unix_timestamp(col("ts")) -
+                unix_timestamp(lag("ts", 1).over(w)) > 60 ||
+                lag("ts", 1).over(w).isNull, 1)
+              .otherwise(0).as("brk"))
+          .groupBy("user_id")
+          .agg(sum("brk").cast("long").as("sessions"))
+          .orderBy("user_id")
+      }),
+
+    // T3-batch — dedup-keep-first per key, the effectively-once retry
+    // semantics (master/master.ino:218-220).
+    QueryDef(
+      "q28_dedup_first",
+      Some("""SELECT user_id, event_type, MIN(event_id) AS first_id
+              FROM events GROUP BY user_id, event_type
+              ORDER BY user_id, event_type"""),
+      (s, dir) =>
+        t(s, dir, "events")
+          .groupBy("user_id", "event_type")
+          .agg(min("event_id").as("first_id"))
+          .orderBy("user_id", "event_type")),
+
+    // J6 — as-of: latest prior event of a different type per row
+    // (display shows most recent reading, prototype_2:49-70).
+    QueryDef(
+      "q29_asof_prior",
+      Some("""SELECT a.event_id, MAX(b.event_id) AS prior_b
+              FROM events a LEFT JOIN events b
+                ON a.user_id = b.user_id AND b.ts < a.ts
+                AND b.event_type <> a.event_type
+              GROUP BY a.event_id ORDER BY a.event_id LIMIT 500"""),
+      (s, dir) =>
+        // Linear as-of plan (VERDICT r1 item 5) with a cardinality
+        // guard (VERDICT r3 item 7): event_type here is a 5-value
+        // enum, so priorOtherTypeMax picks the per-type window
+        // decomposition; see its doc for the two regimes.
+        priorOtherTypeMax(t(s, dir, "events"))
+          .orderBy("event_id")
+          .limit(500)),
+
+    // J2 first-class: per-sensor calibration dimension join
+    // (hx711_calibration.ino:8 — each scale has its own S/N-keyed
+    // calibration factor + zero offset; q03 applies constants only).
+    // The dim is derived deterministically from the user_id key space
+    // (md5-based factor/zero — identical on both engines), standing in
+    // for a real per-S/N calibration table; the fact side joins it
+    // BROADCAST: a fleet's calibration dim is tiny vs the readings.
+    QueryDef(
+      "q52_calibration_dim_join",
+      Some("""WITH dim AS (SELECT DISTINCT user_id,
+                1.0 + (('0x' || substring(md5('cf:' || user_id::VARCHAR),
+                       1, 15))::BIGINT % 1000) / 1000.0 AS factor,
+                (('0x' || substring(md5('z:' || user_id::VARCHAR),
+                  1, 15))::BIGINT % 100) / 10.0 AS zero
+              FROM events)
+              SELECT e.event_id, e.user_id,
+                ROUND(d.factor, 4) AS factor,
+                ROUND((e.value - d.zero) / d.factor, 4) AS calibrated_v
+              FROM events e JOIN dim d ON e.user_id = d.user_id
+              ORDER BY e.event_id LIMIT 1000"""),
+      (s, dir) => {
+        val ev = t(s, dir, "events")
+        val dim = ev.select(col("user_id")).distinct()
+          .withColumn("factor", lit(1.0) +
+            (graft.functions.TextFunctions.hex60(
+              concat(lit("cf:"), col("user_id").cast("string"))) % 1000)
+              .cast("double") / 1000.0)
+          .withColumn("zero",
+            (graft.functions.TextFunctions.hex60(
+              concat(lit("z:"), col("user_id").cast("string"))) % 100)
+              .cast("double") / 10.0)
+        ev.join(broadcast(dim), Seq("user_id"))
+          .select(col("event_id"), col("user_id"),
+            round(col("factor"), 4).as("factor"),
+            round((col("value") - col("zero")) / col("factor"), 4)
+              .as("calibrated_v"))
+          .orderBy("event_id")
+          .limit(1000)
+      }),
+
+    // ── X5: the custom Aggregator (udaf) — outlier-trimmed calibration
+    // mean per device/user, checked against the closed-form SQL. Both
+    // engines accumulate in DECIMAL(18,6) and round the exact quotient
+    // HALF_UP at 4 dp (the oracle in integer micro-units: DuckDB
+    // divides decimals in DOUBLE), then cast to DOUBLE.
+    QueryDef(
+      "ns_robust_calib",
+      Some("""WITH g AS (SELECT user_id, COUNT(value) n,
+                SUM(CAST(value AS DECIMAL(18,6))) s,
+                MIN(CAST(value AS DECIMAL(18,6))) lo,
+                MAX(CAST(value AS DECIMAL(18,6))) hi
+              FROM events GROUP BY user_id),
+       r AS (SELECT user_id, CASE WHEN n < 3 THEN n ELSE n - 2 END den,
+                CAST((CASE WHEN n < 3 THEN s ELSE s - lo - hi END)
+                  * 1000000 AS BIGINT) num
+              FROM g)
+       SELECT user_id, CAST(SIGN(num) * ((ABS(num) + den * 50)
+                // (den * 100)) AS DOUBLE) / 10000 AS robust_mean
+       FROM r ORDER BY user_id"""),
+      (s, dir) =>
+        t(s, dir, "events")
+          .groupBy("user_id")
+          .agg(round(graft.functions.RobustCalibAgg.robustMean(col("value")), 4)
+            .cast("double").as("robust_mean"))
+          .orderBy("user_id")),
+
+    // J6 generalized — as-of join across two DIFFERENT tables via the
+    // public AsOf operator: each event picks the user's latest order
+    // as of the event time. One union + one shuffle+sort, linear —
+    // no per-key quadratic join (DuckDB's native ASOF JOIN is the
+    // oracle). Build side pre-aggregated to unique (key, time) so
+    // tie-breaks are deterministic on both engines.
+    QueryDef(
+      "q59_asof_join",
+      Some(asofOracle),
+      (s, dir) => {
+        // the oracle's pre-aggregate CTE (MAX(o_orderkey) per (cust,
+        // date)) exists only to make the tie deterministic — the
+        // tieBreak column folds that into the as-of sort itself, so
+        // the build side goes in RAW and the whole groupBy shuffle
+        // stage disappears (VERDICT r17 #1): latest date wins, and at
+        // equal date the greatest orderkey wins, exactly the CTE's
+        // semantics. Routed to the COMPACT tier (per-key sorted
+        // history arrays + codegen binary search — AsOf scaladoc):
+        // per-customer order counts are bounded at every sf, the
+        // shape this tier exists for; the union-window plain tier
+        // stays oracle-pinned via q29, bucketed via q69.
+        val (probe, build) = asofSides(s, dir)
+        graft.operators.AsOf.joinLatestCompact(
+            probe, build, Seq("user_id"), Seq("k"), "t_us", "bt",
+            valueCols = Seq("last_order"), strict = false,
+            tieBreak = Seq("last_order"))
+          .select("event_id", "last_order")
+          .orderBy("event_id")
+      }),
+
+    // J6 auto-routed — q59's exact semantics (events pick the user's
+    // latest prior order), but through joinLatestAuto with
+    // targetRowsPerTask=16: hot enough keys exist at every sf ≥ 0.01
+    // that the probe picks the bucketed plan, whose results must
+    // still hash-match DuckDB's ASOF. The probe's collect() is one
+    // aggregated row — bounded by construction.
+    QueryDef(
+      "q69_asof_auto",
+      Some(asofOracle),
+      (s, dir) => {
+        // raw build + tieBreak (see q59): the bucketed plan's
+        // closing-value aggregate and in-bucket window both carry the
+        // tie ordering, so THIS row now also pins the salted-window
+        // tie machinery against DuckDB's pre-aggregated ASOF
+        val (probe, build) = asofSides(s, dir)
+        graft.operators.AsOf.joinLatestAuto(
+            probe, build, Seq("user_id"), Seq("k"), "t_us", "bt",
+            valueCols = Seq("last_order"), strict = false,
+            targetRowsPerTask = 16, tieBreak = Seq("last_order"))
+          .select("event_id", "last_order")
+          .orderBy("event_id")
+      }),
+
+    // J6 auto-routed, default target — the router must pick the PLAIN
+    // plan here (AsOfApiSpec pins the routing; this row pins the
+    // routed RESULT against DuckDB's native ASOF at oracle scale).
+    // q69 forces the skew probe to the BUCKETED plan to prove the
+    // salted-window machinery, and pays its overhead on a table where
+    // the plain plan is cheap — a machinery-proof cost, not a
+    // data-path defect. This row runs the SAME semantics at the
+    // PRODUCTION default target (2²⁰ rows/task, the per-task window
+    // size proven spill-safe in ScaleOpsSpec): no key in the test
+    // data is that hot, so the probe must route to the plain
+    // single-window plan. Together the pair pins both routes and the
+    // router.
+    QueryDef(
+      "q70_asof_auto_default",
+      Some(asofOracle),
+      (s, dir) => {
+        // raw build side + tieBreak instead of the oracle CTE's
+        // pre-aggregate — same semantics, one shuffle stage fewer
+        // (see q59); the routing probe is the SAMPLED one by default
+        // since round 18 (the exact probe was ~0.84 s of this query's
+        // 2.3 s at sf1, VERDICT r17 #1)
+        val (probe, build) = asofSides(s, dir)
+        graft.operators.AsOf.joinLatestAuto(
+            probe, build, Seq("user_id"), Seq("k"), "t_us", "bt",
+            valueCols = Seq("last_order"), strict = false,
+            tieBreak = Seq("last_order"))
+          .select("event_id", "last_order")
+          .orderBy("event_id")
+      }),
+
+    // W-family extension — hourly gap-fill + forward-fill: the
+    // "display shows the last known reading" semantics as a batch
+    // resample (reference prototype_2:49-70 keeps the previous weight
+    // on screen between rounds). Per user: generate the full hourly
+    // grid between first and last event, average readings into their
+    // hour (decimal-sum determinism), forward-fill empty hours with
+    // the last non-null value. Linear: one groupBy + one explode +
+    // one window, all partitioned by user.
+    QueryDef(
+      "q60_gapfill_ffill",
+      Some("""WITH b AS (SELECT user_id,
+                date_trunc('hour', MIN(ts::TIMESTAMP)) h0,
+                date_trunc('hour', MAX(ts::TIMESTAMP)) h1
+                FROM events WHERE user_id <= 10 GROUP BY 1),
+              hrs AS (SELECT user_id, UNNEST(generate_series(h0, h1,
+                INTERVAL 1 HOUR)) h FROM b),
+              v AS (SELECT user_id, date_trunc('hour', ts::TIMESTAMP) h,
+                ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
+                  / COUNT(*), 3) avg_v
+                FROM events WHERE user_id <= 10 GROUP BY 1, 2)
+              SELECT hrs.user_id, epoch_us(hrs.h) // 1000000 AS h_epoch,
+                last_value(v.avg_v IGNORE NULLS) OVER (
+                  PARTITION BY hrs.user_id ORDER BY hrs.h
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
+              FROM hrs LEFT JOIN v
+                ON v.user_id = hrs.user_id AND v.h = hrs.h
+              ORDER BY hrs.user_id, h_epoch"""),
+      (s, dir) => {
+        val ev = t(s, dir, "events").filter(col("user_id") <= 10)
+        val bounds = ev.groupBy("user_id")
+          .agg(date_trunc("hour", min(col("ts"))).as("h0"),
+            date_trunc("hour", max(col("ts"))).as("h1"))
+        val hrs = bounds.select(col("user_id"),
+          explode(sequence(col("h0"), col("h1"),
+            expr("interval 1 hour"))).as("h"))
+        val v = ev.groupBy(col("user_id"),
+            date_trunc("hour", col("ts")).as("h"))
+          .agg(round(
+            sum(col("value").cast("decimal(18,6)")).cast("double")
+              / count(lit(1)), 3).as("avg_v"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("user_id").orderBy("h")
+          .rowsBetween(Long.MinValue, 0)
+        hrs.join(v, Seq("user_id", "h"), "left")
+          .select(col("user_id"),
+            unix_timestamp(col("h")).as("h_epoch"),
+            last(col("avg_v"), ignoreNulls = true).over(w).as("filled"))
+          .orderBy("user_id", "h_epoch")
+      }),
+
+    // T1 extension — HOPPING window aggregate (2-hour windows sliding
+    // every hour) via Spark's native window() in batch: each event
+    // lands in exactly two overlapping windows. The oracle mirrors by
+    // exploding each event into its two slot starts. Streaming uses
+    // the identical window() call with a watermark.
+    QueryDef(
+      "q61_hopping_window",
+      Some("""WITH x AS (SELECT date_trunc('hour', ts::TIMESTAMP)
+                  - u.i * INTERVAL 1 HOUR ws, event_type
+                FROM events, UNNEST([0, 1]) u(i))
+              SELECT epoch_us(ws) // 1000000 AS wstart, event_type,
+                CAST(COUNT(*) AS BIGINT) AS cnt
+              FROM x GROUP BY 1, 2 ORDER BY wstart, event_type"""),
+      (s, dir) =>
+        t(s, dir, "events")
+          .groupBy(window(col("ts"), "2 hours", "1 hour"),
+            col("event_type"))
+          .agg(count(lit(1)).as("cnt"))
+          .select(unix_timestamp(col("window.start")).as("wstart"),
+            col("event_type"), col("cnt"))
+          .orderBy("wstart", "event_type")),
+  )
+}

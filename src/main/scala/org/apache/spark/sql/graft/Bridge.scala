@@ -14,6 +14,18 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A sort column's key, whether it ascends, and whether nulls come
+    * first (`col.desc` builds a SortOrder node the public Column API
+    * does not take apart); a bare column sorts ascending, nulls first.
+    */
+  def sortKey(c: Column): (Column, Boolean, Boolean) = c.node match {
+    case org.apache.spark.sql.internal.SortOrder(child, dir, nulls, _) =>
+      (new Column(child),
+        dir == org.apache.spark.sql.internal.SortOrder.Ascending,
+        nulls == org.apache.spark.sql.internal.SortOrder.NullsFirst)
+    case _ => (c, true, true)
+  }
+
   /** Wrap a logical plan as a DataFrame (Dataset.ofRows went
     * private[sql] in Spark 4) — needed to hand custom logical nodes
     * (graft.plans.TopKPerKey) back to the public Dataset API.

@@ -331,7 +331,7 @@ class PropertySpec extends SparkSpec {
         .agg(max(col("b.event_id")).as("prior_b"))
     for (nTypes <- Seq(5, 1000)) {
       val ev = mk(nTypes)
-      val got = graft.queries.AdvancedQueries.priorOtherTypeMax(ev, 32)
+      val got = graft.queries.TelemetryQueries.priorOtherTypeMax(ev, 32)
       val usedJoin = got.queryExecution.optimizedPlan.collect {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
       }.nonEmpty

@@ -28,6 +28,56 @@ class RegistrySpec extends SparkSpec {
     }
   }
 
+  test("oracle SQL equals the committed golden docs/oracle_sql.json") {
+    // The DuckDB side of the gate is pinned text: moving a query or
+    // sharing an oracle fragment must leave every squashed string
+    // byte-identical. Regenerate with:
+    //   GRAFT_REGEN_PLANS=1 sbt "testOnly graft.RegistrySpec"
+    import java.nio.file.{Files, Paths}
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val f = Paths.get("docs", "oracle_sql.json")
+    val got = Registry.oracleSql
+    if (sys.env.contains("GRAFT_REGEN_PLANS")) {
+      val obj = JObject(got.toSeq.sortBy(_._1).map { case (k, v) => k -> JString(v) }.toList)
+      Files.writeString(f, JsonMethods.pretty(JsonMethods.render(obj)) + "\n")
+    }
+    assert(Files.exists(f), s"missing $f — run from the repo root")
+    val want = JsonMethods.parse(Files.readString(f)) match {
+      case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+      case other => fail(s"$f is not a JSON object: ${other.getClass}")
+    }
+    val changed = (want.keySet ++ got.keySet).toSeq.sorted
+      .filter(n => want.get(n) != got.get(n))
+    assert(changed.isEmpty,
+      s"oracle SQL differs from $f for: ${changed.mkString(", ")} — if " +
+        "intentional, regenerate with GRAFT_REGEN_PLANS=1")
+  }
+
+  test("queries are grouped by domain: nothing round-named, " +
+      "no per-object Catalog.table helper") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val sources = java.nio.file.Files.list(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+      .toSeq
+    val roundNamed = sources.flatMap { case (f, src) =>
+      Seq(f).filter(_.matches(".*Round\\d+.*")) ++
+        "object\\s+(\\w*Round\\d+\\w*)".r.findAllMatchIn(src).map(_.group(1))
+    }
+    assert(roundNamed.isEmpty,
+      s"name query files and objects by domain: ${roundNamed.mkString(", ")}")
+    // every query object reads tables through one import,
+    // `graft.Catalog.{table => t}`, not through a wrapper of its own
+    val helpers = sources.collect {
+      case (f, src) if src.contains("Catalog.table(") => f
+    }
+    assert(helpers.isEmpty,
+      s"import graft.Catalog.{table => t} instead: ${helpers.mkString(", ")}")
+  }
+
   test("oracle SQL never uses engine-native hash functions (parity rule)") {
     // cross-engine hashing is md5-only: Spark hash()/xxhash64() never
     // match DuckDB's — a regression here corrupts the gate silently
