@@ -8,11 +8,10 @@ import org.apache.spark.sql.SparkSession
   * materialized through the `noop` sink (count() would let Catalyst
   * prune the projections being measured).
   *
-  * The session is [[session]] — `Engine.session` plus [[confs]] — the
-  * same one `Verify` dumps the oracle results from, so the oracle
-  * gate checks the plans this main times. The repository's benchmark
-  * for performance claims is `hwbench/` (see README); this record is
-  * the per-query view.
+  * The session is `Engine.session(local[cpus])`, the one `Verify`
+  * dumps the oracle results from and `hwbench/` times. The
+  * repository's benchmark for performance claims is `hwbench/` (see
+  * README); this record is the per-query view.
   */
 object Bench {
 
@@ -22,47 +21,9 @@ object Bench {
   /** Sequential reps per query in the isolated pass. */
   private val IsoReps = 3
 
-  /** The overrides Bench and Verify set on top of `Engine.session`. */
-  def confs(cpus: Int): Map[String, String] = Map(
-    // AQE's runtime SMJ→BHJ conversion off: measured at sf1 (q47), its
-    // serial materialize→fetch→build→rebroadcast chain costs MORE than
-    // the shuffle it saves at this scale
-    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-    // WindowExec switches to a spill-capable external buffer after
-    // 4096 rows/partition by default — pure overhead while window
-    // partitions fit executor memory; on a cluster set per executor
-    // memory budget
-    "spark.sql.windowExec.buffer.in.memory.threshold" -> "1048576",
-    "spark.sql.windowExec.buffer.spill.threshold" -> "4194304",
-    // the pooled pass submits independent queries from a small client
-    // pool; tiny jobs must not convoy behind a large one's stage queue
-    "spark.scheduler.mode" -> "FAIR",
-    // single-file/single-row-group test parquet otherwise pins every
-    // cached large-table partition — and each narrow pipeline over it
-    // — to ONE task (see Catalog.table; a cluster gets this from file
-    // count)
-    "spark.graft.local.scanParallelism" -> cpus.toString,
-    // Spark's split size is max(openCostInBytes, totalBytes /
-    // defaultParallelism): with the 4 MB default a compressed but
-    // CPU-heavy table (sf3 documents: 17 MB parquet) planned ~4 tasks
-    // and the dedup tiers serialized; 128 KB lets bytes-per-core drive
-    // the count to ~core parallelism
-    "spark.sql.files.openCostInBytes" -> "131072")
-
-  /** The session Bench times and Verify checks: local[cpus], shuffle
-    * partitions = cpus, in-memory catalog, plus [[confs]].
-    */
-  def session(cpus: Int): SparkSession =
-    Engine.session(s"local[$cpus]", Some(cpus), hiveMetastore = false,
-      confs = confs(cpus))
-
   private def runOne(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
       : (String, Double) = {
-    // FAIR mode shares BETWEEN pools; jobs inside one pool are FIFO.
-    // Give each query its own pool so a large job cannot convoy the
-    // tiny ones behind its stage queue.
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"q-$name")
     val t0 = System.nanoTime()
     val ok =
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -72,7 +33,6 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         false
       }
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
     // a failed query must not masquerade as a fast one
     name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
   }
@@ -83,8 +43,7 @@ object Bench {
     // self-inflated by the pooled phase's own residue.
     val loadStart = readLoadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = session(cpus)
+    val spark = Engine.session(s"local[${cpus()}]")
     try run(spark, sfDir, args.toSet, loadStart)
     finally spark.stop()
   }
@@ -176,6 +135,12 @@ object Bench {
     }
     println(s"""{$summary,"n_queries":${results.size}}""")
   }
+
+  /** `SPARK_GRAFT_CPUS`, the core count of Bench's and Verify's
+    * sessions; the JVM's processors when unset.
+    */
+  private[graft] def cpus(): Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** First three fields of /proc/loadavg ("1m 5m 15m"), or "" off-Linux.
     * External load is the usual cause of rep spread; having it in-band

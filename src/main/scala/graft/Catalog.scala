@@ -16,8 +16,8 @@ object Catalog {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Tables large enough that scan parallelism matters (see
-    * `spark.graft.local.scanParallelism` below); the tiny dims stay
+  /** Tables large enough that scan parallelism matters (see the
+    * single-file split in [[table]]); the tiny dims stay
     * single-partition — 32 near-empty tasks per stage would only add
     * scheduling floor to sub-second queries.
     */
@@ -112,19 +112,18 @@ object Catalog {
               f.dataType == org.apache.spark.sql.types.TimestampNTZType))
           raw.withColumn("ts", col("ts").cast("timestamp"))
         else raw
-      // Local-mode scan-parallelism fidelity (off by default; Bench
-      // sets the conf to the core count): the test parquet is one
-      // file with ONE row group per table, so the scan — and every
-      // cached partition and narrow pipeline built on it — is a
-      // single task no matter how many cores the session has, while
-      // DuckDB parallelizes freely inside a row group on the same
-      // file. On a cluster the file count provides this parallelism;
-      // locally the sf1 trend profile measured the same probe at 83 s
-      // on the 1-partition layout vs 12 s at 32 — a 7× handicap that
-      // is storage-layout accident, not engine cost. The partition
-      // count is DATA-PROPORTIONAL (file bytes / 512 KiB, capped at
-      // the conf value) — a flat core-count fan-out taxed every small
-      // query with near-empty task scheduling (+29% on the sf0.1
+      // Scan-parallelism fidelity for a single-file table: the test
+      // parquet is one file with ONE row group per table, so the scan —
+      // and every cached partition and narrow pipeline built on it — is
+      // a single task no matter how many cores the session has, while
+      // DuckDB parallelizes freely inside a row group on the same file.
+      // On a cluster the file count provides this parallelism; locally
+      // the sf1 trend profile measured the same probe at 83 s on the
+      // 1-partition layout vs 12 s at 32 — a 7× handicap that is
+      // storage-layout accident, not engine cost. The partition count
+      // is DATA-PROPORTIONAL (file bytes / 512 KiB, capped at the
+      // session's parallelism) — a flat core-count fan-out taxed every
+      // small query with near-empty task scheduling (+29% on the sf0.1
       // suite) while tiny partitions buy nothing; this is
       // maxPartitionBytes logic applied at the only point a
       // single-row-group file can still be split (after the read).
@@ -132,39 +131,25 @@ object Catalog {
       // one-time shuffle happens at warm time, not per query.
       //
       // Round 15: the repartition is a CRUTCH for unsplittable files
-      // and is now applied only there. A single-file table with
-      // MULTIPLE row groups is natively splittable — Spark's own
-      // split sizing (maxSplitBytes = min(maxPartitionBytes,
-      // max(openCostInBytes, totalBytes / defaultParallelism)))
-      // already yields ~core-count scan tasks with zero shuffle,
-      // which is exactly what a real multi-file 100 TB layout gives a
-      // cluster. Forcing the round-robin Exchange on such files paid
-      // a full write+read of the fact table per cold scan (the sf1
-      // trend replicas: 733 row groups in lineitem, yet every q47
-      // probe shuffled 6 M rows before touching the join).
-      val par = spark.conf.getOption("spark.graft.local.scanParallelism")
-        .map(_.toInt).getOrElse(0)
-      if (par > 0 && largeTables(name)) {
-        val f = new java.io.File(s"$dir/$name.parquet")
-        // directory-style parquet: File.length() on a directory is
-        // the inode size (~4 KiB), which silently disabled the split
-        // for multi-file layouts — sum the contained part files.
-        // Sizing only, so I/O failures here WARN and fall back (the
-        // read above already proved the table is parquet).
-        val bytes =
-          if (!f.isDirectory) f.length()
-          else Option(f.listFiles()) match {
-            case Some(parts) => parts.iterator
-              .filter(x => x.isFile && !x.getName.startsWith("_")
-                && !x.getName.startsWith("."))
-              .map(_.length()).sum
-            case None =>
-              log.warn(s"cannot list $f; scan not split")
-              0L
-          }
-        lazy val rowGroups =
-          if (f.isDirectory) Int.MaxValue // multi-file: splittable
-          else try {
+      // and is applied only there. A directory of part files, or a
+      // single file with MULTIPLE row groups, is natively splittable —
+      // Spark's own split sizing (maxSplitBytes = min(maxPartitionBytes,
+      // max(openCostInBytes, totalBytes / defaultParallelism))) already
+      // yields ~core-count scan tasks with zero shuffle, which is
+      // exactly what a real multi-file 100 TB layout gives a cluster.
+      // Forcing the round-robin Exchange on such files paid a full
+      // write+read of the fact table per cold scan (the sf1 trend
+      // replicas: 733 row groups in lineitem, yet every q47 probe
+      // shuffled 6 M rows before touching the join).
+      val f = new java.io.File(s"$dir/$name.parquet")
+      val n = math.min(spark.sparkContext.defaultParallelism.toLong,
+        math.max(1L, f.length() >> 19)).toInt
+      if (!largeTables(name) || !f.isFile || n <= 1) df
+      else {
+        // sizing only, so an I/O failure WARNs and falls back (the read
+        // above already proved the table is parquet)
+        val rowGroups =
+          try {
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
               .fromPath(new org.apache.hadoop.fs.Path(f.toURI),
                 spark.sessionState.newHadoopConf())
@@ -175,9 +160,8 @@ object Catalog {
               "assuming one row group", e)
             1
           }
-        val n = math.min(par.toLong, math.max(1L, bytes >> 19)).toInt
-        if (n > 1 && rowGroups <= 1) df.repartition(n) else df
-      } else df
+        if (rowGroups <= 1) df.repartition(n) else df
+      }
     })
   }
 

@@ -3,44 +3,38 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The engine's user-facing entry point (SURVEY.md §7.1 `catalog/`):
-  * builds a tuned SparkSession, registers the star-schema catalog, and
-  * exposes the SQL surface — the Spark analog of the reference's
+  * builds the SparkSession — the Spark analog of the reference's
   * "master" process wiring (fixed registry → queries → sinks).
   *
   * Scale defaults baked in: AQE (runtime coalesce + skew-join
-  * splitting), partition coalescing, UTC session time, shuffle
-  * partitions sized to cores locally (set explicitly per-cluster in
-  * production), and `file:` bound to the fork-free local filesystem
-  * ([[fileSystemConfs]]). This is the only SparkSession builder in the
-  * engine: callers such as `Bench.session` pass their overrides as `confs`,
-  * applied after the defaults at build time (confs such as
-  * `spark.scheduler.mode` only take effect when the SparkContext is
-  * created).
+  * splitting), CBO with join reorder, UTC session time, shuffle
+  * partitions equal to the master's parallelism, the Hive metastore,
+  * the graft SQL extensions, and `file:` bound to the fork-free local
+  * filesystem ([[fileSystemConfs]]). This is the only SparkSession
+  * builder in the repository and it takes no overrides: hwbench, the
+  * mains and the tests all build this session, so the oracle check
+  * and the plan goldens cover the plans hwbench times. Per-run
+  * locations (metastore URL, scratch dirs) come as `-D` system
+  * properties, which SparkConf reads.
   */
 object Engine {
 
   /** Binds `file:` to [[NioLocalFileSystem]] (the `FileSystem` API) and
     * [[NioLocalFs]] (the `FileContext` API): Hadoop's local filesystem
     * without its per-file `chmod`/`readlink` forks (see LocalFs.scala).
-    * The test session applies the same map.
     */
-  val fileSystemConfs: Map[String, String] = Map(
+  private val fileSystemConfs: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       classOf[NioLocalFs].getName)
 
   def session(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Option[Int] = None,
-      warehouseDir: Option[String] = None,
-      hiveMetastore: Boolean = true,
-      confs: Map[String, String] = Map.empty): SparkSession = {
-    val cores = Runtime.getRuntime.availableProcessors()
+      warehouseDir: Option[String] = None): SparkSession = {
     val b = SparkSession.builder()
       .master(master)
       .appName("hivehwspark")
-      .config("spark.sql.shuffle.partitions",
-        shufflePartitions.getOrElse(cores).toString)
+      .config("spark.sql.shuffle.partitions", parallelism(master).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -52,16 +46,13 @@ object Engine {
       .config("spark.ui.enabled", "false")
       .config(fileSystemConfs)
     warehouseDir.foreach(w => b.config("spark.sql.warehouse.dir", w))
-    confs.foreach { case (k, v) => b.config(k, v) }
     // Persistent catalog (north-star spark_approach: "Spark SQL + Hive
     // metastore"): table definitions land in the metastore and survive
     // restarts — CREATE TABLE / SHOW TABLES work across sessions. Falls
     // back to the in-memory catalog when spark-hive isn't on the
     // classpath (hive jars ship with the Spark distribution used here).
-    if (hiveMetastore) {
-      try b.enableHiveSupport()
-      catch { case _: IllegalArgumentException => () }
-    }
+    try b.enableHiveSupport()
+    catch { case _: IllegalArgumentException => () }
     // graft SQL functions + the custom top-k planner strategy bind at
     // session build (the same wiring spark.sql.extensions=
     // graft.plans.GraftExtensions gives a spark-submit user)
@@ -71,15 +62,22 @@ object Engine {
     spark
   }
 
-  /** Register every catalog table from an sf directory and return the
-    * session, ready for `Engine.sql`.
+  /** `sparkContext.defaultParallelism` of a local master, worked out
+    * before the context exists: as a builder setting the shuffle width
+    * reaches the SparkConf and every `newSession()`, which a
+    * `spark.conf.set` after the build would not. `local[n]`/`local[n,f]`
+    * → n, `local[*]` → the JVM's processors, `local` → 1; a cluster
+    * master learns its cores from executors at run time and gets the
+    * driver's processor count.
     */
-  def open(spark: SparkSession, dir: String): SparkSession = {
-    Catalog.registerAll(spark, dir)
-    spark
+  private def parallelism(master: String): Int = {
+    val local = """local\[(\*|\d+)(?:,\s*\d+)?\]""".r
+    master match {
+      case "local" => 1
+      case local(n) if n != "*" => n.toInt
+      case _ => Runtime.getRuntime.availableProcessors()
+    }
   }
-
-  def sql(spark: SparkSession, query: String): DataFrame = spark.sql(query)
 
   /** A `spark.graft.*` byte budget: `default` when unset, and an
     * IllegalArgumentException naming the conf and its value when it
@@ -92,9 +90,6 @@ object Engine {
       new IllegalArgumentException(
         s"$key must be a positive number of bytes, got '$raw'"))
   }
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    Catalog.table(spark, dir, name)
 
   /** Unpersist the RDDs under `df`'s checkpoint scans. `df.unpersist()`
     * only drops CacheManager entries, so an eager localCheckpoint's

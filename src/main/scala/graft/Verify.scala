@@ -7,8 +7,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names = dev-loop filter (driver passes 2 args)
     val only = args.drop(2).toSet
-    // Bench's session, so the oracle checks the plans Bench times
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    // the session hwbench and Bench time, so the oracle checks their plans
+    val spark = Engine.session(s"local[${Bench.cpus()}]")
     new java.io.File(outDir).mkdirs()
     var failed = 0
     SparkEntry.queries

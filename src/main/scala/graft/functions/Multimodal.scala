@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 /** Multimodal column plumbing (SURVEY.md NS multimodal; builder
   * prompt): image/audio/video travel as opaque `binary` columns with a
@@ -22,8 +21,7 @@ import org.apache.spark.sql.functions._
   * exists, so mp4 rows carry luma_fp = -1 / n_frames_decoded = 0
   * while frame sampling emits the real demuxed access units (what a
   * GPU decoder downstream consumes). Payloads in neither container
-  * go through the deterministic STUBs so pipelines still exercise
-  * end-to-end.
+  * get `decode_ok = false` rows from the decoders and no frames.
   *
   * At 100 TB: media rows are large — keep them in their own column
   * family (parquet binary column), repartition by byte-size budget
@@ -33,30 +31,10 @@ import org.apache.spark.sql.functions._
 object Multimodal {
 
   case class MediaRecord(media_id: Long, kind: String, payload: Array[Byte])
-  case class MediaFeatures(
-      media_id: Long,
-      kind: String,
-      n_bytes: Long,
-      // STUB features — deterministic byte statistics standing in for
-      // real decode (mean pixel value / audio RMS / frame count).
-      mean_byte: Double,
-      byte_hist4: Array[Long],
-      frames_sampled: Int)
 
-  /** Attach metadata columns to an opaque binary payload column —
-    * pure expressions, no decode needed (always real, even at 100 TB).
-    */
-  def withMetadata(df: DataFrame, payloadCol: String): DataFrame =
-    df.withColumn("n_bytes", octet_length(col(payloadCol)))
-      .withColumn("sha", sha2(col(payloadCol), 256))
-
-  case class ResizedMedia(media_id: Long, kind: String,
-      width: Int, height: Int, payload: Array[Byte])
-
-  /** The byte-subsample kernel behind [[resizeStub]] and
-    * [[resizeImages]]'s undecodable branch: every k-th byte,
-    * k = ceil(len / target) — deterministic, never empty for
-    * non-empty input.
+  /** The byte-subsample kernel behind [[resizeImages]]'s undecodable
+    * branch: every k-th byte, k = ceil(len / target) — deterministic,
+    * never empty for non-empty input.
     */
   private def subsampleBytes(bytes: Array[Byte], target: Int): Array[Byte] =
     if (bytes.length <= math.max(1, target)) bytes
@@ -64,21 +42,6 @@ object Multimodal {
       val step = math.ceil(bytes.length.toDouble / math.max(1, target)).toInt
       bytes.indices.collect { case i if i % step == 0 => bytes(i) }.toArray
     }
-
-  /** STUB resize: byte-subsample the payload to a target "resolution"
-    * — deterministic stand-in kept ONLY for payloads the JVM cannot
-    * pixel-decode; ImageIO-decodable images get the REAL bilinear
-    * resize in [[resizeImages]] (round 17, VERDICT r16 next #5).
-    */
-  def resizeStub(ds: Dataset[MediaRecord], w: Int, h: Int): Dataset[ResizedMedia] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { rec =>
-        ResizedMedia(rec.media_id, rec.kind, w, h,
-          subsampleBytes(rec.payload, w * h))
-      }
-    }
-  }
 
   case class ResizedImage(media_id: Long, kind: String,
       width: Int, height: Int, resized_luma_fp: Long, n_bytes_out: Long,
@@ -142,29 +105,6 @@ object Multimodal {
   }
 
   case class Frame(media_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** STUB frame-sample for payloads in NEITHER of the real container
-    * formats (AVI via [[parseAvi]], MP4 via [[parseMp4]] — both get
-    * REAL demux-based sampling in [[sampleVideoFrames]]): emit every
-    * `everyN`-th 4-KiB block of a video payload as a "frame" — one
-    * row per sampled frame (flatMap shape: a 2 GB video becomes ~500
-    * frame rows, never one huge row downstream).
-    */
-  def frameSampleStub(ds: Dataset[MediaRecord], everyN: Int): Dataset[Frame] = {
-    import ds.sparkSession.implicits._
-    val block = 4096
-    ds.mapPartitions { it =>
-      it.flatMap { rec =>
-        val nBlocks = math.max(1, rec.payload.length / block)
-        (0 until nBlocks by math.max(1, everyN)).iterator.map { b =>
-          val from = b * block
-          val until = math.min(rec.payload.length, from + block)
-          Frame(rec.media_id, b, java.util.Arrays.copyOfRange(
-            rec.payload, from, math.max(from, until)))
-        }
-      }
-    }
-  }
 
   /** Real image decode + feature extraction over opaque binary
     * payloads: `javax.imageio.ImageIO` (ships in the JDK — PNG, BMP,
@@ -367,8 +307,7 @@ object Multimodal {
   // fully decodable with what the JDK provides: MJPEG ('..dc' chunks,
   // each frame an ordinary JPEG javax.imageio reads) and uncompressed
   // DIB ('..db' chunks, raw bottom-up BGR24 rows). decodeVideoFeatures
-  // and sampleVideoFrames below are REAL for those; frameSampleStub /
-  // decodeFeatures remain the DISCLOSED stubs for every other codec.
+  // and sampleVideoFrames below are REAL for those.
 
   case class VideoFeatures(
       media_id: Long,
@@ -560,9 +499,8 @@ object Multimodal {
   /** REAL frame sampling for AVI payloads: demux and emit every
     * `everyN`-th frame's payload as its own row (flatMap shape — a
     * long video becomes many small frame rows, never one huge row
-    * downstream). Non-AVI / corrupt payloads emit nothing; other
-    * container formats go through [[frameSampleStub]] (disclosed
-    * stub).
+    * downstream). MP4 payloads emit their demuxed access units;
+    * payloads in any other container, and corrupt ones, emit nothing.
     */
   def sampleVideoFrames(ds: Dataset[MediaRecord], everyN: Int): Dataset[Frame] = {
     require(everyN > 0, s"everyN must be positive, got $everyN")
@@ -1282,35 +1220,5 @@ object Multimodal {
       y += 1
     }
     a
-  }
-
-  /** STUB decode + feature extraction for NON-AVI video payloads (no
-    * general video codec ships with the JVM): deterministic byte
-    * statistics stand in for frame features. The iterator shape
-    * (mapPartitions, streaming over rows, no materialization) is the
-    * production pattern and is what the spec tests. For AVI
-    * containers use [[decodeVideoFeatures]]/[[sampleVideoFrames]],
-    * for images [[decodeImageFeatures]], for audio
-    * [[decodeAudioFeatures]] — all real.
-    */
-  def decodeFeatures(ds: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { rec =>
-        val bytes = rec.payload
-        val hist = new Array[Long](4)
-        var sum = 0L
-        bytes.foreach { b =>
-          val u = b & 0xff
-          sum += u
-          hist(u / 64) += 1
-        }
-        val mean = if (bytes.isEmpty) 0.0 else sum.toDouble / bytes.length
-        // STUB: "frame sampling" = one fake frame per 4 KiB of payload.
-        val frames = math.max(1, bytes.length / 4096)
-        MediaFeatures(rec.media_id, rec.kind, bytes.length.toLong,
-          mean, hist, frames)
-      }
-    }
   }
 }

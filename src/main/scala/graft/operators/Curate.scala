@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{TextFunctions => TF}
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
@@ -56,42 +56,22 @@ object Curate {
     * Scale shape: the textbook formulation is one global-order
     * running-sum window, and a window with no PARTITION BY moves the
     * whole corpus into a single task (the WindowExec trap). This is
-    * instead the distributed prefix sum: range-repartition on the
-    * selection order (the only wide exchange — the same sort a
-    * global ORDER BY needs anyway), per-partition running sums under
-    * a partitioned window, then one broadcast offset table of
-    * numPartitions rows computed from per-partition totals. Every
-    * stage is linear; no single-task hotspot at any corpus size.
-    * AQE-safe: coalesced shuffle partitions merge ADJACENT ranges,
-    * so partition ids stay aligned with the global order.
+    * instead the distributed prefix sum ([[rangePrefix]]): a range id
+    * per row under the selection order, one range exchange on it (the
+    * only wide exchange — the same sort a global ORDER BY needs
+    * anyway), per-range running sums under a partitioned window, then
+    * one broadcast offset table of numPartitions rows computed from
+    * per-range totals. Every stage is linear; no single-task hotspot
+    * at any corpus size.
     */
   def selectByBudget(docs: DataFrame, idCol: String, scoreCol: String,
       weightCol: String, budget: Long,
       numPartitions: Int = 0): DataFrame = {
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
-    val ord = Seq(col(scoreCol).desc, col(idCol).asc)
-    val ranged = docs.repartitionByRange(parts, ord: _*)
-      .withColumn("__graft_pid", spark_partition_id())
-    val within = Window.partitionBy("__graft_pid").orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cumIn = ranged.withColumn("__graft_cin",
-      sum(col(weightCol).cast("long")).over(within))
-    // numPartitions-row frame: the unpartitioned window is bounded by
-    // construction (one row per range partition), like the as-of
-    // router's probe aggregate — not a data-sized single-task window
-    val offs = cumIn.groupBy("__graft_pid")
-      .agg(sum(col(weightCol).cast("long")).as("__graft_psum"))
-      .withColumn("__graft_off",
-        coalesce(sum("__graft_psum").over(
-          Window.orderBy("__graft_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__graft_pid", "__graft_off")
-    cumIn.join(broadcast(offs), "__graft_pid")
-      .withColumn("cum_w", col("__graft_cin") + col("__graft_off"))
+    val w = col(weightCol).cast("long")
+    rangePrefix(docs, Seq(col(scoreCol).desc, col(idCol).asc), numPartitions,
+      "cum_w", within => sum(w).over(within.rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)), sum(w))
       .filter(col("cum_w") <= budget)
-      .drop("__graft_pid", "__graft_cin", "__graft_off")
   }
 
   /** Deterministic content-hash train/val/test split + sample flag —
@@ -464,42 +444,54 @@ object Curate {
     * Scale shape: the textbook ROW_NUMBER() over a global ORDER BY is
     * the single-task WindowExec trap; zipWithIndex is RDD-land and
     * order-fragile. This is the distributed formulation of the same
-    * thing, with COUNTS where [[selectByBudget]] sums weights: every
-    * row gets a range id under the order ([[rangeIndex]]), a range
-    * exchange on that id, per-range row_number under a partitioned
-    * window, then a broadcast offset table with one row per range.
-    * Linear everywhere; no data-sized single task at any corpus size.
-    *
-    * The range id is a function of the row, not `spark_partition_id()`
-    * after a range exchange on the order: both the numbering and the
-    * offsets read the ranges, and over a cached input AQE does not
-    * reuse the exchange, so each read samples its own bounds
-    * (RangePartitioner seeds its sample by RDD id). Two reads cut at
-    * different bounds gave duplicate and missing positions, depending
-    * on core count and run.
+    * thing ([[rangePrefix]]), with COUNTS where [[selectByBudget]]
+    * sums weights. Linear everywhere; no data-sized single task at
+    * any corpus size.
     */
   def globalOrderIndex(docs: DataFrame,
       ord: Seq[org.apache.spark.sql.Column], posCol: String = "pos",
-      numPartitions: Int = 0): DataFrame = {
+      numPartitions: Int = 0): DataFrame =
+    rangePrefix(docs, ord, numPartitions, posCol,
+      within => row_number().over(within).cast("long"), count(lit(1)))
+
+  /** A global prefix aggregate under the total order `ord`, without a
+    * data-sized single-task window: every row gets a range id under
+    * the order ([[rangeIndex]]), a range exchange on that id, the
+    * within-range prefix `prefix` over a window partitioned by range
+    * and ordered by `ord`, then a broadcast offset table with one row
+    * per range adds the `total`s of the ranges before: `out` = offset
+    * + within-range prefix.
+    *
+    * The range id is a function of the row, not `spark_partition_id()`
+    * after a range exchange on the order: both the prefix and the
+    * offsets read the ranges, and over a cached input AQE does not
+    * reuse the exchange, so each read samples its own bounds
+    * (RangePartitioner seeds its sample by RDD id). Two reads cut at
+    * different bounds gave duplicate and missing positions, and wrong
+    * running sums, depending on core count and run.
+    */
+  private def rangePrefix(docs: DataFrame, ord: Seq[Column],
+      numPartitions: Int, out: String,
+      prefix: WindowSpec => Column,
+      total: Column): DataFrame = {
     val parts =
       if (numPartitions > 0) numPartitions
       else docs.sparkSession.sessionState.conf.numShufflePartitions
     val ranged = docs.withColumn("__graft_pid", rangeIndex(docs, ord, parts))
       .repartitionByRange(parts, col("__graft_pid"))
-    val within = Window.partitionBy("__graft_pid").orderBy(ord: _*)
-    val numbered = ranged
-      .withColumn("__graft_rn", row_number().over(within).cast("long"))
+    val within = ranged.withColumn("__graft_in",
+      prefix(Window.partitionBy("__graft_pid").orderBy(ord: _*)))
     // numPartitions-row offset frame — bounded by construction
-    val offs = numbered.groupBy("__graft_pid")
-      .agg(count(lit(1)).as("__graft_pc"))
+    val offs = within.groupBy("__graft_pid")
+      .agg(total.as("__graft_pt"))
       .withColumn("__graft_off",
-        coalesce(sum("__graft_pc").over(
+        coalesce(sum("__graft_pt").over(
           Window.orderBy("__graft_pid")
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("__graft_pid", "__graft_off")
-    numbered.join(broadcast(offs), "__graft_pid")
-      .withColumn(posCol, col("__graft_off") + col("__graft_rn"))
-      .drop("__graft_pid", "__graft_rn", "__graft_off")
+    within.join(broadcast(offs), "__graft_pid")
+      .withColumn(out, col("__graft_off") + col("__graft_in"))
+      .drop("__graft_pid", "__graft_in", "__graft_off")
   }
 
   /** The 0-based range of each row under `ord` among `parts` ranges,

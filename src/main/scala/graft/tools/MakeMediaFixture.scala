@@ -477,7 +477,7 @@ object MakeMediaFixture {
     val mp4Dir = s"$base/video_mp4"
     val audioMp4Dir = s"$base/audio_mp4"
     val resizeDir = s"$base/media_resize"
-    val spark = graft.Engine.session("local[2]", hiveMetastore = false)
+    val spark = graft.Engine.session("local[2]")
     import spark.implicits._
     rows.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(mediaDir)
     audioRows.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(audioDir)

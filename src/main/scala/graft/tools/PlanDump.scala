@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.{Bench, SparkEntry}
+import graft.{Engine, SparkEntry}
 
-/** Dev tool: print plans of the Bench session to stdout, two modes.
+/** Dev tool: print plans of the engine session to stdout, two modes.
   * `docs/plan_golden/` is the committed plan record (QueryPlanSpec).
   *
   *  - `query ...`: EXPLAIN FORMATTED per named query — pushdown,
@@ -37,8 +37,8 @@ object PlanDump {
       s"not a known query and not an existing directory: ${
         unknownQ.mkString(",")} (known queries: see SparkEntry.queries; " +
         "an sf-dir argument must exist on disk)")
-    // the session Bench times, at 4 cores
-    val spark = Bench.session(4)
+    // the session hwbench times, at 4 cores like the plan goldens
+    val spark = Engine.session("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     if (fingerprint) {
       val qs = if (names.nonEmpty) names.toSeq else PlanGolden.picks

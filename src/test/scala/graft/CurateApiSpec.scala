@@ -197,22 +197,35 @@ class CurateApiSpec extends SparkSpec {
   test("selectByBudget: distributed prefix sum equals the " +
       "single-window spec; range partitioning in the plan") {
     import org.apache.spark.sql.expressions.Window
+    def check(rows: org.apache.spark.sql.DataFrame, budget: Long): Unit = {
+      val sel = Curate.selectByBudget(rows, "id", "score", "w", budget,
+        numPartitions = 7)
+      // the scale contract: global order comes from a range exchange,
+      // never a single-task unpartitioned data window
+      assert(sel.queryExecution.executedPlan.toString
+        .contains("rangepartitioning"))
+      val have = sel.select("id", "cum_w").as[(Long, Long)].collect().toSet
+      val spec = Window.orderBy(col("score").desc, col("id").asc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val expect = rows
+        .withColumn("cum_w", sum(col("w").cast("long")).over(spec))
+        .filter(col("cum_w") <= budget)
+        .select("id", "cum_w").as[(Long, Long)].collect().toSet
+      val wrong = have.diff(expect)
+      if (have != expect || have.isEmpty) fail(s"kept ${have.size} rows " +
+        s"where the spec keeps ${expect.size}; ${wrong.size} (id, cum_w) " +
+        s"pairs differ from the spec, e.g. ${wrong.take(3)}")
+    }
     val rows = (1L to 100L).map(i => (i, i * 37 % 11, i % 7 + 1))
       .toDF("id", "score", "w") // tied scores -> id tie-break matters
-    val sel = Curate.selectByBudget(rows, "id", "score", "w",
-      budget = 150L, numPartitions = 7)
-    // the scale contract: global order comes from a range exchange,
-    // never a single-task unpartitioned data window
-    assert(sel.queryExecution.executedPlan.toString
-      .contains("rangepartitioning"))
-    val got = sel.select("id", "cum_w").as[(Long, Long)].collect().toSet
-    val spec = Window.orderBy(col("score").desc, col("id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val expect = rows
-      .withColumn("cum_w", sum(col("w").cast("long")).over(spec))
-      .filter(col("cum_w") <= 150L)
-      .select("id", "cum_w").as[(Long, Long)].collect().toSet
-    assert(got == expect && got.nonEmpty, s"$got vs $expect")
+    check(rows, 150L)
+    // the running sums and the per-range offsets both read the ranges;
+    // over a cached input each read of a range exchange on the order
+    // samples its own bounds (see globalOrderIndex's test)
+    val cached = spark.range(0, 20000, 1, 2)
+      .select(col("id"), (col("id") * 7919 % 1000).as("score"),
+        (col("id") % 7 + 1).as("w")).cache()
+    try check(cached, 40000L) finally { cached.unpersist(); () }
     // budget below the best doc's weight selects nothing
     assert(Curate.selectByBudget(rows, "id", "score", "w", 0L)
       .count() == 0)

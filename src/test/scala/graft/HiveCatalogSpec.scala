@@ -38,15 +38,12 @@ class HiveCatalogSpec extends SparkSpec {
     val desc = spark.sql("DESCRIBE EXTENDED graft.nation").collect()
       .map(r => s"${r.getString(0)}|${r.getString(1)}").mkString("\n")
     assert(desc.contains("Statistics"), desc)
-    // rowCount surfaces in plan stats only under CBO (Engine.session
-    // default; the shared test session opts in per-assertion)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
-      val stats = spark.table("graft.nation")
-        .queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.exists(_.toLong > 0),
-        s"CBO rowCount missing: $stats")
-    } finally spark.conf.set("spark.sql.cbo.enabled", "false")
+    // rowCount surfaces in plan stats only under CBO, which
+    // Engine.session turns on
+    val stats = spark.table("graft.nation")
+      .queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.exists(_.toLong > 0),
+      s"CBO rowCount missing: $stats")
   }
 
   test("metastore + table definitions are on disk (restart-durable)") {

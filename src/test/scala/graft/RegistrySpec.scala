@@ -91,21 +91,31 @@ class RegistrySpec extends SparkSpec {
   test("one session definition: only Engine builds a SparkSession; " +
       "no SPARK_GRAFT_* knobs beyond SF_DIR and CPUS") {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val sources = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => java.nio.file.Files.isRegularFile(p) &&
-        p.toString.endsWith(".scala"))
-      .map(p => p -> java.nio.file.Files.readString(p)).toSeq
-    assert(sources.nonEmpty)
-    val builders = sources.collect {
-      case (p, src) if src.contains("SparkSession.builder") &&
-          p.getFileName.toString != "Engine.scala" => p
+    def sources(dir: String) = {
+      val root = java.nio.file.Paths.get(dir)
+      assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          p.toString.endsWith(".scala"))
+        .map(p => p -> java.nio.file.Files.readString(p)).toSeq
     }
-    assert(builders.isEmpty,
-      s"build through Engine.session instead: ${builders.mkString(", ")}")
+    val main = sources("src/main")
+    val all = main ++ sources("src/test")
+    assert(main.nonEmpty)
+    // the patterns are regexes so this file does not match itself:
+    // a second builder (a spec base included), or an override layered
+    // on Engine.session, would make the tests, Verify and the benchmark
+    // check different engines again
+    val forbidden = Seq("SparkSession[.]builder", "Bench[.](confs|session)",
+      "spark[.]graft[.]local[.]scan[P]arallelism", "hive[M]etastore\\s*=")
+    val hits = for {
+      (p, src) <- all if p.getFileName.toString != "Engine.scala"
+      re <- forbidden if re.r.findFirstIn(src).isDefined
+    } yield s"$p: $re"
+    assert(hits.isEmpty,
+      s"build through Engine.session instead: ${hits.mkString(", ")}")
     val allowed = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS")
-    val knobs = sources.flatMap { case (p, src) =>
+    val knobs = main.flatMap { case (p, src) =>
       "SPARK_GRAFT_[A-Z0-9_]*".r.findAllIn(src).filterNot(allowed)
         .map(k => s"$p: $k")
     }

@@ -5,31 +5,19 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session — Spark
-  * startup dominates test wall-clock otherwise).
+  * startup dominates test wall-clock otherwise): the engine's own
+  * session, so the specs and the plan goldens check what hwbench times.
   */
 object SparkSpecBase {
-  // Hive-enabled so HiveCatalogSpec can prove metastore persistence;
-  // derby metastore + warehouse live under target/ (wiped by clean).
-  // Both are build output: an earlier run's leftovers are deleted
-  // first, or its managed-table directories would fail this run's
-  // saveAsTable with LOCATION_ALREADY_EXISTS. `file:` is bound as in
-  // Engine.session, so the specs write through the engine's filesystem.
+  // The derby metastore (its URL is a -D property in build.sbt's
+  // Test / javaOptions) and the warehouse live under target/ (wiped by
+  // clean). Both are build output: an earlier run's leftovers are
+  // deleted first, or its managed-table directories would fail this
+  // run's saveAsTable with LOCATION_ALREADY_EXISTS.
   lazy val spark: SparkSession = {
     Seq("target/test-warehouse", "target/test-metastore_db").foreach(d =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/test-warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        "jdbc:derby:;databaseName=target/test-metastore_db;create=true")
-      .config(Engine.fileSystemConfs)
-      .enableHiveSupport()
-      .getOrCreate()
+    Engine.session("local[4]", warehouseDir = Some("target/test-warehouse"))
   }
 }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Multimodal, SimilarityFunctions => SF, TextFunctions => TF}
+import graft.functions.{SimilarityFunctions => SF, TextFunctions => TF}
 import org.apache.spark.sql.functions._
 
 /** Semantic specs for the LLM-pipeline operator library: sketches
@@ -90,20 +90,6 @@ class TextPipelineSpec extends SparkSpec {
     assert(cand.nonEmpty, "LSH bucket should contain candidates")
     assert((brute & cand).nonEmpty,
       s"LSH top-k should overlap brute-force top-k: brute=$brute lsh=$cand")
-  }
-
-  test("multimodal stub decode: deterministic byte features via mapPartitions") {
-    val recs = Seq(
-      Multimodal.MediaRecord(1, "image", Array.tabulate[Byte](8192)(i => (i % 251).toByte)),
-      Multimodal.MediaRecord(2, "audio", Array[Byte]())).toDS()
-    val feats = Multimodal.decodeFeatures(recs).collect().sortBy(_.media_id)
-    assert(feats(0).n_bytes == 8192)
-    assert(feats(0).frames_sampled == 2)
-    assert(feats(0).byte_hist4.sum == 8192)
-    assert(feats(1).n_bytes == 0 && feats(1).mean_byte == 0.0)
-    // determinism: same input → same features
-    val again = Multimodal.decodeFeatures(recs).collect().sortBy(_.media_id)
-    assert(again(0).mean_byte == feats(0).mean_byte)
   }
 
   // independent reference: the per-gram closed form the oracle SQL
@@ -300,26 +286,5 @@ class TextPipelineSpec extends SparkSpec {
     assert(bySrc("en") > 150 && bySrc("en") < 260, bySrc.toString)
     val total = out.map(_._2).sum
     assert(math.abs(total - 360L) < 40, s"E[corpus] drift: $total vs 360")
-  }
-
-  test("multimodal resize + frame-sample stubs: deterministic shapes") {
-    val vid = Multimodal.MediaRecord(7, "video",
-      Array.tabulate[Byte](40960)(i => (i % 127).toByte))
-    val resized = Multimodal.resizeStub(Seq(vid).toDS(), 16, 16).head()
-    assert(resized.width == 16 && resized.height == 16)
-    assert(resized.payload.length <= 256)
-    val frames = Multimodal.frameSampleStub(Seq(vid).toDS(), 2)
-      .collect().sortBy(_.frame_idx)
-    assert(frames.length == 5) // 10 blocks, every 2nd
-    assert(frames.forall(_.frame.length == 4096))
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 2, 4, 6, 8))
-  }
-
-  test("multimodal metadata columns: length + sha256") {
-    val df = Seq((1L, "payload-bytes")).toDF("id", "s")
-      .select($"id", $"s".cast("binary").as("payload"))
-    val out = Multimodal.withMetadata(df, "payload")
-      .select($"n_bytes", length($"sha")).as[(Int, Int)].head()
-    assert(out == ((13, 64)))
   }
 }
