@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract): runs every declared
@@ -73,6 +74,7 @@ object Bench {
     val spread = work.sortBy { case (n, _) =>
       java.util.UUID.nameUUIDFromBytes(n.getBytes).toString
     }
+    val compiles0 = compiles()
     val wall0 = System.nanoTime()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(Par)
     val results: Seq[(String, Double)] =
@@ -85,6 +87,7 @@ object Bench {
           scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
       } finally pool.shutdown()
     val wallSec = (System.nanoTime() - wall0) / 1e9
+    val compiles1 = compiles()
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val nFailed = results.count(_._2 < 0)
@@ -103,6 +106,7 @@ object Bench {
         else (name, ok(ok.length / 2), ok.head, ok.last)
       }
     val loadAfter = readLoadAvg()
+    val compiles2 = compiles()
     val isoQs = isolated.map { case (k, med, _, _) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
     val isoReps3 = isolated.map { case (k, med, mn, mx) =>
@@ -122,7 +126,7 @@ object Bench {
     // look like a speedup — fall back to the pooled wall.
     val value = if (isolated.nonEmpty && isoNFailed == 0) isoSum else wallSec
     val summary =
-      s""""metric":"total","value":$value,"unit":"sec","n_failed":$nFailed,"iso_n_failed":$isoNFailed,"contended":$contended,"loadavg_start":"$loadStart","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir""""
+      s""""metric":"total","value":$value,"unit":"sec","n_failed":$nFailed,"iso_n_failed":$isoNFailed,"codegen_compiles":${compiles1 - compiles0},"iso_codegen_compiles":${compiles2 - compiles1},"contended":$contended,"loadavg_start":"$loadStart","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir""""
     val detail =
       s"""{$summary,"queries":$qs,"queries_isolated":$isoQs,"isolated_reps_detail":$isoReps3}"""
     // Full per-query detail: one (long) line + a file copy. The LAST
@@ -135,6 +139,12 @@ object Bench {
     }
     println(s"""{$summary,"n_queries":${results.size}}""")
   }
+
+  /** Classes Janino has compiled in this JVM: each miss of Spark's
+    * generated-class cache counts once, so a pass whose plans were all
+    * compiled before adds 0 (see `Engine.codegenConfs`).
+    */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** `SPARK_GRAFT_CPUS`, the core count of Bench's and Verify's
     * sessions; the JVM's processors when unset.

@@ -95,13 +95,13 @@ object Catalog {
       // DuckDB oracle, which casts ::TIMESTAMP) must see µs
       // TimestampType (LTZ), whatever the generator wrote —
       //  * TIMESTAMP(NANOS): Spark has no native type; read as raw
-      //    nanos (legacy.parquet.nanosAsLong) and truncate to µs;
+      //    nanos (legacy.parquet.nanosAsLong, an Engine.session
+      //    setting) and truncate to µs;
       //  * timestamp[us] with isAdjustedToUTC=false: Spark infers
       //    TIMESTAMP_NTZ (inferTimestampNTZ default-on in 4.x), which
       //    unix_micros() et al reject — cast to LTZ (wall-clock
       //    identity under the sessions' UTC timezone, same as the
       //    oracle's naive ::TIMESTAMP).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       val df =
         if (name == "events" &&
@@ -183,9 +183,9 @@ object Catalog {
     */
   def createPersistentTables(spark: SparkSession, dir: String,
       database: String = "graft"): Unit = {
-    // same TIMESTAMP(NANOS) escape hatch as `table` — scans of the
-    // external events table go through the session datasource path
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // scans of the external events table go through the session
+    // datasource path, so they need the same TIMESTAMP(NANOS) escape
+    // hatch as `table` (legacy.parquet.nanosAsLong, set by Engine.session)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
     tableNames.foreach { n =>
       val tbl = if (n == "events") "events_raw" else n

@@ -9,9 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale defaults baked in: AQE (runtime coalesce + skew-join
   * splitting), CBO with join reorder, UTC session time, shuffle
   * partitions equal to the master's parallelism, the Hive metastore,
-  * the graft SQL extensions, and `file:` bound to the fork-free local
-  * filesystem ([[fileSystemConfs]]). This is the only SparkSession
-  * builder in the repository and it takes no overrides: hwbench, the
+  * the graft SQL extensions, `file:` bound to the fork-free local
+  * filesystem ([[fileSystemConfs]]), and generated code compiled once
+  * per JVM ([[codegenConfs]]). This is the only SparkSession builder in
+  * the repository and it takes no overrides: hwbench, the
   * mains and the tests all build this session, so the oracle check
   * and the plan goldens cover the plans hwbench times. Per-run
   * locations (metastore URL, scratch dirs) come as `-D` system
@@ -27,6 +28,46 @@ object Engine {
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       classOf[NioLocalFs].getName)
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100), sized so that
+    * each generated class compiles once per JVM and every later
+    * execution is a cache hit. Measured working sets (hwbench catalogs
+    * at sf0.01, 4 cores): one sql_mix pass about 900 classes, set-up 54
+    * of them; one doc_curation run about 850, 390 of them in set-up
+    * (mostly `warmShared`); one sequential pass over the whole
+    * 136-query registry about 1,470, so this leaves 2.8× headroom. At 100 entries every
+    * sql_mix pass evicted and recompiled about 1,100 classes, about
+    * half of the busy executor time (in Janino); at this size a timed
+    * pass compiles 2. The classes then stay loaded: Metaspace at the
+    * end of a sql_mix run is 200 MB instead of 194 MB. A static conf:
+    * `CodeGenerator` reads it once, when first initialized, so it must
+    * be a builder setting.
+    */
+  private val CodegenCacheEntries = 4096
+
+  /** Compile each generated class once per JVM: a cache that holds the
+    * working set ([[CodegenCacheEntries]]), and class names without the
+    * whole-stage codegen stage id (`spark.sql.codegen.useIdInClassName`,
+    * default true). AQE numbers a query's codegen stages in the order it
+    * creates them, which follows the order earlier stages finish, so the
+    * same pipeline got id 5 in one execution and 6 in the next; the id
+    * was part of the class name, hence of the cache key, and such a
+    * query compiled new classes on executions long after its first.
+    * Without it, one pipeline is one class whatever its id, also across
+    * queries. The id stays in the plan (`*(5)`) and as a comment in the
+    * logged source; only stack traces lose it.
+    *
+    * What still compiles late is a plan AQE builds differently from run
+    * to run, each variant once: `ns_dedup_ngram_jaccard` broadcasts
+    * whichever side of its self-join finishes first, and
+    * `ns_dedup_embed_cosine` runs a different set of stages before an
+    * empty one cuts the rest. Both follow the order in which stages
+    * finish, so no engine setting pins them.
+    */
+  private val codegenConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   def session(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
@@ -44,6 +85,7 @@ object Engine {
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(codegenConfs)
       .config(fileSystemConfs)
     warehouseDir.foreach(w => b.config("spark.sql.warehouse.dir", w))
     // Persistent catalog (north-star spark_approach: "Spark SQL + Hive
