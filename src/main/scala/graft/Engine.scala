@@ -60,9 +60,14 @@ object Engine {
     *
     * What still compiles late is a plan AQE builds differently from run
     * to run, each variant once: `ns_dedup_ngram_jaccard` broadcasts
-    * whichever side of its self-join finishes first, and
+    * whichever side of its self-join finishes first;
+    * `ns_dedup_substring` plans its candidate join with the
+    * rank-capped side broadcast, and AQE, planning again as stages
+    * finish, keeps that side on some executions and broadcasts the
+    * other on others (4 classes for the second variant, seen on the
+    * first, second or third execution of a run); and
     * `ns_dedup_embed_cosine` runs a different set of stages before an
-    * empty one cuts the rest. Both follow the order in which stages
+    * empty one cuts the rest. All follow the order in which stages
     * finish, so no engine setting pins them.
     */
   private val codegenConfs: Map[String, String] = Map(

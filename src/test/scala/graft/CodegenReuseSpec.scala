@@ -14,12 +14,16 @@ class CodegenReuseSpec extends SparkSpec {
   /** Core SQL queries whose classes together overflow the default cache,
     * plus the queries whose AQE stage numbering used to change between
     * executions (each compiled new classes on later executions).
+    * `ns_dedup_substring` is not here although its numbering was fixed
+    * too: AQE picks its candidate join's build side anew as stages finish,
+    * so it compiles a second plan variant on whichever execution first
+    * draws the other side (`Engine.codegenConfs`).
     */
   private val names = Seq(
     "q06_star_join", "q10_distinct_barrier", "q15_rank_ntile_seq",
     "q16_lag_running", "q19_set_ops", "q26_hourly_window",
     "ns_dedup_incremental", "ns_dedup_incremental_minhash",
-    "ns_dedup_substring", "ns_text_tfidf", "q53_lateral_topk")
+    "ns_text_tfidf", "q53_lateral_topk")
 
   private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
