@@ -179,7 +179,9 @@ object Catalog {
     * files — metadata-only registration, no data copy (the only
     * sane move at 100 TB). `events` additionally gets a persistent
     * view applying the nanos→µs timestamp normalization so SQL users
-    * see the same µs semantics as Catalog.table. Idempotent.
+    * see the same µs semantics as Catalog.table. Idempotent. No
+    * query calls it: it stays as the Hive catalog the north star
+    * names (the queries read Catalog.table).
     */
   def createPersistentTables(spark: SparkSession, dir: String,
       database: String = "graft"): Unit = {
@@ -231,7 +233,8 @@ object Catalog {
     * the size threshold) has real rowCounts/NDVs to plan with — on a
     * 1000-executor cluster CBO stats are the difference between a
     * bushy star-join plan and a left-deep disaster. Column stats go
-    * on the declared join keys.
+    * on the declared join keys. Kept with [[createPersistentTables]]
+    * as part of the Hive catalog the north star names.
     */
   def analyzeTables(spark: SparkSession,
       database: String = "graft"): Unit = {

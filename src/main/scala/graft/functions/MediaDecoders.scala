@@ -2,25 +2,13 @@ package graft.functions
 
 import java.awt.image.BufferedImage
 
-/** Pluggable codec-decoder seam (VERDICT r16 next-round #6): the
-  * sandbox JVM has no H.264/H.265 video or AAC audio decoder — those
-  * codecs stay demux-level with disclosed sentinel features — but a
-  * production classpath (a jcodec build, an FFI wrapper over
-  * libavcodec, a GPU-handoff shim) can fill the slots WITHOUT
-  * touching the operators: [[Multimodal.decodeVideoFeatures]],
+/** Per-sample codec decoders: [[Multimodal.decodeVideoFeatures]],
   * [[Multimodal.sampleVideoFrames]] and
-  * [[Multimodal.decodeMp4AudioFeatures]] resolve their per-sample
-  * decoder through [[MediaDecoders]], which discovers
-  * implementations per-executor via `java.util.ServiceLoader` (the
-  * standard classpath-plugin mechanism, so a cluster deploy only
-  * adds a jar) plus an explicit `register*` hook for tests and
-  * driver-side wiring in local mode.
-  *
-  * In this sandbox the only provider is the built-in
-  * [[ImageIoFrameDecoder]] (the photo-JPEG family), so behavior is
-  * unchanged: avc1/hvc1/mp4a resolve to None and keep their
-  * sentinel contract. The seam turns the disclosed gap into an
-  * extension point instead of a hardcoded branch.
+  * [[Multimodal.decodeMp4AudioFeatures]] resolve their decoder
+  * through [[MediaDecoders]]. The JVM has no H.264/H.265 video or AAC
+  * audio decoder, so those codecs stay demux-level with disclosed
+  * sentinel features; the built-ins are [[ImageIoFrameDecoder]] (the
+  * photo-JPEG family) and [[G711PacketDecoder]] (µ-law / A-law).
   */
 trait FrameDecoder {
   /** Sample-entry fourccs this decoder accepts (e.g. "avc1", "hvc1"). */
@@ -47,7 +35,7 @@ trait AudioPacketDecoder {
 
 /** Built-in frame decoder: `javax.imageio` handles the photo-JPEG
   * family (ordinary JPEG images carried as mp4 samples / AVI 'dc'
-  * chunks). Registered unconditionally — it ships with the JDK.
+  * chunks); it ships with the JDK.
   */
 object ImageIoFrameDecoder extends FrameDecoder {
   override val codecs: Set[String] = Set("jpeg", "mjpa", "mjpg", "MJPG")
@@ -61,11 +49,11 @@ object ImageIoFrameDecoder extends FrameDecoder {
 /** Built-in G.711 audio decoder: QuickTime `ulaw` (µ-law) and `alaw`
   * (A-law) sample entries expand to 16-bit linear PCM by the
   * published ITU-T G.711 formulas — one table lookup per byte, no
-  * native code. Registered unconditionally: the round-18 classpath
-  * sweep (VERDICT r17 next #7) found the JDK's own
-  * com.sun.media.sound.{Ulaw,Alaw}Codec SPIs, proving the codec is
-  * JVM-stock; implementing the 8→16-bit expansion directly keeps the
-  * never-throw per-packet contract without AudioInputStream plumbing.
+  * native code. The round-18 classpath sweep (VERDICT r17 next #7)
+  * found the JDK's own com.sun.media.sound.{Ulaw,Alaw}Codec SPIs,
+  * proving the codec is JVM-stock; implementing the 8→16-bit
+  * expansion directly keeps the never-throw per-packet contract
+  * without AudioInputStream plumbing.
   * (The same sweep confirmed NO H.264/H.265/AAC decoder anywhere on
   * the classpath — those slots stay open, as disclosed.)
   */
@@ -109,53 +97,9 @@ object G711PacketDecoder extends AudioPacketDecoder {
 }
 
 object MediaDecoders {
-  @volatile private var registeredVideo: List[FrameDecoder] = Nil
-  @volatile private var registeredAudio: List[AudioPacketDecoder] = Nil
-
-  // ServiceLoader discovery runs once per executor JVM (lazy val):
-  // production classpaths list implementations in
-  // META-INF/services/graft.functions.FrameDecoder (resp.
-  // AudioPacketDecoder). Failures to load a provider must not take
-  // down the executor — a bad plugin degrades to the sentinel path.
-  private lazy val loadedVideo: List[FrameDecoder] =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.util.ServiceLoader.load(classOf[FrameDecoder])
-        .iterator().asScala.toList
-    } catch { case scala.util.control.NonFatal(_) => Nil }
-
-  private lazy val loadedAudio: List[AudioPacketDecoder] =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.util.ServiceLoader.load(classOf[AudioPacketDecoder])
-        .iterator().asScala.toList
-    } catch { case scala.util.control.NonFatal(_) => Nil }
-
-  /** Test / driver-side registration (local mode shares the JVM; on
-    * a cluster use ServiceLoader so every executor discovers the
-    * decoder from its own classpath). Later registrations win over
-    * earlier ones and over classpath providers.
-    */
-  def registerVideo(d: FrameDecoder): Unit =
-    synchronized { registeredVideo = d :: registeredVideo }
-  def unregisterVideo(d: FrameDecoder): Unit =
-    synchronized { registeredVideo = registeredVideo.filterNot(_ eq d) }
-  def registerAudio(d: AudioPacketDecoder): Unit =
-    synchronized { registeredAudio = d :: registeredAudio }
-  def unregisterAudio(d: AudioPacketDecoder): Unit =
-    synchronized { registeredAudio = registeredAudio.filterNot(_ eq d) }
-
-  /** True when a ServiceLoader classpath provider is present (used
-    * by the env-gated seam spec, which skips itself in the sandbox).
-    */
-  def hasClasspathVideoProvider: Boolean = loadedVideo.nonEmpty
-  def hasClasspathAudioProvider: Boolean = loadedAudio.nonEmpty
-
   def videoFor(codec: String): Option[FrameDecoder] =
-    (registeredVideo ++ loadedVideo ++ List(ImageIoFrameDecoder))
-      .find(_.codecs(codec))
+    Some(ImageIoFrameDecoder).filter(_.codecs(codec))
 
   def audioFor(codec: String): Option[AudioPacketDecoder] =
-    (registeredAudio ++ loadedAudio ++ List(G711PacketDecoder))
-      .find(_.codecs(codec))
+    Some(G711PacketDecoder).filter(_.codecs(codec))
 }

@@ -442,16 +442,14 @@ object Multimodal {
               case Some(mp4) =>
                 // REAL demux (dims/timing/counts/bytes from the box
                 // walk, offsets bounds-validated). PIXEL decode goes
-                // through the pluggable [[MediaDecoders]] seam
-                // (round 17): the built-in javax.imageio decoder
-                // covers photo-JPEG sample entries ('jpeg'/'mjpa'/
-                // MJPG — luma stays -1: lossy pixel values are
-                // decoder-defined, as in the AVI family); H.264/H.265
-                // resolve to no decoder in this sandbox and remain
-                // the disclosed gap (n_frames_decoded = 0; a
-                // production classpath registers a FrameDecoder via
-                // ServiceLoader, or ships the raw access units to a
-                // GPU decoder — see sampleVideoFrames).
+                // through [[MediaDecoders]]: the built-in
+                // javax.imageio decoder covers photo-JPEG sample
+                // entries ('jpeg'/'mjpa'/MJPG — luma stays -1: lossy
+                // pixel values are decoder-defined, as in the AVI
+                // family); H.264/H.265 resolve to no decoder and
+                // remain the disclosed gap (n_frames_decoded = 0; a
+                // pipeline can ship the raw access units to an
+                // external decoder — see sampleVideoFrames).
                 val decoded = MediaDecoders.videoFor(mp4.handler) match {
                   case None => 0L
                   case Some(d) => mp4.samples.count { case (off, sz) =>
@@ -476,8 +474,8 @@ object Multimodal {
               fbytes += bytes.length
               if (compressedFrame) {
                 lossless = false
-                // AVI 'dc' chunks are MJPG — same decoder seam as the
-                // mp4 samples (a registered decoder can override)
+                // AVI 'dc' chunks are MJPG — same decoder lookup as the
+                // mp4 samples
                 val img = MediaDecoders.videoFor("MJPG")
                   .flatMap(_.decodeFrame("MJPG", bytes)).orNull
                 if (img != null && img.getWidth == avi.width &&
@@ -973,9 +971,9 @@ object Multimodal {
             val pcm16 = (a.codec == "sowt" || a.codec == "twos") &&
               a.sampleSize == 16 && a.channels > 0 && a.sampleRate > 0
             if (!pcm16) {
-              // non-JVM-PCM codecs (mp4a/AAC) resolve through the
-              // pluggable [[MediaDecoders]] seam (round 17); no
-              // decoder on this classpath → demux-level truth with
+              // non-JVM-PCM codecs resolve through
+              // [[MediaDecoders]] (G.711 ulaw/alaw); mp4a/AAC has no
+              // JVM decoder → demux-level truth with
               // -1 energy, the disclosed sandbox behavior. Any
               // packet the decoder rejects degrades the whole row
               // back to demux-only — partial energy would be a lie.

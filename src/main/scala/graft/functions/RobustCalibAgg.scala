@@ -34,18 +34,18 @@ object RobustCalibAgg {
   // exact quotient once.
   val aggregator: Aggregator[java.math.BigDecimal, Buf, java.math.BigDecimal] =
     new Aggregator[java.math.BigDecimal, Buf, java.math.BigDecimal] {
-      def zero: Buf = Buf(0L, Long.MaxValue, Long.MinValue, 0L)
-      def reduce(b: Buf, x: java.math.BigDecimal): Buf =
+      override def zero: Buf = Buf(0L, Long.MaxValue, Long.MinValue, 0L)
+      override def reduce(b: Buf, x: java.math.BigDecimal): Buf =
         if (x == null) b
         else {
           val u = x.movePointRight(6).longValueExact()
           Buf(Math.addExact(b.sum, u), math.min(b.min, u),
             math.max(b.max, u), b.count + 1)
         }
-      def merge(a: Buf, b: Buf): Buf =
+      override def merge(a: Buf, b: Buf): Buf =
         Buf(Math.addExact(a.sum, b.sum), math.min(a.min, b.min),
           math.max(a.max, b.max), a.count + b.count)
-      def finish(b: Buf): java.math.BigDecimal =
+      override def finish(b: Buf): java.math.BigDecimal =
         if (b.count == 0) null
         else {
           val (num, den) =
@@ -55,8 +55,9 @@ object RobustCalibAgg {
             java.math.BigDecimal.valueOf(den), 18,
             java.math.RoundingMode.HALF_UP)
         }
-      def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-      def outputEncoder: Encoder[java.math.BigDecimal] = Encoders.DECIMAL
+      override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
+      override def outputEncoder: Encoder[java.math.BigDecimal] =
+        Encoders.DECIMAL
     }
 
   /** Column form for DataFrame groupBy().agg(...): samples are taken

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis column-expression library for the training-data
   * pipeline surface (SURVEY.md §2 NS rows): tokenization, shingling,
-  * portable 60-bit hashing, MinHash signatures, SimHash, language-ID,
-  * quality scoring, fingerprinting.
+  * portable 60-bit hashing, LSH banding, SimHash, language-ID,
+  * quality-score components, fingerprinting.
   *
   * Everything here is pure `org.apache.spark.sql.functions` composition
   * — codegen-friendly, no UDFs, no shuffle: per-document narrow
@@ -39,24 +39,6 @@ object TextFunctions {
     coalesce(graft.plans.WordNgrams(toks, k, distinct = true),
       array().cast("array<string>"))
 
-  /** 31-bit shingle hashes (hex60 mod p, p = 2^31-1) — the input to
-    * the affine MinHash family; one md5 per shingle total.
-    */
-  def hashedShingles31(shingleArr: Column): Column =
-    graft.plans.Hex60Array(shingleArr, graft.plans.MinHashSig.P)
-
-  /** MinHash signature: slot i = min((a_i·h + b_i) mod p) over shingle
-    * hashes h — the standard affine family, evaluated by the native
-    * codegen expression (graft.plans.MinHashSig; one md5 per shingle +
-    * k multiply-adds, vs k md5s per shingle naively). Narrow per-row
-    * compute; the signature is k longs regardless of document size —
-    * the 100 TB-safe sketch.
-    */
-  def minhashSignature(shingleArr: Column, k: Int = 32): Column =
-    graft.plans.MinHashSig(hashedShingles31(shingleArr), k)
-
-  // (slice with a Column start needs all-Column args; see callers)
-
   /** LSH band buckets from a MinHash signature: `bands` buckets of
     * `rows` signature slots each, bucket id = md5 of the joined slot
     * values. Docs sharing any (band, bucket) are near-dup candidates.
@@ -79,6 +61,10 @@ object TextFunctions {
     * pre-round-9 call site was built on (the when/otherwise form
     * returned [] for null input; bare UnaryExpression null
     * propagation would silently drop null-text docs from joins).
+    * No query calls it: the fused kernels (graft.plans.NgramCounts,
+    * NgramHashCounts) replace it in every plan. It stays as the
+    * reference composition those kernels are tested against
+    * (ScaleOpsSpec "NgramCounts fusion equals …").
     */
   def ngrams(toks: Column, n: Int): Column =
     coalesce(graft.plans.WordNgrams(toks, n, distinct = false),
@@ -117,14 +103,11 @@ object TextFunctions {
     }
   }
 
-  /** English stopword ratio — quality-scoring component. */
+  /** English stopwords — the stopword-ratio component of the fused
+    * quality counters (graft.plans.QualityStats).
+    */
   val stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "is", "to", "in", "that", "it", "for")
-
-  def stopwordRatio(toks: Column): Column =
-    when(size(toks) > 0,
-      markerHits(toks, stopwords).cast("double") / size(toks))
-      .otherwise(0.0)
 
   /** Alphabetic-character ratio of the raw text. */
   def alphaRatio(text: Column): Column =
@@ -132,16 +115,6 @@ object TextFunctions {
       length(regexp_replace(text, "[^a-zA-Z]", "")).cast("double") /
         length(text))
       .otherwise(0.0)
-
-  /** Composite quality score in [0,1]: favors mid-length docs with
-    * high alpha ratio and a sane stopword share (the
-    * length/punct/stopword recipe from SURVEY.md NS text analysis).
-    */
-  def qualityScore(text: Column): Column = {
-    val tk = tokens(text)
-    val lenScore = least(size(tk).cast("double") / 100.0, lit(1.0))
-    (lenScore * 0.3 + alphaRatio(text) * 0.4 + stopwordRatio(tk) * 0.3)
-  }
 
   /** Winnowing-style fingerprint: min/max of the hex60 hashes of all
     * character 5-grams — a compact order-sensitive sketch (rolling-hash

@@ -413,7 +413,9 @@ object AsOf {
     * range). Cost is one extra shuffle of (key, time) pairs — small
     * next to the as-of window itself; callers who already know their
     * skew should call [[joinLatest]] / [[joinLatestBucketed]] directly
-    * and skip the probe.
+    * and skip the probe. The queries route with [[autoPlanSampled]];
+    * this exact probe stays as the reference the sampled decision is
+    * tested against.
     */
   def autoPlan(
       probe: DataFrame, build: DataFrame,

@@ -242,7 +242,9 @@ object Curate {
     * O(corpus) broadcast. A NULL `isEval` counts as train (coalesced
     * to false): filter(col) and filter(!col) both reject NULL, so a
     * nullable predicate would otherwise silently exempt those docs
-    * from the contamination check.
+    * from the contamination check. The queries run the hashed tier;
+    * this string-shingle form stays as the reference the hashed tier
+    * is tested against.
     */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
       isEval: org.apache.spark.sql.Column, n: Int = 4): DataFrame = {
@@ -306,7 +308,9 @@ object Curate {
   /** Exact hashed contamination check: train-side signatures
     * `(id, hh)` against a standing eval hash set `(h)`. Returns
     * (id, n_shared) — n_shared counts distinct shared hashed n-grams,
-    * the hashed-tier analog of [[decontaminate]]'s contract.
+    * the hashed-tier analog of [[decontaminate]]'s contract. The
+    * queries run the in-row and bloom tiers; this exact join stays as
+    * the reference both are tested against.
     */
   def decontaminateHashedExact(trainSig: DataFrame,
       evalHashes: DataFrame): DataFrame =
@@ -863,30 +867,15 @@ object Curate {
         col("__graft_s.n_oov").as("n_oov"),
         col("__graft_s.checksum").as("checksum"))
 
-  /** PII regexes, shared with the audit counters in the query layer
-    * (one definition — the two copies must never drift).
-    */
-  val emailRegex = graft.plans.PiiRedactSupport.emailRegex
-  val phoneRegex = graft.plans.PiiRedactSupport.phoneRegex
-  val idRunRegex = graft.plans.PiiRedactSupport.idRunRegex
-
   /** PII redaction tiers: emails, phone-shaped digit groups, long
-    * digit runs → typed placeholders. One fused kernel evaluation
+    * digit runs → typed placeholders, plus the email-match count
+    * (`n_email`). One fused kernel evaluation per row
     * ([[graft.plans.PiiRedact]], same java.util.regex engine and
     * sequential semantics as the chained regexp_replace form it
     * replaced — bit-equal output) instead of three chained regex
-    * passes each paying a UTF8String↔String round-trip. Callers that
-    * also need the email count read `n_email` from [[redactPiiCounted]]
-    * so the email automaton runs once for both.
-    */
-  def redactPii(docs: DataFrame, textCol: String,
-      outCol: String = "text_redacted"): DataFrame =
-    docs.withColumn(outCol,
-      graft.plans.PiiRedact(col(textCol)).getField("red"))
-
-  /** [[redactPii]] plus the email-match count (`n_email`), both from
-    * ONE kernel evaluation per row — the audit column otherwise
-    * re-runs the email automaton over the raw text.
+    * passes each paying a UTF8String↔String round-trip; the audit
+    * count comes from the same evaluation, so the email automaton
+    * runs once for both.
     */
   def redactPiiCounted(docs: DataFrame, textCol: String,
       outCol: String = "text_redacted",

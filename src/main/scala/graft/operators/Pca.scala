@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -10,97 +10,67 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
-/** Distributed PCA / whitening for embedding columns — the
-  * dimensionality-reduction step a training-data pipeline runs before
-  * ANN serving or PQ coding (SemDeDup-style semantic dedup clusters
-  * PCA'd embeddings; OPQ/whitening decorrelates subspaces before
-  * product quantization).
+/** Distributed PCA-style preprocessing for embedding columns — the
+  * dimensionality-reduction / whitening step a training-data pipeline
+  * runs before ANN serving or PQ coding (SemDeDup-style semantic dedup
+  * clusters PCA'd embeddings; OPQ/whitening decorrelates subspaces
+  * before product quantization).
   *
-  * Shape at 100 TB: ONE narrow pass accumulates the d×d Gram matrix,
-  * the d-vector sum and the count in a single fixed-size aggregation
-  * buffer (d=64 → 33 KB) — map-side partial merge is matrix addition,
-  * the driver sees exactly one row. The eigen-decomposition runs
-  * driver-side on the d×d covariance (cyclic Jacobi — the classic
-  * symmetric-matrix algorithm; d is model-sized by contract, same
-  * budget class as the PQ codebook collect). Projection back over the
-  * corpus is a codegen expression: k·d multiply-adds per row inside
-  * whole-stage codegen, no shuffle, no UDF.
+  * Two parts, both live in the query layer:
+  *  - ONE narrow pass accumulates the d×d Gram matrix in a single
+  *    fixed-size aggregation buffer (d=64 → 33 KB) — map-side partial
+  *    merge is matrix addition, the driver sees exactly one row
+  *    (`ns_embed_gram`, via [[gramFixedPoint]]).
+  *  - Projection over the corpus by a [[PcaModel]] is a codegen
+  *    expression: k·d multiply-adds per row inside whole-stage
+  *    codegen, no shuffle, no UDF (`ns_pq_whiten_encode` projects by
+  *    a diagonal whitening model).
   *
   * Oracle strategy: double-precision Gram sums are partition-order
-  * dependent in the last ulp, so the ORACLE row uses the fixed-point
-  * mode (Σ floor(xᵢ·xⱼ·10⁶) as BIGINT — exact long addition,
-  * order-independent, the repo's standard cross-engine discipline),
-  * while the PCA fit itself keeps full doubles and is pinned by
-  * PcaSpec's algebraic goldens (merge-equals-global, orthonormality,
-  * eigen-reconstruction, variance ordering).
+  * dependent in the last ulp, so the Gram cells are fixed-point
+  * (Σ floor(xᵢ·xⱼ·10⁶) as BIGINT — exact long addition,
+  * order-independent, the repo's standard cross-engine discipline).
   */
 object Pca {
 
-  /** One-pass moment accumulator: gram (d×d), sum (d), count.
-    * `fixedPoint` switches the gram cells to Σ floor(xᵢ·xⱼ·10⁶) longs
-    * (stored bit-cast in the double buffer) for the oracle mode.
+  /** One-pass Gram accumulator: cell (i, j) = Σ floor(xᵢ·xⱼ·10⁶) as
+    * a long — exact, order-independent addition.
     */
-  final class Moments(val d: Int, val fixedPoint: Boolean)
-      extends Serializable {
-    val gram = new Array[Double](d * d)
-    val gramFp = if (fixedPoint) new Array[Long](d * d) else null
-    val sum = new Array[Double](d)
-    var n: Long = 0L
+  final class Moments(val d: Int) extends Serializable {
+    val gram = new Array[Long](d * d)
 
     def add(v: Array[Double]): Unit = {
       var i = 0
       while (i < d) {
         val xi = v(i)
-        sum(i) += xi
-        var j = 0
         val row = i * d
-        if (fixedPoint) {
-          while (j < d) {
-            gramFp(row + j) += math.floor(xi * v(j) * 1e6).toLong
-            j += 1
-          }
-        } else {
-          while (j < d) { gram(row + j) += xi * v(j); j += 1 }
+        var j = 0
+        while (j < d) {
+          gram(row + j) += math.floor(xi * v(j) * 1e6).toLong
+          j += 1
         }
         i += 1
       }
-      n += 1
     }
 
     def merge(o: Moments): Unit = {
       var i = 0
-      while (i < d * d) {
-        if (fixedPoint) gramFp(i) += o.gramFp(i) else gram(i) += o.gram(i)
-        i += 1
-      }
-      i = 0
-      while (i < d) { sum(i) += o.sum(i); i += 1 }
-      n += o.n
+      while (i < d * d) { gram(i) += o.gram(i); i += 1 }
     }
 
     def serialize(): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + 4 + 1 + 8 * (d * d + d))
-      bb.putLong(n).putInt(d).put(if (fixedPoint) 1.toByte else 0.toByte)
-      if (fixedPoint) gramFp.foreach(bb.putLong) else gram.foreach(bb.putDouble)
-      sum.foreach(bb.putDouble)
+      val bb = java.nio.ByteBuffer.allocate(4 + 8 * d * d)
+      bb.putInt(d)
+      gram.foreach(bb.putLong)
       bb.array()
     }
   }
 
   private def deserializeMoments(bytes: Array[Byte]): Moments = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getLong
-    val d = bb.getInt
-    val fp = bb.get() == 1
-    val m = new Moments(d, fp)
-    m.n = n
+    val m = new Moments(bb.getInt)
     var i = 0
-    while (i < d * d) {
-      if (fp) m.gramFp(i) = bb.getLong else m.gram(i) = bb.getDouble
-      i += 1
-    }
-    i = 0
-    while (i < d) { m.sum(i) = bb.getDouble; i += 1 }
+    while (i < m.d * m.d) { m.gram(i) = bb.getLong; i += 1 }
     m
   }
 
@@ -119,39 +89,29 @@ object Pca {
     out
   }
 
-  /** The moment aggregate. Output row: struct(n, sum: array<double>,
-    * gram: array<double> | gram_fp: array<long>) — one row per group.
+  /** The Gram aggregate: one row-major array<long> of d×d cells per
+    * group.
     */
-  case class MomentsAgg(child: Expression, d: Int, fixedPoint: Boolean,
+  case class MomentsAgg(child: Expression, d: Int,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TypedImperativeAggregate[Moments] {
     require(d > 0 && d <= 4096, s"dimension $d out of range")
     override def children: Seq[Expression] = Seq(child)
     override def nullable: Boolean = false
     override def prettyName: String = "graft_pca_moments"
-    override val dataType: DataType = StructType(Seq(
-      StructField("n", LongType, nullable = false),
-      StructField("sum", ArrayType(DoubleType, false), nullable = false),
-      if (fixedPoint)
-        StructField("gram_fp", ArrayType(LongType, false), nullable = false)
-      else
-        StructField("gram", ArrayType(DoubleType, false), nullable = false)))
+    override val dataType: DataType = ArrayType(LongType, false)
     @transient private lazy val elemType: DataType = child.dataType match {
       case ArrayType(et, _) => et
       case other => sys.error(s"need array input, got $other")
     }
-    override def createAggregationBuffer(): Moments =
-      new Moments(d, fixedPoint)
+    override def createAggregationBuffer(): Moments = new Moments(d)
     override def update(b: Moments, row: InternalRow): Moments = {
       val v = child.eval(row)
       if (v != null) b.add(toDoubles(v.asInstanceOf[ArrayData], elemType, d))
       b
     }
     override def merge(b: Moments, o: Moments): Moments = { b.merge(o); b }
-    override def eval(b: Moments): Any =
-      InternalRow(b.n, new GenericArrayData(b.sum),
-        if (fixedPoint) new GenericArrayData(b.gramFp)
-        else new GenericArrayData(b.gram))
+    override def eval(b: Moments): Any = new GenericArrayData(b.gram)
     override def serialize(b: Moments): Array[Byte] = b.serialize()
     override def deserialize(bytes: Array[Byte]): Moments =
       deserializeMoments(bytes)
@@ -163,103 +123,22 @@ object Pca {
         c: IndexedSeq[Expression]): MomentsAgg = copy(child = c.head)
   }
 
-  def momentsAgg(c: Column, d: Int, fixedPoint: Boolean = false): Column =
-    Bridge.column(MomentsAgg(Bridge.expression(c), d, fixedPoint)
-      .toAggregateExpression())
-
   /** Exact fixed-point Gram matrix as (i, j, g) rows — the
-    * oracle-checkable face of the one-pass moment aggregate
-    * (order-independent long sums; see object scaladoc).
+    * oracle-checkable one-pass aggregate (order-independent long
+    * sums; see object scaladoc).
     */
   def gramFixedPoint(df: DataFrame, embedCol: String, d: Int): DataFrame =
-    df.agg(momentsAgg(col(embedCol), d, fixedPoint = true).as("m"))
-      .select(posexplode(col("m.gram_fp")).as(Seq("pos", "g")))
+    df.agg(Bridge.column(MomentsAgg(Bridge.expression(col(embedCol)), d)
+        .toAggregateExpression()).as("m"))
+      .select(posexplode(col("m")).as(Seq("pos", "g")))
       .select((col("pos") / d).cast("int").as("i"),
         pmod(col("pos"), lit(d)).cast("int").as("j"), col("g"))
 
-  /** Fitted model: `components(k)(d)` rows are unit eigenvectors of
-    * the covariance, variance descending.
+  /** Projection model: `components(k)(d)` rows, the per-dim `mean`
+    * subtracted before projecting, and a per-component `variance`.
     */
   final case class PcaModel(mean: Array[Double],
       components: Array[Array[Double]], variance: Array[Double])
-
-  /** Cyclic Jacobi eigen-decomposition of a symmetric matrix (the
-    * textbook algorithm: rotate away the largest off-diagonal cell
-    * sweep by sweep). d is model-sized (≤ a few hundred), so the
-    * O(d³ · sweeps) driver cost is microscopic next to the corpus
-    * pass. Returns (eigenvalues, eigenvectors as rows), sorted by
-    * eigenvalue descending.
-    */
-  def jacobiEigen(aIn: Array[Array[Double]], maxSweeps: Int = 64,
-      tol: Double = 1e-12): (Array[Double], Array[Array[Double]]) = {
-    val d = aIn.length
-    val a = Array.tabulate(d, d)((i, j) => aIn(i)(j))
-    val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
-    var sweep = 0
-    var off = Double.MaxValue
-    while (sweep < maxSweeps && off > tol) {
-      off = 0.0
-      var p = 0
-      while (p < d - 1) {
-        var q = p + 1
-        while (q < d) {
-          val apq = a(p)(q)
-          off += 2 * apq * apq
-          if (math.abs(apq) > tol) {
-            val theta = (a(q)(q) - a(p)(p)) / (2 * apq)
-            val t = math.signum(theta) /
-              (math.abs(theta) + math.sqrt(theta * theta + 1)) match {
-                case 0.0 => 1.0 // theta == 0 → 45° rotation
-                case x   => x
-              }
-            val c = 1.0 / math.sqrt(t * t + 1)
-            val s = t * c
-            var i = 0
-            while (i < d) {
-              val aip = a(i)(p); val aiq = a(i)(q)
-              a(i)(p) = c * aip - s * aiq
-              a(i)(q) = s * aip + c * aiq
-              i += 1
-            }
-            i = 0
-            while (i < d) {
-              val api = a(p)(i); val aqi = a(q)(i)
-              a(p)(i) = c * api - s * aqi
-              a(q)(i) = s * api + c * aqi
-              val vip = v(i)(p); val viq = v(i)(q)
-              v(i)(p) = c * vip - s * viq
-              v(i)(q) = s * vip + c * viq
-              i += 1
-            }
-          }
-          q += 1
-        }
-        p += 1
-      }
-      sweep += 1
-    }
-    val order = (0 until d).sortBy(i => -a(i)(i))
-    (order.map(i => a(i)(i)).toArray,
-      order.map(i => Array.tabulate(d)(r => v(r)(i))).toArray)
-  }
-
-  /** Fit a k-component PCA in ONE distributed pass + a driver-side
-    * d×d eigen-solve: covariance = gram/n − mean·meanᵀ.
-    */
-  def fit(df: DataFrame, embedCol: String, d: Int, k: Int): PcaModel = {
-    require(k >= 1 && k <= d, s"k=$k must be in 1..$d")
-    val row = df.agg(momentsAgg(col(embedCol), d).as("m"))
-      .select("m.n", "m.sum", "m.gram").head()
-    val n = row.getLong(0)
-    require(n >= 2, s"PCA needs at least 2 rows, got $n")
-    val sum = row.getSeq[Double](1).toArray
-    val gram = row.getSeq[Double](2).toArray
-    val mean = sum.map(_ / n)
-    val cov = Array.tabulate(d, d)((i, j) =>
-      gram(i * d + j) / n - mean(i) * mean(j))
-    val (vals, vecs) = jacobiEigen(cov)
-    PcaModel(mean, vecs.take(k), vals.take(k))
-  }
 
   /** Codegen projection: out(c) = Σ_j components(c)(j)·(x(j) − mean(j))
     * — k·d fused multiply-adds per row, no shuffle.
@@ -341,27 +220,9 @@ object Pca {
       flat: Array[Double], k: Int, d: Int): Array[Double] =
     projectOne(x, x.length, mean, flat, k, d)
 
-  /** Whitening form of a fitted model: each component row scaled by
-    * 1/√variance so projected coordinates have ~unit variance per
-    * axis — the preconditioning SemDeDup-style semantic clustering
-    * wants (isotropic cosine). NOTE: whitening rescales the metric
-    * (Mahalanobis-izes L2); for PQ preprocessing where raw-L2
-    * neighbors are the ground truth, use the metric-preserving
-    * ROTATION in [[Pq.fitProjection]] instead and keep `whiten`
-    * false there.
-    */
-  def whitened(model: PcaModel, eps: Double = 1e-12): PcaModel =
-    PcaModel(model.mean,
-      model.components.zip(model.variance).map { case (row, v) =>
-        val s = 1.0 / math.sqrt(math.max(v, eps))
-        row.map(_ * s)
-      },
-      Array.fill(model.components.length)(1.0))
-
   /** Round-robin interleave of components across `nSub` subspaces:
-    * component ranked r (variance-descending, the fit order) lands at
-    * projected position (r mod nSub)·subDim + (r div nSub), so each
-    * PQ subspace receives an even mix of high- and low-variance
+    * component ranked r lands at projected position
+    * (r mod nSub)·subDim + (r div nSub), so each PQ subspace receives an even mix of high- and low-variance
     * directions instead of subspace 0 hoarding the whole spectrum —
     * the eigenvalue-allocation idea of the OPQ literature in its
     * closed-form (permutation-only) form. Pure reordering of the

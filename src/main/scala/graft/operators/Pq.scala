@@ -215,32 +215,6 @@ object Pq {
           col(vecCol).cast("array<double>"), model)).as(Seq("s", "cid")))
       .select(col(idCol), col("s").cast("long").as("s"), col("cid"))
 
-  /** Fit the OPQ-style PQ preprocessing projection (VERDICT r18
-    * missing #3 — the composition [[Pca]]'s scaladoc motivates,
-    * now real): PCA-rotate the embedding into its principal basis
-    * and ROUND-ROBIN the components across the PQ subspaces
-    * ([[Pca.interleaved]]) so no subspace hoards the variance
-    * spectrum. Rotation is orthonormal — L2 distances and therefore
-    * raw-space nearest neighbors are EXACTLY preserved — while the
-    * axis-aligned, variance-balanced coordinates quantize better
-    * (measured: docs/PQ_WHITEN_AB.json, recall@10 + distortion A/B
-    * vs raw PQ on an anisotropic correlated corpus). `whiten` = true
-    * additionally scales axes to unit variance — useful when the
-    * serving metric is itself whitened/Mahalanobis (SemDeDup-style),
-    * but it CHANGES which neighbors are nearest; leave false for
-    * raw-L2 serving.
-    *
-    * 100 TB: the fit is the one-pass [[Pca.fit]] moment aggregate
-    * (driver sees one d×d row); projection is a codegen map — the
-    * preprocessing adds ZERO shuffles to the PQ pipeline.
-    */
-  def fitProjection(vecs: DataFrame, vecCol: String, d: Int,
-      subDim: Int = 16, whiten: Boolean = false): Pca.PcaModel = {
-    require(d % subDim == 0, s"d=$d not divisible by subDim=$subDim")
-    val m0 = Pca.fit(vecs, vecCol, d, k = d)
-    Pca.interleaved(if (whiten) Pca.whitened(m0) else m0, d / subDim)
-  }
-
   /** Long-form codes (id, s, cid) → the wide serving layout — one
     * row per vector, `cw[s]` = the subspace-s codeword id (array_sort
     * over (s, cid) structs, so collect_list order can't matter). Takes

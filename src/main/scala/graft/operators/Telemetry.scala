@@ -13,6 +13,12 @@ import org.apache.spark.sql.types._
   * All pure column expressions (SURVEY.md §2.10 X2/X3): `from_json` +
   * `explode` replace a bespoke parser; `when/otherwise` replaces the
   * charAt(0) router.
+  *
+  * The encoders (`toBase64`/`fromBase64`, `buildDataDoc`, `toGrams`,
+  * `upsertCalibrationTable`) are on no query or benchmark path; they
+  * stay because they reproduce the reference's wire formats and
+  * calibration upsert, which the tests round-trip against the
+  * decoders the queries use.
   */
 object Telemetry {
 

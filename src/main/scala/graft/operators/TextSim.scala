@@ -147,13 +147,4 @@ object TextSim {
           sqrt(col("s2b").cast("double"))) >= threshold)
       .select("da", "db", "sab", "s2a", "s2b")
   }
-
-  /** Self-contained form over a raw postings frame — builds the index
-    * in-plan; production memoizes/persists [[prefixPostings]] and
-    * [[signatures]] and calls [[cosinePairsFromIndex]].
-    */
-  def cosinePairs(w: DataFrame, threshold: Double,
-      verifyPartitions: Int = 0): DataFrame =
-    cosinePairsFromIndex(prefixPostings(w, threshold), signatures(w),
-      threshold, verifyPartitions)
 }

@@ -62,20 +62,3 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => new TopKStrategy)
   }
 }
-
-object GraftExtensions {
-  /** Register the graft functions on an already-running session (the
-    * extensions config only binds at session build time).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val g = new GraftExtensions
-    g.functions.foreach { case (name, usage, builder) =>
-      org.apache.spark.sql.graft.Bridge.registerFunction(
-        spark,
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name,
-          usage, ""),
-        builder)
-    }
-  }
-}

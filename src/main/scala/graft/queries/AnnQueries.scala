@@ -683,26 +683,20 @@ object AnnQueries {
           .orderBy("vec_id", "s")),
 
     // ── Whiten → pqTrain → pqEncode, end to end cross-engine: the
-    // PCA→PQ preprocessing composition. The FULL composition
-    // (graft.operators.Pq.fitProjection — Jacobi rotation + subspace
-    // interleave) is not SQL-expressible (no eigen-solve in an
-    // oracle), so this row pins the composition with a DIAGONAL
-    // whitening model — per-dim (μ, σ) from fixed-point aggregates,
-    // projection = (x−μ)·(1/σ) per axis — driven through the SAME
-    // Pca.project + Pq.trainCodebookInRow/encodeInRow path the rotated
-    // form uses (a diagonal model IS a PcaModel whose components are
-    // scaled unit vectors, round-robin interleaved: projected subspace
-    // of original dim d = d mod nSub, which the SQL mirrors as
-    // `d % 4`). The rotation-specific algebra (orthonormal basis,
-    // metric preservation, variance balance, recall gain) is pinned
-    // by the PcaSpec/PqWhitenSpec goldens and docs/PQ_WHITEN_AB.json,
-    // which SQL cannot see.
+    // PCA→PQ preprocessing composition with a DIAGONAL whitening
+    // model — per-dim (μ, σ) from fixed-point aggregates, projection
+    // = (x−μ)·(1/σ) per axis — driven through Pca.project +
+    // Pq.trainCodebookInRow/encodeInRow. A diagonal model is a
+    // PcaModel whose components are scaled unit vectors, round-robin
+    // interleaved: projected subspace of original dim d = d mod nSub,
+    // which the SQL mirrors as `d % 4`. A rotated (eigenvector) model
+    // would need an eigen-solve, which no SQL oracle can mirror, so
+    // the engine builds only this diagonal form.
     // Latency shape: a 4-job DAG (per-dim stats agg, O(model) seed
     // collect, one-pass codebook agg, in-row encode) whose floors
     // dominate at sf0.1 (0.60 s vs a 0.26 s oracle = 2.3x) and
     // amortize with scale: 1.29 s vs 0.764 s = 1.69x at sf1 (same-box
-    // pair). Trended in bench_trend.py per the q15/ns_tokenize_vocab
-    // adjudication pattern. Every
+    // pair; BENCH_TREND.json). Every
     // per-dim statistic quantizes to fixed-point BIGINT before
     // summing (exact, order-independent long addition — the §2.11
     // discipline), the double expressions that derive (μ, 1/σ) are
@@ -755,8 +749,7 @@ object AnnQueries {
           mean(d) = m
           inv(d) = 1.0 / math.sqrt(q - m * m)
         }
-        // diagonal model through the SAME composed path as the
-        // rotated form: component c = e_c · (1/σ_c), round-robin
+        // diagonal model: component c = e_c · (1/σ_c), round-robin
         // interleaved so the projected subspace of original dim d is
         // d mod nSub — which the oracle mirrors as `lf.d % 4`
         val model = Pca.interleaved(

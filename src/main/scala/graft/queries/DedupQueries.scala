@@ -158,11 +158,9 @@ object DedupQueries {
   /** Df-capped winnowing-fingerprint postings (id, fp) over the
     * documents table — the write-once substring-dedup index artifact
     * (see Dedup.winnowPostings). The pair join (ns_dedup_substring)
-    * serves from it; building it inline per query both re-paid the
-    * corpus-wide winnow explode and leaked the operator's internal
-    * cache across bench reps (ADVICE r9: the query layer never
-    * released winnowPairs' persisted return — memoizing the postings
-    * artifact gives the release a single owner, clearArtifacts).
+    * serves from it; building it inline per query re-paid the
+    * corpus-wide winnow explode, and the memo gives the artifact's
+    * release a single owner, clearArtifacts (ADVICE r9).
     */
   private[queries] def winnowPostings(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "winnow") {
@@ -205,9 +203,9 @@ object DedupQueries {
   /** Shared DuckDB CTE suffix: MinHash(32) signatures → LSH(8×4)
     * bands → distinct candidate pairs, rank-capped at 8 within each
     * (band, bucket) group (mirrors the Spark dataflow in
-    * `minhashCandidates` incl. its round-14 per-bucket rank cap — a
-    * dup cluster of size c otherwise lands intact in every band
-    * bucket and the self-join emits O(bands·c²) pairs; see the
+    * `minhashCandidatesFromBanded` incl. its round-14 per-bucket rank
+    * cap — a dup cluster of size c otherwise lands intact in every
+    * band bucket and the self-join emits O(bands·c²) pairs; see the
     * operator's disclosed recall bound). Appended after `shingleCte`.
     */
   private val minhashCandCte = """,
@@ -258,7 +256,7 @@ object DedupQueries {
 
   /** Memoized banded-bucket frame (id, __graft_bk, band, bucket) —
     * the write-once derived index the star self-join AND the
-    * chainLink backstop both read (three consumers in one plan;
+    * chain backstop both read (three consumers in one plan;
     * without the memo each recomputes the 32-permutation MinHash
     * signature in its own subtree — measured 2× the whole
     * candidates+verify latency in a paired same-JVM A/B, round 17;
@@ -500,8 +498,8 @@ object DedupQueries {
           .select("doc_id")
           .orderBy("doc_id")),
 
-    // ── Components at FIXPOINT via star contraction (the production
-    // algorithm behind dedupTransitive): the O(log n)-round
+    // ── Components at FIXPOINT via star contraction
+    // (Dedup.componentLabelsStar): the O(log n)-round
     // large/small-star loop vs DuckDB's recursive-CTE reachability
     // ground truth (component = MIN reachable id over symmetric
     // edges — exact regardless of diameter, unlike the unrolled

@@ -12,6 +12,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   readStream → frame decode → calibrate → watermark(60 s) →
   *   1 h tumbling window agg → foreachBatch { data sink | DLQ }
   *
+  * The telemetry_ingest benchmark runs `decode`, `dedupRounds`,
+  * `hourlyRounds` and `routedSink`. The other functions are on no
+  * query or benchmark path; each stays because it reproduces one
+  * reference semantic (the T/W/J row and `file:line` in its scaladoc),
+  * checked by StreamingGoldenSpec, DeliverySemanticsSpec or
+  * ExtensionsSpec.
+  *
   * Streaming state is always watermark-bounded (the firmware's
   * slaveReadings[] scaled safely — unbounded keyed state is the 100 TB
   * failure mode, SURVEY.md §7.3).
@@ -63,8 +70,8 @@ object TelemetryPipeline {
       .withWatermark("device_ts", "60 seconds")
       .dropDuplicatesWithinWatermark("device_code", "round_id")
 
-  /** Awake-session windows with the 60 s hard gap timeout
-    * (slave/slave.ino:111-124).
+  /** T6: awake-session windows with the 60 s hard gap timeout
+    * (slave/slave.ino:111-124). Kept for T6.
     */
   def sessions(commands: DataFrame): DataFrame =
     commands
@@ -73,11 +80,12 @@ object TelemetryPipeline {
         col("device_code"))
       .agg(count(lit(1)).as("n_cmds"))
 
-  /** Session windows with a DYNAMIC per-row gap: setup-phase rows
-    * (the slow LoRa join phase, master_lora/master_lora.ino boot
-    * sequence) tolerate a longer silence than steady-state rounds —
-    * the gap is an expression of the row, not a constant. Same
-    * engine-managed session state, watermark-bounded.
+  /** T6 with a DYNAMIC per-row gap: setup-phase rows (the slow LoRa
+    * radio setup, master_lora/master_lora.ino:124-142) tolerate a
+    * longer silence than steady-state rounds (slave/slave.ino:111-124)
+    * — the gap is an expression of the row, not a constant. Same
+    * engine-managed session state, watermark-bounded. Kept for T6's
+    * setup phase.
     */
   def sessionsDynamicGap(commands: DataFrame,
       steadyGap: String = "60 seconds",
@@ -156,7 +164,7 @@ object TelemetryPipeline {
     * The returned [[LateSplit]] owns the cache entry — call
     * `release()` once both sides are written (see [[LateSplit]] for
     * why this is not optional). Streaming callers should prefer
-    * [[lateSplit]], which releases automatically.
+    * [[lateSplit]], which releases automatically. Kept for T2.
     */
   def lateSplitFrames(batch: DataFrame, tsCol: String, cutoffSeconds: Long)
       : LateSplit = {
@@ -182,7 +190,7 @@ object TelemetryPipeline {
   /** T2, foreachBatch form: split the batch, write each side through
     * its sink, and unpersist the shared cutoff frame afterwards — the
     * per-batch cache entry is released even when a sink throws, so a
-    * long-lived query's CacheManager stays flat.
+    * long-lived query's CacheManager stays flat. Kept for T2.
     */
   def lateSplit(batch: DataFrame, tsCol: String, cutoffSeconds: Long,
       writeOnTime: DataFrame => Unit, writeLate: DataFrame => Unit): Unit = {
@@ -207,7 +215,7 @@ object TelemetryPipeline {
     * partition. For a strict at-most-once guarantee the JOB must run
     * with spark.task.maxFailures=1 and speculation off (local mode's
     * default is already 1) — warned below when violated, because a
-    * silent retry is this sink's one forbidden behavior.
+    * silent retry is this sink's one forbidden behavior. Kept for T5.
     */
   def fireAndForget(
       batch: DataFrame,
@@ -243,7 +251,7 @@ object TelemetryPipeline {
     * partition — a replay rewrites the same partition with the same
     * rows instead of appending duplicates (the standard foreachBatch
     * transactional-sink pattern; partition discovery exposes batch_id
-    * as a column on read).
+    * as a column on read). Kept for T4.
     */
   def idempotentBatchWrite(batch: DataFrame, batchId: Long,
       path: String): Unit =
@@ -256,6 +264,7 @@ object TelemetryPipeline {
     * true window); a row beyond the bound — a clock that never
     * resynced — is re-stamped to ingest time and flagged, instead of
     * opening a years-old window that the watermark silently drops.
+    * Kept for T7.
     */
   def withSkewPolicy(
       df: DataFrame,
@@ -271,10 +280,11 @@ object TelemetryPipeline {
 
   /** W3 as a stream: per-device weight-delta alerts — the domain
     * purpose of the whole system (weight change between rounds;
-    * server-side in the reference, SURVEY.md §2.5 W3). `lag()` isn't
+    * server-side in the reference, which ships levels only:
+    * master/master.ino:462-505, SURVEY.md §2.5 W3). `lag()` isn't
     * available in streaming, so the previous value is keyed state:
     * emit when |current − previous| ≥ threshold. State is one double
-    * per device (bounded by fleet size, not time).
+    * per device (bounded by fleet size, not time). Kept for W3.
     */
   case class RoundReading(device_code: String, round_ts: java.sql.Timestamp,
       weight_g: Double)
@@ -307,15 +317,14 @@ object TelemetryPipeline {
       }
   }
 
-  /** J3 declarative form: the two-phase confirm⋈value pairing as a
+  /** J3: the two-phase confirm⋈value pairing
+    * (master/master.ino:231-258; slave/slave.ino:92-118) as a
     * watermarked stream-stream INTERVAL join — a value is accepted if
     * a confirmation for the same device arrived in the preceding
-    * `windowSeconds` (master/master.ino:231-258 round budget). Engine
-    * manages the join state, bounded by watermark + interval on both
-    * sides — the declarative alternative to confirmPairing's explicit
-    * flatMapGroupsWithState (use this when per-event sequencing
-    * inside a round doesn't matter, the custom operator when it does).
-    * Inputs: (device_code, ts, value?) with event-time ts.
+    * `windowSeconds` (the round budget). Engine manages the join
+    * state, bounded by watermark + interval on both sides. Inputs:
+    * (device_code, ts, value?) with event-time ts. Kept for J3 (the
+    * stream-stream join SURVEY.md maps it to).
     *
     * `roundCol`: optional round-identifier column on `confirms` to
     * scope the retry dedup to (device, round). WITHOUT it the dedup
@@ -323,11 +332,9 @@ object TelemetryPipeline {
     * legitimate confirms from consecutive rounds < windowSeconds
     * apart collapse to one and the second round's values silently
     * miss (ADVICE r2) — when rounds can be that close, pass the
-    * round id, or use the stateful confirmPairing which keys on
-    * (device_code, round_id) for exactly this reason. With roundCol
-    * set, one value's window can overlap TWO surviving rounds'
-    * confirms, so the join output is deduped per (device, value_ts,
-    * value) to keep the accept-once contract.
+    * round id. With roundCol set, one value's window can overlap TWO
+    * surviving rounds' confirms, so the join output is deduped per
+    * (device, value_ts, value) to keep the accept-once contract.
     */
   def confirmValueJoin(
       confirms: DataFrame,
@@ -339,8 +346,7 @@ object TelemetryPipeline {
     val wm = s"$windowSeconds seconds"
     // retried confirms are the norm (T4): dedupe per device (and
     // round, when identified) inside the watermark so one value
-    // cannot match twice and emit dups — confirmPairing's
-    // accept-once semantics, declaratively
+    // cannot match twice and emit dups (accept-once)
     val c = confirms.withWatermark("ts", wm)
       .dropDuplicatesWithinWatermark("device_code", roundCol.toSeq: _*)
       .alias("c")
@@ -357,51 +363,5 @@ object TelemetryPipeline {
     // Spark 4 allows chaining stateful operators in append mode)
     roundCol.fold(joined)(_ =>
       joined.dropDuplicatesWithinWatermark("device_code", "value_ts", "value"))
-  }
-
-  /** Per-device protocol state for the two-phase R/X confirm protocol
-    * (master/master.ino:231-258; slave/slave.ino:92-118): a reading is
-    * accepted only when its confirmation arrived in the same round;
-    * state times out on the round budget (flatMapGroupsWithState with
-    * ProcessingTimeTimeout — the general form of T3).
-    */
-  case class ProtoEvent(device_code: String, kind: String, value: Double,
-      seq: Long = 0L)
-  case class ProtoState(confirmed: Boolean)
-  case class Accepted(device_code: String, value: Double)
-
-  def confirmPairing(
-      events: Dataset[ProtoEvent],
-      // production: ProcessingTimeTimeout ("60 seconds" round budget);
-      // NoTimeout keeps tests deterministic (a 0-interval trigger plus
-      // processing-time timeouts busy-loops the micro-batch engine)
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout)
-      : Dataset[Accepted] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.device_code)
-      .flatMapGroupsWithState[ProtoState, Accepted](
-        OutputMode.Append, timeout) {
-        (device, evs, state: GroupState[ProtoState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var confirmed = state.getOption.exists(_.confirmed)
-            // iterator order within a group is shuffle-dependent;
-            // impose the protocol order explicitly (cf. the two-phase
-            // exchange sequencing in master/master.ino:231-258)
-            val out = evs.toSeq.sortBy(_.seq).flatMap { e =>
-              e.kind match {
-                case "confirm" => confirmed = true; Nil
-                case "value" if confirmed => Seq(Accepted(device, e.value))
-                case _ => Nil
-              }
-            }.toList
-            state.update(ProtoState(confirmed))
-            if (timeout == GroupStateTimeout.ProcessingTimeTimeout) {
-              state.setTimeoutDuration("60 seconds")
-            }
-            out.iterator
-          }
-      }
   }
 }

@@ -96,7 +96,7 @@ object PlanGolden {
         // planned earlier in the JVM — numbering is not shape
         .replaceAll("\\*\\(\\d+\\)", "*(S)")
         // an eagerly-materialized cached subtree (EAGER operators like
-        // winnowPairs) embeds AQE stage ids numbered by a session-global
+        // componentLabels) embeds AQE stage ids numbered by a session-global
         // counter — how many stages ran before is not shape
         .replaceAll(
           "(Broadcast|Shuffle|TableCache|Result)QueryStage \\d+",
@@ -114,6 +114,9 @@ object PlanGolden {
         // PushedFilters, so the field carries no extra shape
         .replaceAll("DataFilters: .*?, Format:", "DataFilters: [...], Format:")
         .replaceAll("file:[^\\s,\\]\\)]+", "file:PATH")
+        // Spark cuts a scan's Location at a fixed width, so a longer
+        // checkout path can cut off the `]` after the path
+        .replaceAll("\\[file:PATH\\]?", "[file:PATH]")
         .replaceAll("\\[\\d+ paths\\]", "[N paths]")
         .replaceAll("InMemoryFileIndex\\([^)]*\\)", "InMemoryFileIndex(...)")
         .replaceAll("Statistics\\([^)]*\\)", "Statistics(...)")

@@ -54,14 +54,4 @@ object Bridge {
       spark: org.apache.spark.sql.SparkSession): Seq[Any] =
     ext.buildPlannerStrategies(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-
-  /** Register a SQL function on a LIVE session (sessionState is
-    * private[sql]; extensions otherwise bind only at session build).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(name, info, builder)
 }

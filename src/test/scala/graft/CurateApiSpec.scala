@@ -91,19 +91,20 @@ class CurateApiSpec extends SparkSpec {
     assert(out(4L) == ((4L, 0L, 0L, "")))
   }
 
-  test("redactPii replaces digit runs and emails") {
-    val red = Curate.redactPii(
+  test("redactPiiCounted replaces digit runs and emails") {
+    val (red, nEmail) = Curate.redactPiiCounted(
       Seq((1L, "mail me at a.b@example.com or call +1 (555) 123-4567 id 9876543"))
         .toDF("id", "body"), "body")
-      .select("text_redacted").as[String].head()
+      .select("text_redacted", "n_email").as[(String, Long)].head()
     assert(!red.contains("example.com") && red.contains("<email>"), red)
     assert(red.contains("<phone>"), red)
     assert(!red.contains("9876543"), red)
+    assert(nEmail == 1L, s"n_email = $nEmail")
   }
 
   test("PiiRedact kernel is bit-equal to the chained regexp_replace + " +
       "regexp_count formulation on edge shapes") {
-    import graft.operators.Curate.{emailRegex, phoneRegex, idRunRegex}
+    import graft.plans.PiiRedactSupport.{emailRegex, phoneRegex, idRunRegex}
     val docs = Seq(
       "mail a.b@example.com or a@b.cd then +1 (555) 123-4567 id 9876543",
       "", "no pii here at all",
@@ -272,8 +273,8 @@ class CurateApiSpec extends SparkSpec {
       s"bloom prune must sit below the explode:\n$plan")
   }
 
-  test("in-row exact-set decontamination tier: equals the exact join, " +
-      "no join/exchange besides the caller's sort, auto routes by size") {
+  test("in-row decontamination: equals the exact and bloom tiers, " +
+      "no join or shuffle") {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog", true), // eval
       (2L, "intro text then the quick brown fox appears here", false),

@@ -26,11 +26,18 @@ class CurationPipelineSpec extends SparkSpec {
     assert(gated.select("doc_id").as[Long].collect().sorted.toSeq
       == Seq(1L, 2L, 3L), "gate keeps long clean English docs")
 
-    val kept = Dedup.dedupTransitive(gated, "doc_id", "text", threshold = 0.5)
+    // transitive dedup: verified minhash pairs → star-contraction
+    // components → keep each component's min id
+    val sh = Dedup.shingleSignatures(gated, "doc_id", "text")
+    val pairs = Dedup.verifiedPairs(sh,
+      Dedup.minhashCandidatesFromBanded(Dedup.bandedWithArray(sh)), 0.5)
+    val labels = Dedup.componentLabelsStar(
+      gated.select(col("doc_id").as("id")), pairs)
+    val kept = labels.filter(col("id") === col("component"))
+      .select(col("id").as("doc_id"))
     val survivors = kept.as[Long].collect().sorted.toSeq
     assert(survivors == Seq(1L, 3L), s"near-dup 2 collapses into 1: $survivors")
-    val deduped = gated.join(kept.withColumnRenamed("id", "doc_id"), "doc_id")
-    kept.unpersist()
+    val deduped = gated.join(kept, "doc_id")
 
     // optional paragraph-tier gate between doc-level dedup and
     // chunking (the round-10 CCNet middle tier): doc 1 is built from

@@ -18,16 +18,24 @@ class DedupApiSpec extends SparkSpec {
     (14L, "short doc")
   ).toDF("my_id", "body")
 
-  test("dedupTransitive keeps one representative per near-dup chain") {
-    val kept = Dedup.dedupTransitive(docs, "my_id", "body", threshold = 0.5)
-      .as[Long].collect().sorted
-    // 10-11 and 11-13 chain into one component -> keep 10 only
-    assert(kept.toSeq == Seq(10L, 12L, 14L), kept.toSeq.toString)
-  }
+  /** The query layer's candidate path: banding built once, then the
+    * rank-capped star + chain enumeration over it.
+    */
+  private def candidates(sh: org.apache.spark.sql.DataFrame,
+      rankCap: Int = 8) =
+    Dedup.minhashCandidatesFromBanded(Dedup.bandedWithArray(sh),
+      rankCap = rankCap)
+
+  /** Shingle postings (id, s): the shard side of a shingle-index probe
+    * and the input of a standing-index build.
+    */
+  private def postings(df: org.apache.spark.sql.DataFrame) =
+    Dedup.shingleSignatures(df, "my_id", "body")
+      .select(col("id"), explode(col("hh")).as("s"))
 
   test("verifiedPairs reports exact jaccard for candidates") {
     val sh = Dedup.shingleSignatures(docs, "my_id", "body")
-    val pairs = Dedup.verifiedPairs(sh, Dedup.minhashCandidates(sh), 0.5)
+    val pairs = Dedup.verifiedPairs(sh, candidates(sh), 0.5)
       .select("ida", "idb").as[(Long, Long)].collect().sorted
     assert(pairs.contains((10L, 11L)), pairs.toSeq.toString)
     assert(pairs.forall { case (a, b) => a < b })
@@ -59,25 +67,14 @@ class DedupApiSpec extends SparkSpec {
     labels.unpersist(blocking = true)
     assert(labels.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
 
-    val kept = Dedup.dedupTransitive(docs, "my_id", "body", threshold = 0.5)
-    assert(kept.storageLevel.useMemory || kept.storageLevel.useDisk,
-      s"dedupTransitive result not persisted: ${kept.storageLevel}")
-    kept.unpersist(blocking = true)
-    assert(kept.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    val star = Dedup.componentLabelsStar(ids, pairs)
+    assert(star.storageLevel.useMemory || star.storageLevel.useDisk,
+      s"componentLabelsStar result not persisted: ${star.storageLevel}")
+    star.unpersist(blocking = true)
+    assert(star.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
-  test("invertedIndexCandidates finds shingle-sharing pairs; df cap mutes hot shingles") {
-    val sh = Dedup.shingleSignatures(docs, "my_id", "body")
-    val cand = Dedup.invertedIndexCandidates(sh)
-      .as[(Long, Long)].collect().sorted
-    assert(cand.contains((10L, 11L)) && cand.contains((11L, 13L)),
-      cand.toSeq.toString)
-    assert(cand.forall { case (a, b) => a < b })
-    // a df cap of 1 removes every shared shingle -> no candidates
-    assert(Dedup.invertedIndexCandidates(sh, dfCap = 1).count() == 0)
-  }
-
-  test("winnowPairs: long shared runs pair, unrelated docs don't") {
+  test("winnowPairsFromPostings: long shared runs pair, unrelated docs don't") {
     val shared = "this exact forty-plus character run is copied verbatim into both docs"
     val corpus = Seq(
       (1L, s"alpha prologue $shared and then some trailing words here"),
@@ -85,49 +82,11 @@ class DedupApiSpec extends SparkSpec {
       (3L, "nothing in common with the others at all in any respect"),
       (4L, "likewise dissimilar content that shares no long character runs"))
       .toDF("my_id", "body")
-    val cand = Dedup.winnowPairs(corpus, "my_id", "body")
-    // the eager pair-set contract: returned frame IS the cached plan
-    assert(cand.storageLevel.useMemory || cand.storageLevel.useDisk,
-      s"winnowPairs result not persisted: ${cand.storageLevel}")
-    val pairs = cand.select("a", "b").as[(Long, Long)].collect().toSet
-    cand.unpersist(blocking = true)
-    assert(cand.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    val post = Dedup.winnowPostings(corpus, "my_id", "body")
+    val pairs = Dedup.winnowPairsFromPostings(post)
+      .select("a", "b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)),
       s"exactly the shared-run pair must survive: $pairs")
-
-    // the lazy building blocks compose to the same pair set (the
-    // query layer serves winnowPairsFromPostings from a memoized
-    // postings artifact — the two paths must not drift)
-    val post = Dedup.winnowPostings(corpus, "my_id", "body")
-    val lazyPairs = Dedup.winnowPairsFromPostings(post)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(lazyPairs == pairs, s"lazy path drifted: $lazyPairs vs $pairs")
-  }
-
-  test("probeFromPostings packPairs: identical pairs to the two-column " +
-      "key; out-of-range ids raise instead of aliasing") {
-    val corpus = Seq(
-      (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (2L, "one two three four five six seven eight nine ten eleven"),
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota mu"),
-      (3L, "one two three four five six seven eight nine ten twelve")
-    ).toDF("my_id", "body")
-    val post = Dedup.shingleSignatures(corpus, "my_id", "body")
-      .select(col("id"), explode(col("hh")).as("s"))
-    val idx = Dedup.buildIndex(corpus.filter($"my_id" % 2 === 0),
-      "my_id", "body")
-    val shard = post.filter($"id" % 2 === 1)
-    val plain = Dedup.probeFromPostings(shard, idx, minShared = 2)
-      .as[(Long, Long, Long)].collect().toSet
-    val packed = Dedup.probeFromPostings(shard, idx, minShared = 2,
-      packPairs = true).as[(Long, Long, Long)].collect().toSet
-    assert(packed == plain && plain.nonEmpty, s"$packed vs $plain")
-    // the in-plan guard: a shard id past 2^31 must fail loudly
-    val bigId = shard.withColumn("id", col("id") + (1L << 40))
-    intercept[Exception] {
-      Dedup.probeFromPostings(bigId, idx, minShared = 1, packPairs = true)
-        .collect()
-    }
   }
 
   test("probeFromPostingsCapped: MaxValue cap equals the uncapped probe " +
@@ -141,8 +100,7 @@ class DedupApiSpec extends SparkSpec {
     ).toDF("my_id", "body")
     val post = Dedup.shingleSignatures(corpus, "my_id", "body")
       .select(col("id"), explode(col("hh")).as("s"))
-    val idx = Dedup.buildIndex(corpus.filter($"my_id" % 2 === 0),
-      "my_id", "body")
+    val idx = Dedup.buildIndexFromPostings(post.filter($"id" % 2 === 0))
     val shard = post.filter($"id" % 2 === 1)
     val exact = Dedup.probeFromPostings(shard, idx, minShared = 2)
       .as[(Long, Long, Long)].collect().toSet
@@ -193,38 +151,20 @@ class DedupApiSpec extends SparkSpec {
     val clones = (0 until 12).map(i => (i.toLong, base)).toDF("my_id", "body")
     val sh = Dedup.shingleSignatures(clones, "my_id", "body").persist()
     try {
-      val full = Dedup.minhashCandidates(sh, rankCap = Int.MaxValue)
+      val full = candidates(sh, rankCap = Int.MaxValue)
         .as[(Long, Long)].collect().toSet
       assert(full.size == 66, s"expected the full clique, got ${full.size}")
-      val capped = Dedup.minhashCandidates(sh, chainLink = false)
-        .as[(Long, Long)].collect().toSet
+      val capped = candidates(sh).as[(Long, Long)].collect().toSet
       assert(capped.subsetOf(full))
-      assert(capped.size == 60, s"rank cap 8 on a 12-clique keeps " +
-        s"66 - C(4,2) = 60 pairs, got ${capped.size}")
       // star coverage: the bucket minimum pairs with every member
       (1L to 11L).foreach(b => assert(capped.contains((0L, b)),
         s"star pair (0,$b) must survive the cap"))
-      // the drop is exactly the high-rank x high-rank tail
-      assert((full -- capped).forall { case (a, b) => a >= 8L && b >= 8L })
-      // shipped default adds the chainLink backstop: identical
-      // digests tie every clone, so each chain is the consecutive-id
-      // path — exactly (8,9),(9,10),(10,11) on top of the star
-      val chained = Dedup.minhashCandidates(sh)
-        .as[(Long, Long)].collect().toSet
-      assert(capped.subsetOf(chained) && chained.subsetOf(full))
-      assert(chained -- capped ==
-        Set((8L, 9L), (9L, 10L), (10L, 11L)),
-        s"chain adds the consecutive-id tail links, got " +
-          s"${chained -- capped}")
-      // the banded-index entry point (round 17: banding built once,
-      // persisted by callers) is THE SAME operator: identical pair
-      // set through the prebuilt-banding path
-      val viaBanded = Dedup.minhashCandidatesFromBanded(
-          Dedup.bandedWithArray(sh))
-        .as[(Long, Long)].collect().toSet
-      assert(viaBanded == chained,
-        "minhashCandidatesFromBanded(bandedWithArray(sh)) must equal " +
-          "minhashCandidates(sh)")
+      // the star keeps 66 - C(4,2) = 60 pairs; the chain backstop adds
+      // the consecutive-id tail links (8,9),(9,10),(10,11) — identical
+      // digests tie every clone — so the drop is exactly the rest of
+      // the high-rank x high-rank tail
+      assert(full -- capped == Set((8L, 10L), (8L, 11L), (9L, 11L)),
+        s"dropped ${full -- capped}")
       // and the VERIFIED component structure is unchanged
       val ids = sh.select(col("id"))
       def labels(cand: Set[(Long, Long)]) = Dedup.componentLabels(ids,
@@ -244,14 +184,17 @@ class DedupApiSpec extends SparkSpec {
       "across character grams so any run of at least twenty characters " +
       "shared verbatim between two documents must surface a common " +
       "minimum hash that lands both documents in one postings group"
-    val standing = (0 until 12).map(i => (2L * i, base)).toDF("my_id", "body")
-    val shard = Seq((99L, base)).toDF("my_id", "body")
-    val index = Dedup.buildMinHashIndex(standing, "my_id", "body")
-    val got = Dedup.probeIncrementalMinhash(shard, "my_id", "body", index)
+    val standing = Dedup.shingleSignatures(
+      (0 until 12).map(i => (2L * i, base)).toDF("my_id", "body"),
+      "my_id", "body")
+    val shard = Dedup.shingleSignatures(
+      Seq((99L, base)).toDF("my_id", "body"), "my_id", "body")
+    val index = Dedup.MinHashIndex(Dedup.bandedBuckets(standing), standing)
+    val got = Dedup.probeMinhashFromSignatures(shard, index)
       .select("ida", "idb").as[(Long, Long)].collect().toSet
     assert(got == (0 until 8).map(i => (2L * i, 99L)).toSet,
       s"cap 8 keeps the 8 lowest standing ids: $got")
-    val full = Dedup.probeIncrementalMinhash(shard, "my_id", "body", index,
+    val full = Dedup.probeMinhashFromSignatures(shard, index,
         standingRankCap = Int.MaxValue)
       .select("ida", "idb").as[(Long, Long)].collect().toSet
     assert(full == (0 until 12).map(i => (2L * i, 99L)).toSet, full.toString)
@@ -318,8 +261,8 @@ class DedupApiSpec extends SparkSpec {
     } finally { post.unpersist(); () }
   }
 
-  test("probeIncremental against a LOADED index: no corpus re-signing, " +
-      "pairs equal the batch rebuild's cross pairs") {
+  test("LOADED-index probe: no corpus re-signing, equals the batch " +
+      "cross pairs") {
     // a richer corpus: near-dup pairs that cross the halves, one pair
     // inside a half (must NOT be emitted), and a hot shingle
     val corpus = Seq(
@@ -335,10 +278,10 @@ class DedupApiSpec extends SparkSpec {
 
     // standing index written once, then LOADED — the production shape
     val name = "graft_test_loaded_idx"
-    Dedup.writeIndexBucketed(Dedup.buildIndex(standing, "my_id", "body"),
+    Dedup.writeIndexBucketed(Dedup.buildIndexFromPostings(postings(standing)),
       name, nBuckets = 4)
     val index = Dedup.loadIndexBucketed(spark, name)
-    val probe = Dedup.probeIncremental(shard, "my_id", "body", index)
+    val probe = Dedup.probeFromPostings(postings(shard), index)
 
     // structural no-re-signing proof: every file scanned by the probe
     // plan belongs to the index tables — the standing corpus' source
@@ -401,15 +344,14 @@ class DedupApiSpec extends SparkSpec {
     val standing = corpus.filter($"my_id" % 2 === 0)
     val shard = corpus.filter($"my_id" % 2 === 1)
 
-    Dedup.writeIndexBucketed(Dedup.buildIndex(standing, "my_id", "body"),
-      "graft_test_bidx", nBuckets = 4)
+    val plainIndex = Dedup.buildIndexFromPostings(postings(standing))
+    Dedup.writeIndexBucketed(plainIndex, "graft_test_bidx", nBuckets = 4)
     val bucketed = Dedup.loadIndexBucketed(spark, "graft_test_bidx")
 
     // same answer as the in-memory index the tables were written from
-    val plain = Dedup.probeIncremental(shard, "my_id", "body",
-        Dedup.buildIndex(standing, "my_id", "body"))
+    val plain = Dedup.probeFromPostings(postings(shard), plainIndex)
       .as[(Long, Long, Long)].collect().toSet
-    assert(Dedup.probeIncremental(shard, "my_id", "body", bucketed)
+    assert(Dedup.probeFromPostings(postings(shard), bucketed)
       .as[(Long, Long, Long)].collect().toSet == plain && plain.nonEmpty)
 
     // Plan property (VERDICT r12 what's-wrong #2): with broadcast off
@@ -421,7 +363,7 @@ class DedupApiSpec extends SparkSpec {
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val probe = Dedup.probeIncremental(shard, "my_id", "body", bucketed)
+      val probe = Dedup.probeFromPostings(postings(shard), bucketed)
       probe.collect() // resolve AQE stages
       def subtree(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
         case a: AdaptiveSparkPlanExec => subtree(a.executedPlan)
@@ -490,7 +432,7 @@ class DedupApiSpec extends SparkSpec {
     assert(pairs(loaded) == marked && marked.nonEmpty, s"${pairs(loaded)}")
   }
 
-  test("probeIncremental: stop-shingles stay capped across increments") {
+  test("probeFromPostings: stop-shingles stay capped across increments") {
     // a shingle over the cap in the STANDING corpus has no postings;
     // the complete df table must keep it suppressed even though the
     // new shard alone would be under the cap
@@ -498,19 +440,18 @@ class DedupApiSpec extends SparkSpec {
     val standing = (0L to 5L).map(i => (i * 2, s"$hot filler$i words$i"))
       .toDF("my_id", "body")
     val shard = Seq((1L, s"$hot other content")).toDF("my_id", "body")
-    val index = Dedup.buildIndex(standing, "my_id", "body", dfCap = 4)
+    val index = Dedup.buildIndexFromPostings(postings(standing), dfCap = 4)
     // standing df for the hot shingles = 6 > 4 -> no postings, and the
     // probe must emit nothing (combined df only grew)
-    assert(Dedup.probeIncremental(shard, "my_id", "body", index,
+    assert(Dedup.probeFromPostings(postings(shard), index,
       dfCap = 4).count() == 0)
     // sanity: with a cap that admits them, the pair appears
-    val loose = Dedup.buildIndex(standing, "my_id", "body", dfCap = 100)
-    assert(Dedup.probeIncremental(shard, "my_id", "body", loose,
+    val loose = Dedup.buildIndexFromPostings(postings(standing), dfCap = 100)
+    assert(Dedup.probeFromPostings(postings(shard), loose,
       dfCap = 100).count() > 0)
   }
 
-  test("winnow-tier incremental: probe equals fixed-cap batch rebuild; " +
-      "extend equals rebuild") {
+  test("winnow-tier incremental: probe equals fixed-cap batch rebuild") {
     val shared = "this exact forty-plus character run is copied verbatim into both docs"
     val corpus = Seq(
       (0L, s"alpha prologue $shared and then some trailing words here"),
@@ -539,7 +480,7 @@ class DedupApiSpec extends SparkSpec {
 
   test("componentLabels groups a transitive chain under the min id") {
     val sh = Dedup.shingleSignatures(docs, "my_id", "body")
-    val pairs = Dedup.verifiedPairs(sh, Dedup.minhashCandidates(sh), 0.5)
+    val pairs = Dedup.verifiedPairs(sh, candidates(sh), 0.5)
     val labels = Dedup.componentLabels(
       docs.select(col("my_id").as("id")), pairs)
       .as[(Long, Long)].collect().toMap
@@ -567,15 +508,18 @@ class DedupApiSpec extends SparkSpec {
     assert(out(6L) == ((6L, 1L, 1L)), s"$out")  // singleton survives
   }
 
-  test("minhash-tier incremental: probe against a LOADED sketch index " +
-      "equals the batch rebuild's cross pairs; extend equals rebuild") {
-    val standing = docs.filter($"my_id" % 2 === 0)
-    val shard = docs.filter($"my_id" % 2 === 1)
+  test("minhash-tier probe on a LOADED index equals the batch rebuild's " +
+      "cross pairs") {
+    val sh = Dedup.shingleSignatures(docs, "my_id", "body")
+    val standing = sh.filter($"id" % 2 === 0)
     val name = "graft_test_loaded_mhidx"
     Dedup.writeMinHashIndexBucketed(
-      Dedup.buildMinHashIndex(standing, "my_id", "body"), name, nBuckets = 4)
+      Dedup.MinHashIndex(Dedup.bandedBuckets(standing), standing), name,
+      nBuckets = 4)
     val index = Dedup.loadMinHashIndexBucketed(spark, name)
-    val probe = Dedup.probeIncrementalMinhash(shard, "my_id", "body", index)
+    val probe = Dedup.probeMinhashFromSignatures(
+      Dedup.shingleSignatures(docs.filter($"my_id" % 2 === 1), "my_id",
+        "body"), index)
 
     // structural no-re-signing proof (same as the shingle tier): the
     // probe plan scans only the index tables — the standing corpus'
@@ -597,8 +541,7 @@ class DedupApiSpec extends SparkSpec {
     // batch: candidates + verify over the FULL corpus, restricted to
     // cross-half pairs normalized to (even, odd) — sketches are
     // corpus-independent, so increment must equal rebuild exactly
-    val sh = Dedup.shingleSignatures(docs, "my_id", "body")
-    val batch = Dedup.verifiedPairs(sh, Dedup.minhashCandidates(sh), 0.8)
+    val batch = Dedup.verifiedPairs(sh, candidates(sh), 0.8)
       .filter((col("ida") % 2) =!= (col("idb") % 2))
       .select(
         when(col("ida") % 2 === 0, col("ida")).otherwise(col("idb"))
@@ -608,16 +551,5 @@ class DedupApiSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(got == batch, s"incremental $got vs batch $batch")
     assert(got.contains((10L, 11L)), s"the near-dup cross pair: $got")
-
-    // extend = appending the shard's per-doc sketches to the tables =
-    // exactly a batch rebuild
-    Dedup.appendMinHashIndexBucketed(
-      Dedup.buildMinHashIndex(shard, "my_id", "body"), name, nBuckets = 4)
-    val ext = Dedup.loadMinHashIndexBucketed(spark, name)
-    val rebuilt = Dedup.buildMinHashIndex(docs, "my_id", "body")
-    assert(ext.buckets.except(rebuilt.buckets).isEmpty &&
-      rebuilt.buckets.except(ext.buckets).isEmpty)
-    assert(ext.signatures.except(rebuilt.signatures).isEmpty &&
-      rebuilt.signatures.except(ext.signatures).isEmpty)
   }
 }

@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtensionsSpec extends AnyFunSuite {
 
   test("graft_* functions resolve and match the DataFrame-API results") {
+    // Engine.session binds GraftExtensions at build time
     val s = SparkSpecBase.spark
-    graft.plans.GraftExtensions.install(s)
     import s.implicits._
     val dot = s.sql(
       "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))").as[Double].head()

@@ -476,70 +476,6 @@ class MultimodalSpec extends SparkSpec {
     assert(got.decode_ok && got.resized_luma_fp == truth.true_luma_fp)
   }
 
-  test("decoder seam: a registered FrameDecoder upgrades avc1 rows from " +
-      "demux-only to decoded; unregistering restores the sentinel") {
-    import spark.implicits._
-    import graft.functions.{FrameDecoder, MediaDecoders}
-    val avcRow = MakeMediaFixture.mp4Rows
-      .find(r => !Set("jpeg", "mjpa", "mjpg", "MJPG")
-        .contains(Multimodal.parseMp4(r.payload).map(_.handler).getOrElse("")))
-      .getOrElse(fail("no avc1-style fixture row"))
-    val ds = Seq(MediaRecord(avcRow.media_id, avcRow.kind, avcRow.payload)).toDS()
-    val before = Multimodal.decodeVideoFeatures(ds).head()
-    assert(before.decode_ok && before.n_frames_decoded == 0)
-    val fake = new FrameDecoder {
-      val codecs = Set(Multimodal.parseMp4(avcRow.payload).get.handler)
-      def decodeFrame(codec: String, au: Array[Byte]) =
-        Some(new java.awt.image.BufferedImage(before.width, before.height,
-          java.awt.image.BufferedImage.TYPE_INT_RGB))
-    }
-    MediaDecoders.registerVideo(fake)
-    try {
-      val during = Multimodal.decodeVideoFeatures(ds).head()
-      assert(during.n_frames_decoded == during.n_frames_found &&
-        during.n_frames_found > 0)
-    } finally MediaDecoders.unregisterVideo(fake)
-    val after = Multimodal.decodeVideoFeatures(ds).head()
-    assert(after.n_frames_decoded == 0)
-  }
-
-  test("decoder seam: a registered AudioPacketDecoder upgrades mp4a rows " +
-      "to real energy features; unregistering restores demux-only") {
-    import spark.implicits._
-    import graft.functions.{AudioPacketDecoder, MediaDecoders}
-    val aac = MakeMediaFixture.audioMp4AacRow(7L, 0)
-    val ds = Seq(MediaRecord(aac.media_id, aac.kind, aac.payload)).toDS()
-    val before = Multimodal.decodeMp4AudioFeatures(ds).head()
-    assert(!before.decode_ok && before.sq_sum == -1L && before.sample_rate > 0)
-    // fake decoder: every packet becomes 4 constant samples of value 3
-    val fake = new AudioPacketDecoder {
-      val codecs = Set("mp4a")
-      def decodePacket(codec: String, p: Array[Byte], ch: Int, rate: Int) =
-        Some(Array[Short](3, 3, 3, 3))
-    }
-    MediaDecoders.registerAudio(fake)
-    try {
-      val during = Multimodal.decodeMp4AudioFeatures(ds).head()
-      assert(during.decode_ok)
-      val nVals = 4L * before.n_frames // n_frames was the packet count
-      assert(during.sq_sum == 9L * nVals && during.peak == 3)
-      assert(during.n_frames == nVals / before.channels)
-    } finally MediaDecoders.unregisterAudio(fake)
-    val after = Multimodal.decodeMp4AudioFeatures(ds).head()
-    assert(!after.decode_ok && after.sq_sum == -1L)
-  }
-
-  test("decoder seam: classpath (ServiceLoader) providers are discovered " +
-      "— env-gated, skips when no provider jar is present") {
-    import graft.functions.MediaDecoders
-    assume(MediaDecoders.hasClasspathVideoProvider ||
-      MediaDecoders.hasClasspathAudioProvider,
-      "no ServiceLoader decoder provider on this classpath (sandbox)")
-    assert(Seq("avc1", "hvc1", "mp4a").exists(c =>
-      MediaDecoders.videoFor(c).isDefined ||
-        MediaDecoders.audioFor(c).isDefined))
-  }
-
   test("committed media_resize fixture parquet matches in-memory " +
       "generation (no drift)") {
     import spark.implicits._

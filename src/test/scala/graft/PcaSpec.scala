@@ -3,56 +3,25 @@ package graft
 import graft.operators.Pca
 import org.apache.spark.sql.functions._
 
-/** Distributed PCA: one-pass moments, driver-side Jacobi eigen,
-  * codegen projection. Algebraic goldens pin the double-precision
-  * path the fixed-point oracle row (ns_embed_gram) cannot see.
+/** PCA-style preprocessing: one-pass fixed-point moments and the
+  * codegen projection, pinned against driver-side math.
   */
 class PcaSpec extends SparkSpec {
   import spark.implicits._
 
-  test("jacobi eigen: reconstructs a known symmetric matrix, values descending") {
-    val a = Array(
-      Array(4.0, 1.0, 0.5),
-      Array(1.0, 3.0, 0.25),
-      Array(0.5, 0.25, 2.0))
-    val (vals, vecs) = Pca.jacobiEigen(a)
-    assert(vals.sliding(2).forall(p => p(0) >= p(1)), vals.mkString(","))
-    // trace and Frobenius norm are rotation invariants
-    assert(math.abs(vals.sum - 9.0) < 1e-9)
-    // A·v = λ·v for every pair
-    for (c <- vals.indices) {
-      val v = vecs(c)
-      val av = a.map(row => row.zip(v).map { case (x, y) => x * y }.sum)
-      av.zip(v).foreach { case (got, x) =>
-        assert(math.abs(got - vals(c) * x) < 1e-9,
-          s"eigenpair $c: A·v=${av.mkString(",")} λv=${vals(c)}·${v.mkString(",")}")
-      }
-      assert(math.abs(v.map(x => x * x).sum - 1.0) < 1e-9, "unit vector")
-    }
-    // orthogonality
-    assert(math.abs(vecs(0).zip(vecs(1)).map { case (x, y) => x * y }.sum) < 1e-9)
-  }
-
-  test("fit recovers a planted dominant direction; projection matches driver math") {
-    // synthetic: points spread along u = (1,2,0,...)/√5 with small
-    // noise in a second direction — the first component must align
-    // with u and capture most variance
+  test("projection matches driver math and plans as the native expression") {
+    // a diagonal whitening model, round-robin interleaved — the model
+    // shape ns_pq_whiten_encode builds
     val d = 8
     val rnd = new scala.util.Random(18)
-    val u = Array(1.0, 2.0, 0, 0, 0, 0, 0, 0).map(_ / math.sqrt(5.0))
-    val w = Array(0.0, 0, 1, 0, 0, 0, 0, 0)
-    val rows = (1 to 400).map { _ =>
-      val a = rnd.nextGaussian() * 10
-      val b = rnd.nextGaussian() * 0.5
-      Array.tabulate(d)(j => (a * u(j) + b * w(j) + 3.0).toFloat).toSeq
-    }
+    val rows = (1 to 400).map(_ =>
+      Seq.tabulate(d)(j => (rnd.nextGaussian() * (j + 1) + 3.0).toFloat))
     val df = rows.toDF("embedding")
-    val model = Pca.fit(df, "embedding", d, k = 2)
-    assert(model.variance(0) > 50 && model.variance(0) > 20 * model.variance(1),
-      model.variance.mkString(","))
-    val dot = math.abs(model.components(0).zip(u)
-      .map { case (x, y) => x * y }.sum)
-    assert(dot > 0.999, s"first component must align with planted u: $dot")
+    val mean = Array.tabulate(d)(j => 3.0 + j * 0.1)
+    val model = Pca.interleaved(Pca.PcaModel(mean,
+      Array.tabulate(d)(c =>
+        Array.tabulate(d)(i => if (i == c) 1.0 / (c + 1) else 0.0)),
+      Array.fill(d)(1.0)), 2)
     // codegen projection == driver-side math, row for row
     val projected = Pca.project(df, "embedding", model, "pc")
       .select("embedding", "pc")
@@ -60,9 +29,15 @@ class PcaSpec extends SparkSpec {
     projected.foreach { case (x, pc) =>
       val flat = model.components.flatten
       val expect = Pca.projectOne(x.map(_.toDouble).toArray,
-        model.mean, flat, 2, d)
+        model.mean, flat, d, d)
       pc.zip(expect).foreach { case (got, e) =>
         assert(math.abs(got - e) < 1e-9, s"$got vs $e")
+      }
+      // the interleave puts original dim c at (c mod 2)·4 + (c div 2)
+      for (c <- 0 until d) {
+        val want = (x(c) - mean(c)) / (c + 1)
+        assert(math.abs(pc((c % 2) * (d / 2) + c / 2) - want) < 1e-9,
+          s"dim $c: ${pc.mkString(",")}")
       }
     }
     // the projection is the native expression (no UDF). On a local

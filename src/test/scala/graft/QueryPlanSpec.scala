@@ -73,13 +73,11 @@ class QueryPlanSpec extends SparkSpec {
   }
 
   test("ns sketches shuffle only on bucket/shingle keys, never n² pairs") {
-    // minhash signature computation itself must be shuffle-free:
-    // a single narrow projection over documents
-    val sigOnly = Catalog.table(spark, sfDir, "documents")
-      .select(graft.functions.TextFunctions.minhashSignature(
-        graft.functions.TextFunctions.shingles(
-          graft.functions.TextFunctions.tokens(
-            org.apache.spark.sql.functions.col("text"))), 32))
+    // minhash signing and banding (the dedup tier's signature path)
+    // must be shuffle-free: narrow projections over documents
+    val sigOnly = graft.operators.Dedup.bandedWithArray(
+      graft.operators.Dedup.shingleSignatures(
+        Catalog.table(spark, sfDir, "documents"), "doc_id", "text"))
     def countExchanges(p: SparkPlan): Int = {
       val self = p match {
         case _: Exchange => 1

@@ -134,6 +134,53 @@ class RegistrySpec extends SparkSpec {
       s"memoize through PipelineQueries.memo instead: ${maps.mkString(", ")}")
   }
 
+  test("one operator surface: every public operator def is called from " +
+      "src/main or hwbench/src") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String) = {
+      val root = java.nio.file.Paths.get(dir)
+      assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          p.toString.endsWith(".scala"))
+        .map(p => p.toString -> RegistrySpec.stripComments(
+          java.nio.file.Files.readString(p))).toSeq
+    }
+    val code = sources("src/main") ++ sources("hwbench/src")
+    val scanned = Seq("operators", "functions", "streaming", "plans")
+      .map(d => s"src/main/scala/graft/$d/")
+    val defRe = ("(?m)^[ \\t]*((?:(?:final|implicit|override|private" +
+      "(?:\\[\\w+\\])?|protected(?:\\[\\w+\\])?)\\s+)*)def\\s+(\\w+)").r
+    val defs = for {
+      (path, src) <- code if scanned.exists(path.startsWith)
+      m <- defRe.findAllMatchIn(src)
+      mods = m.group(1)
+      if !mods.contains("private") && !mods.contains("protected") &&
+        !mods.contains("override")
+    } yield {
+      val obj = java.nio.file.Paths.get(path).getFileName.toString
+        .stripSuffix(".scala")
+      s"$obj.${m.group(2)}"
+    }
+    assert(defs.nonEmpty, "no operator defs found")
+    // a def's own definitions each name it once; any further mention
+    // outside comments is a caller
+    val defCount = defs.groupBy(_.split('.').last).map { case (n, ds) =>
+      n -> ds.size }
+    def mentions(name: String): Int = code.map { case (_, src) =>
+      s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
+        .findAllIn(src).size }.sum
+    val uncalled = defs.distinct.filter(d =>
+      mentions(d.split('.').last) <= defCount(d.split('.').last))
+    val unexpected = uncalled.filterNot(RegistrySpec.keptUncalled.contains)
+    assert(unexpected.isEmpty,
+      "only tests reach these; delete them or add them to " +
+        s"RegistrySpec.keptUncalled with a reason: ${unexpected.mkString(", ")}")
+    val stale = RegistrySpec.keptUncalled.keySet -- defs
+    assert(stale.isEmpty, s"keptUncalled names no public def: " +
+      stale.mkString(", "))
+  }
+
   test("failures are loud: no catch-all Throwable swallow in src/main") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main")
@@ -145,5 +192,67 @@ class RegistrySpec extends SparkSpec {
         .findFirstIn(java.nio.file.Files.readString(p)).isDefined)
     assert(swallows.isEmpty,
       s"catch the exceptions you expect instead: ${swallows.mkString(", ")}")
+  }
+}
+
+object RegistrySpec {
+
+  /** Public defs in operators/, functions/, streaming/ and plans/ that
+    * no main or hwbench code calls, each with the reason it stays.
+    */
+  val keptUncalled: Map[String, String] = Map(
+    "TelemetryPipeline.sessionsDynamicGap" -> "T6 setup-phase gap",
+    "TelemetryPipeline.lateSplit" -> "T2 late-data DLQ split",
+    "TelemetryPipeline.fireAndForget" -> "T5 at-most-once sink",
+    "TelemetryPipeline.idempotentBatchWrite" -> "T4 idempotent sink",
+    "TelemetryPipeline.withSkewPolicy" -> "T7 clock-skew bound",
+    "TelemetryPipeline.weightDeltaAlerts" -> "W3 weight-delta alerts",
+    "TelemetryPipeline.confirmValueJoin" -> "J3 confirm⋈value join",
+    "Telemetry.toBase64" -> "reference wire format (gateway base64)",
+    "Telemetry.fromBase64" -> "reference wire format (gateway base64)",
+    "Telemetry.buildDataDoc" -> "reference wire format (data document)",
+    "Telemetry.toGrams" -> "reference wire format (weight grams)",
+    "Telemetry.upsertCalibrationTable" -> "reference calibration upsert",
+    "Curate.decontaminate" ->
+      "string-shingle reference the hashed tier is tested against",
+    "Curate.decontaminateHashedExact" ->
+      "exact-join reference the in-row and bloom tiers are tested against",
+    "AsOf.autoPlan" -> "exact probe autoPlanSampled is tested against",
+    "TextFunctions.ngrams" ->
+      "composition the NgramCounts kernel is tested against")
+
+  /** Scala source with every comment blanked (block comments nest);
+    * string and char literals are kept, and a `//` inside one is not
+    * a comment.
+    */
+  def stripComments(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    var depth = 0
+    def at(s: String) = src.startsWith(s, i)
+    while (i < src.length) {
+      if (depth > 0) {
+        if (at("/*")) { depth += 1; i += 2 }
+        else if (at("*/")) { depth -= 1; i += 2 }
+        else { if (src(i) == '\n') out += '\n'; i += 1 }
+      } else if (at("/*")) { depth = 1; i += 2 }
+      else if (at("//")) { while (i < src.length && src(i) != '\n') i += 1 }
+      else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        val stop = if (end < 0) src.length else end + 3
+        out ++= src.substring(i, stop); i = stop
+      } else if (src(i) == '"') {
+        val start = i
+        i += 1
+        while (i < src.length && src(i) != '"' && src(i) != '\n') {
+          if (src(i) == '\\') i += 1
+          i += 1
+        }
+        i = math.min(i + 1, src.length)
+        out ++= src.substring(start, i)
+      } else if (at("'\"'")) { out ++= "'\"'"; i += 3 }
+      else { out += src(i); i += 1 }
+    }
+    out.toString
   }
 }

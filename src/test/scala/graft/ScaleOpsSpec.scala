@@ -1,33 +1,16 @@
 package graft
 
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{Skew, Telemetry}
+import graft.operators.Telemetry
 import graft.streaming.TelemetryPipeline
 import org.apache.spark.sql.functions._
 
-/** Scale-posture operators: salted joins equal their plain
-  * counterparts; tag-partitioned sink layout (S9/T9 routing) writes
-  * one directory per frame tag; Engine catalog surface resolves SQL.
+/** Scale posture: tag-partitioned sink layout (S9/T9 routing) writes
+  * one directory per frame tag; Engine catalog surface resolves SQL;
+  * the adaptive and pruning plans fire at test scale.
   */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted join is row-identical to the plain join under skew") {
-    // 90% of rows hit one hot key — the firmware's single-master
-    // gather scaled up
-    val big = (1 to 1000)
-      .map(i => (if (i % 10 == 0) s"k$i" else "hot", i.toLong))
-      .toDF("key", "v")
-    val dim = Seq(("hot", "H"), ("k10", "A"), ("k20", "B"))
-      .toDF("key", "tag")
-    val plain = big.join(dim, Seq("key")).select("key", "v", "tag")
-      .as[(String, Long, String)].collect().sorted
-    val salted = Skew.saltedJoin(big, dim, "key", 8)
-      .select("key", "v", "tag")
-      .as[(String, Long, String)].collect().sorted
-    assert(salted.toSeq == plain.toSeq)
-    assert(plain.count(_._1 == "hot") == 900)
-  }
 
   test("tag-partitioned sink writes one directory per telemetry kind") {
     val out = java.nio.file.Files.createTempDirectory("graft_tag_sink").toString
@@ -84,10 +67,9 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("AQE splits a skewed join partition at runtime (skew=true in plan)") {
-    // the runtime half of the skew story (Skew.saltedJoin is the
-    // static half): one hot key dominating a sort-merge join gets its
-    // partition split by OptimizeSkewedJoin — thresholds lowered to
-    // trigger at test scale
+    // one hot key dominating a sort-merge join gets its partition
+    // split by OptimizeSkewedJoin — thresholds lowered to trigger at
+    // test scale
     val confs = Seq(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -174,93 +156,6 @@ class ScaleOpsSpec extends SparkSpec {
     }
   }
 
-  test("compaction rewrites a small-file directory to the target count, rows intact") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val df = Catalog.table(spark, sfDir, "orders").limit(400)
-    df.repartition(20).write.mode("overwrite").parquet(out) // 20 small files
-    val before = new java.io.File(out).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before == 20, s"expected 20 small files, got $before")
-    val expected = spark.read.parquet(out).count()
-    graft.operators.Layout.compact(spark, out, targetFileBytes = 10L * 1024 * 1024)
-    val after = new java.io.File(out).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(after < before, s"compaction must reduce file count: $after")
-    assert(spark.read.parquet(out).count() == expected)
-  }
-
-  test("compaction preserves a hive-partitioned layout and its row set") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_part").toString
-    graft.operators.Layout.writeDatePartitioned(
-      Catalog.table(spark, sfDir, "events").limit(2000), "ts", out)
-    // fragment each partition dir into several small files
-    spark.read.parquet(out)
-      .repartition(5, col("part_date"), col("event_id"))
-      .write.mode("overwrite").partitionBy("part_date").parquet(out + "_frag")
-    val frag = out + "_frag"
-    val expected = spark.read.parquet(frag).count()
-    val beforeDirs = new java.io.File(frag).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(beforeDirs.nonEmpty && beforeDirs.forall(_.startsWith("part_date=")))
-    graft.operators.Layout.compact(spark, frag)
-    val afterDirs = new java.io.File(frag).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    // the k=v directory structure survives compaction (ADVICE r2:
-    // partition columns must not collapse into data columns)
-    assert(afterDirs == beforeDirs,
-      s"partition dirs changed: $beforeDirs -> $afterDirs")
-    assert(spark.read.parquet(frag).count() == expected)
-    // partition column still prunes (layout, not just naming)
-    val oneDay = afterDirs.head.stripPrefix("part_date=")
-    assert(spark.read.parquet(frag)
-      .filter(col("part_date") === oneDay).count() > 0)
-  }
-
-  test("compaction round-trips partition values that type inference would mangle") {
-    // ADVICE r3: id=007 inferred as int 7 and v=a%3Ab unescaped to
-    // a:b used to miss the per-partition inner join and silently drop
-    // (then delete) those partitions' rows — compact must preserve
-    // BOTH the rows and the exact directory spellings
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_compact_rt").toString
-    Seq(("007", "a:b", 1L), ("007", "plain", 2L), ("08", "a:b", 3L),
-        ("1", "x y", 4L))
-      .toDF("id", "v", "payload")
-      .repartition(3)
-      .write.mode("overwrite").partitionBy("id", "v").parquet(out)
-    val dirsBefore = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(dirsBefore == Set("id=007", "id=08", "id=1"), s"$dirsBefore")
-    graft.operators.Layout.compact(spark, out)
-    val dirsAfter = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(dirsAfter == dirsBefore,
-      s"zero-padded partition dirs changed: $dirsBefore -> $dirsAfter")
-    val rows = spark.read.parquet(out)
-      .select(col("id").cast("string"), col("v"), col("payload"))
-      .as[(String, String, Long)].collect().toSet
-    // inference still reads id back as int (7), but every payload row
-    // survived under its original escaped directory
-    assert(rows.map(_._3) == Set(1L, 2L, 3L, 4L), s"rows lost: $rows")
-    assert(rows.exists(r => r._2 == "a:b"), "escaped value lost")
-  }
-
-  test("expirePartitions drops only partitions older than the cutoff") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ttl").toString
-    graft.operators.Layout.writeDatePartitioned(
-      Catalog.table(spark, sfDir, "events"), "ts", out)
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName.stripPrefix("part_date=")).sorted
-    assert(dirs.length > 3, s"need several days, got ${dirs.length}")
-    val cutoff = dirs(2) // keep the last n-2 days
-    val dropped = graft.operators.Layout.expirePartitions(
-      spark, out, "part_date", cutoff)
-    assert(dropped == 2, s"expected 2 partitions dropped, got $dropped")
-    val left = spark.read.parquet(out)
-    assert(left.agg(min(col("part_date").cast("string"))).head.getString(0)
-      == cutoff, "oldest surviving partition must be the cutoff day")
-  }
-
   test("schema evolution: mergeSchema reads mixed-generation layouts") {
     // 100 TB tables accrete columns over years; old files must stay
     // readable next to new ones (new column null for old rows)
@@ -324,67 +219,6 @@ class ScaleOpsSpec extends SparkSpec {
       s"unsorted layout cannot skip groups: read $unsorted of $total")
     assert(sorted < total / 4,
       s"sorted layout should skip most row groups: read $sorted of $total")
-  }
-
-  test("mortonKey interleaves bits; z-ordered layout prunes BOTH dimensions") {
-    // unit: bit interleave (a bits at even positions, b at odd)
-    val z = Seq((3L, 1L), (0L, 0L), (1L, 0L), (0L, 1L)).toDF("a", "b")
-      .select(graft.operators.Layout.mortonKey($"a", $"b").as("z"))
-      .as[Long].collect()
-    assert(z.toSeq == Seq(7L, 0L, 1L, 2L), z.mkString(","))
-
-    // layout: a range filter on EITHER column must skip most row
-    // groups of a z-ordered table; the single-column sort only prunes
-    // its own column
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    val rows = spark.range(200000).select(
-      ($"id" % 500).as("x"), (($"id" * 7919) % 500).as("y"))
-    val total = rows.count()
-    graft.operators.Layout.writeZOrdered(rows, "x", "y",
-      s"$base/z", nFiles = 4, rowGroupBytes = 64 * 1024)
-    rows.repartition(4).sortWithinPartitions("x")
-      .write.option("parquet.block.size", (64 * 1024).toString)
-      .mode("overwrite").parquet(s"$base/xsorted")
-    def scanned(path: String, filterCol: String): Long = {
-      val df = spark.read.parquet(path)
-        .filter(col(filterCol) >= 10 && col(filterCol) <= 20)
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves()
-        .map(_.metrics("numOutputRows").value).sum
-    }
-    assert(scanned(s"$base/z", "x") < total / 3, "z-order must prune x")
-    assert(scanned(s"$base/z", "y") < total / 3, "z-order must prune y")
-    assert(scanned(s"$base/xsorted", "y") > total * 2 / 3,
-      "x-sorted layout cannot prune y — that asymmetry is the point")
-  }
-
-  test("dynamic partition overwrite backfills one day without touching the rest") {
-    val out = java.nio.file.Files.createTempDirectory("graft_dynover").toString
-    val mk = (day: Int, n: Int) => (1 to n)
-      .map(i => (f"2024-01-$day%02d", day * 1000L + i))
-      .toDF("d", "v")
-    graft.operators.Layout.overwritePartitions(
-      mk(1, 10).unionAll(mk(2, 10)).unionAll(mk(3, 10)), "d", out)
-    // backfill day 2 only, with a different row count
-    graft.operators.Layout.overwritePartitions(mk(2, 4), "d", out)
-    val counts = spark.read.parquet(out).groupBy("d").count()
-      .as[(String, Long)].collect().toMap
-    assert(counts == Map("2024-01-01" -> 10L, "2024-01-02" -> 4L,
-      "2024-01-03" -> 10L), counts.toString)
-  }
-
-  test("writeDatePartitioned lays facts out one directory per day") {
-    val out = java.nio.file.Files.createTempDirectory("graft_datepart").toString
-    graft.operators.Layout.writeDatePartitioned(
-      Catalog.table(spark, sfDir, "events"), "ts", out)
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName)
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith("part_date=")), dirs.mkString(","))
-    // date-filtered read prunes to one partition dir's rows
-    val oneDay = dirs.head.stripPrefix("part_date=")
-    val pruned = spark.read.parquet(out)
-      .filter(col("part_date") === oneDay)
-    assert(pruned.count() > 0)
   }
 
   test("date-partitioned facts: dim filter triggers dynamic partition pruning") {

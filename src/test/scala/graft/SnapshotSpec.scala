@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Snapshot-isolated commit protocol (VERDICT r17 next #3): readers
   * resolve one manifest and see exactly that snapshot — old or new,
-  * never a mix — under concurrent compaction, partition overwrite,
-  * TTL, and GC.
+  * never a mix — under concurrent appends, compaction and GC.
   */
 class SnapshotSpec extends SparkSpec {
   import spark.implicits._
@@ -48,32 +47,6 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.read(spark, root).count() == 1000)
   }
 
-  test("partition overwrite and TTL are metadata commits; old readers unaffected") {
-    val root = tmp("parts")
-    val df = Seq(("2026-01-01", 1L), ("2026-01-02", 2L), ("2026-01-03", 3L))
-      .toDF("day", "v")
-    Snapshot.writeReplace(spark, df, root, partCols = Seq("day"))
-    val old = Snapshot.read(spark, root)
-    // overwrite day=2026-01-02 only
-    Snapshot.overwritePartitions(spark,
-      Seq(("2026-01-02", 20L)).toDF("day", "v"), root, "day")
-    // partition columns come back appended after data columns —
-    // select into a fixed order before typing
-    val now = Snapshot.read(spark, root).select("day", "v")
-      .as[(String, Long)].collect().toMap
-    assert(now == Map("2026-01-01" -> 1L, "2026-01-02" -> 20L,
-      "2026-01-03" -> 3L), now.toString)
-    val oldMap = old.select("day", "v").as[(String, Long)].collect().toMap
-    assert(oldMap("2026-01-02") == 2L,
-      "pre-overwrite reader still sees the old partition")
-    // TTL below 2026-01-02: drops exactly one partition, data files
-    // survive until gc (the old reader's contract)
-    val dropped = Snapshot.expirePartitions(spark, root, "day", "2026-01-02")
-    assert(dropped == 1)
-    assert(Snapshot.read(spark, root).count() == 2)
-    assert(old.count() == 3, "expire is metadata-only until gc")
-  }
-
   test("concurrent appends serialize via the version claim; nothing lost") {
     val root = tmp("race")
     Snapshot.writeReplace(spark, Seq(0L).toDF("x"), root)
@@ -87,25 +60,6 @@ class SnapshotSpec extends SparkSpec {
     assert(vs.toSet.size == 4, s"distinct versions claimed: $vs")
     assert(Snapshot.read(spark, root).as[Long].collect().toSet ==
       Set(0L, 1L, 2L, 3L, 4L), "every racer's rows present after retries")
-  }
-
-  test("racing partition overwrites on DIFFERENT partitions both land") {
-    val root = tmp("powrace")
-    Snapshot.writeReplace(spark,
-      Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("part", "v"),
-      root, partCols = Seq("part"))
-    import scala.concurrent._
-    import scala.concurrent.duration._
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futs = Seq("a" -> 10L, "c" -> 30L).map { case (p, v) => Future {
-      Snapshot.overwritePartitions(spark,
-        Seq((p, v)).toDF("part", "v"), root, "part")
-    }}
-    futs.foreach(Await.result(_, 2.minutes))
-    val now = Snapshot.read(spark, root).select("part", "v")
-      .as[(String, Long)].collect().toMap
-    assert(now == Map("a" -> 10L, "b" -> 2L, "c" -> 30L),
-      s"both racers' partitions must land, untouched partition kept: $now")
   }
 
   test("golden: reader concurrent with compaction sees old or new snapshot, never a mix") {
@@ -231,48 +185,6 @@ class SnapshotSpec extends SparkSpec {
       "invalidate must re-route the converted table to its snapshots")
   }
 
-  test("compact racing expirePartitions: the expire is honored, not undone") {
-    val root = tmp("cexp")
-    Snapshot.writeReplace(spark,
-      Seq(("2026-01-01", 1L), ("2026-01-02", 2L), ("2026-01-03", 3L))
-        .toDF("day", "v"), root, partCols = Seq("day"))
-    var fired = false
-    Snapshot.compact(spark, root, targetFileBytes = 1L << 30, () => {
-      if (!fired) { // the racer lands inside the commit window, once
-        fired = true
-        Snapshot.expirePartitions(spark, root, "day", "2026-01-02")
-      }
-    })
-    assert(fired)
-    // pre-fix: the file-set merge re-committed rewritten copies of
-    // the expired partition — the expire silently undone
-    val now = Snapshot.read(spark, root).select("day", "v")
-      .as[(String, Long)].collect().toMap
-    assert(now == Map("2026-01-02" -> 2L, "2026-01-03" -> 3L),
-      s"expired partition must stay expired across the compaction: $now")
-  }
-
-  test("compact racing overwritePartitions: no duplicated partition rows") {
-    val root = tmp("covw")
-    Snapshot.writeReplace(spark,
-      Seq(("a", 1L), ("b", 2L)).toDF("part", "v"),
-      root, partCols = Seq("part"))
-    var fired = false
-    Snapshot.compact(spark, root, targetFileBytes = 1L << 30, () => {
-      if (!fired) {
-        fired = true
-        Snapshot.overwritePartitions(spark,
-          Seq(("a", 10L)).toDF("part", "v"), root, "part")
-      }
-    })
-    // pre-fix: old rewritten partition data + the racer's new files
-    // were BOTH referenced → duplicate rows for part=a
-    val rows = Snapshot.read(spark, root).select("part", "v")
-      .as[(String, Long)].collect().sorted
-    assert(rows.toSeq == Seq(("a", 10L), ("b", 2L)),
-      s"exactly one row per partition after the race: ${rows.toSeq}")
-  }
-
   test("two racing compactions do not duplicate the table") {
     val root = tmp("ccomp")
     Snapshot.writeReplace(spark, (1 to 100).toDF("x").repartition(4), root)
@@ -303,44 +215,14 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.writeReplace(spark, (1 to 100).toDF("x"), root)
     val pinned = graft.Catalog.table(spark, dir, "documents")
     assert(pinned.count() == 100)
-    // maintenance through the LAYOUT entry point delegates to the
-    // snapshot form — no mid-swap window for the pinned reader
-    graft.operators.Layout.compact(spark, root, targetFileBytes = 1L << 30)
+    // no mid-swap window for the pinned reader
+    Snapshot.compact(spark, root, targetFileBytes = 1L << 30)
     assert(Snapshot.latest(spark, root).get.op == "compact")
     assert(pinned.count() == 100, "pinned frame survives the compaction")
     Snapshot.append(spark, (101 to 120).toDF("x"), root)
     assert(graft.Catalog.table(spark, dir, "documents").count() == 120,
       "a fresh Catalog.table call resolves the new snapshot")
     assert(pinned.count() == 100, "the old frame stays pinned")
-    // whole-directory writers refuse the snapshot root loudly instead
-    // of silently deleting the manifest dir via overwrite mode
-    val err = intercept[RuntimeException] {
-      graft.operators.Layout.writeZOrdered(
-        (1 to 10).toDF("x").withColumn("y", col("x")),
-        "x", "y", root, nFiles = 1)
-    }
-    assert(err.getMessage.contains("SNAPSHOT table root"), err.getMessage)
-  }
-
-  test("layout delegation: expire and overwrite on a snapshot root are metadata commits") {
-    val root = tmp("laydel")
-    Snapshot.writeReplace(spark,
-      Seq(("2026-01-01", 1L), ("2026-01-02", 2L)).toDF("day", "v"),
-      root, partCols = Seq("day"))
-    val pinned = Snapshot.read(spark, root)
-    graft.operators.Layout.overwritePartitions(
-      Seq(("2026-01-02", 20L)).toDF("day", "v"), "day", root)
-    assert(Snapshot.latest(spark, root).get.op == "overwrite_partitions",
-      "Layout.overwritePartitions must route through the snapshot form")
-    val dropped = graft.operators.Layout
-      .expirePartitions(spark, root, "day", "2026-01-02")
-    assert(dropped == 1)
-    assert(Snapshot.latest(spark, root).get.op == "expire_partitions")
-    val now = Snapshot.read(spark, root).select("day", "v")
-      .as[(String, Long)].collect().toMap
-    assert(now == Map("2026-01-02" -> 20L), now.toString)
-    assert(pinned.count() == 2,
-      "reader pinned before the layout maintenance is unaffected")
   }
 
   test("gc aborts on an UNREADABLE kept manifest instead of treating it as empty") {

@@ -131,25 +131,6 @@ class StreamingGoldenSpec extends SparkSpec {
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]))
   }
 
-  test("J3: two-phase confirm pairing accepts only confirmed values") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[TelemetryPipeline.ProtoEvent]
-    val q = TelemetryPipeline.confirmPairing(input.toDS())
-      .writeStream.format("memory").queryName("proto_out")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        TelemetryPipeline.ProtoEvent("H0001", "confirm", 0, seq = 1),
-        TelemetryPipeline.ProtoEvent("H0001", "value", 32.1, seq = 2),
-        // H0002 sends a value with no confirmation → rejected
-        TelemetryPipeline.ProtoEvent("H0002", "value", 99.9, seq = 1))
-      q.processAllAvailable()
-      val rows = spark.table("proto_out")
-        .as[TelemetryPipeline.Accepted].collect()
-      assert(rows.toSeq == Seq(TelemetryPipeline.Accepted("H0001", 32.1)))
-    } finally q.stop()
-  }
-
   test("T3/T7: RocksDB state store keeps dedup state watermark-bounded across replays") {
     // the 100 TB streaming-state design point (SURVEY.md §7.3): state
     // must not grow with stream length, only with keys inside the

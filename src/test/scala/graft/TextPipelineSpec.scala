@@ -24,10 +24,13 @@ class TextPipelineSpec extends SparkSpec {
   }
 
   test("minhash signatures: near-dups agree on most slots, distinct docs don't") {
-    val sigs = Seq(nearDupA, nearDupB, distinct1).toDF("text")
-      .select(TF.minhashSignature(
-        TF.shingles(TF.tokens($"text")), 32).as("sig"))
-      .as[Seq[Long]].collect()
+    // the dedup tier's signing path: sorted shingle hashes → MinHash
+    val sigs = graft.operators.Dedup.shingleSignatures(
+        Seq(nearDupA, nearDupB, distinct1).zipWithIndex
+          .map { case (t, i) => (i.toLong, t) }.toDF("id", "text"),
+        "id", "text")
+      .select(col("id"), graft.plans.MinHashSig(col("hh"), 32).as("sig"))
+      .orderBy("id").select("sig").as[Seq[Long]].collect()
     def agree(a: Seq[Long], b: Seq[Long]) = a.zip(b).count { case (x, y) => x == y }
     assert(agree(sigs(0), sigs(1)) >= 20,
       s"near-dups should share most minhash slots, got ${agree(sigs(0), sigs(1))}/32")
@@ -53,15 +56,6 @@ class TextPipelineSpec extends SparkSpec {
       "xyzzy plugh qwert").toDF("text")
       .select(TF.langId(TF.tokens($"text")).as("l")).as[String].collect()
     assert(rows.toSeq == Seq("en", "fr", "de", "und"))
-  }
-
-  test("quality score stays in [0,1] and favors clean prose") {
-    val scores = Seq(
-      "the quick brown fox jumps over the lazy dog and runs to the hills",
-      "@@@@ #### $$$$ 1234 %%%% ^^^^ &&&&").toDF("text")
-      .select(TF.qualityScore($"text").as("q")).as[Double].collect()
-    assert(scores.forall(s => s >= 0.0 && s <= 1.0))
-    assert(scores(0) > scores(1))
   }
 
   test("hex60 JVM twin matches the SQL expression") {

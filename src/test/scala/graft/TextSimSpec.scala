@@ -52,14 +52,16 @@ class TextSimSpec extends SparkSpec {
       .select("da", "db", "sab", "s2a", "s2b")
   }
 
-  test("cosinePairs equals the naive shared-term enumeration exactly " +
-      "(pairs, sab, norms) at thresholds 0.3 / 0.5 / 0.8") {
+  test("cosinePairsFromIndex equals the naive shared-term enumeration " +
+      "at 0.3 / 0.5 / 0.8") {
     val w = postings().persist()
     try {
       for (t <- Seq(0.3, 0.5, 0.8)) {
         val want = naive(w, t)
           .as[(Long, Long, Long, Long, Long)].collect().toSet
-        val got = TextSim.cosinePairs(w, t)
+        // exact pairs, sab and norms
+        val got = TextSim.cosinePairsFromIndex(TextSim.prefixPostings(w, t),
+            TextSim.signatures(w), t)
           .as[(Long, Long, Long, Long, Long)].collect().toSet
         assert(got == want,
           s"t=$t: missing=${(want -- got).take(5)} " +

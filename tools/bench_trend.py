@@ -1,195 +1,25 @@
 #!/usr/bin/env python3
-"""Scale-trend capture (VERDICT r9 next-round #2): demonstrate, with
-data instead of assertion, that the sub-second Spark/DuckDB ratios are
-Spark's fixed per-job floor amortizing away — not data-path
-regressions. /root/testdata tops out at sf0.1, so this builds a
-bench-only ~sf1 by replicating sf0.1 10x (primary keys offset per
-replica; document text/embedding values perturbed per replica so the
-corpus is near-dup-rich rather than degenerate exact clones; no oracle
-CORRECTNESS claim is made at sf1 — the capture compares latency ratios
-only). LOCAL DEV TOOL (duckdb/pyarrow are driver-side, never engine
-dependencies).
+"""Build a bench-only ~sf1 catalog by replicating an sf0.1 catalog 10x.
+
+The test data tops out at sf0.1. This tool writes a larger local catalog
+with no download: primary keys are offset per replica, and document
+text and embedding values are perturbed per replica, so the corpus is
+near-dup-rich rather than exact clones. No oracle CORRECTNESS claim is
+made at sf1: the catalog is for measurements only (for instance, which
+scale-conditional routes engage from data volume alone). LOCAL DEV
+TOOL (duckdb is driver-side, never an engine dependency).
 
 Usage:
-  python3 tools/bench_trend.py build <sf0.1dir> <sf1dir>
-      # replicate the parquet tables 10x
-  python3 tools/bench_trend.py merge <oracle_sql.json> \
-      <spark_sf01_bench.json> <spark_sf1_bench.json> \
-      <sf0.1dir> <sf1dir> <dest.json>
-      # time DuckDB for TREND_QUERIES at both sfs, join the two Spark
-      # captures, write the per-query ratio-pair record
+  python3 tools/bench_trend.py build <sf0.1dir> <sf1dir> [factor]
+      # replicate the parquet tables `factor` times (default 10)
 
-The Spark captures are ordinary bench_full.json files produced by
-`graft.Bench` with the TREND_QUERIES as args (dev-loop filter).
+BENCH_TREND.json is an earlier record made with this catalog; the
+capture and merge steps that produced it are gone.
 """
-import hashlib, json, os, statistics, subprocess, sys, time
-
-# Selection rule (documented in the record): the round-9 gate breach
-# (q15), every data-dominated query with ratio >= 0.25x (where the
-# job-floor explanation is doing real work), representative sub-floor
-# straddlers the verdicts flagged, and the round-10 additions. The
-# <= 0.2x tier (ngram_jaccard, components, fingerprint) is excluded:
-# their ratios are unambiguous already and their all-pairs DuckDB
-# formulations are prohibitive at sf1.
-TREND_QUERIES = [
-    "q15_rank_ntile_seq",                                 # the weak flag
-    "ns_dedup_semantic", "ns_decontaminate", "ns_dedup_embed_cosine",
-    "q29_asof_prior", "ns_text_tfidf_sim", "ns_dedup_apply",
-    "ns_ann_ivf_kmeans_topk", "ns_dedup_boilerplate",
-    "ns_dedup_minhash_lsh", "ns_dedup_containment", "ns_text_langid",
-    "ns_dedup_substring", "ns_dedup_simhash", "ns_text_quality",
-    "q34_theta_join", "q42_string_agg", "q47_tpch_local_volume",
-    "q51_chr_ascii", "q52_calibration_dim_join", "q62_variant_json",
-    "ns_dedup_incremental", "ns_dedup_paragraph",
-    # round-12 additions: the two remaining r11 gate breaches (both
-    # floor-straddlers by oracle latency — the trend is their
-    # retirement evidence, as it was for q15) plus the bloom
-    # decontamination tier (oracle 0.42 s, clearly data-dominated)
-    "ns_score_lm", "ns_ann_batch_topk", "ns_decontaminate_bloom",
-    # round-12 second wave: the r12 capture's floor-admission lottery
-    # rows — Spark times unchanged vs r11, but this run's DuckDB
-    # medians crossed the 0.15 s floor and admitted them to gating
-    "q59_asof_join", "q70_asof_auto_default", "q16_lag_running",
-    # round-14 addition: the r14 oracle capture's fourth floor-
-    # adjacent breach (oracle median 0.17 s, Spark min-rep 2.25x) —
-    # the trend is its floor-vs-data-path adjudication, as for q15
-    "q02_filter_predicates",
-    # round-17 addition: the new vocab-mapped tokenization op lands
-    # floor-bound at sf0.1 (two-job DAG vs a 0.19 s oracle) with a
-    # falling ratio curve — the trend record is its adjudication
-    # evidence, as it was for q15/q52
-    "ns_tokenize_vocab",
-    # round-19 addition: the new PCA->PQ whitened-encode row is a
-    # 4-job DAG (stats agg, seed collect, codebook agg, in-row encode)
-    # against a 0.26 s oracle at sf0.1 -- 2.3x there, falling to 1.69x
-    # at sf1 (measured same-box); the trend record is its adjudication
-    # evidence, the q15/q52/ns_tokenize_vocab pattern
-    "ns_pq_whiten_encode",
-    # round-20 additions (VERDICT r19 next #7): q47's star-ladder
-    # siblings — a ladder-cost regression must show in the trend, not
-    # wait for a gate capture to trip
-    "q46_tpch_shipping", "q64_tpch_big_orders",
-]
+import os
+import sys
 
 FACTOR = 10
-
-# Same constant the gate uses (oracle_bench.py): an oracle median
-# under this at EVERY trended scale means the row's "ratio" measures
-# Spark's fixed per-job floor against a milliseconds query, not the
-# data path. Such rows carry floor_bound: true so the record is
-# self-describing (VERDICT r17 what's-wrong #3: q34 reads "43.8x"
-# against a 2.2 ms oracle with the disclosure two fields away).
-DATA_DOMINATED_FLOOR_SEC = 0.15
-
-
-def flag_floor_bound(row):
-    """floor_bound = every present oracle median sits under the floor."""
-    medians = [row.get(k) for k in
-               ("oracle_sf01_sec", "oracle_sf1_sec", "oracle_sf3_sec")]
-    present = [m for m in medians if m is not None and m > 0]
-    row["floor_bound"] = bool(present) and all(
-        m < DATA_DOMINATED_FLOOR_SEC for m in present)
-
-# Third-point set (VERDICT r12 next-round #7): two points cannot
-# distinguish floor amortization from linear degradation, and the
-# round-13 bucketed-standing-index fix needs a CURVE to prove itself.
-# The sf3 (30x sf0.1) point covers the incremental/decontamination
-# dedup family plus the round-13 join-routing fix; DuckDB is timed at
-# sf3 under the same single-rep-if-huge policy (all-pairs tiers stay
-# excluded as before).
-TREND3_QUERIES = [
-    "ns_dedup_incremental", "ns_dedup_incremental_substring",
-    "ns_dedup_incremental_minhash",
-    "ns_decontaminate", "ns_decontaminate_bloom",
-    "ns_dedup_minhash_lsh", "ns_dedup_substring", "ns_dedup_containment",
-    "q47_tpch_local_volume",
-    # round-15 additions (VERDICT r14 next-round #6): close the
-    # floor-artifact adjudication of the two remaining gate breaches
-    # with a 3-point curve, and carry the prefix-filtered tfidf tier's
-    # third point alongside its restructure
-    "q02_filter_predicates", "q15_rank_ntile_seq", "ns_text_tfidf_sim",
-    # round-15 late additions: q52's ratio WORSENED sf0.1→sf1
-    # (1.97→3.5 on a 0.17 s oracle — floor-straddler or real, the
-    # third point decides), and ns_dedup_paragraph was the r15 gate
-    # breach — the min-aggregate restructure it got was REVERTED
-    # (6c59ae2, A/B said no), so its curve stands on the original
-    # shape and remains worth the 3-point adjudication
-    "q52_calibration_dim_join", "ns_dedup_paragraph",
-    # the r15 oracle-bench straddler: ~2-2.5x at every scale point,
-    # small absolutes - carries its own sf3 row from a disclosed
-    # single-query capture
-    "ns_score_lm",
-    # round-17 addition: the new vocab-mapped tokenization op lands
-    # floor-bound at sf0.1 (two-job DAG vs a 0.19 s oracle) with a
-    # falling ratio curve - the trend record is its adjudication
-    # evidence, as it was for q15/q52
-    "ns_tokenize_vocab",
-    # round-18 addition: the as-of family's restructure (compact tier,
-    # tieBreak, sampled+memoized routing) needs the third point - dev
-    # measurements show the ratio collapsing to ~1.1-1.2x at sf3
-    # (Spark 1.73/1.64 s vs DuckDB ~1.48 s), the floor-amortization
-    # signature; sf1 sits near the 2x line and the curve is the
-    # adjudication evidence either way
-    "q59_asof_join", "q70_asof_auto_default",
-    # round-19 addition: the PCA->PQ whitened-encode row's curve (2.3x
-    # at sf0.1 on a 0.26 s oracle, 1.69x at sf1 same-box) needs the
-    # third point like every floor-amortization adjudication before it
-    "ns_pq_whiten_encode",
-    # round-20 additions (VERDICT r19 next #7): the star-ladder
-    # siblings carry the full 3-point curve alongside q47
-    "q46_tpch_shipping", "q64_tpch_big_orders",
-]
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
-# DuckDB rep policy: 3 reps unless the first rep shows the query is
-# huge at sf1 (then its single rep stands — the trend needs ~10%
-# accuracy, not benchmark-grade medians).
-SINGLE_REP_OVER_SEC = 120.0
-
-
-def loadavg():
-    try:
-        with open("/proc/loadavg") as f:
-            return " ".join(f.read().split()[:3])
-    except OSError:
-        return ""
-
-
-# Host-speed calibration for the ORACLE side of a capture pair
-# (VERDICT r19 next #5: a q47-style cross-round oracle shift must
-# self-flag in the trend record, as BENCH_PINNED's cpu_calib_mops
-# does for pins). The Spark captures carry their own JVM-measured
-# cpu_calib_mops in-band; DuckDB timings get this DuckDB-measured
-# stamp, taken immediately before each timing pass. Comparable only
-# to OTHER duckdb_calib_mops stamps (different runtime than the JVM
-# number — same 10% comparability rule, never cross-kind).
-CALIB_COMPARABLE_PCT = 0.10
-
-
-def duckdb_calib_mops():
-    import duckdb
-    con = duckdb.connect()
-    con.sql("SET threads TO 1")
-    ts = []
-    # 200M-row kernel (~1.3 s) rides past the turbo-decay transient a
-    # short kernel lands in by lottery; median-of-5 after one warmup
-    # measured ~5% cross-process spread on an idle box — inside the
-    # 10% comparability band, while the 20-25% host-wide shifts this
-    # stamp exists to catch flag unambiguously.
-    for rep in range(6):
-        t0 = time.time()
-        con.sql("SELECT sum(i*i) FROM range(200000000) r(i)").fetchone()
-        if rep > 0:
-            ts.append(time.time() - t0)
-    return round(200.0 / statistics.median(ts), 1)  # Mops
-
-
-def calib_comparable(a, b):
-    """None (a stamp is missing — legacy capture) counts comparable:
-    the flag marks KNOWN shifts, it never rejects a capture."""
-    if a is None or b is None:
-        return True
-    return a > 0 and b > 0 and abs(a / b - 1.0) <= CALIB_COMPARABLE_PCT
 
 
 def build(src, dst, factor=FACTOR):
@@ -257,307 +87,11 @@ def build(src, dst, factor=FACTOR):
          "embeddings")
 
 
-def time_duckdb(sf_dir, oracles, names=None):
-    import duckdb
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    out = {}
-    for name in (names if names is not None else TREND_QUERIES):
-        sql = oracles.get(name)
-        if sql is None:
-            out[name] = -1.0
-            continue
-        times = []
-        for rep in range(3):
-            t0 = time.time()
-            try:
-                con.sql(sql).fetchall()
-                times.append(time.time() - t0)
-            except Exception as e:
-                print(f"  {name} rep{rep} FAILED: {e}", file=sys.stderr)
-                times.append(float("nan"))
-                break
-            if rep == 0 and times[0] > SINGLE_REP_OVER_SEC:
-                break
-        ok = sorted(t for t in times if t == t)
-        out[name] = round(statistics.median(ok), 4) if ok else -1.0
-        print(f"  [duckdb {os.path.basename(sf_dir)}] {name}: {out[name]}s"
-              f" ({len(ok)} reps)")
-    return out
-
-
-def load_caps(path_csv):
-    """Load one or more (comma-separated) bench_full.json captures.
-    Multiple captures exist because a shared local JVM accumulates GC
-    debris across ~120 executions and a saturated 32-thread box makes
-    WHICH queries pay for it a per-run lottery (round-14: three sf1
-    captures each blew up a DIFFERENT tier by 3-10x while the rest
-    matched) — per-query best-of-captures is the robust statistic, and
-    every capture's sha/flags stay in the record."""
-    caps = []
-    for p in path_csv.split(","):
-        with open(p, "rb") as f:
-            raw = f.read()
-        j = json.loads(raw)
-        caps.append({"json": j, "sha256": hashlib.sha256(raw).hexdigest(),
-                     "path": p, "contended": j.get("contended"),
-                     "loadavg_start": j.get("loadavg_start"),
-                     "cpu_calib_mops": j.get("cpu_calib_mops"),
-                     "sf": j.get("sf")})
-    return caps
-
-
-def best_q(caps, name):
-    """(median, rep_min, all_medians) — median/rep_min come from the
-    capture with the lowest median for `name`; all_medians lists EVERY
-    capture's median for that query (ADVICE r14: the best-of selection
-    systematically favors the Spark side of the recorded ratios, so the
-    spread it selects from must be in the record for readers to judge)."""
-    best = (None, None)
-    medians = []
-    for c in caps:
-        m = c["json"].get("queries_isolated", {}).get(name)
-        if m is None or m < 0:
-            continue
-        medians.append(round(m, 4))
-        rmin = (c["json"].get("isolated_reps_detail", {}).get(name)
-                or [None])[0]
-        if best[0] is None or m < best[0]:
-            best = (m, rmin)
-    # median-of-medians: the selection-neutral statistic (VERDICT r15
-    # what's-wrong #5 — best-of is one-sided because DuckDB is timed
-    # once, live). Reported ALONGSIDE best-of in every row.
-    mom = round(statistics.median(medians), 4) if medians else None
-    return best[0], best[1], medians, mom
-
-
-def cap_meta(caps):
-    meta = [{"path": c["path"], "sha256": c["sha256"],
-             "contended": c["contended"],
-             "loadavg_start": c["loadavg_start"],
-             "cpu_calib_mops": c["cpu_calib_mops"], "sf": c["sf"]}
-            for c in caps]
-    return meta[0] if len(meta) == 1 else meta
-
-
-def spark_calib_flags(all_caps):
-    """Pairwise comparability across every Spark capture consumed by
-    the record: the best-of-captures / ratio-vs-ratio math assumes one
-    host speed; a >10% spread between any two captures means a q47-
-    style shift happened MID-protocol and the ratios cross it."""
-    stamps = [c["cpu_calib_mops"] for c in all_caps
-              if c.get("cpu_calib_mops") is not None]
-    ok = all(calib_comparable(a, b)
-             for i, a in enumerate(stamps) for b in stamps[i + 1:])
-    return {"spark_calib_mops_all": stamps,
-            "spark_calib_comparable": ok,
-            "spark_calib_note": (
-                "JVM stamp noise across fresh JVMs measured ~20% on an "
-                "idle box while same-protocol query medians agreed "
-                "within 1-2% — read a false flag here against the "
-                "per-query capture medians before concluding a host "
-                "shift; the DuckDB-side stamps (~5% noise) are the "
-                "denominator-shift signal")}
-
-
-def merge(oracle_json, spark01_path, spark1_path, sf01, sf1, dest):
-    with open(oracle_json) as f:
-        oracles = json.load(f)
-    caps = {"sf0.1": load_caps(spark01_path), "sf1": load_caps(spark1_path)}
-    # previous committed record (dest is conventionally the standing
-    # BENCH_TREND.json): its oracle calib stamp is what a cross-round
-    # denominator shift flags against
-    prev_calib = None
-    if os.path.exists(dest):
-        with open(dest) as f:
-            prev_calib = json.load(f).get("oracle_calib_mops", {})
-    oc = {}
-    oc["sf0.1"] = duckdb_calib_mops()
-    print(f"timing DuckDB at sf0.1 ... (calib {oc['sf0.1']} Mops)")
-    d01 = time_duckdb(sf01, oracles)
-    oc["sf1"] = duckdb_calib_mops()
-    print(f"timing DuckDB at sf1 ... (calib {oc['sf1']} Mops)")
-    d1 = time_duckdb(sf1, oracles)
-    queries = {}
-    for name in TREND_QUERIES:
-        # best-of-captures median alongside its best rep: the sf1 pass
-        # executes every query 4x (pooled + 3 isolated) in ONE shared
-        # JVM holding all warm artifacts — late reps accumulate GC
-        # debris the capture's own `contended` flag reports, and which
-        # queries pay is a per-run lottery (load_caps docstring).
-        # Median stays the headline; the min column shows what the
-        # same plan does on a clean heap.
-        s01, _, s01all, s01mom = best_q(caps["sf0.1"], name)
-        s1, s1min, s1all, s1mom = best_q(caps["sf1"], name)
-        row = {
-            "spark_sf01_sec": s01, "spark_sf1_sec": s1,
-            "spark_sf1_min_sec": s1min,
-            "spark_sf01_mom_sec": s01mom, "spark_sf1_mom_sec": s1mom,
-            "spark_sf01_capture_medians": s01all,
-            "spark_sf1_capture_medians": s1all,
-            "oracle_sf01_sec": d01.get(name), "oracle_sf1_sec": d1.get(name),
-        }
-        if s01 and d01.get(name, 0) > 0 and s01 > 0:
-            row["ratio_sf01"] = round(s01 / d01[name], 3)
-        if s01mom and d01.get(name, 0) > 0 and s01mom > 0:
-            row["ratio_sf01_mom"] = round(s01mom / d01[name], 3)
-        if s1 and d1.get(name, 0) > 0 and s1 > 0:
-            row["ratio_sf1"] = round(s1 / d1[name], 3)
-        if s1mom and d1.get(name, 0) > 0 and s1mom > 0:
-            row["ratio_sf1_mom"] = round(s1mom / d1[name], 3)
-        if s1min and d1.get(name, 0) > 0 and s1min > 0:
-            row["ratio_sf1_min"] = round(s1min / d1[name], 3)
-        if "ratio_sf01" in row and "ratio_sf1" in row and row["ratio_sf01"] > 0:
-            row["ratio_trend"] = round(row["ratio_sf1"] / row["ratio_sf01"], 3)
-        flag_floor_bound(row)
-        queries[name] = row
-    conv = [n for n, r in queries.items()
-            if r.get("ratio_trend") is not None and r["ratio_trend"] < 1.0]
-    record = {
-        "purpose": ("per-query Spark/DuckDB latency-ratio TREND from sf0.1 "
-                    "to a 10x-replicated bench-only sf1 — evidence for (or "
-                    "against) the claim that sub-second ratios are Spark's "
-                    "fixed per-job floor amortizing at scale, not data-path "
-                    "regressions. ratio_trend < 1 means the ratio IMPROVED "
-                    "(converged toward/past DuckDB) at 10x the data."),
-        "selection_rule": ("round-9 gate breach + all data-dominated ratios "
-                           ">= 0.25x + flagged sub-floor straddlers + round-10 "
-                           "additions; the <= 0.2x tier excluded (unambiguous, "
-                           "and all-pairs DuckDB oracles prohibitive at sf1)"),
-        "sf1_construction": ("sf0.1 replicated 10x: dims unchanged, fact "
-                             "primary keys offset per replica, document text "
-                             "suffix-perturbed (near-dup-rich, not exact "
-                             "clones), embeddings +i*1e-6, events +i µs; "
-                             "bench-only — no correctness claim at sf1"),
-        "duckdb_rep_policy": (f"median of 3, single rep if rep1 > "
-                              f"{SINGLE_REP_OVER_SEC}s"),
-        "data_dominated_floor_sec": DATA_DOMINATED_FLOOR_SEC,
-        "floor_bound_meaning": ("rows with floor_bound: true have an "
-                                "oracle median under the floor at EVERY "
-                                "trended scale - their ratios measure "
-                                "Spark's per-job floor, not the data path"),
-        "loadavg": loadavg(),
-        "capture_policy": ("per-query best-of-captures median (and that "
-                           "capture's best rep) when several captures are "
-                           "supplied — robust to the shared-JVM GC-debris "
-                           "lottery; every capture's sha/flags recorded. "
-                           "The selection is one-sided (the DuckDB oracle "
-                           "is timed once, live), so each row ALSO carries "
-                           "the selection-neutral median-of-medians "
-                           "(spark_*_mom_sec / ratio_*_mom, VERDICT r15 "
-                           "what's-wrong #5) beside the per-capture "
-                           "medians it derives from"),
-        "spark_captures": {t: cap_meta(c) for t, c in caps.items()},
-        # per-capture-pair host-speed stamps (VERDICT r19 next #5):
-        # the Spark side carries Bench's in-band JVM cpu_calib_mops;
-        # the oracle side this file's DuckDB kernel, taken immediately
-        # before each timing pass. Flags mark >10% shifts WITHIN the
-        # protocol and vs the previous committed record — the exact
-        # q47 failure mode (an oracle denominator timed on a different
-        # host state than the round it's compared against).
-        "calib_comparable_pct": CALIB_COMPARABLE_PCT,
-        "oracle_calib_mops": oc,
-        "oracle_calib_comparable": calib_comparable(oc["sf0.1"], oc["sf1"]),
-        "oracle_calib_mops_prev": prev_calib,
-        "oracle_calib_comparable_vs_prev": all(
-            calib_comparable(oc.get(k), (prev_calib or {}).get(k))
-            for k in oc),
-        **spark_calib_flags(caps["sf0.1"] + caps["sf1"]),
-        "n_improved_of_trended": [len(conv),
-                                  len([r for r in queries.values()
-                                       if r.get("ratio_trend") is not None])],
-        "queries": queries,
-    }
-    with open(dest, "w") as f:
-        json.dump(record, f, indent=1)
-        f.write("\n")
-    print(f"wrote {dest}: {record['n_improved_of_trended'][0]}/"
-          f"{record['n_improved_of_trended'][1]} trended queries improved")
-
-
-def merge3(oracle_json, trend_json, spark3_path, sf3, dest):
-    """Third scale point: extend an existing 2-point BENCH_TREND record
-    (from `merge`) with sf3 rows for TREND3_QUERIES — Spark seconds
-    from a graft.Bench capture at the sf3 dir, DuckDB timed here under
-    the same rep policy. Adds per-query spark_sf3_sec / oracle_sf3_sec
-    / ratio_sf3 / ratio_trend_3pt (= ratio_sf3 / ratio_sf1) and the
-    Spark-only scaling column spark_scaling_1to3 (= spark_sf3 /
-    spark_sf1; 3.0 is perfectly linear in data volume) so amortization
-    vs degradation is readable even where DuckDB is absent."""
-    with open(oracle_json) as f:
-        oracles = json.load(f)
-    with open(trend_json) as f:
-        record = json.load(f)
-    caps3 = load_caps(spark3_path)
-    c3 = duckdb_calib_mops()
-    print(f"timing DuckDB at sf3 ... (calib {c3} Mops)")
-    d3 = time_duckdb(sf3, oracles, TREND3_QUERIES)
-    queries = record["queries"]
-    for name in TREND3_QUERIES:
-        row = queries.setdefault(name, {})
-        s3, s3min, s3all, s3mom = best_q(caps3, name)
-        row["spark_sf3_sec"] = s3
-        row["spark_sf3_min_sec"] = s3min
-        row["spark_sf3_mom_sec"] = s3mom
-        row["spark_sf3_capture_medians"] = s3all
-        row["oracle_sf3_sec"] = d3.get(name)
-        if s3 and d3.get(name, 0) > 0 and s3 > 0:
-            row["ratio_sf3"] = round(s3 / d3[name], 3)
-        if s3mom and d3.get(name, 0) > 0 and s3mom > 0:
-            row["ratio_sf3_mom"] = round(s3mom / d3[name], 3)
-        if row.get("ratio_sf3") and row.get("ratio_sf1"):
-            row["ratio_trend_3pt"] = round(
-                row["ratio_sf3"] / row["ratio_sf1"], 3)
-        s1 = row.get("spark_sf1_sec")
-        if s3 and s1 and s1 > 0 and s3 > 0:
-            row["spark_scaling_1to3"] = round(s3 / s1, 3)
-        flag_floor_bound(row)  # recompute with the sf3 point present
-    record["data_dominated_floor_sec"] = DATA_DOMINATED_FLOOR_SEC
-    record["sf3_construction"] = (
-        "sf0.1 replicated 30x by the same build recipe (bench-only; "
-        "3x the sf1 data volume); third point for TREND3_QUERIES only")
-    record["spark_capture_sf3"] = cap_meta(caps3)
-    # extend the merge-time calib stamps with the sf3 pass and
-    # recompute the in-protocol flags over the full capture set
-    oc = record.setdefault("oracle_calib_mops", {})
-    oc["sf3"] = c3
-    record["oracle_calib_comparable"] = all(
-        calib_comparable(a, b)
-        for vals in [[v for v in oc.values() if v is not None]]
-        for i, a in enumerate(vals) for b in vals[i + 1:])
-    prev = record.get("oracle_calib_mops_prev") or {}
-    record["oracle_calib_comparable_vs_prev"] = all(
-        calib_comparable(oc.get(k), prev.get(k)) for k in oc)
-    sparkflags = spark_calib_flags(caps3)
-    known = record.get("spark_calib_mops_all", [])
-    record["spark_calib_mops_all"] = (
-        known + sparkflags["spark_calib_mops_all"])
-    stamps = [s for s in record["spark_calib_mops_all"] if s is not None]
-    record["spark_calib_comparable"] = all(
-        calib_comparable(a, b)
-        for i, a in enumerate(stamps) for b in stamps[i + 1:])
-    with open(dest, "w") as f:
-        json.dump(record, f, indent=1)
-        f.write("\n")
-    n3 = len([r for r in queries.values() if r.get("spark_sf3_sec")])
-    print(f"wrote {dest}: {n3} queries carry an sf3 point")
-
-
 def main():
-    mode = sys.argv[1]
-    if mode == "build":
-        build(sys.argv[2], sys.argv[3],
-              int(sys.argv[4]) if len(sys.argv) > 4 else FACTOR)
-    elif mode == "merge":
-        merge(*sys.argv[2:8])
-    elif mode == "merge3":
-        merge3(*sys.argv[2:7])
-    else:
-        sys.exit(f"unknown mode {mode}")
+    if len(sys.argv) < 4 or sys.argv[1] != "build":
+        sys.exit("usage: bench_trend.py build <sf0.1dir> <sf1dir> [factor]")
+    build(sys.argv[2], sys.argv[3],
+          int(sys.argv[4]) if len(sys.argv) > 4 else FACTOR)
 
 
 if __name__ == "__main__":
