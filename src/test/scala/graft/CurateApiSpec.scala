@@ -91,7 +91,7 @@ class CurateApiSpec extends SparkSpec {
     assert(out(4L) == ((4L, 0L, 0L, "")))
   }
 
-  test("redactPiiCounted replaces digit runs and emails") {
+  test("redactPii replaces digit runs and emails") {
     val (red, nEmail) = Curate.redactPiiCounted(
       Seq((1L, "mail me at a.b@example.com or call +1 (555) 123-4567 id 9876543"))
         .toDF("id", "body"), "body")

@@ -33,6 +33,20 @@ class DedupApiSpec extends SparkSpec {
     Dedup.shingleSignatures(df, "my_id", "body")
       .select(col("id"), explode(col("hh")).as("s"))
 
+  test("dedupTransitive keeps one representative per near-dup chain") {
+    // the transitive dedup the curation queries compose: verified
+    // candidate pairs -> star-contraction components -> min id kept
+    val sh = Dedup.shingleSignatures(docs, "my_id", "body")
+    val pairs = Dedup.verifiedPairs(sh, candidates(sh), 0.5)
+    val labels = Dedup.componentLabelsStar(
+      docs.select(col("my_id").as("id")), pairs)
+    val kept = labels.filter(col("id") === col("component")).select("id")
+      .as[Long].collect().sorted
+    labels.unpersist()
+    // 10-11 and 11-13 chain into one component -> keep 10 only
+    assert(kept.toSeq == Seq(10L, 12L, 14L), kept.toSeq.toString)
+  }
+
   test("verifiedPairs reports exact jaccard for candidates") {
     val sh = Dedup.shingleSignatures(docs, "my_id", "body")
     val pairs = Dedup.verifiedPairs(sh, candidates(sh), 0.5)
@@ -74,7 +88,25 @@ class DedupApiSpec extends SparkSpec {
     assert(star.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
-  test("winnowPairsFromPostings: long shared runs pair, unrelated docs don't") {
+  test("invertedIndexCandidates finds shingle-sharing pairs; df cap mutes hot shingles") {
+    // candidate pairs = the self-join of the df-capped inverted index
+    def cand(dfCap: Int) = {
+      val inv = Dedup.cappedInvertedIndex(
+        Dedup.shingleSignatures(docs, "my_id", "body"), dfCap)
+      inv.as("a").join(inv.as("b"),
+          col("a.s") === col("b.s") && col("a.id") < col("b.id"))
+        .select(col("a.id"), col("b.id")).distinct()
+        .as[(Long, Long)].collect().sorted
+    }
+    val all = cand(256)
+    assert(all.contains((10L, 11L)) && all.contains((11L, 13L)),
+      all.toSeq.toString)
+    assert(all.forall { case (a, b) => a < b })
+    // a df cap of 1 removes every shared shingle -> no candidates
+    assert(cand(1).isEmpty)
+  }
+
+  test("winnowPairs: long shared runs pair, unrelated docs don't") {
     val shared = "this exact forty-plus character run is copied verbatim into both docs"
     val corpus = Seq(
       (1L, s"alpha prologue $shared and then some trailing words here"),
@@ -261,8 +293,8 @@ class DedupApiSpec extends SparkSpec {
     } finally { post.unpersist(); () }
   }
 
-  test("LOADED-index probe: no corpus re-signing, equals the batch " +
-      "cross pairs") {
+  test("probeIncremental against a LOADED index: no corpus re-signing, " +
+      "pairs equal the batch rebuild's cross pairs") {
     // a richer corpus: near-dup pairs that cross the halves, one pair
     // inside a half (must NOT be emitted), and a hot shingle
     val corpus = Seq(
@@ -432,7 +464,7 @@ class DedupApiSpec extends SparkSpec {
     assert(pairs(loaded) == marked && marked.nonEmpty, s"${pairs(loaded)}")
   }
 
-  test("probeFromPostings: stop-shingles stay capped across increments") {
+  test("probeIncremental: stop-shingles stay capped across increments") {
     // a shingle over the cap in the STANDING corpus has no postings;
     // the complete df table must keep it suppressed even though the
     // new shard alone would be under the cap
@@ -508,8 +540,8 @@ class DedupApiSpec extends SparkSpec {
     assert(out(6L) == ((6L, 1L, 1L)), s"$out")  // singleton survives
   }
 
-  test("minhash-tier probe on a LOADED index equals the batch rebuild's " +
-      "cross pairs") {
+  test("minhash-tier incremental: probe against a LOADED sketch index " +
+      "equals the batch rebuild's cross pairs; extend equals rebuild") {
     val sh = Dedup.shingleSignatures(docs, "my_id", "body")
     val standing = sh.filter($"id" % 2 === 0)
     val name = "graft_test_loaded_mhidx"
@@ -551,5 +583,17 @@ class DedupApiSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(got == batch, s"incremental $got vs batch $batch")
     assert(got.contains((10L, 11L)), s"the near-dup cross pair: $got")
+
+    // extend = the loaded index plus the shard's per-doc sketches =
+    // exactly a batch rebuild (sketches are corpus-independent, so a
+    // larger corpus's index is the union of its parts)
+    val shardSh = sh.filter($"id" % 2 === 1)
+    val extBuckets = index.buckets.unionByName(Dedup.bandedBuckets(shardSh))
+    val extSigs = index.signatures.unionByName(shardSh)
+    val rebuilt = Dedup.MinHashIndex(Dedup.bandedBuckets(sh), sh)
+    assert(extBuckets.exceptAll(rebuilt.buckets).isEmpty &&
+      rebuilt.buckets.exceptAll(extBuckets).isEmpty)
+    assert(extSigs.exceptAll(rebuilt.signatures).isEmpty &&
+      rebuilt.signatures.exceptAll(extSigs).isEmpty)
   }
 }

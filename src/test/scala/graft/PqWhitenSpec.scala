@@ -3,7 +3,9 @@ package graft
 import graft.operators.{Pca, Pq}
 import org.apache.spark.sql.functions._
 
-/** PQ training tiers, in raw and whitened (projected) space: the
+/** PCA→PQ preprocessing: the projection algebra (a rotation keeps
+  * distances, the diagonal whitening model unit variance) and the PQ
+  * training tiers in raw and whitened (projected) space, where the
   * one-pass in-row tier must equal the join form. Fully deterministic
   * (hash-noise corpus) — pass/fail never flakes.
   */
@@ -16,6 +18,47 @@ class PqWhitenSpec extends SparkSpec {
   private lazy val corpus = (0L until 400L)
     .map(i => (i, PqWhitenSpec.vector(i, u))).toDF("vec_id", "v")
 
+  /** The model shape ns_pq_whiten_encode builds: per-dim (μ, 1/σ),
+    * component c = e_c · (1/σ_c), round-robin interleaved.
+    */
+  private lazy val diagonalWhitening = {
+    val rows = corpus.select("v").as[Seq[Double]].collect()
+    val mean = Array.tabulate(d)(j => rows.map(_(j)).sum / rows.length)
+    val inv = Array.tabulate(d)(j => 1.0 / math.sqrt(
+      rows.map(r => (r(j) - mean(j)) * (r(j) - mean(j))).sum / rows.length))
+    Pca.interleaved(Pca.PcaModel(mean,
+      Array.tabulate(d)(c =>
+        Array.tabulate(d)(i => if (i == c) inv(c) else 0.0)),
+      Array.fill(d)(1.0)), d / subDim)
+  }
+
+  test("rotation preserves pairwise L2 exactly (whiten=false)") {
+    // an unscaled orthonormal model (the corpus basis U as components)
+    // is a rotation: projection must keep every pairwise distance
+    val m = Pca.PcaModel(Array.fill(d)(0.0), u, Array.fill(d)(1.0))
+    val small = corpus.limit(20)
+    val raw = small.as[(Long, Seq[Double])].collect().toMap
+    val proj = Pca.project(small, "v", m, "w")
+      .select("vec_id", "w").as[(Long, Seq[Double])].collect().toMap
+    for (a <- raw.keys; b <- raw.keys if a < b) {
+      def d2(x: Seq[Double], y: Seq[Double]) =
+        x.zip(y).map { case (p, q) => (p - q) * (p - q) }.sum
+      assert(math.abs(d2(raw(a), raw(b)) - d2(proj(a), proj(b))) < 1e-9,
+        s"pair ($a,$b): rotation must preserve L2")
+    }
+  }
+
+  test("whitened model scales projected variance to ~1 per axis") {
+    val vs = Pca.project(corpus, "v", diagonalWhitening, "w")
+      .select(posexplode(col("w")).as(Seq("c", "x")))
+      .groupBy("c").agg(var_pop(col("x")).as("vv"))
+      .as[(Int, Double)].collect()
+    assert(vs.length == d)
+    vs.foreach { case (c, vv) =>
+      assert(math.abs(vv - 1.0) < 0.05, s"axis $c variance $vv")
+    }
+  }
+
   test("trainCodebookInRow == trainCodebook: the one-pass tier is a pure plan change") {
     val cbJoin = Pq.trainCodebook(corpus, "vec_id", "v", subDim, k = 8)
       .as[(Long, Long, Int, Double)].collect().toSet
@@ -26,15 +69,8 @@ class PqWhitenSpec extends SparkSpec {
         s"diff=${(cbRow -- cbJoin).take(3)} / ${(cbJoin -- cbRow).take(3)}")
     // and in the projected space too (the whitened-row path of
     // ns_pq_whiten_encode: a diagonal whitening model, interleaved)
-    val rows = corpus.select("v").as[Seq[Double]].collect()
-    val mean = Array.tabulate(d)(j => rows.map(_(j)).sum / rows.length)
-    val inv = Array.tabulate(d)(j => 1.0 / math.sqrt(
-      rows.map(r => (r(j) - mean(j)) * (r(j) - mean(j))).sum / rows.length))
-    val m = Pca.interleaved(Pca.PcaModel(mean,
-      Array.tabulate(d)(c =>
-        Array.tabulate(d)(i => if (i == c) inv(c) else 0.0)),
-      Array.fill(d)(1.0)), d / subDim)
-    val proj = Pca.project(corpus, "v", m, "w").select(col("vec_id"), col("w"))
+    val proj = Pca.project(corpus, "v", diagonalWhitening, "w")
+      .select(col("vec_id"), col("w"))
     val a = Pq.trainCodebook(proj, "vec_id", "w", subDim, k = 8)
       .as[(Long, Long, Int, Double)].collect().toSet
     val b = Pq.trainCodebookInRow(proj, "vec_id", "w", subDim, k = 8)

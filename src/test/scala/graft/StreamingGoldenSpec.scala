@@ -299,6 +299,30 @@ class StreamingGoldenSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("J3: two-phase confirm pairing accepts only confirmed values") {
+    // the master/slave handshake: a slave's value is accepted only after
+    // its confirmation; a device that never confirmed is rejected
+    implicit val sqlCtx = spark.sqlContext
+    val confirms = MemoryStream[(String, Timestamp)]
+    val values = MemoryStream[(String, Timestamp, Double)]
+    val out = TelemetryPipeline.confirmValueJoin(
+      confirms.toDF().toDF("device_code", "ts"),
+      values.toDF().toDF("device_code", "ts", "value"))
+    val q = out.writeStream.format("memory").queryName("proto_out")
+      .outputMode("append").start()
+    try {
+      confirms.addData(("H0001", ts("2024-01-01 00:00:01")))
+      values.addData(
+        ("H0001", ts("2024-01-01 00:00:02"), 32.1),
+        // H0002 sends a value with no confirmation → rejected
+        ("H0002", ts("2024-01-01 00:00:01"), 99.9))
+      q.processAllAvailable()
+      val rows = spark.table("proto_out")
+        .select("device_code", "value").as[(String, Double)].collect()
+      assert(rows.toSeq == Seq(("H0001", 32.1)))
+    } finally q.stop()
+  }
+
   test("J3 declarative with roundCol: close rounds both match, values accepted once") {
     // ADVICE r2: device-only dedup collapses two legitimate confirms
     // from rounds < windowSeconds apart. With the round id in the

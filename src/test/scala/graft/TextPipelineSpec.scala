@@ -58,6 +58,21 @@ class TextPipelineSpec extends SparkSpec {
     assert(rows.toSeq == Seq("en", "fr", "de", "und"))
   }
 
+  test("quality score stays in [0,1] and favors clean prose") {
+    // the score ns_text_quality computes (length, alpha ratio and
+    // stopword share), over a two-document catalog
+    val dir = java.nio.file.Files.createTempDirectory("graft-quality-")
+      .toString
+    Seq((1L, "the quick brown fox jumps over the lazy dog and runs to the hills"),
+        (2L, "@@@@ #### $$$$ 1234 %%%% ^^^^ &&&&"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val scores = graft.queries.Registry.all.find(_.name == "ns_text_quality")
+      .get.build(spark, dir).select("score").as[Double].collect()
+    assert(scores.length == 2)
+    assert(scores.forall(s => s >= 0.0 && s <= 1.0))
+    assert(scores(0) > scores(1))
+  }
+
   test("hex60 JVM twin matches the SQL expression") {
     val sqlVal = Seq("abc").toDF("s").select(TF.hex60($"s")).as[Long].head()
     assert(sqlVal == SF.hex60Local("abc"))

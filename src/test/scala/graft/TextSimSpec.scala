@@ -52,8 +52,8 @@ class TextSimSpec extends SparkSpec {
       .select("da", "db", "sab", "s2a", "s2b")
   }
 
-  test("cosinePairsFromIndex equals the naive shared-term enumeration " +
-      "at 0.3 / 0.5 / 0.8") {
+  test("cosinePairs equals the naive shared-term enumeration exactly " +
+      "(pairs, sab, norms) at thresholds 0.3 / 0.5 / 0.8") {
     val w = postings().persist()
     try {
       for (t <- Seq(0.3, 0.5, 0.8)) {
