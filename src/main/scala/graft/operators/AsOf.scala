@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,63 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object AsOf {
 
-  /** Left as-of join. Returns every probe row (all its columns) plus
-    * `valueCols` from the matching build row, null when no build row
-    * precedes it.
-    *
-    * Semantics notes:
-    * - `valueCols` travel as one struct, so they always come from the
-    *   SAME build row (no per-column mixing when a build column is
-    *   null).
-    * - Build rows with a null key never match (SQL equi-join
-    *   semantics); probe rows with a null key get null values.
-    * - Ties among build rows with identical (key, time): which row
-    *   wins is unspecified (engine sort is not stable) — pre-aggregate
-    *   the build side to unique (key, time) when it matters.
+  /** The input checks of every as-of tier; returns the probe's
+    * columns.
     */
-  def joinLatest(
-      probe: DataFrame, build: DataFrame,
-      probeKey: String, buildKey: String,
-      probeTime: String, buildTime: String,
-      valueCols: Seq[String],
-      strict: Boolean = false): DataFrame =
-    joinLatest(probe, build, Seq(probeKey), Seq(buildKey),
-      probeTime, buildTime, valueCols, strict)
-
-  /** Multi-key form: the realistic as-of shape keys on a compound
-    * (entity, metric, …) — same linear plan, the keys travel as one
-    * struct. SQL equi-join null semantics hold per KEY: a probe row
-    * with ANY null key matches nothing.
-    *
-    * `tieBreak` (build-side columns, optional): among build rows with
-    * IDENTICAL (key, time), the row with the greatest tie tuple wins
-    * (nulls lowest). This replaces the pre-aggregate-the-build-side
-    * recipe — `groupBy(key, time).agg(max(v))` before an as-of is a
-    * whole extra shuffle whose only purpose is a deterministic tie;
-    * a tie column folds that decision into the ONE sort the plan
-    * already pays (VERDICT r17 #1: the pre-agg was a full stage pair
-    * of q59's latency).
-    */
-  def joinLatest(
-      probe: DataFrame, build: DataFrame,
-      probeKeys: Seq[String], buildKeys: Seq[String],
-      probeTime: String, buildTime: String,
-      valueCols: Seq[String],
-      strict: Boolean): DataFrame =
-    joinLatest(probe, build, probeKeys, buildKeys, probeTime, buildTime,
-      valueCols, strict, tieBreak = Nil)
-
-  /** Tie-break form — see the two-arg-list note on the overload above:
-    * only one overload may carry default arguments, so `tieBreak` is
-    * explicit here.
-    */
-  def joinLatest(
-      probe: DataFrame, build: DataFrame,
-      probeKeys: Seq[String], buildKeys: Seq[String],
-      probeTime: String, buildTime: String,
-      valueCols: Seq[String],
-      strict: Boolean,
-      tieBreak: Seq[String]): DataFrame = {
+  private def checkInputs(probe: DataFrame, probeKeys: Seq[String],
+      buildKeys: Seq[String], valueCols: Seq[String],
+      tieBreak: Seq[String]): Seq[String] = {
     val pCols = probe.columns.toSeq
     require(probeKeys.nonEmpty && probeKeys.size == buildKeys.size,
       s"need matching non-empty key lists, got $probeKeys / $buildKeys")
@@ -94,6 +43,26 @@ object AsOf {
     // probe columns (withColumn replaces) — fail fast instead
     require(!(pCols ++ valueCols ++ tieBreak).exists(_.startsWith("__graft_")),
       "column names with the __graft_ prefix are reserved")
+    pCols
+  }
+
+  /** The tagging core of the two union-window tiers, [[joinLatest]]
+    * and [[joinLatestBucketed]]. It tags both inputs for ONE shared
+    * (key, time) order — working columns `__graft_k`, `__graft_t`,
+    * `__graft_side`, the build row's value struct `__graft_v` and
+    * its tie `__graft_tb` — and hands them to `matchLatest` with that
+    * order. `matchLatest` returns the tagged rows with the match in
+    * `__graft_asof`; the core keeps the probe rows and restores the
+    * probe's columns.
+    */
+  private def unionWindow(
+      probe: DataFrame, build: DataFrame,
+      probeKeys: Seq[String], buildKeys: Seq[String],
+      probeTime: String, buildTime: String,
+      valueCols: Seq[String], strict: Boolean, tieBreak: Seq[String])(
+      matchLatest: (DataFrame, DataFrame, Seq[Column]) => DataFrame)
+      : DataFrame = {
+    val pCols = checkInputs(probe, probeKeys, buildKeys, valueCols, tieBreak)
     // at equal time the build row is visible to the probe iff the
     // match is inclusive: order build before probe for <=, after for <
     val (buildSide, probeSide) = if (strict) (1, 0) else (0, 1)
@@ -154,15 +123,11 @@ object AsOf {
         struct(valueCols.map(col): _*).as("__graft_v")) ++
         (if (tieBreak.isEmpty) Nil
          else Seq(tieExpr.as("__graft_tb"))): _*)
-    val u = p.unionByName(b, allowMissingColumns = true)
     // probe rows carry a null tie (allowMissingColumns) — irrelevant:
     // ordering among probe rows at identical (t, side) never changes
     // which BUILD row the running last saw
     val ord = Seq(col("__graft_t"), col("__graft_side")) ++
       (if (tieBreak.isEmpty) Nil else Seq(col("__graft_tb")))
-    val w = Window.partitionBy("__graft_k")
-      .orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // probe rows with a null time sort first (nulls-first ascending),
     // before any build row ⇒ null values — matching the SQL predicate
     // build.time <= NULL never being true
@@ -171,11 +136,51 @@ object AsOf {
       case c if c == probeTime                => col("__graft_t").as(c)
       case c                                  => col(c)
     }
-    u.withColumn("__graft_asof", last(col("__graft_v"), ignoreNulls = true).over(w))
+    matchLatest(p, b, ord)
       .filter(col("__graft_side") === probeSide)
       .select(restored ++
         valueCols.map(v => col(s"__graft_asof.$v").as(v)): _*)
   }
+
+  /** Left as-of join. Returns every probe row (all its columns) plus
+    * `valueCols` from the matching build row, null when no build row
+    * precedes it.
+    *
+    * Semantics notes:
+    * - `valueCols` travel as one struct, so they always come from the
+    *   SAME build row (no per-column mixing when a build column is
+    *   null).
+    * - Keys: the realistic as-of shape keys on a compound (entity,
+    *   metric, …) — the keys travel as one struct (a single key as its
+    *   raw column). SQL equi-join null semantics hold per KEY: build
+    *   rows with a null key never match, and a probe row with ANY null
+    *   key gets null values.
+    * - Ties among build rows with identical (key, time): without
+    *   `tieBreak`, which row wins is unspecified (engine sort is not
+    *   stable). `tieBreak` (build-side columns): the row with the
+    *   greatest tie tuple wins (nulls lowest). This replaces the
+    *   pre-aggregate-the-build-side recipe — `groupBy(key,
+    *   time).agg(max(v))` before an as-of is a whole extra shuffle
+    *   whose only purpose is a deterministic tie; a tie column folds
+    *   that decision into the ONE sort the plan already pays (VERDICT
+    *   r17 #1: the pre-agg was a full stage pair of q59's latency).
+    */
+  def joinLatest(
+      probe: DataFrame, build: DataFrame,
+      probeKeys: Seq[String], buildKeys: Seq[String],
+      probeTime: String, buildTime: String,
+      valueCols: Seq[String],
+      strict: Boolean = false,
+      tieBreak: Seq[String] = Nil): DataFrame =
+    unionWindow(probe, build, probeKeys, buildKeys, probeTime, buildTime,
+        valueCols, strict, tieBreak) { (p, b, ord) =>
+      val w = Window.partitionBy("__graft_k")
+        .orderBy(ord: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      p.unionByName(b, allowMissingColumns = true)
+        .withColumn("__graft_asof",
+          last(col("__graft_v"), ignoreNulls = true).over(w))
+    }
 
   /** Per-key build fanout under which [[joinLatestAuto]] routes to
     * [[joinLatestCompact]]: 2¹⁶ build rows per key keeps each
@@ -200,7 +205,7 @@ object AsOf {
     * keeps the probe pass fully codegen. The trade is per-key memory:
     * a key's whole history becomes one in-memory array, so this tier
     * is for BOUNDED per-key fanout ([[CompactMaxKeyRows]]) — exactly
-    * what [[autoPlanSampled]] measures, making this the default
+    * what [[autoPlan]] measures, making this the default
     * bounded tier of [[joinLatestAuto]]'s three-way routing
     * (compact / union-window / bucketed).
     *
@@ -215,14 +220,7 @@ object AsOf {
       valueCols: Seq[String],
       strict: Boolean = false,
       tieBreak: Seq[String] = Nil): DataFrame = {
-    val pCols = probe.columns.toSeq
-    require(probeKeys.nonEmpty && probeKeys.size == buildKeys.size,
-      s"need matching non-empty key lists, got $probeKeys / $buildKeys")
-    require(valueCols.nonEmpty, "valueCols must not be empty")
-    require(valueCols.forall(!pCols.contains(_)),
-      s"value columns ${valueCols.filter(pCols.contains)} collide with probe columns")
-    require(!(pCols ++ valueCols ++ tieBreak).exists(_.startsWith("__graft_")),
-      "column names with the __graft_ prefix are reserved")
+    val pCols = checkInputs(probe, probeKeys, buildKeys, valueCols, tieBreak)
     val pT = probe.schema(probeTime).dataType
     val bT = build.schema(buildTime).dataType
     require(pT == bT,
@@ -292,106 +290,54 @@ object AsOf {
       probeKeys: Seq[String], buildKeys: Seq[String],
       probeTime: String, buildTime: String,
       valueCols: Seq[String],
-      bucket: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      bucket: Column => Column,
       strict: Boolean = false,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val pCols = probe.columns.toSeq
-    require(probeKeys.nonEmpty && probeKeys.size == buildKeys.size,
-      s"need matching non-empty key lists, got $probeKeys / $buildKeys")
-    require(valueCols.nonEmpty, "valueCols must not be empty")
-    require(valueCols.forall(!pCols.contains(_)),
-      s"value columns ${valueCols.filter(pCols.contains)} collide with probe columns")
-    require(!(pCols ++ valueCols ++ tieBreak).exists(_.startsWith("__graft_")),
-      "column names with the __graft_ prefix are reserved")
-    val (buildSide, probeSide) = if (strict) (1, 0) else (0, 1)
-    def keyStruct(names: Seq[String]) =
-      struct(names.zipWithIndex.map { case (n, i) => col(n).as(s"k$i") }: _*)
-    // single-key fast path + tie columns: same rationale as
-    // [[joinLatest]] (raw primitive key partitions/sorts cheaper than
-    // a one-field struct; ties fold into the sort instead of a
-    // pre-aggregate)
-    val single = probeKeys.size == 1
-    def keyExpr(names: Seq[String]) =
-      if (single) col(names.head) else keyStruct(names)
-    val probeKeyExpr =
-      if (single) col(probeKeys.head)
-      else when(probeKeys.map(col(_).isNotNull).reduce(_ && _),
-        keyStruct(probeKeys))
-    // same payload elision as [[joinLatest]]: single-key raw key and
-    // the verbatim time copy round-trip, so the originals stay out of
-    // the exchange+sort and are re-aliased back at the end
-    val elided: Set[String] =
-      (if (single) Set(probeKeys.head) else Set.empty[String]) + probeTime
-    val p = probe
-      .select(pCols.filterNot(elided).map(col) ++ Seq(
-        probeKeyExpr.as("__graft_k"),
-        col(probeTime).as("__graft_t"),
-        lit(probeSide).as("__graft_side")): _*)
-    def tieExpr =
-      if (tieBreak.size == 1) col(tieBreak.head)
-      else struct(tieBreak.map(col): _*)
-    val b = build
-      .filter(buildKeys.map(col(_).isNotNull).reduce(_ && _) &&
-        col(buildTime).isNotNull)
-      .select(Seq(
-        keyExpr(buildKeys).as("__graft_k"),
-        col(buildTime).as("__graft_t"),
-        lit(buildSide).as("__graft_side"),
-        struct(valueCols.map(col): _*).as("__graft_v")) ++
-        (if (tieBreak.isEmpty) Nil
-         else Seq(tieExpr.as("__graft_tb"))): _*)
-    val u = p.unionByName(b, allowMissingColumns = true)
-      .withColumn("__graft_b", bucket(col("__graft_t")))
-    // Each bucket's closing build value: the (t, side[, tie])-max
-    // build row. Computed from the BUILD side plus the probe's
-    // DISTINCT (key, bucket) pairs — not by aggregating `u` — because
-    // Spark 4.1's AQE cannot reuse identical exchanges above cached
-    // relations (TableCacheQueryStage canonicalization keeps
-    // per-reference stage ids; see TextQueries.tfidfSig), so a closing
-    // aggregate over `u` re-computed AND re-shuffled the full-width
-    // union a second time. The probe keys contribute only group
-    // EXISTENCE (a probe-only bucket needs a carry row), so the
-    // second pass now moves ~16 bytes/row of keys instead of the
-    // payload (guide §2.3); the full-outer join below reproduces
-    // exactly the (key, bucket) group set the u-aggregate had, with
-    // close = max over build rows and null where none.
-    val closeOrd = Seq(col("__graft_t"), col("__graft_side")) ++
-      (if (tieBreak.isEmpty) Nil else Seq(col("__graft_tb")))
-    val probeKB = p
-      .select(col("__graft_k"),
-        bucket(col("__graft_t")).as("__graft_b"))
-      .distinct()
-    val buildClose = b
-      .withColumn("__graft_b", bucket(col("__graft_t")))
-      .groupBy(col("__graft_k"), col("__graft_b"))
-      .agg(max_by(col("__graft_v"), struct(closeOrd: _*))
-        .as("__graft_close"))
-    val closing = probeKB
-      .join(buildClose, Seq("__graft_k", "__graft_b"), "full_outer")
-    val wCarry = Window.partitionBy("__graft_k").orderBy(col("__graft_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = closing.withColumn("__graft_carry",
-      last(col("__graft_close"), ignoreNulls = true).over(wCarry))
-      .select(col("__graft_k"), col("__graft_b"), col("__graft_carry"))
-    val wIn = Window.partitionBy("__graft_k", "__graft_b")
-      .orderBy(closeOrd: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // join on (key, bucket) is co-partitioned with the bucket window's
-    // required distribution — one shuffle of the big frame, reused
-    val restored = pCols.map {
-      case c if single && c == probeKeys.head => col("__graft_k").as(c)
-      case c if c == probeTime                => col("__graft_t").as(c)
-      case c                                  => col(c)
+      tieBreak: Seq[String] = Nil): DataFrame =
+    unionWindow(probe, build, probeKeys, buildKeys, probeTime, buildTime,
+        valueCols, strict, tieBreak) { (p, b, ord) =>
+      val u = p.unionByName(b, allowMissingColumns = true)
+        .withColumn("__graft_b", bucket(col("__graft_t")))
+      // Each bucket's closing build value: the (t, side[, tie])-max
+      // build row. Computed from the BUILD side plus the probe's
+      // DISTINCT (key, bucket) pairs — not by aggregating `u` —
+      // because Spark 4.1's AQE cannot reuse identical exchanges above
+      // cached relations (TableCacheQueryStage canonicalization keeps
+      // per-reference stage ids; see TextQueries.tfidfSig), so a
+      // closing aggregate over `u` re-computed AND re-shuffled the
+      // full-width union a second time. The probe keys contribute
+      // only group EXISTENCE (a probe-only bucket needs a carry row),
+      // so the second pass moves ~16 bytes/row of keys instead of the
+      // payload (guide §2.3); the full-outer join below reproduces
+      // exactly the (key, bucket) group set the u-aggregate had, with
+      // close = max over build rows and null where none.
+      val probeKB = p
+        .select(col("__graft_k"),
+          bucket(col("__graft_t")).as("__graft_b"))
+        .distinct()
+      val buildClose = b
+        .withColumn("__graft_b", bucket(col("__graft_t")))
+        .groupBy(col("__graft_k"), col("__graft_b"))
+        .agg(max_by(col("__graft_v"), struct(ord: _*))
+          .as("__graft_close"))
+      val closing = probeKB
+        .join(buildClose, Seq("__graft_k", "__graft_b"), "full_outer")
+      val wCarry = Window.partitionBy("__graft_k").orderBy(col("__graft_b"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val carry = closing.withColumn("__graft_carry",
+        last(col("__graft_close"), ignoreNulls = true).over(wCarry))
+        .select(col("__graft_k"), col("__graft_b"), col("__graft_carry"))
+      val wIn = Window.partitionBy("__graft_k", "__graft_b")
+        .orderBy(ord: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      // join on (key, bucket) is co-partitioned with the bucket
+      // window's required distribution — one shuffle of the big
+      // frame, reused
+      u.join(carry, Seq("__graft_k", "__graft_b"), "left")
+        .withColumn("__graft_in",
+          last(col("__graft_v"), ignoreNulls = true).over(wIn))
+        .withColumn("__graft_asof",
+          coalesce(col("__graft_in"), col("__graft_carry")))
     }
-    u.join(carry, Seq("__graft_k", "__graft_b"), "left")
-      .withColumn("__graft_in",
-        last(col("__graft_v"), ignoreNulls = true).over(wIn))
-      .withColumn("__graft_asof",
-        coalesce(col("__graft_in"), col("__graft_carry")))
-      .filter(col("__graft_side") === probeSide)
-      .select(restored ++
-        valueCols.map(v => col(s"__graft_asof.$v").as(v)): _*)
-  }
 
   /** The routing decision [[joinLatestAuto]] makes, exposed so tests
     * (and curious callers) can see WHY a plan was chosen. When
@@ -407,84 +353,37 @@ object AsOf {
       tMin: Double,
       width: Double)
 
-  /** Probe the key distribution with ONE aggregate and decide plain vs
-    * bucketed: per-key counts (map-side partial agg does the heavy
-    * lifting) rolled up to (hottest-key row count, hottest-key time
-    * range). Cost is one extra shuffle of (key, time) pairs — small
-    * next to the as-of window itself; callers who already know their
-    * skew should call [[joinLatest]] / [[joinLatestBucketed]] directly
-    * and skip the probe. The queries route with [[autoPlanSampled]];
-    * this exact probe stays as the reference the sampled decision is
-    * tested against.
-    */
-  def autoPlan(
-      probe: DataFrame, build: DataFrame,
-      probeKeys: Seq[String], buildKeys: Seq[String],
-      probeTime: String, buildTime: String,
-      targetRowsPerTask: Long = 1L << 20): AutoPlan = {
-    require(targetRowsPerTask > 0, "targetRowsPerTask must be positive")
-    def keyStruct(names: Seq[String]) =
-      struct(names.zipWithIndex.map { case (n, i) => col(n).as(s"k$i") }: _*)
-    // both sides land in the same window partition, so skew = combined
-    // per-key row count; cast-to-double works for numeric AND
-    // timestamp time columns (epoch seconds with fraction).
-    // Null-key rows are excluded to mirror joinLatest's match
-    // semantics (build nulls are dropped, probe nulls match nothing):
-    // inside a struct null FIELDS compare equal, so without the filter
-    // a mostly-null key column would read as one giant hot key and
-    // spuriously route to the bucketed plan (ADVICE r8). Skew is
-    // measured over keys that can actually match.
-    val keyed = probe
-      .filter(probeKeys.map(col(_).isNotNull).reduce(_ && _))
-      .select(keyStruct(probeKeys).as("__graft_k"),
-        col(probeTime).cast("double").as("__graft_t"))
-      .unionByName(build
-        .filter(buildKeys.map(col(_).isNotNull).reduce(_ && _))
-        .select(keyStruct(buildKeys).as("__graft_k"),
-          col(buildTime).cast("double").as("__graft_t")))
-    val perKey = keyed.groupBy("__graft_k")
-      .agg(count(lit(1)).as("__graft_c"),
-        min("__graft_t").as("__graft_tmn"),
-        max("__graft_t").as("__graft_tmx"))
-    val top = perKey
-      .agg(max(col("__graft_c")).as("maxc"),
-        max_by(struct(col("__graft_tmn"), col("__graft_tmx")),
-          col("__graft_c")).as("hot"))
-      .collect() // 1 row — the probe aggregate, bounded by construction
-    if (top.isEmpty || top(0).isNullAt(0))
-      return AutoPlan(bucketed = false, 0L, 1, 0.0, 1.0)
-    val maxKeyRows = top(0).getLong(0)
-    if (maxKeyRows <= targetRowsPerTask)
-      return AutoPlan(bucketed = false, maxKeyRows, 1, 0.0, 1.0)
-    val hot = top(0).getStruct(1)
-    val (tMin, tMax) =
-      if (hot == null || hot.isNullAt(0)) (0.0, 0.0)
-      else (hot.getDouble(0), hot.getDouble(1))
-    val nBuckets = math.min(
-      math.ceil(maxKeyRows.toDouble / targetRowsPerTask).toLong, 1L << 20).toInt
-    // a hot key whose history all carries ONE timestamp can't be
-    // split by time — the epsilon floor collapses it to one bucket
-    // (same wall-clock as plain, still correct)
-    val width = math.max((tMax - tMin) / nBuckets, 1e-9)
-    AutoPlan(bucketed = true, maxKeyRows, nBuckets, tMin, width)
-  }
-
-  /** Sampled routing probe: [[autoPlan]]'s skew measurement over a
-    * Bernoulli sample of both sides, with counts scaled back up by
-    * 1/fraction. The exact probe shuffles every (key, time) pair —
-    * ~0.8 s of q70's 2.3 s at sf1 against a 0.6 s oracle (VERDICT r17
-    * #1) and proportionally worse at 100 TB, where a full extra pass
-    * over the fact table to pick a PLAN is absurd. Routing is a
-    * performance decision, not a correctness one (both routes return
-    * identical results; ScaleOpsSpec proves the plain window
-    * spill-safe past 10⁶ rows/key), so an estimate is the right
-    * cost: a key hot enough to matter at the default 2²⁰-row target
-    * puts ~20k rows in a 2% sample — detection is never in doubt;
-    * only keys straddling the threshold can mis-route, where either
-    * plan is fine. The sampled hot-key time range may be narrower
-    * than the true range: `floor((t − tMin)/width)` stays monotone
-    * for out-of-range times (negative / >nBuckets ids), so the
-    * bucketed plan is still correct, merely ±1 task off target.
+  /** The routing probe behind [[joinLatestAuto]]: ONE aggregate
+    * decides plain vs bucketed: per-key counts (map-side
+    * partial agg does the heavy lifting) rolled up to (hottest-key row
+    * count, hottest-key time range). Both sides land in the same
+    * window partition, so skew = combined per-key row count;
+    * cast-to-double works for numeric AND timestamp time columns
+    * (epoch seconds with fraction). Null-key rows are excluded to
+    * mirror joinLatest's match semantics (build nulls are dropped,
+    * probe nulls match nothing): inside a struct null FIELDS compare
+    * equal, so without the filter a mostly-null key column would read
+    * as one giant hot key and spuriously route to the bucketed plan
+    * (ADVICE r8). Callers who already know their skew should call
+    * [[joinLatest]] / [[joinLatestBucketed]] directly and skip the
+    * probe.
+    *
+    * The probe measures a sample of both sides and scales the counts
+    * back up by 1/fraction; `fraction = 1.0` counts every row. An
+    * exact probe shuffles every (key, time) pair — ~0.8 s of q70's
+    * 2.3 s at sf1 against a 0.6 s oracle (VERDICT r17 #1) and
+    * proportionally worse at 100 TB, where a full extra pass over the
+    * fact table to pick a PLAN is absurd. Routing is a performance
+    * decision, not a correctness one (both routes return identical
+    * results; ScaleOpsSpec proves the plain window spill-safe past
+    * 10⁶ rows/key), so an estimate is the right cost: a key hot
+    * enough to matter at the default 2²⁰-row target puts ~20k rows in
+    * a 2% sample — detection is never in doubt; only keys straddling
+    * the threshold can mis-route, where either plan is fine. The
+    * sampled hot-key time range may be narrower than the true range:
+    * `floor((t − tMin)/width)` stays monotone for out-of-range times
+    * (negative / >nBuckets ids), so the bucketed plan is still
+    * correct, merely ±1 task off target.
     *
     * Sampling is a HASH-mod predicate (xxhash64(key, time, seed) %
     * round(1/fraction) == 0), not `.sample()`: the Bernoulli sampler
@@ -497,7 +396,7 @@ object AsOf {
     * a hot key's rows sample uniformly. Deterministic by construction
     * ⇒ the routing decision is reproducible run-to-run.
     */
-  def autoPlanSampled(
+  def autoPlan(
       probe: DataFrame, build: DataFrame,
       probeKeys: Seq[String], buildKeys: Seq[String],
       probeTime: String, buildTime: String,
@@ -541,19 +440,13 @@ object AsOf {
       else (hot.getDouble(0), hot.getDouble(1))
     val nBuckets = math.min(
       math.ceil(maxKeyRows.toDouble / targetRowsPerTask).toLong, 1L << 20).toInt
+    // a hot key whose history all carries ONE timestamp can't be
+    // split by time — the epsilon floor collapses it to one bucket
+    // (same wall-clock as plain, still correct)
     val width = math.max((tMax - tMin) / nBuckets, 1e-9)
     AutoPlan(bucketed = true, maxKeyRows, nBuckets, tMin, width)
   }
 
-  /** Skew-adaptive as-of join: same semantics as [[joinLatest]], with
-    * the plain-vs-bucketed routing made automatic (VERDICT r7 item 4 —
-    * a caller with an unknown-skew key set no longer has to guess).
-    * Runs [[autoPlan]]'s one-aggregate probe; uniform keys take the
-    * plain single-window plan, a key hotter than `targetRowsPerTask`
-    * rows takes [[joinLatestBucketed]] with the bucket width derived
-    * from the hot key's own time range. The default target (2²⁰ rows)
-    * is the per-task window size proven spill-safe in ScaleOpsSpec.
-    */
   // Routing-decision memo: the probe's answer is a property of the
   // INPUTS (semantic plan hash of both frames — covers source paths,
   // filters, projections — plus the key/time columns and the target),
@@ -565,6 +458,16 @@ object AsOf {
   private val planCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int, String), AutoPlan]()
 
+  /** Skew-adaptive as-of join: same semantics as [[joinLatest]], with
+    * the routing made automatic (VERDICT r7 item 4 — a caller with an
+    * unknown-skew key set no longer has to guess). Runs [[autoPlan]]'s
+    * sampled one-aggregate probe; uniform keys take the plain plan
+    * (the compact tier when eligible), a key hotter than
+    * `targetRowsPerTask` rows takes [[joinLatestBucketed]] with the
+    * bucket width derived from the hot key's own time range. The
+    * default target (2²⁰ rows) is the per-task window size proven
+    * spill-safe in ScaleOpsSpec.
+    */
   def joinLatestAuto(
       probe: DataFrame, build: DataFrame,
       probeKeys: Seq[String], buildKeys: Seq[String],
@@ -573,18 +476,13 @@ object AsOf {
       strict: Boolean = false,
       targetRowsPerTask: Long = 1L << 20,
       tieBreak: Seq[String] = Nil): DataFrame = {
-    // default route probes with the SAMPLED skew measurement — an
-    // estimate is the right price for a pure performance decision
-    // (see autoPlanSampled; the exact probe cost q70 ~0.84 s per call
-    // at sf1). Callers needing the exact measurement call autoPlan
-    // and the precomputed-plan overload.
     val key = (probe.queryExecution.analyzed.semanticHash(),
       build.queryExecution.analyzed.semanticHash(),
       s"$probeKeys/$buildKeys/$probeTime/$buildTime/$targetRowsPerTask")
     if (planCache.size > 256) planCache.clear()
     val plan = planCache.computeIfAbsent(key, _ =>
-      autoPlanSampled(probe, build, probeKeys, buildKeys, probeTime,
-        buildTime, targetRowsPerTask))
+      autoPlan(probe, build, probeKeys, buildKeys, probeTime, buildTime,
+        targetRowsPerTask))
     joinLatestAuto(probe, build, probeKeys, buildKeys, probeTime, buildTime,
       valueCols, strict, plan, tieBreak)
   }
@@ -593,20 +491,9 @@ object AsOf {
     * time) on every call, so a caller doing SEVERAL as-of joins
     * against the same build side should probe once and pass the
     * resulting [[AutoPlan]] here — each join then pays only its own
-    * window, not a fresh probe (VERDICT r8 #3).
-    */
-  def joinLatestAuto(
-      probe: DataFrame, build: DataFrame,
-      probeKeys: Seq[String], buildKeys: Seq[String],
-      probeTime: String, buildTime: String,
-      valueCols: Seq[String],
-      strict: Boolean,
-      plan: AutoPlan): DataFrame =
-    joinLatestAuto(probe, build, probeKeys, buildKeys, probeTime, buildTime,
-      valueCols, strict, plan, tieBreak = Nil)
-
-  /** Precomputed-plan form with tie-break columns — see [[joinLatest]]
-    * for the tie semantics.
+    * window, not a fresh probe (VERDICT r8 #3). Only one overload may
+    * carry default arguments, so `strict` and `tieBreak` are explicit
+    * here.
     */
   def joinLatestAuto(
       probe: DataFrame, build: DataFrame,

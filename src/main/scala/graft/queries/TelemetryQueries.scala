@@ -311,8 +311,11 @@ object TelemetryQueries {
         // semantics. Routed to the COMPACT tier (per-key sorted
         // history arrays + codegen binary search — AsOf scaladoc):
         // per-customer order counts are bounded at every sf, the
-        // shape this tier exists for; the union-window plain tier
-        // stays oracle-pinned via q29, bucketed via q69.
+        // shape this tier exists for. q70's router picks the same
+        // tier and q69's the bucketed one; no query plans the
+        // union-window tier (q29 runs priorOtherTypeMax), so only
+        // PropertySpec's plain/compact/bucketed differential checks
+        // it.
         val (probe, build) = asofSides(s, dir)
         graft.operators.AsOf.joinLatestCompact(
             probe, build, Seq("user_id"), Seq("k"), "t_us", "bt",

@@ -415,8 +415,8 @@ object MakeMediaFixture {
   }
 
   /** G.711 rows (round 18): `ulaw`/`alaw` QuickTime sample entries,
-    * REAL-decoded through the seam's built-in [[graft.functions
-    * .G711PacketDecoder]]. Truth = the ITU expansion of the exact
+    * REAL-decoded through the ITU-T G.711 expansion
+    * ([[Multimodal.g711Table]]). Truth = the ITU expansion of the exact
     * bytes the payload carries (decode ∘ encode is the quantized
     * sample — the same truth-from-payload discipline as the PCM
     * rows; the expansion tables themselves are pinned to published
@@ -430,8 +430,8 @@ object MakeMediaFixture {
     val nFrames = 500 + 137 * j
     val shorts = Array.tabulate(nFrames * channels)(audioSample(200 + j))
     val bytes = shorts.map(g711Encode(alaw, _))
-    val decoded = graft.functions.G711PacketDecoder
-      .decodePacket(codec, bytes, channels, rate).get
+    val table = Multimodal.g711Table(codec).get
+    val decoded = bytes.map(b => table(b & 0xff))
     var sqSum = 0L
     var peak = 0
     decoded.foreach { s =>

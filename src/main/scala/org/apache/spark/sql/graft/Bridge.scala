@@ -44,14 +44,4 @@ object Bridge {
   def plannerStrategies(
       spark: org.apache.spark.sql.SparkSession): Seq[Any] =
     spark.sessionState.planner.strategies
-
-  /** Strategies a SparkSessionExtensions instance would inject at
-    * session build (buildPlannerStrategies is private[sql]) — lets a
-    * test assert the extension wiring without constructing a session.
-    */
-  def extensionStrategies(
-      ext: org.apache.spark.sql.SparkSessionExtensions,
-      spark: org.apache.spark.sql.SparkSession): Seq[Any] =
-    ext.buildPlannerStrategies(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
 }

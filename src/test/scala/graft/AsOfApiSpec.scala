@@ -25,7 +25,7 @@ class AsOfApiSpec extends SparkSpec {
   ).toDF("k", "t", "tag", "amount")
 
   test("inclusive match takes the latest build row with t <= probe t") {
-    val out = AsOf.joinLatest(probe, build, "k", "k", "t", "t",
+    val out = AsOf.joinLatest(probe, build, Seq("k"), Seq("k"), "t", "t",
       valueCols = Seq("tag", "amount"))
       .select("event_id", "tag").as[(Long, Option[String])]
       .collect().toMap
@@ -37,7 +37,7 @@ class AsOfApiSpec extends SparkSpec {
   }
 
   test("strict match excludes build rows at the probe's exact time") {
-    val out = AsOf.joinLatest(probe, build, "k", "k", "t", "t",
+    val out = AsOf.joinLatest(probe, build, Seq("k"), Seq("k"), "t", "t",
       valueCols = Seq("tag"), strict = true)
       .select("event_id", "tag").as[(Long, Option[String])]
       .collect().toMap
@@ -47,7 +47,7 @@ class AsOfApiSpec extends SparkSpec {
   }
 
   test("value columns stay atomic: both come from the same build row") {
-    val out = AsOf.joinLatest(probe, build, "k", "k", "t", "t",
+    val out = AsOf.joinLatest(probe, build, Seq("k"), Seq("k"), "t", "t",
       valueCols = Seq("tag", "amount"))
       .filter($"event_id" === 2L)
       .select("tag", "amount").as[(String, Double)].head()
@@ -61,7 +61,7 @@ class AsOfApiSpec extends SparkSpec {
     val b = Seq((Some(1L), Some(5L), "x"), (None, Some(1L), "nullkey"),
       (Some(1L), None, "nulltime"))
       .toDF("k", "t", "tag")
-    val out = AsOf.joinLatest(p, b, "k", "k", "t", "t", Seq("tag"))
+    val out = AsOf.joinLatest(p, b, Seq("k"), Seq("k"), "t", "t", Seq("tag"))
       .select("event_id", "tag").as[(Long, Option[String])]
       .collect().toMap
     assert(out.size == 3, "left join keeps every probe row")
@@ -105,7 +105,7 @@ class AsOfApiSpec extends SparkSpec {
     // bucket width 7 puts probe rows and their matching build rows in
     // DIFFERENT buckets (t=20 probes vs t=15 build) — the carry-in
     // path, not just the within-bucket window, is exercised
-    val expected = AsOf.joinLatest(probe, build, "k", "k", "t", "t",
+    val expected = AsOf.joinLatest(probe, build, Seq("k"), Seq("k"), "t", "t",
       Seq("tag", "amount"))
       .select("event_id", "tag", "amount")
       .as[(Long, Option[String], Option[Double])].collect().toSet
@@ -167,7 +167,7 @@ class AsOfApiSpec extends SparkSpec {
     val uniformP = (1 to 200)
       .map(i => (i.toLong, i % 40L, i.toLong + 1)).toDF("event_id", "pk", "pt")
     val planU = AsOf.autoPlan(uniformP, uniformB, Seq("pk"), Seq("k"),
-      "pt", "t", targetRowsPerTask = 25)
+      "pt", "t", targetRowsPerTask = 25, fraction = 1.0)
     assert(!planU.bucketed, s"uniform keys must stay plain: $planU")
     assert(planU.maxKeyRows == 15, planU.toString) // 10 build + 5 probe
 
@@ -177,7 +177,7 @@ class AsOfApiSpec extends SparkSpec {
       .map(i => (if (i <= 360) 7L else i % 10L, i.toLong, i * 2L))
       .toDF("k", "t", "v")
     val planH = AsOf.autoPlan(uniformP, hotB, Seq("pk"), Seq("k"),
-      "pt", "t", targetRowsPerTask = 25)
+      "pt", "t", targetRowsPerTask = 25, fraction = 1.0)
     assert(planH.bucketed && planH.nBuckets > 1,
       s"hot key must route to bucketed: $planH")
     assert(planH.maxKeyRows >= 360, planH.toString)
@@ -206,7 +206,7 @@ class AsOfApiSpec extends SparkSpec {
     // empty inputs: probe aggregate returns no per-key rows — must
     // fall back plain, not throw
     val plan = AsOf.autoPlan(p.limit(0), b.limit(0), Seq("k"), Seq("k"),
-      "ts", "ts")
+      "ts", "ts", fraction = 1.0)
     assert(!plan.bucketed && plan.maxKeyRows == 0L, plan.toString)
   }
 
@@ -222,7 +222,7 @@ class AsOfApiSpec extends SparkSpec {
       (if (i <= 300) None else Some(i % 10L), i.toLong, i * 2L))
       .toDF("k", "t", "v")
     val plan = AsOf.autoPlan(p, b, Seq("pk"), Seq("k"), "pt", "t",
-      targetRowsPerTask = 25)
+      targetRowsPerTask = 25, fraction = 1.0)
     assert(!plan.bucketed,
       s"null keys must not register as a hot key: $plan")
     assert(plan.maxKeyRows <= 4, plan.toString)
@@ -236,14 +236,14 @@ class AsOfApiSpec extends SparkSpec {
       .map(i => (i.toLong, i % 40L, i.toLong + 1)).toDF("event_id", "pk", "pt")
     // probe once, reuse across several joins (VERDICT r8 #3 shape)
     val plan = AsOf.autoPlan(p, b, Seq("pk"), Seq("k"), "pt", "t",
-      targetRowsPerTask = 25)
+      targetRowsPerTask = 25, fraction = 1.0)
     assert(plan.bucketed, plan.toString)
     val expected = AsOf.joinLatest(p, b, Seq("pk"), Seq("k"),
       "pt", "t", Seq("v"), strict = false)
       .select("event_id", "v").as[(Long, Option[Long])].collect().toSet
     for (pl <- Seq(plan, AsOf.AutoPlan(bucketed = false, 0L, 1, 0.0, 1.0))) {
       val got = AsOf.joinLatestAuto(p, b, Seq("pk"), Seq("k"),
-        "pt", "t", Seq("v"), strict = false, pl)
+        "pt", "t", Seq("v"), strict = false, pl, tieBreak = Nil)
         .select("event_id", "v").as[(Long, Option[Long])].collect().toSet
       assert(got == expected, s"plan=$pl: precomputed route != plain")
     }
@@ -338,27 +338,30 @@ class AsOfApiSpec extends SparkSpec {
       .toDF("k", "t", "v")
     val p = (1 to 200)
       .map(i => (i.toLong, i % 40L, i.toLong + 1)).toDF("event_id", "pk", "pt")
-    val exact = AsOf.autoPlan(p, b, Seq("pk"), Seq("k"), "pt", "t",
-      targetRowsPerTask = 25)
-    val full = AsOf.autoPlanSampled(p, b, Seq("pk"), Seq("k"), "pt", "t",
+    // fraction = 1 keeps every row: hot key 7 has 364 build rows
+    // (t = 1..360 and 367, 377, 387, 397) and 5 probe rows (pt = 8,
+    // 48, 88, 128, 168) — 369 rows over t = 1..397, so
+    // ceil(369 / 25) = 15 buckets of width 396 / 15
+    val full = AsOf.autoPlan(p, b, Seq("pk"), Seq("k"), "pt", "t",
       targetRowsPerTask = 25, fraction = 1.0)
-    assert(full == exact, s"fraction=1 must equal the exact probe: $full vs $exact")
-    // empty inputs fall back plain, as the exact probe does
-    val empty = AsOf.autoPlanSampled(p.limit(0), b.limit(0), Seq("pk"),
+    assert(full == AsOf.AutoPlan(bucketed = true, 369L, 15, 1.0, 396.0 / 15),
+      s"fraction=1 must count every row exactly: $full")
+    // empty inputs fall back plain
+    val empty = AsOf.autoPlan(p.limit(0), b.limit(0), Seq("pk"),
       Seq("k"), "pt", "t")
     assert(!empty.bucketed && empty.maxKeyRows == 0L, empty.toString)
     // a genuinely hot key must still route bucketed from a partial
     // sample: scale the fixture so the 2% default sample sees it
     val hotBig = spark.range(0, 60000)
       .selectExpr("7L as k", "id as t", "id * 2 as v")
-    val sampled = AsOf.autoPlanSampled(p, hotBig, Seq("pk"), Seq("k"),
+    val sampled = AsOf.autoPlan(p, hotBig, Seq("pk"), Seq("k"),
       "pt", "t", targetRowsPerTask = 1000)
     assert(sampled.bucketed && sampled.nBuckets > 1,
       s"hot key must route bucketed from the sampled probe: $sampled")
   }
 
   test("the plan is one shuffle + window — no join operator") {
-    val plan = AsOf.joinLatest(probe, build, "k", "k", "t", "t", Seq("tag"))
+    val plan = AsOf.joinLatest(probe, build, Seq("k"), Seq("k"), "t", "t", Seq("tag"))
       .queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("join"),
       s"as-of must be join-free (union+window):\n$plan")

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.Multimodal
 import graft.tools.MakeMediaFixture
+import org.apache.spark.sql.functions.sha2
 
 /** Goldens for the REAL javax.imageio image decode path (round-5
   * upgrade), the REAL javax.sound.sampled audio decode path (round-8
@@ -17,6 +18,17 @@ import graft.tools.MakeMediaFixture
   */
 class MultimodalSpec extends SparkSpec {
   import Multimodal._
+
+  /** A committed fixture table of this checkout: `fixtures/` under the
+    * working directory (the repo root in the forked test JVM), unless
+    * `GRAFT_FIXTURE_DIR` names another one.
+    */
+  private def fixture(name: String): String =
+    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "fixtures") + "/" + name
+
+  private def sha256Hex(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map(x => f"${x & 0xff}%02x").mkString
 
   test("decode recovers exact dims + fixed-point luma for all 48 fixture images") {
     import spark.implicits._
@@ -37,7 +49,7 @@ class MultimodalSpec extends SparkSpec {
   test("committed fixture parquet matches in-memory generation (no drift)") {
     // ns_multimodal_decode reads the COMMITTED fixture; regenerate and
     // compare so an edited formula can't silently diverge from it.
-    val fixDir = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/fixtures") + "/media"
+    val fixDir = fixture("media")
     val onDisk = spark.read.parquet(fixDir)
       .collect().map(r => (r.getAs[Long]("media_id"),
         java.util.Arrays.hashCode(r.getAs[Array[Byte]]("payload")),
@@ -97,7 +109,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("committed audio fixture parquet matches in-memory generation (no drift)") {
-    val fixDir = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/fixtures") + "/audio"
+    val fixDir = fixture("audio")
     val onDisk = spark.read.parquet(fixDir)
       .collect().map(r => (r.getAs[Long]("media_id"),
         java.util.Arrays.hashCode(r.getAs[Array[Byte]]("payload")),
@@ -170,7 +182,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("committed video fixture parquet matches in-memory generation (no drift)") {
-    val fixDir = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/fixtures") + "/video"
+    val fixDir = fixture("video")
     val onDisk = spark.read.parquet(fixDir)
       .collect().map(r => (r.getAs[Long]("media_id"),
         java.util.Arrays.hashCode(r.getAs[Array[Byte]]("payload")),
@@ -306,12 +318,16 @@ class MultimodalSpec extends SparkSpec {
 
   test("committed mp4 fixture parquet matches in-memory generation (no drift)") {
     import spark.implicits._
-    val disk = spark.read.parquet("/root/repo/fixtures/video_mp4")
-      .select("media_id", "true_au_sha", "true_frame_bytes")
-      .as[(Long, String, Long)].collect()
-      .map { case (id, sha, fb) => id -> ((sha, fb)) }.toMap
+    // the payload hash pins the container bytes the encoder writes,
+    // not only the truth columns derived from its inputs
+    val disk = spark.read.parquet(fixture("video_mp4"))
+      .select($"media_id", $"true_au_sha", $"true_frame_bytes",
+        sha2($"payload", 256))
+      .as[(Long, String, Long, String)].collect()
+      .map { case (id, sha, fb, p) => id -> ((sha, fb, p)) }.toMap
     val mem = graft.tools.MakeMediaFixture.mp4Rows
-      .map(r => r.media_id -> ((r.true_au_sha, r.true_frame_bytes))).toMap
+      .map(r => r.media_id ->
+        ((r.true_au_sha, r.true_frame_bytes, sha256Hex(r.payload)))).toMap
     assert(disk == mem)
   }
 
@@ -337,11 +353,8 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("G.711 expansion pinned to published ITU spec vectors; encode round-trips") {
-    import graft.functions.G711PacketDecoder
-    def ulaw(b: Int) =
-      G711PacketDecoder.decodePacket("ulaw", Array(b.toByte), 1, 8000).get(0)
-    def alaw(b: Int) =
-      G711PacketDecoder.decodePacket("alaw", Array(b.toByte), 1, 8000).get(0)
+    def ulaw(b: Int) = g711Table("ulaw").get(b & 0xff)
+    def alaw(b: Int) = g711Table("alaw").get(b & 0xff)
     // µ-law: 0x80 → +32124 (max), 0x00 → -32124, 0xFF → +0, 0x7F → -0
     assert(ulaw(0x80) == 32124 && ulaw(0x00) == -32124, s"${ulaw(0x80)}/${ulaw(0x00)}")
     assert(ulaw(0xFF) == 0 && ulaw(0x7F) == 0)
@@ -349,14 +362,13 @@ class MultimodalSpec extends SparkSpec {
     assert(alaw(0xD5) == 8 && alaw(0x55) == -8, s"${alaw(0xD5)}/${alaw(0x55)}")
     assert(alaw(0xAA) == 32256 && alaw(0x2A) == -32256, s"${alaw(0xAA)}")
     // unknown fourcc refuses rather than guessing
-    assert(G711PacketDecoder.decodePacket("mp4a", Array(1.toByte), 1, 8000).isEmpty)
+    assert(g711Table("mp4a").isEmpty)
     // encode→decode round-trips within the codec's quantization step
     // (spec property: relative error bounded, exact at table points)
     for (alawMode <- Seq(false, true); s <- Seq[Short](0, 7, -8, 100, -1000,
         8191, -16000, 32000, -32635, 32767)) {
       val enc = MakeMediaFixture.g711Encode(alawMode, s)
-      val dec = G711PacketDecoder.decodePacket(
-        if (alawMode) "alaw" else "ulaw", Array(enc), 1, 8000).get(0)
+      val dec = (if (alawMode) alaw(enc) else ulaw(enc)).toInt
       val step = math.max(16, math.abs(s.toInt) / 16 + 1)
       assert(math.abs(dec - s.toInt) <= step,
         s"alaw=$alawMode s=$s dec=$dec step=$step")
@@ -479,8 +491,7 @@ class MultimodalSpec extends SparkSpec {
   test("committed media_resize fixture parquet matches in-memory " +
       "generation (no drift)") {
     import spark.implicits._
-    val disk = spark.read.parquet(sys.env.getOrElse("GRAFT_FIXTURE_DIR",
-        "/root/repo/fixtures") + "/media_resize")
+    val disk = spark.read.parquet(fixture("media_resize"))
       .select("media_id", "true_resized_luma_fp", "true_ok")
       .as[(Long, Long, Boolean)].collect()
       .map { case (id, lu, ok) => id -> ((lu, ok)) }.toMap
@@ -493,13 +504,15 @@ class MultimodalSpec extends SparkSpec {
   test("committed mp4-audio fixture parquet matches in-memory generation " +
       "(no drift)") {
     import spark.implicits._
-    val disk = spark.read.parquet(sys.env.getOrElse("GRAFT_FIXTURE_DIR",
-        "/root/repo/fixtures") + "/audio_mp4")
-      .select("media_id", "true_sq_sum", "true_duration_us")
-      .as[(Long, Long, Long)].collect()
-      .map { case (id, sq, du) => id -> ((sq, du)) }.toMap
+    // payload hash: see the mp4 video drift test
+    val disk = spark.read.parquet(fixture("audio_mp4"))
+      .select($"media_id", $"true_sq_sum", $"true_duration_us",
+        sha2($"payload", 256))
+      .as[(Long, Long, Long, String)].collect()
+      .map { case (id, sq, du, p) => id -> ((sq, du, p)) }.toMap
     val mem = MakeMediaFixture.audioMp4Rows
-      .map(r => r.media_id -> ((r.true_sq_sum, r.true_duration_us))).toMap
+      .map(r => r.media_id ->
+        ((r.true_sq_sum, r.true_duration_us, sha256Hex(r.payload)))).toMap
     assert(disk == mem,
       "committed fixtures/audio_mp4 diverges from MakeMediaFixture — rerun the generator")
   }

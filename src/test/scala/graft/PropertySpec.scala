@@ -134,7 +134,7 @@ class PropertySpec extends SparkSpec {
       // (compact), and the salted-window bucketed form
       val tiers: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
         "plain" -> graft.operators.AsOf.joinLatest(
-          probe, build, "k", "k", "t", "t", Seq("v")),
+          probe, build, Seq("k"), Seq("k"), "t", "t", Seq("v")),
         "compact" -> graft.operators.AsOf.joinLatestCompact(
           probe, build, Seq("k"), Seq("k"), "t", "t", Seq("v")),
         "bucketed" -> graft.operators.AsOf.joinLatestBucketed(

@@ -175,8 +175,8 @@ class QueryPlanSpec extends SparkSpec {
       Registry.queries(name)(spark, sfDir); ()
     }
     spark.catalog.clearCache()
-    val dir = Paths.get(
-      sys.env.getOrElse("GRAFT_REPO_DIR", "/root/repo"), "docs", "plan_golden")
+    // this checkout's goldens: the forked test JVM runs in the repo root
+    val dir = Paths.get("docs", "plan_golden")
     val regen = sys.env.contains("GRAFT_REGEN_PLANS")
     if (regen) Files.createDirectories(dir)
     val failures = graft.tools.PlanGolden.picks.flatMap { name =>

@@ -282,7 +282,7 @@ class ScaleOpsSpec extends SparkSpec {
       val probe = spark.range(1000).select(
         lit("hot").as("pk"), ($"id" * 1000 + 500).as("pt"))
       val out = graft.operators.AsOf.joinLatest(
-        probe, build, "pk", "k", "pt", "t", Seq("v"))
+        probe, build, Seq("pk"), Seq("k"), "pt", "t", Seq("v"))
       out.collect() // materialize so the executed plan carries metrics
       val rows = out.select($"pt", $"v").as[(Long, Long)].collect()
       assert(rows.length == 1000)

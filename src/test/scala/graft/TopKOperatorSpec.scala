@@ -185,14 +185,15 @@ class TopKOperatorSpec extends SparkSpec {
   test("GraftExtensions injects the planner strategy at session build") {
     // the config path (spark.sql.extensions=graft.plans.GraftExtensions)
     // wires TopKStrategy through injectPlannerStrategy — assert the
-    // extension's built strategy list actually carries it, so deleting
-    // the injection can't pass silently
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext)
-    val strategies =
-      org.apache.spark.sql.graft.Bridge.extensionStrategies(ext, spark)
+    // suite's Engine.session plans with it, and that it did not come
+    // from TopK's own experimental fallback, so deleting the injection
+    // can't pass silently
+    val strategies = org.apache.spark.sql.graft.Bridge.plannerStrategies(spark)
     assert(strategies.exists(_.isInstanceOf[graft.plans.TopKStrategy]),
-      s"TopKStrategy missing from extension strategies: $strategies")
+      s"TopKStrategy missing from the session's strategies: $strategies")
+    assert(!spark.experimental.extraStrategies
+      .exists(_.isInstanceOf[graft.plans.TopKStrategy]),
+      "TopKStrategy came from the experimental fallback, not the extension")
   }
 
   test("ensureStrategy does not stack duplicate strategies on repeat calls") {
