@@ -198,6 +198,34 @@ object Multimodal {
       peak: Int,
       decode_ok: Boolean)
 
+  /** The one Σ s² / peak pass of the audio decoders over byte ranges
+    * of `p`: signed 16-bit PCM reads two bytes a sample (big-endian
+    * when `big`), G.711 (`table` non-null) expands one byte through
+    * its table. `n` counts the samples, over all channels.
+    */
+  private final class Energy(p: Array[Byte], big: Boolean,
+      table: Array[Short]) {
+    var sqSum = 0L
+    var peak = 0
+    var n = 0L
+    private val width = if (table == null) 2 else 1
+
+    def add(from: Int, end: Int): Unit = {
+      var i = from
+      while (i + width <= end) {
+        val s =
+          if (table != null) table(p(i) & 0xff).toInt
+          else if (big) ((p(i) << 8) | (p(i + 1) & 0xff)).toShort.toInt
+          else ((p(i + 1) << 8) | (p(i) & 0xff)).toShort.toInt
+        sqSum += s.toLong * s
+        val abs = math.abs(s)
+        if (abs > peak) peak = abs
+        n += 1
+        i += width
+      }
+    }
+  }
+
   /** Real audio decode + feature extraction over opaque binary
     * payloads: `javax.sound.sampled.AudioSystem` (ships in the JDK —
     * WAV, AIFF, AU containers) parses the header and streams PCM
@@ -243,23 +271,11 @@ object Multimodal {
               val channels = fmt.getChannels
               val rate = math.round(fmt.getSampleRate)
               val pcm = ais.readAllBytes()
-              val nSamples = pcm.length / 2
-              val nFrames = nSamples.toLong / channels
-              var sqSum = 0L
-              var peak = 0
-              var i = 0
-              val big = fmt.isBigEndian
-              while (i + 1 < pcm.length) {
-                val s =
-                  if (big) ((pcm(i) << 8) | (pcm(i + 1) & 0xff)).toShort.toInt
-                  else ((pcm(i + 1) << 8) | (pcm(i) & 0xff)).toShort.toInt
-                sqSum += s.toLong * s
-                val a = math.abs(s)
-                if (a > peak) peak = a
-                i += 2
-              }
+              val e = new Energy(pcm, fmt.isBigEndian, null)
+              e.add(0, pcm.length)
+              val nFrames = e.n / channels
               AudioFeatures(rec.media_id, rec.kind, rate, channels, nFrames,
-                nFrames * 1000000L / rate, sqSum, peak, decode_ok = true)
+                nFrames * 1000000L / rate, e.sqSum, e.peak, decode_ok = true)
             }
           } finally ais.close()
         } catch {
@@ -913,35 +929,15 @@ object Multimodal {
                 a.channels, a.samples.size.toLong, a.durationUs,
                 -1L, -1, decode_ok = false)
             else {
-              // one Σ s² / peak pass: PCM16 reads two bytes per
-              // sample ('twos' big-endian), G.711 expands one byte
-              // through its table
-              val p = rec.payload
-              val big = a.codec == "twos"
-              val table = g711.orNull
-              val width = if (pcm16) 2 else 1
-              var sqSum = 0L
-              var peak = 0
-              var nVals = 0L
+              // 'twos' is big-endian PCM16
+              val e = new Energy(rec.payload, a.codec == "twos", g711.orNull)
               a.samples.foreach { case (off, sz) =>
-                var i = off.toInt
-                val end = off.toInt + sz.toInt
-                while (i + width <= end) {
-                  val s =
-                    if (!pcm16) table(p(i) & 0xff).toInt
-                    else if (big) ((p(i) << 8) | (p(i + 1) & 0xff)).toShort.toInt
-                    else ((p(i + 1) << 8) | (p(i) & 0xff)).toShort.toInt
-                  sqSum += s.toLong * s
-                  val abs = math.abs(s)
-                  if (abs > peak) peak = abs
-                  nVals += 1
-                  i += width
-                }
+                e.add(off.toInt, off.toInt + sz.toInt)
               }
-              val nFrames = nVals / a.channels
+              val nFrames = e.n / a.channels
               AudioFeatures(rec.media_id, rec.kind, a.sampleRate,
                 a.channels, nFrames, nFrames * 1000000L / a.sampleRate,
-                sqSum, peak, decode_ok = true)
+                e.sqSum, e.peak, decode_ok = true)
             }
         }
       }

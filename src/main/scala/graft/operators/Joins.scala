@@ -14,10 +14,17 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Joins {
 
+  /** The broadcast budget, unless `spark.graft.broadcast.maxBytes`
+    * overrides it. */
+  private val MaxBytes = 256L << 20
+
+  /** The row cap of [[dimFold]]. */
+  private val MaxFoldRows = 1024
+
   /** Wrap `df` in a broadcast hint when `sizeHint`'s plan-statistics
     * size — INFLATED to an in-memory hash-relation estimate — is at
-    * most `maxBytes`; otherwise return `df` unchanged and let the
-    * planner shuffle. Metadata-only routing: `sizeHint` statistics
+    * most the 256 MB budget; otherwise return `df` unchanged and let
+    * the planner shuffle. Metadata-only routing: `sizeHint` statistics
     * come from file bytes (scans) or cache stats (InMemoryRelation)
     * — no Spark job runs.
     *
@@ -27,7 +34,7 @@ object Joins {
     * executors must hold is a decompressed row-format hash relation
     * over the join OUTPUT — typically 3-6x the file bytes from
     * encoding alone, plus the hash-table overhead and any columns the
-    * joined-in side adds. Comparing the raw stat against `maxBytes`
+    * joined-in side adds. Comparing the raw stat against the budget
     * would admit a "256 MB" side that materializes as multi-GB per
     * executor — the exact OOM this routing exists to avoid (Spark's
     * own autoBroadcastJoinThreshold defaults to 10 MB for the same
@@ -56,10 +63,8 @@ object Joins {
     * instead of an executor OOM.
     */
   def broadcastIfSmall(df: DataFrame, sizeHint: DataFrame,
-      maxBytes: Long = 256L << 20, inflation: Long = 8L,
-      statsKey: String = null): DataFrame =
-    if (fitsBroadcast(sizeHint, maxBytes, inflation, statsKey)) broadcast(df)
-    else df
+      inflation: Long = 8L): DataFrame =
+    if (fitsBroadcast(sizeHint, inflation)) broadcast(df) else df
 
   /** The routing PREDICATE behind [[broadcastIfSmall]], exposed so a
     * caller can shape the REST of its plan around the same decision
@@ -70,30 +75,13 @@ object Joins {
     * shuffle route at toy scale. A value that is not a positive long
     * fails the query rather than silently falling back.
     */
-  def fitsBroadcast(sizeHint: DataFrame, maxBytes: Long = 256L << 20,
-      inflation: Long = 8L, statsKey: String = null): Boolean = {
-    require(maxBytes > 0, "maxBytes must be positive")
+  def fitsBroadcast(sizeHint: DataFrame, inflation: Long = 8L): Boolean = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     require(inflation > 0, "inflation must be positive")
     val budget = graft.Engine.positiveLongConf(sizeHint.sparkSession,
-      "spark.graft.broadcast.maxBytes", maxBytes)
-    // reading the hint's plan statistics runs an extra analyze +
-    // optimize pass over the hint subtree at query-CONSTRUCTION time
-    // — serial driver latency on the query's critical path. For
-    // bare-parquet catalog inputs the statistic is a pure function of
-    // the immutable files, so callers may pass a `statsKey`
-    // (convention: "<dir>#<site>") to memoize it for the JVM
-    // lifetime, the dimFoldCached discipline. Snapshot-versioned
-    // inputs move under commits — such callers must keep the
-    // per-call probe (statsKey = null). An InMemoryRelation that is
-    // not materialized yet reports its source plan's (parquet) bytes,
-    // so a statistic over one is provisional and is not memoized.
-    val (bytes, cachedStat) =
-      if (statsKey == null) statsOf(sizeHint)._1
-      else Option(statsCache.get(statsKey)).getOrElse {
-        val (stat, settled) = statsOf(sizeHint)
-        if (settled) statsCache.putIfAbsent(statsKey, stat)
-        stat
-      }
+      "spark.graft.broadcast.maxBytes", MaxBytes)
+    val plan = sizeHint.queryExecution.optimizedPlan
+    val leaves = plan.collectLeaves()
     // `inflation` converts COMPRESSED parquet file bytes to an
     // in-memory hash-relation estimate (see broadcastIfSmall). When
     // every leaf of the hint plan is an InMemoryRelation the statistic
@@ -102,26 +90,14 @@ object Joins {
     // whose true build is comfortably broadcastable (q47 at the sf3
     // trend point: cached-stat × 8 pushed a ~50 MB build onto a
     // 267 MB lineitem exchange). Over cached stats only the
-    // row-format + hash-table overhead remains: factor 2.
-    val eff = if (cachedStat) 2L.min(inflation) else inflation
-    bytes * eff <= budget
+    // row-format + hash-table overhead remains: factor 2. (A cache
+    // that is not materialized yet reports its source plan's parquet
+    // bytes, so the estimate tightens once it loads.)
+    val cached = leaves.nonEmpty &&
+      leaves.forall(_.isInstanceOf[InMemoryRelation])
+    val eff = if (cached) 2L.min(inflation) else inflation
+    plan.stats.sizeInBytes * eff <= budget
   }
-
-  /** ((bytes, every leaf cached), every cached leaf materialized). */
-  private def statsOf(sizeHint: DataFrame): ((BigInt, Boolean), Boolean) = {
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val plan = sizeHint.queryExecution.optimizedPlan
-    val leaves = plan.collectLeaves()
-    val inMemory = leaves.collect { case r: InMemoryRelation => r }
-    // read before the statistic, so a cache that finishes loading in
-    // between is not memoized with its pre-load size
-    val settled = inMemory.forall(_.cacheBuilder.isCachedColumnBuffersLoaded)
-    val cached = leaves.nonEmpty && inMemory.size == leaves.size
-    ((plan.stats.sizeInBytes, cached), settled)
-  }
-
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (BigInt, Boolean)]()
 
   /** Fold a CONSTANT-cardinality dimension to the driver as plain
     * rows, with a hard cap that fails loudly if the "constant" claim
@@ -135,8 +111,8 @@ object Joins {
     * jobs, and the predicate reaches the parquet row-group pruner.
     *
     * This is NOT for customer/part/supplier-class dims (they grow
-    * with SF; that's [[broadcastIfSmall]]'s territory). The `maxRows`
-    * cap (default 1024) is the contract's teeth: a mis-classified
+    * with SF; that's [[broadcastIfSmall]]'s territory). The 1024-row
+    * cap ([[MaxFoldRows]]) is the contract's teeth: a mis-classified
     * growing dim fails the require at ANY scale rather than silently
     * ballooning driver memory — same bounded-collect discipline as
     * AsOf's one-row probes.
@@ -146,30 +122,13 @@ object Joins {
     * (master/master.ino:151-168) rather than re-discovering it per
     * poll.
     */
-  def dimFold(df: DataFrame, cols: Seq[String],
-      maxRows: Int = 1024): Seq[org.apache.spark.sql.Row] = {
+  def dimFold(df: DataFrame, cols: Seq[String]): Seq[org.apache.spark.sql.Row] = {
     require(cols.nonEmpty, "dimFold needs at least one column")
     val rows = df.select(cols.head, cols.tail: _*)
-      .limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"dimFold: ${cols.mkString(",")} exceeded $maxRows rows — this " +
+      .limit(MaxFoldRows + 1).collect()
+    require(rows.length <= MaxFoldRows,
+      s"dimFold: ${cols.mkString(",")} exceeded $MaxFoldRows rows — this " +
         "dimension grows with scale; use broadcastIfSmall instead")
     rows.toSeq
   }
-
-  private val foldCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[String]), Seq[org.apache.spark.sql.Row]]()
-
-  /** [[dimFold]] memoized for the JVM lifetime under a caller-chosen
-    * key (convention: `"<dir>/<table>"`). Domain-constant dims are by
-    * definition the same rows for the life of a session, so paying a
-    * collect job per QUERY for the 25 nation rows is waste — the fold
-    * is metadata, cached the way Catalog memoizes table DataFrames.
-    * Do NOT use for snapshot-versioned tables (their content moves
-    * under commits — take the per-call [[dimFold]] instead); the
-    * bare-parquet catalog dims this exists for are immutable inputs.
-    */
-  def dimFoldCached(key: String, df: => DataFrame, cols: Seq[String],
-      maxRows: Int = 1024): Seq[org.apache.spark.sql.Row] =
-    foldCache.computeIfAbsent((key, cols), _ => dimFold(df, cols, maxRows))
 }

@@ -15,17 +15,20 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  /** The session artifact store: every write-once artifact (signature
-    * tables, labels, inverted indexes, IVF lists, PQ models, the
-    * contamination bloom, bucketed index tables) is built at most once
-    * per (session, sf dir, kind), then reused by every query in the
-    * session — the local stand-in for "write the artifact to parquet
-    * once" at 100 TB. Each key builds under its own cell's lock, never
-    * under a map lock (builders recurse: labels -> mhbk -> shingles);
-    * a racing caller waits instead of building a duplicate. Frames
-    * reference their session, so weak keys cannot reclaim a cached
-    * entry: [[clearArtifacts]] releases a session's artifacts. No byte
-    * budget: Spark's block manager already evicts LRU blocks.
+  /** The session artifact store, the engine's one cache: every
+    * write-once artifact (signature tables, labels, inverted indexes,
+    * IVF lists, PQ models, the contamination bloom, bucketed index
+    * tables) and every once-per-session value (catalog table frames,
+    * folded dims, as-of routing plans, source sizes) is built at most
+    * once per (session, sf dir, kind), then reused by every query in
+    * the session — the local stand-in for "write the artifact to
+    * parquet once" at 100 TB. Each key builds under its own cell's
+    * lock, never under a map lock (builders recurse: labels -> mhbk
+    * -> shingles -> table); a racing caller waits instead of building
+    * a duplicate. Frames reference their session, so weak keys cannot
+    * reclaim a cached entry: [[clearArtifacts]] releases a session's
+    * entries. No byte budget: Spark's block manager already evicts
+    * LRU blocks.
     */
   private val artifacts = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Artifact]]())
@@ -60,7 +63,7 @@ object PipelineQueries {
     * kind), and a hit returns the stored value untouched. The cell is
     * looked up under the store's lock, the build runs outside it.
     */
-  private[queries] def memo[T](s: SparkSession, dir: String, kind: String)(
+  private[graft] def memo[T](s: SparkSession, dir: String, kind: String)(
       build: => T): T = {
     val cell = artifacts.synchronized {
       artifacts.computeIfAbsent(s, _ => new ConcurrentHashMap[String, Artifact]())
@@ -88,12 +91,13 @@ object PipelineQueries {
       cached
     }
 
-  /** Release every artifact stored for `s`: unpersist cached frames and
-    * checkpoint blocks, forget driver values and table names (bucketed
-    * tables live in the session catalog + warehouse, not the block
-    * cache; a rebuild overwrites them in place). A memo call racing the
-    * clear builds into a fresh cell, which the next clear releases; a
-    * frame it was already handed may be released under it.
+  /** Release every entry stored for `s`: unpersist cached frames
+    * (catalog tables included) and checkpoint blocks, forget driver
+    * values and table names (bucketed tables live in the session
+    * catalog + warehouse, not the block cache; a rebuild overwrites
+    * them in place). A memo call racing the clear builds into a fresh
+    * cell, which the next clear releases; a frame it was already
+    * handed may be released under it.
     */
   def clearArtifacts(s: SparkSession): Unit =
     Option(artifacts.remove(s)).foreach(_.values.forEach(_.release()))
@@ -121,28 +125,21 @@ object PipelineQueries {
       table: String = "documents"): Int = {
     val target = graft.Engine.positiveLongConf(s,
       "spark.graft.artifact.targetBytes", 262144L)
-    val bytes = sourceBytes(dir, table)
+    val bytes = memo(s, dir, s"bytes:$table") {
+      val root = java.nio.file.Paths.get(dir, s"$table.parquet")
+      if (java.nio.file.Files.isRegularFile(root))
+        java.nio.file.Files.size(root)
+      else if (java.nio.file.Files.isDirectory(root)) {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.walk(root).iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(java.nio.file.Files.size(_)).sum
+      } else 0L
+    }
     val cap = s.sessionState.conf.numShufflePartitions
     val byVolume = math.ceil(bytes.toDouble / target).toLong
     math.max(math.min(8, cap), math.min(cap.toLong, byVolume)).toInt
   }
-
-  private val srcBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def sourceBytes(dir: String, table: String): Long =
-    srcBytesCache.computeIfAbsent(s"$dir/$table", { _ =>
-      val root = java.nio.file.Paths.get(dir, s"$table.parquet")
-      if (java.nio.file.Files.isRegularFile(root))
-        java.lang.Long.valueOf(java.nio.file.Files.size(root))
-      else if (java.nio.file.Files.isDirectory(root)) {
-        import scala.jdk.CollectionConverters._
-        java.lang.Long.valueOf(
-          java.nio.file.Files.walk(root).iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size(_)).sum)
-      } else java.lang.Long.valueOf(0L)
-    }).longValue()
 
   /** Build every domain's standing artifacts outside a timed region
     * (the bench warm path; the dedup/ANN/text/curation tiers build on

@@ -109,6 +109,25 @@ object TelemetryQueries {
           unix_micros(col("o_orderdate").cast("timestamp")).as("bt"),
           col("o_orderkey").as("last_order")))
 
+  /** q59's as-of join over [[asofSides]], routed by an
+    * [[graft.operators.AsOf.autoPlan]] probe at `target` rows per task;
+    * the probe runs once per session (store kind `asof-plan:<target>`).
+    */
+  private def asofAuto(s: SparkSession, dir: String,
+      target: Long): DataFrame = {
+    val (probe, build) = asofSides(s, dir)
+    val plan = PipelineQueries.memo(s, dir, s"asof-plan:$target") {
+      graft.operators.AsOf.autoPlan(probe, build, Seq("user_id"), Seq("k"),
+        "t_us", "bt", targetRowsPerTask = target)
+    }
+    graft.operators.AsOf.joinLatestAuto(
+        probe, build, Seq("user_id"), Seq("k"), "t_us", "bt",
+        valueCols = Seq("last_order"), strict = false, plan = plan,
+        tieBreak = Seq("last_order"))
+      .select("event_id", "last_order")
+      .orderBy("event_id")
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // F9/F11/P8 — epoch assembly + timestamp threshold
@@ -339,13 +358,7 @@ object TelemetryQueries {
         // closing-value aggregate and in-bucket window both carry the
         // tie ordering, so THIS row now also pins the salted-window
         // tie machinery against DuckDB's pre-aggregated ASOF
-        val (probe, build) = asofSides(s, dir)
-        graft.operators.AsOf.joinLatestAuto(
-            probe, build, Seq("user_id"), Seq("k"), "t_us", "bt",
-            valueCols = Seq("last_order"), strict = false,
-            targetRowsPerTask = 16, tieBreak = Seq("last_order"))
-          .select("event_id", "last_order")
-          .orderBy("event_id")
+        asofAuto(s, dir, target = 16)
       }),
 
     // J6 auto-routed, default target — the router must pick the PLAIN
@@ -369,13 +382,7 @@ object TelemetryQueries {
         // (see q59); the routing probe is the SAMPLED one by default
         // since round 18 (the exact probe was ~0.84 s of this query's
         // 2.3 s at sf1, VERDICT r17 #1)
-        val (probe, build) = asofSides(s, dir)
-        graft.operators.AsOf.joinLatestAuto(
-            probe, build, Seq("user_id"), Seq("k"), "t_us", "bt",
-            valueCols = Seq("last_order"), strict = false,
-            tieBreak = Seq("last_order"))
-          .select("event_id", "last_order")
-          .orderBy("event_id")
+        asofAuto(s, dir, target = 1L << 20)
       }),
 
     // W-family extension — hourly gap-fill + forward-fill: the

@@ -7,7 +7,8 @@ import org.apache.spark.storage.StorageLevel
 /** The session artifact store (PipelineQueries.memo): one build per
   * (session, dir, kind) under concurrency, `warmShared` covering every
   * artifact a query builds, and `clearArtifacts` releasing every block
-  * the store holds — cached frames and checkpoint RDDs alike.
+  * the store holds — cached frames and checkpoint RDDs alike — and
+  * every other engine cache, the catalog's table frames included.
   */
 class ArtifactStoreSpec extends SparkSpec {
 
@@ -56,6 +57,14 @@ class ArtifactStoreSpec extends SparkSpec {
     PipelineQueries.clearArtifacts(spark)
     assert(first.storageLevel == StorageLevel.NONE)
     assert((get() ne first) && builds.get == 2)
+  }
+
+  test("clearArtifacts releases the catalog's table frames") {
+    val first = Catalog.table(spark, sfDir, "nation")
+    assert(Catalog.table(spark, sfDir, "nation") eq first)
+    PipelineQueries.clearArtifacts(spark)
+    assert(Catalog.table(spark, sfDir, "nation") ne first,
+      "the catalog kept a frame across clearArtifacts")
   }
 
   test("after warmShared, constructing every query persists nothing new") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.AsOf
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The public as-of join operator over arbitrary frames: linear
@@ -23,6 +24,16 @@ class AsOfApiSpec extends SparkSpec {
     (1L, 15L, "b", 200.0),
     (2L, 50L, "c", 300.0)
   ).toDF("k", "t", "tag", "amount")
+
+  /** [[AsOf.joinLatestAuto]] routed by a fresh [[AsOf.autoPlan]]
+    * probe at `target` rows per task. */
+  private def auto(p: DataFrame, b: DataFrame, pk: String, bk: String,
+      pt: String, bt: String, valueCols: Seq[String], strict: Boolean,
+      target: Long): DataFrame =
+    AsOf.joinLatestAuto(p, b, Seq(pk), Seq(bk), pt, bt, valueCols, strict,
+      AsOf.autoPlan(p, b, Seq(pk), Seq(bk), pt, bt,
+        targetRowsPerTask = target),
+      tieBreak = Nil)
 
   test("inclusive match takes the latest build row with t <= probe t") {
     val out = AsOf.joinLatest(probe, build, Seq("k"), Seq("k"), "t", "t",
@@ -187,8 +198,8 @@ class AsOfApiSpec extends SparkSpec {
       val expected = AsOf.joinLatest(uniformP, b, Seq("pk"), Seq("k"),
         "pt", "t", Seq("v"), strict)
         .select("event_id", "v").as[(Long, Option[Long])].collect().toSet
-      val got = AsOf.joinLatestAuto(uniformP, b, Seq("pk"), Seq("k"),
-        "pt", "t", Seq("v"), strict, targetRowsPerTask = 25)
+      val got = auto(uniformP, b, "pk", "k", "pt", "t", Seq("v"), strict,
+        target = 25)
         .select("event_id", "v").as[(Long, Option[Long])].collect().toSet
       assert(got == expected, s"strict=$strict auto != plain")
     }
@@ -199,8 +210,8 @@ class AsOfApiSpec extends SparkSpec {
       .toDF("event_id", "k", "ts")
     val b = Seq((1L, java.sql.Timestamp.valueOf("2026-01-01 00:00:05"), "x"))
       .toDF("k", "ts", "tag")
-    val out = AsOf.joinLatestAuto(p, b, Seq("k"), Seq("k"), "ts", "ts",
-      Seq("tag"), strict = false, targetRowsPerTask = 1)
+    val out = auto(p, b, "k", "k", "ts", "ts", Seq("tag"), strict = false,
+      target = 1)
       .select("tag").as[Option[String]].head()
     assert(out.contains("x"), s"timestamp auto route: $out")
     // empty inputs: probe aggregate returns no per-key rows — must
@@ -379,16 +390,16 @@ class AsOfApiSpec extends SparkSpec {
     val p = Seq((10L, 1L, 6L), (11L, 1L, 3L), (12L, 2L, 1L))
       .toDF("event_id", "k", "pt")
     // bounded fanout ⇒ the router would pick compact if eligible
-    val got = AsOf.joinLatestAuto(p, b, Seq("k"), Seq("k"), "pt", "t",
-        Seq("m"), strict = false, targetRowsPerTask = 1L << 20)
+    val got = auto(p, b, "k", "k", "pt", "t", Seq("m"), strict = false,
+        target = 1L << 20)
       .select("event_id", "m")
       .as[(Long, Option[Map[String, Int]])].collect().toMap
     assert(got == Map(10L -> Some(Map("b" -> 2)),
       11L -> Some(Map("a" -> 1)), 12L -> None), got.toString)
     // an orderable value column on the same shapes still routes compact
     val b2 = b.withColumn("m", lit(1L))
-    val plan2 = AsOf.joinLatestAuto(p, b2, Seq("k"), Seq("k"), "pt", "t",
-        Seq("m"), strict = false, targetRowsPerTask = 1L << 20)
+    val plan2 = auto(p, b2, "k", "k", "pt", "t", Seq("m"), strict = false,
+        target = 1L << 20)
       .queryExecution.executedPlan.toString
     assert(plan2.contains("graft_sorted_count_le"),
       s"orderable values must keep the compact tier:\n$plan2")

@@ -433,14 +433,13 @@ class ScaleOpsSpec extends SparkSpec {
       Some("/error-report/"), None))
   }
 
-  test("fitsBroadcast memoizes a cached leaf's stats only once materialized") {
+  test("fitsBroadcast routes a cached leaf at inflation 2 on its current size") {
     import org.apache.spark.sql.functions.col
     val base = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_returnflag").filter(col("l_orderkey") > -7)
       .persist()
     def hint = base.select("l_orderkey", "l_returnflag")
     def bytes = hint.queryExecution.optimizedPlan.stats.sizeInBytes
-    val key = "stats-before-materialization#test"
     val maxBytes = "spark.graft.broadcast.maxBytes"
     try {
       val planned = bytes // the unmaterialized cache reports parquet bytes
@@ -452,11 +451,9 @@ class ScaleOpsSpec extends SparkSpec {
       spark.conf.set(maxBytes, (2 * planned.min(loaded)).toString)
       base.unpersist(blocking = true)
       base.persist()
-      assert(graft.operators.Joins.fitsBroadcast(hint, statsKey = key) ==
-        (planned <= loaded))
+      assert(graft.operators.Joins.fitsBroadcast(hint) == (planned <= loaded))
       base.count()
-      assert(graft.operators.Joins.fitsBroadcast(hint, statsKey = key) ==
-        (loaded <= planned))
+      assert(graft.operators.Joins.fitsBroadcast(hint) == (loaded <= planned))
     } finally {
       spark.conf.unset(maxBytes)
       base.unpersist()

@@ -162,7 +162,7 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.read(spark, root).count() == 10)
   }
 
-  test("catalog re-probes a path first seen missing; in-place conversion needs invalidate") {
+  test("catalog re-probes a path first seen missing; in-place conversion reads as snapshots") {
     // pinned semantics for VERDICT r19 missing #2 / next #3
     val dir = java.nio.file.Files
       .createTempDirectory("graft-snapconv-").toString
@@ -172,17 +172,14 @@ class SnapshotSpec extends SparkSpec {
       s"$dir/documents.parquet")
     assert(graft.Catalog.table(spark, dir, "documents").count() == 25,
       "a table created after a failed probe must route as a snapshot")
-    // (b) an EXISTING bare table converted in place keeps its memoized
-    // bare routing (session-stable reads) until an explicit invalidate
+    // (b) an EXISTING bare table converted in place routes to its
+    // snapshots on the next call, though its bare frame is memoized
     (1 to 7).toDF("x").write.parquet(s"$dir/events.parquet")
     assert(graft.Catalog.table(spark, dir, "events").count() == 7)
     Snapshot.writeReplace(spark, (1 to 50).toDF("x"),
       s"$dir/events.parquet")
-    assert(graft.Catalog.table(spark, dir, "events").count() == 7,
-      "conversion without invalidate keeps the memoized bare routing")
-    graft.Catalog.invalidate(spark, dir, "events")
     assert(graft.Catalog.table(spark, dir, "events").count() == 50,
-      "invalidate must re-route the converted table to its snapshots")
+      "a converted table must read as its snapshots")
   }
 
   test("two racing compactions do not duplicate the table") {
